@@ -13,11 +13,13 @@ Package layout (SURVEY.md §7.0):
               ratio, hashing (minhash/simhash/ngrams), embedding encoders
   operators/  relational + sim-algebra operators: dict-encode, COO sim
               algebra (topk/argmax/spmm/softmax/fuse/CSLS), LSH blocking,
-              blocked kNN, TF-IDF, seed-aware partitioning, neighborhood
-              propagation, connected components, dedup, text stats, eval
-  plans/      phase orchestration: name channel, structure channel,
-              fusion+eval, web-text extraction front-end, checkpointed
-              end-to-end pipeline with lineage
+              blocked kNN, TF-IDF, seed-aware partitioning, per-batch
+              structure trainer, connected components, dedup, text
+              stats, eval
+  plans/      phase orchestration: name channel, batched trained
+              structure channel (the only structure path), fusion+eval,
+              web-text extraction front-end, checkpointed end-to-end
+              pipeline with lineage
   streaming/  incremental ingest (Trigger.AvailableNow) over stage tables
 """
 

@@ -15,7 +15,7 @@ signal and quadratic cost); dropped-bucket count is observable via
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.hashing import explode_band_keys
 from ..session import session_shuffle_width
@@ -97,55 +97,6 @@ def bucket_stats(df: DataFrame, id_col: str, token_col: str,
             F.avg("count").alias("avg_bucket"),
             F.expr("percentile_approx(count, 0.99)").alias("p99_bucket"),
         )
-    )
-
-
-def jaccard_selfjoin_prefix(
-    df: DataFrame, id_col: str, token_col: str, threshold: float,
-) -> DataFrame:
-    """EXACT self-join Jaccard ≥ threshold via prefix filtering
-    (AllPairs, Bayardo et al. WWW'07 — public algorithm): order each
-    record's distinct tokens by GLOBAL frequency (rarest first); two
-    records with Jaccard ≥ t must share a token within their first
-    ``|A| − ⌈t·|A|⌉ + 1`` tokens, so the candidate join only touches
-    prefixes — hot tokens sit at the END of every ordering and almost
-    never join. Candidates are then verified exactly with
-    array_intersect on the full token sets (JVM-side). Same results as
-    the full posting join at a fraction of the join volume — the 100 TB
-    shape for exact thresholded similarity. Returns (src, dst, jaccard)
-    with src < dst."""
-    toks = df.select(
-        F.col(id_col).alias("rid"),
-        F.array_distinct(F.col(token_col)).alias("toks"),
-    ).withColumn("sz", F.size("toks"))
-    post = toks.select("rid", "sz", F.explode("toks").alias("tok"))
-    freq = post.groupBy("tok").agg(F.count("*").alias("f"))
-    w = Window.partitionBy("rid").orderBy(F.col("f").asc(), F.col("tok").asc())
-    prefix = (
-        post.join(freq, "tok")
-        .withColumn("pos", F.row_number().over(w))
-        .where(F.col("pos") <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1)
-        .select("rid", "tok")
-    )
-    cand = (
-        prefix.alias("a").join(prefix.alias("b"), "tok")
-        .where(F.col("a.rid") < F.col("b.rid"))
-        .select(F.col("a.rid").alias("src"), F.col("b.rid").alias("dst"))
-        .distinct()
-    )
-    ta = toks.select(F.col("rid").alias("src"), F.col("toks").alias("ta"),
-                     F.col("sz").alias("na"))
-    tb = toks.select(F.col("rid").alias("dst"), F.col("toks").alias("tb"),
-                     F.col("sz").alias("nb"))
-    return (
-        cand.join(ta, "src").join(tb, "dst")
-        .withColumn("n_int", F.size(F.array_intersect("ta", "tb")))
-        .withColumn(
-            "jaccard",
-            F.col("n_int") / (F.col("na") + F.col("nb") - F.col("n_int")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("src", "dst", "jaccard")
     )
 
 
@@ -320,8 +271,6 @@ def _make_jaccard_cell_kernel(threshold: float, pair_budget: int):
             cic, cjc = ci_n[lo:hi], cj_n[lo:hi]
             sic, sjc = si_n[lo:hi], sj_n[lo:hi]
             npost = int(cic.sum())
-            if npost == 0 or int(reps[lo:hi].sum()) == 0:
-                continue
             # Division-free two-level expansion. Level 1 (posting-sized,
             # ~df·docs rows): one entry per (token, left-element) run.
             tok_of = np.repeat(np.arange(hi - lo, dtype=idt), cic)
@@ -332,8 +281,6 @@ def _make_jaccard_cell_kernel(threshold: float, pair_budget: int):
             rep_elem = cjc[tok_of]         # run length = token's right count
             sj_small = sjc[tok_of]         # right-postings start of the run
             tot = int(rep_elem.sum(dtype=np.int64))
-            if tot == 0:
-                continue
             # Level 2 (pair-sized): expand runs; within-run offset comes
             # from one subtract instead of the old int64 divmod pair.
             # wdt: positions inside one chunk fit int32 whenever the
@@ -353,8 +300,6 @@ def _make_jaccard_cell_kernel(threshold: float, pair_budget: int):
                 + ridx.astype(kdt, copy=False))
             keys_parts.append(k2)
             cnts_parts.append(c2.astype(np.int64))
-        if not keys_parts:
-            return empty
         keys = np.concatenate(keys_parts)
         cnts = np.concatenate(cnts_parts)
         if len(keys_parts) > 1:

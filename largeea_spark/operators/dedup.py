@@ -70,30 +70,23 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     """Exact word-n-gram Jaccard near-dup pairs (a < b).
 
     ``method='auto'`` (default since round 6) picks by corpus size —
-    every method returns IDENTICAL results (equivalence-tested), so the
+    both methods return IDENTICAL results (equivalence-tested), so the
     switch is purely physical:
 
     - ``'blocked'``: blocked numpy intersection-count kernel
       (blocking.jaccard_selfjoin_blocked) — the only shuffle is the
       ~0.5 KB/doc hashed-shingle block replication instead of the
       posting join's Σ df² rows. Round-6 measurement at sf1.0 (50k
-      docs, Σ df² = 257M): posting 21 s, prefix 113 s, blocked ~6 s.
+      docs, Σ df² = 257M): posting 21 s, blocked ~6 s.
     - ``'posting'``: the original pure-JVM posting self-join — wins
       below ``_BLOCKED_MIN_DOCS`` where the join volume is small and
-      the kernel's fixed cost dominates.
-    - ``'prefix'``: AllPairs prefix filtering — candidate volume
-      bounded under zipfian hot shingles, but measured slower at every
-      tested scale on this corpus family."""
+      the kernel's fixed cost dominates."""
     n_docs = None
     if method == "auto":
         n_docs = docs.count()
         method = "blocked" if n_docs >= _BLOCKED_MIN_DOCS else "posting"
     t = _doc_tokens(docs, id_col, text_col, n)
-    if method == "prefix":
-        from .blocking import jaccard_selfjoin_prefix
-
-        pairs = jaccard_selfjoin_prefix(t, id_col, "grams", threshold)
-    elif method == "blocked":
+    if method == "blocked":
         from .blocking import jaccard_selfjoin_blocked
 
         pairs = jaccard_selfjoin_blocked(t, id_col, "grams", threshold,

@@ -1,22 +1,18 @@
-"""Structure channel: neighborhood embeddings via iterative DataFrame
-self-joins over the triple table (SURVEY.md L8/L9, M1-M9; north star:
+"""Training-free neighborhood propagation via iterative DataFrame
+self-joins over the triple table (SURVEY.md L8/L9; north star:
 "GNN-style neighborhood embeddings computed as iterative DataFrame
 self-joins over the triple table").
 
-The reference trains RREA/GCN GNNs per METIS batch (`models/rrea/`).
-The engine's tested default is DETERMINISTIC, training-free relational
-propagation (the sandbox has no torch/TF; SURVEY.md §7.4.7 gates parity
-on metric tolerance, keeping propagation as the reproducible path):
+The pipeline's structure channel is the batched trainer
+(plans/structure_channel.py). This module holds the deterministic
+propagation operator and its supervised Procrustes variant:
 
   h⁰(e)   = name embedding (functions.vectors hashed n-gram, or any
             encoder honoring the id→array<float> contract)
   hˡ⁺¹(e) = L2norm( hˡ(e) + Σ_{(e,r,t)} α·hˡ(t) + Σ_{(h,r,e)} α·hˡ(h) )
 
 i.e. one sym-normalized adjacency multiply per layer (L9 analogue,
-`models/rrea/utils.py:68-110`) with self-loop (L10). Train seeds are
-injected by AVERAGING each seed pair's two vectors (both sides move to
-the shared point — the propagation analogue of the shared-triple seed
-injection J4, `partition.py:160-172`).
+`models/rrea/utils.py:68-110`) with self-loop (L10).
 
 All math is join + posexplode + groupBy — whole-stage codegen, no UDF.
 Each layer localCheckpoints (◆ lineage hygiene, SURVEY.md §4.3.2).
@@ -50,22 +46,22 @@ def _norm_adj(triples: DataFrame) -> DataFrame:
 _DIM_CHUNK = 128
 
 
-def _msg_agg(joined: DataFrame, keys: list, dim: int,
+def _msg_agg(joined: DataFrame, dim: int,
              chunk: int = _DIM_CHUNK) -> DataFrame:
-    """(keys…, w, ej[dim]) → (keys…, msg[dim]) where
+    """(id, w, ej[dim]) → (id, msg[dim]) where
     msg[k] = Σ w·ej[k], chunked to ≤``chunk`` agg columns per groupBy.
     The d=768 guard: each chunked pass re-joins on the (checkpointed)
-    inputs and the chunk results are equi-joined back on the keys —
+    inputs and the chunk results are equi-joined back on the id —
     dim/chunk bounded shuffles instead of one unbounded-width agg."""
 
     def one(lo: int, hi: int, name: str) -> DataFrame:
         return (
-            joined.groupBy(*keys)
+            joined.groupBy("id")
             .agg(*[
                 F.sum(F.col("w") * F.element_at("ej", k + 1)).alias(f"m{k}")
                 for k in range(lo, hi)
             ])
-            .select(*keys, F.array(*[F.col(f"m{k}") for k in range(lo, hi)]).alias(name))
+            .select("id", F.array(*[F.col(f"m{k}") for k in range(lo, hi)]).alias(name))
         )
 
     if dim <= chunk:
@@ -73,9 +69,9 @@ def _msg_agg(joined: DataFrame, keys: list, dim: int,
     los = list(range(0, dim, chunk))
     out = one(0, min(chunk, dim), "msg_0")
     for lo in los[1:]:
-        out = out.join(one(lo, min(lo + chunk, dim), f"msg_{lo}"), keys)
+        out = out.join(one(lo, min(lo + chunk, dim), f"msg_{lo}"), "id")
     return out.select(
-        *keys, F.concat(*[F.col(f"msg_{lo}") for lo in los]).alias("msg")
+        "id", F.concat(*[F.col(f"msg_{lo}") for lo in los]).alias("msg")
     )
 
 
@@ -106,7 +102,7 @@ def propagate_embeddings(
         joined = adj.join(
             cur.select(F.col("id").alias("j"), F.col("emb").alias("ej")), "j"
         ).select(F.col("i").alias("id"), "w", "ej")
-        msgs = _msg_agg(joined, ["id"], dim)
+        msgs = _msg_agg(joined, dim)
         cur = (
             cur.join(msgs, "id", "left")
             .select(
@@ -120,98 +116,6 @@ def propagate_embeddings(
             eager=True
         )
     return cur
-
-
-def _norm_adj_grouped(triples: DataFrame, group_col: str) -> DataFrame:
-    """L9 per group: D^-1/2 A D^-1/2 within each group (batch) —
-    degrees never leak across groups. Returns (g, i, j, w)."""
-    und = triples.select(
-        F.col(group_col).alias("g"), F.col("src").alias("i"), F.col("dst").alias("j")
-    ).unionAll(
-        triples.select(F.col(group_col).alias("g"), F.col("dst").alias("i"),
-                       F.col("src").alias("j"))
-    ).groupBy("g", "i", "j").agg(F.count("*").cast("double").alias("m"))
-    deg = und.groupBy("g", "i").agg(F.sum("m").alias("d"))
-    dj = deg.select("g", F.col("i").alias("j"), F.col("d").alias("dj"))
-    return (
-        und.join(deg, ["g", "i"]).join(dj, ["g", "j"])
-        .select("g", "i", "j", (F.col("m") / F.sqrt(F.col("d") * F.col("dj"))).alias("w"))
-    )
-
-
-def propagate_embeddings_grouped(
-    triples: DataFrame, emb: DataFrame, n_layers: int = 2, alpha: float = 1.0,
-    group_col: str = "batch", dim: int | None = None,
-) -> DataFrame:
-    """Grouped variant of ``propagate_embeddings``: every batch's
-    propagation runs in the SAME stages, keyed by (group, id) — no
-    driver loop over batches, so B batches cost one job sequence
-    instead of B (the 1000-executor shape for `run_batched_ea`).
-
-    triples: (group, src, rel, dst) — already placed per batch;
-    emb: (group, id, emb) — an id may appear under several groups
-    (top_k_corr unions) and propagates independently in each.
-    Returns (group, id, emb)."""
-    from ..functions.vectors import l2_normalize_expr
-
-    adj = _norm_adj_grouped(triples, group_col).localCheckpoint(eager=True)
-    cur = emb.select(
-        F.col(group_col).alias("g"), "id",
-        F.col("emb").cast("array<double>").alias("emb"),
-    )
-    if dim is None:
-        row = cur.select(F.size("emb").alias("d")).first()
-        if row is None:
-            return emb
-        dim = int(row["d"])
-    for _ in range(n_layers):
-        joined = adj.join(
-            cur.select("g", F.col("id").alias("j"), F.col("emb").alias("ej")),
-            ["g", "j"],
-        ).select("g", F.col("i").alias("id"), "w", "ej")
-        msgs = _msg_agg(joined, ["g", "id"], dim)
-        cur = (
-            cur.join(msgs, ["g", "id"], "left")
-            .select(
-                "g", "id",
-                F.when(F.col("msg").isNull(), F.col("emb")).otherwise(
-                    F.zip_with("emb", "msg", lambda x, y: x + F.lit(alpha) * y)
-                ).alias("emb"),
-            )
-        )
-        cur = cur.select("g", "id", l2_normalize_expr("emb").alias("emb")).localCheckpoint(
-            eager=True
-        )
-    return cur.select(F.col("g").alias(group_col), "id", "emb")
-
-
-def inject_seeds(emb1: DataFrame, emb2: DataFrame, train: DataFrame
-                 ) -> tuple[DataFrame, DataFrame]:
-    """Seed injection: each train pair (e1,e2) replaces both vectors by
-    their mean — the propagation analogue of triple sharing J4
-    (`partition.py:160-172`): seeds become identical anchors whose
-    signal spreads through both graphs."""
-    t = train.select("e1", "e2")
-    pairs = (
-        t.join(emb1.select(F.col("id").alias("e1"), F.col("emb").alias("a")), "e1")
-        .join(emb2.select(F.col("id").alias("e2"), F.col("emb").alias("b")), "e2")
-        .select("e1", "e2", F.zip_with("a", "b", lambda x, y: (x + y) / 2).alias("m"))
-    )
-    m1 = pairs.groupBy("e1").agg(F.first("m").alias("m")).select(
-        F.col("e1").alias("id"), "m"
-    )
-    m2 = pairs.groupBy("e2").agg(F.first("m").alias("m")).select(
-        F.col("e2").alias("id"), "m"
-    )
-
-    def merge(emb: DataFrame, mm: DataFrame) -> DataFrame:
-        return (
-            emb.join(mm, "id", "left")
-            .select("id", F.coalesce("m", F.col("emb")).alias("emb"))
-        )
-
-    return merge(emb1.select("id", F.col("emb").cast("array<double>").alias("emb")), m1), \
-        merge(emb2.select("id", F.col("emb").cast("array<double>").alias("emb")), m2)
 
 
 def sample_negatives(triples: DataFrame, n_ents: int, n_per_pos: int = 1,
@@ -259,8 +163,7 @@ def procrustes_refined_similarity(
     pair: KGPair, emb1: DataFrame, emb2: DataFrame,
     n_layers: int = 2, k: int = 50,
 ) -> DataFrame:
-    """Trained-alignment variant (supervised counterpart of
-    `structure_similarity`): propagate WITHOUT seed averaging, then fit
+    """Trained-alignment variant of propagation: propagate, then fit
     the orthogonal map W on train seeds via Procrustes (L7,
     `utils.py:162-164`) and score kNN in the mapped space — the
     classic supervised linear alignment (deterministic, so it keeps the
@@ -275,24 +178,3 @@ def procrustes_refined_similarity(
     w = procrustes(p1, p2, train)
     mapped1 = apply_linear_map(p1, w)
     return knn_topk(mapped1, p2, k=k)
-
-
-def structure_similarity(
-    pair: KGPair, base_emb1: DataFrame, base_emb2: DataFrame,
-    n_layers: int = 2, k: int = 50,
-) -> DataFrame:
-    """Phase-0 equivalent (`run_batched_ea` `main.py:58-88`) without
-    per-batch training: inject seeds → propagate both KGs → blocked
-    top-k kNN between the propagated spaces (J9, k=50
-    `text_utils.py:336-346`). Returns the (src, dst, sim) IR.
-
-    At DBP1M scale, run per partition batch (partition_kg) and fuse the
-    per-batch sims with simops.fuse — identical accumulation semantics
-    to `main.py:85` (A10)."""
-    train = pair.links.where(F.col("split") == "train")
-    e1, e2 = inject_seeds(base_emb1, base_emb2, train)
-    p1 = propagate_embeddings(pair.kg1.triples, e1, n_layers)
-    p2 = propagate_embeddings(pair.kg2.triples, e2, n_layers)
-    from .knn import knn_topk
-
-    return knn_topk(p1, p2, k=k)

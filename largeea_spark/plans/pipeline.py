@@ -102,10 +102,10 @@ def construct_kg_from_pages(
 def align_kg_pair(
     spark: SparkSession, pair: KGPair, store: StageStore,
     knn_k: int = 50, string_weight: float = 0.05, use_structure: bool = True,
-    structure_layers: int = 2, emb_dim: int | str = "auto",
+    emb_dim: int | str = "auto",
     use_token_channel: bool = False, token_weight: float = 0.3,
     structure_weight: float = 1.0, k_parts: int = 4,
-    structure_impl: str = "auto", structure_algo: str = "anchor",
+    structure_algo: str = "anchor",
     top_k_corr: int = 1, it_rounds: int = 1, semi_margin: float = 0.05,
     knn_method: str = "auto", encoder="hashed",
 ) -> dict:
@@ -113,17 +113,16 @@ def align_kg_pair(
     name channel (string+embedding) → structure channel → fusion → eval.
     Each sim is a checkpointed stage (S4 analogue).
 
-    The default structure channel is the batched seed-anchor trainer
-    (``structure_impl='auto'`` → 'batched', ``structure_algo='anchor'``)
+    The structure channel is the batched seed-anchor trainer
+    (`run_batched_ea`, `main.py:58-88`; ``structure_algo='anchor'``)
     trained on GOLD seeds only, fused at the reference's weight 1.0
-    (`main.py:356`). ``structure_impl='propagate'`` pins the
-    training-free propagation channel (L8/L9) — economical below ~256
-    dims only (12× the trainer's cost at d=768, SCALE.md); the choice
-    is logged via the ``structure_impl_choice`` metrics row.
+    (`main.py:356`).
 
     ``emb_dim='auto'`` (default) widens the hashed name encoder from
     64 to 128 dims above 60k total entities — collision noise at fixed
-    width grows with entity count (SCALE.md "Iterative quality").
+    width grows with entity count (SCALE.md "Iterative quality"). The
+    requested and resolved widths are logged as the ``emb_dim_choice``
+    metrics row.
 
     ``encoder``: ``'hashed'`` (default) or a zero-arg model loader for
     a real transformer encoder (``model_name_encoder`` seam,
@@ -136,6 +135,7 @@ def align_kg_pair(
     current FUSED sim, conflict-filters them against gold train (U5
     anti-joins on both sides), re-trains the structure channel with
     gold ∪ mined, and re-fuses."""
+    requested_dim = emb_dim
     if emb_dim == "auto":
         # hashed-encoder collision noise grows with the entity count at
         # fixed width (numeric-suffix siblings nearly tie in trigram
@@ -146,20 +146,8 @@ def align_kg_pair(
         n_ents = pair.kg1.ent.count() + pair.kg2.ent.count()
         emb_dim = 128 if n_ents >= 60_000 else 64
 
-    # structure-impl routing (same policy shape as emb_dim='auto'):
-    # the chunked-propagation channel (L8, ≤128 agg cols per groupBy)
-    # is correct at any width but costs ~12× the grouped trainer at
-    # d=768 (SCALE.md "d=768 soak") — 'auto' always takes the grouped
-    # trainer; 'propagate' stays available as an explicit pin, and a
-    # high-dim pin is logged so the 12× choice is never silent.
-    requested_impl = structure_impl
-    if structure_impl == "auto":
-        structure_impl = "batched"
-    store.log_metrics("structure_impl_choice", {
-        "requested": requested_impl, "resolved": structure_impl,
-        "emb_dim": int(emb_dim),
-        "high_dim_propagate_pinned":
-            structure_impl == "propagate" and int(emb_dim) >= 256,
+    store.log_metrics("emb_dim_choice", {
+        "requested": requested_dim, "resolved": int(emb_dim),
     })
 
     blocking_stats: dict = {}
@@ -201,11 +189,6 @@ def align_kg_pair(
             )
             kgp = KGPair(kg1=pair.kg1, kg2=pair.kg2,
                          links=lks.withColumn("split", F.lit("train")))
-            if structure_impl == "propagate":
-                from ..operators.structure import structure_similarity
-
-                return structure_similarity(kgp, e1, e2,
-                                            n_layers=structure_layers, k=knn_k)
             from .structure_channel import trained_batched_structure_similarity
 
             sim, _ = trained_batched_structure_similarity(

@@ -3,16 +3,19 @@
 DataFrame partitioner:
 
   seed-aware partition (G4 analogue) → batch correspondence (G7) →
-  per batch: place triples (J2), propagate seed-injected embeddings
-  (L8/L9), blocked kNN within the batch (J9) → accumulate per-batch
-  sims (A10, `curr_sim += sim` `main.py:85`).
+  place triples (J2) → per batch: train the structure embeddings
+  (operators/trainer.py, the GPU GNN step) → blocked kNN within the
+  batch (J9) → accumulate per-batch sims (A10, `curr_sim += sim`
+  `main.py:85`).
+
+This is the engine's only structure path.
 
 Each batch touches only its partition's entities/triples, so executor
 memory per batch is bounded by the partition cap — the same memory
 contract METIS gives the reference's GPU. There is NO driver loop over
-batches: propagation, training, and kNN are all grouped stages keyed by
-the batch id, so every batch executes concurrently and the batch count
-only widens the stages (the 1000-executor shape).
+batches: training and kNN are grouped stages keyed by the batch id, so
+every batch executes concurrently and the batch count only widens the
+stages (the 1000-executor shape).
 """
 
 from __future__ import annotations
@@ -20,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.partition_kg import correspondence, place_triples, seed_aware_partition
-from ..operators.structure import inject_seeds
 from ..sources.kg import KGPair
 
 
@@ -41,77 +43,13 @@ def _corr_batches(pair: KGPair, parts1: DataFrame, parts2: DataFrame,
     return batches
 
 
-def batched_structure_similarity(
-    pair: KGPair, base_emb1: DataFrame, base_emb2: DataFrame,
-    k_parts: int = 4, n_layers: int = 2, knn_k: int = 50,
-    lp_iters: int = 3, cap: int | None = None, top_k_corr: int = 1,
-) -> tuple[DataFrame, dict]:
-    """Returns (sim IR accumulated over batches, stats).
-
-    Loop-free: every batch's propagation and kNN run in the SAME
-    grouped stages keyed by the batch id (propagate_embeddings_grouped
-    + knn_topk_grouped) — B batches cost one job sequence, not B
-    sequential driver jobs; all batches execute concurrently on a
-    cluster. stats: per-batch pairing + dropped-triple counts (J2
-    logging, `sampler.py:212-227`)."""
-    from ..operators.knn import knn_topk_grouped
-    from ..operators.structure import propagate_embeddings_grouped
-
-    spark = pair.kg1.ent.sparkSession
-    parts1, parts2 = seed_aware_partition(pair, k_parts, n_iter=lp_iters, cap=cap)
-    parts1 = parts1.localCheckpoint(eager=True)
-    parts2 = parts2.localCheckpoint(eager=True)
-    batches = _corr_batches(pair, parts1, parts2, top_k_corr)
-    corr = spark.createDataFrame(
-        sorted({(int(a), int(b)) for a, b in batches}), "p1 int, p2 int"
-    )
-    corr1 = corr.select("p1").distinct()
-
-    train = pair.links.where(F.col("split") == "train")
-    placed1, drop1 = place_triples(pair.kg1.triples, parts1)
-    placed2, drop2 = place_triples(pair.kg2.triples, parts2)
-
-    e1_seeded, e2_seeded = inject_seeds(base_emb1, base_emb2, train)
-
-    # batch-tagged sides: KG1 rows once per batch (=src part); KG2 rows
-    # once per (batch, member trg part) — top_k_corr unions replicate a
-    # trg part's rows into each batch that pairs with it
-    b1 = parts1.join(corr1, parts1.part == corr1.p1).select(
-        F.col("p1").alias("batch"), "id"
-    )
-    b2 = parts2.join(corr, parts2.part == corr.p2).select(
-        F.col("p1").alias("batch"), "id"
-    )
-    emb_b1 = b1.join(e1_seeded, "id").select("batch", "id", "emb")
-    emb_b2 = b2.join(e2_seeded, "id").select("batch", "id", "emb")
-    t_b1 = placed1.join(corr1, placed1.part == corr1.p1).select(
-        F.col("p1").alias("batch"), "src", "rel", "dst"
-    )
-    t_b2 = placed2.join(corr, placed2.part == corr.p2).select(
-        F.col("p1").alias("batch"), "src", "rel", "dst"
-    )
-    prop1 = propagate_embeddings_grouped(t_b1, emb_b1, n_layers)
-    prop2 = propagate_embeddings_grouped(t_b2, emb_b2, n_layers)
-    sim = knn_topk_grouped(prop1, prop2, k=knn_k, group_col="batch")
-
-    grouped: dict[int, list[int]] = {}
-    for p1, p2 in sorted(batches):
-        grouped.setdefault(p1, []).append(p2)
-    stats = {
-        "batches": [{"p1": int(p), "p2": [int(x) for x in v]}
-                    for p, v in sorted(grouped.items())],
-        "dropped_triples": drop1 + drop2,
-    }
-    return sim, stats
-
-
 def trained_batched_structure_similarity(
     pair: KGPair, base_emb1: DataFrame, base_emb2: DataFrame,
     k_parts: int = 4, knn_k: int = 50, lp_iters: int = 3,
     cap: int | None = None, epochs: int = 15, top_k_corr: int = 1,
     algo: str = "anchor",
 ) -> tuple[DataFrame, dict]:
-    """M2-shaped variant: per-batch numpy TRAINING (margin refinement,
+    """M2-shaped: per-batch numpy TRAINING (margin refinement,
     operators/trainer.py) inside grouped applyInPandas — one executor
     task per batch, memory bounded by the partition cap — then blocked
     kNN per batch and A10 accumulation. The reference's

@@ -1,9 +1,7 @@
 """d=768 end-to-end soak: the full two-channel alignment (batched
-anchor trainer + name channel) and the L8 propagation channel at the
-REAL encoder dimensionality (BERT d=768, `emb_loader.py:159-182`) —
-evidence beyond the d=768 unit tests that the chunked per-dimension
-aggregation (128 dims/pass) and the 768-dim trainer payloads survive
-a full pipeline run.
+anchor trainer + name channel) at the REAL encoder dimensionality
+(BERT d=768, `emb_loader.py:159-182`) — evidence beyond the d=768 unit
+tests that the 768-dim trainer payloads survive a full pipeline run.
 
 Since round 4 the soak drives the REAL-ENCODER SEAM
 (``model_name_encoder``: loader-per-task, executor-side batching,
@@ -45,7 +43,6 @@ class MockSentenceEncoder:
 def mock_loader():
     return MockSentenceEncoder()
 from largeea_spark.operators import evalx, simops  # noqa: E402
-from largeea_spark.operators.structure import structure_similarity  # noqa: E402
 from largeea_spark.plans import name_channel  # noqa: E402
 from largeea_spark.plans.structure_channel import (  # noqa: E402
     trained_batched_structure_similarity,
@@ -92,18 +89,11 @@ def main():
     m = evalx.hits_and_mrr(fused, test, ks=(1,), n_src=n_src)
     m_s = evalx.hits_and_mrr(stru, test, ks=(1,), n_src=n_src)
     dt = time.time() - t0
-
-    t0 = time.time()
-    prop = structure_similarity(pair, e1, e2, n_layers=2, k=50)
-    m_p = evalx.hits_and_mrr(prop, test, ks=(1,), n_src=n_src)
-    dt_p = time.time() - t0
     print("RESULT", {
         "n": n, "dim": 768, "encoder_path": mode,
         "stru_h1": round(m_s["hits@1"], 4),
         "fused_h1": round(m["hits@1"], 4),
         "two_channel_sec": round(dt, 1),
-        "propagate_h1": round(m_p["hits@1"], 4),
-        "propagate_sec": round(dt_p, 1),
     }, flush=True)
     spark.stop()
 

@@ -10,19 +10,30 @@ sf1.0 generator is not available). Approximates the driver's scaling:
   empirical component distribution (d=64) — drives emb_knn cost (20k x 20k).
 - lineitem: 10 replicas with offset order/part/supp keys — drives tpch_q1
   and window_topk scan/agg cost (6M rows).
+
+Usage: python scripts/gen_synth_sf1x.py [--in SF01_DIR] [--out OUT_DIR]
 """
+import argparse
+
 import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 import pyarrow as pa
 import os
 
+SRC = "/root/testdata/sf0.1"
 OUT = "/root/synthdata/sf1x"
+ap = argparse.ArgumentParser(description="synthetic sf1.0-like dataset")
+ap.add_argument("--in", dest="src", default=SRC, help="sf0.1 input directory")
+ap.add_argument("--out", default=OUT, help="output directory")
+args = ap.parse_args()
+SRC, OUT = args.src, args.out
 os.makedirs(OUT, exist_ok=True)
 rng = np.random.default_rng(20260822)
 
 # ---------------- documents ----------------
-docs = pq.read_table("/root/testdata/sf0.1/documents.parquet").to_pandas()
+docs = pq.read_table(f"{SRC}/documents.parquet").to_pandas()
+assert docs.doc_id.is_unique, "input doc_ids are not unique"
 all_words = []
 lengths = []
 for txt in docs.text:
@@ -36,13 +47,14 @@ langs = docs.lang.to_numpy()
 sources = docs.source.to_numpy()
 
 n_new = 45_000
+id_base = int(docs.doc_id.max()) + 1
 new_rows = []
 lens = rng.choice(lengths, size=n_new)
 for i in range(n_new):
     L = int(lens[i])
     words = rng.choice(vocab, size=L, p=probs)
     text = " ".join(words)
-    new_rows.append((5000 + i, text, langs[i % len(langs)],
+    new_rows.append((id_base + i, text, langs[i % len(langs)],
                      sources[i % len(sources)], len(text)))
 new = pd.DataFrame(new_rows, columns=["doc_id", "text", "lang", "source", "n_chars"])
 new["n_chars"] = new["n_chars"].astype("int64")
@@ -52,7 +64,7 @@ pq.write_table(pa.Table.from_pandas(out_docs, preserve_index=False),
 print("documents:", len(out_docs))
 
 # ---------------- embeddings ----------------
-emb = pq.read_table("/root/testdata/sf0.1/embeddings.parquet").to_pandas()
+emb = pq.read_table(f"{SRC}/embeddings.parquet").to_pandas()
 d = len(emb.embedding.iloc[0])
 base = np.array(emb.embedding.tolist(), dtype=np.float32)
 n_new_e = 18_000
@@ -74,7 +86,7 @@ pq.write_table(pa.Table.from_pandas(out_emb, schema=schema, preserve_index=False
 print("embeddings:", len(out_emb))
 
 # ---------------- lineitem ----------------
-li = pq.read_table("/root/testdata/sf0.1/lineitem.parquet")
+li = pq.read_table(f"{SRC}/lineitem.parquet")
 n = li.num_rows
 frames = []
 lp = li.to_pandas()

@@ -22,16 +22,11 @@ def test_knn_empty_sides(spark):
 
 
 def test_propagate_empty(spark):
-    from largeea_spark.operators.structure import (
-        propagate_embeddings, propagate_embeddings_grouped,
-    )
+    from largeea_spark.operators.structure import propagate_embeddings
 
     tri = _empty(spark, "src long, rel long, dst long")
     emb = _empty(spark, "id long, emb array<double>")
     assert propagate_embeddings(tri, emb).count() == 0
-    gtri = _empty(spark, "batch int, src long, rel long, dst long")
-    gemb = _empty(spark, "batch int, id long, emb array<double>")
-    assert propagate_embeddings_grouped(gtri, gemb).count() == 0
 
 
 def test_cc_empty_and_selfloop(spark):

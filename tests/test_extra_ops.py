@@ -1,6 +1,5 @@
 """Coverage for J4 share_triples, W11 margin pairs, L2 pruned spspmm,
-L6 sinkhorn, L7 procrustes, A5 word→entity pooling, S6 vector scan,
-multimodal plumbing."""
+L6 sinkhorn, L7 procrustes, A5 word→entity pooling, S6 vector scan."""
 
 import math
 
@@ -9,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from largeea_spark.functions.vectors import procrustes, word_to_entity_embedding
-from largeea_spark.operators import multimodal, simops
+from largeea_spark.operators import simops
 from largeea_spark.operators.partition_kg import share_triples
 from largeea_spark.sources.kg import KG, KGPair, read_aligned_vectors
 
@@ -146,33 +145,3 @@ def test_sample_negatives(spark):
     # deterministic
     again = sample_negatives(triples, n_ents=20, n_per_pos=2, seed=7)
     assert sorted(map(tuple, neg.collect())) == sorted(map(tuple, again.collect()))
-
-
-# --- multimodal plumbing (stubbed decode, real schemas/batching)
-def test_multimodal_features(spark):
-    media = multimodal.synth_media(spark, n=30)
-    feats = multimodal.extract_features(media, dim=16)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r.feature) == 16 for r in rows)
-    # deterministic across runs
-    again = {r.media_id: r.feature for r in multimodal.extract_features(media, dim=16).collect()}
-    assert all(again[r.media_id] == r.feature for r in rows)
-
-
-def test_multimodal_resize_and_frames(spark):
-    media = multimodal.synth_media(spark, n=30)
-    resized = multimodal.resize_images(media)
-    assert resized.count() == media.where(F.col("kind") == "image").count()
-    assert resized.first().width == 224
-    frames = multimodal.sample_frames(media, every_ms=10000, max_frames=3)
-    assert frames.groupBy("media_id").count().agg(F.max("count")).first()[0] <= 3
-    assert frames.where(F.col("kind") == "video" if "kind" in frames.columns else F.lit(True)).count() > 0
-
-
-def test_multimodal_real_codec_raises(spark):
-    media = multimodal.synth_media(spark, n=3)
-    import pytest as pt
-
-    with pt.raises(Exception):
-        multimodal.extract_features(media, use_real_codec=True).collect()

@@ -523,12 +523,12 @@ def test_name_channel_ivf_within_tolerance(spark):
 
 
 # ---------------------------------------------------------------------------
-# AllPairs prefix filtering ≡ posting join (exact), incl. hot shingles
+# blocked Jaccard kernel ≡ posting join (exact), incl. hot shingles
 # ---------------------------------------------------------------------------
 
-def test_jaccard_prefix_equals_posting_on_skewed_corpus(spark):
+def test_jaccard_blocked_equals_posting_on_skewed_corpus(spark):
     """Every doc shares one hot sentence (hot shingle df = corpus size);
-    the prefix path must return EXACTLY the posting join's pairs."""
+    the blocked kernel must return EXACTLY the posting join's pairs."""
     hot = "the quick brown fox jumps over dogs"
     rows = [(i, f"{hot} unique{i} tail{i} extra{i % 7} blob{i % 3}")
             for i in range(300)]
@@ -538,14 +538,14 @@ def test_jaccard_prefix_equals_posting_on_skewed_corpus(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     from largeea_spark.operators.dedup import ngram_jaccard_pairs
 
-    got_prefix = {(r.a, r.b, round(r.jaccard, 9)) for r in
-                  ngram_jaccard_pairs(docs, n=2, threshold=0.5,
-                                      method="prefix").collect()}
+    got_blocked = {(r.a, r.b, round(r.jaccard, 9)) for r in
+                   ngram_jaccard_pairs(docs, n=2, threshold=0.5,
+                                       method="blocked").collect()}
     got_post = {(r.a, r.b, round(r.jaccard, 9)) for r in
                 ngram_jaccard_pairs(docs, n=2, threshold=0.5,
                                     method="posting").collect()}
-    assert got_prefix == got_post
-    assert {(a, b) for a, b, _ in got_prefix} >= {(i, 1000 + i) for i in range(5)}
+    assert got_blocked == got_post
+    assert {(a, b) for a, b, _ in got_blocked} >= {(i, 1000 + i) for i in range(5)}
 
 
 # ---------------------------------------------------------------------------

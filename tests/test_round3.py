@@ -163,39 +163,6 @@ def test_propagate_embeddings_matches_numpy(spark, dim):
         assert np.allclose(got[i], want[i], atol=1e-9), f"node {i} (d={dim})"
 
 
-def test_propagate_grouped_d768(spark):
-    """Grouped variant at d=768: each group propagates independently and
-    matches the ungrouped result on its own subgraph."""
-    from largeea_spark.operators.structure import (
-        propagate_embeddings, propagate_embeddings_grouped,
-    )
-
-    dim = 768
-    rng = np.random.default_rng(7)
-    h0 = rng.standard_normal((4, dim))
-    edges = [(0, 1), (2, 3)]
-    triples_g = spark.createDataFrame(
-        [(0, 0, 0, 1), (1, 2, 0, 3)], "batch int, src long, rel long, dst long"
-    )
-    emb_g = spark.createDataFrame(
-        [(g, i, [float(x) for x in h0[i]])
-         for g, ids in ((0, (0, 1)), (1, (2, 3))) for i in ids],
-        "batch int, id long, emb array<double>",
-    )
-    got = {(r.batch, r.id): np.array(r.emb) for r in
-           propagate_embeddings_grouped(triples_g, emb_g, n_layers=1).collect()}
-    for g, (a, b) in ((0, (0, 1)), (1, (2, 3))):
-        tri = spark.createDataFrame([(a, 0, b)], "src long, rel long, dst long")
-        emb = spark.createDataFrame(
-            [(i, [float(x) for x in h0[i]]) for i in (a, b)],
-            "id long, emb array<double>",
-        )
-        want = {r.id: np.array(r.emb) for r in
-                propagate_embeddings(tri, emb, n_layers=1).collect()}
-        assert np.allclose(got[(g, a)], want[a], atol=1e-9)
-        assert np.allclose(got[(g, b)], want[b], atol=1e-9)
-
-
 # ---------------------------------------------------------------------------
 # GCN-Align-shaped backbone (M6 analogue)
 # ---------------------------------------------------------------------------

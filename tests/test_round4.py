@@ -1,5 +1,5 @@
-"""Round-4 regression tests: structure-impl auto-routing, float32 ANN
-wire format, GCN-Align weight parity, shuffle-width fallback."""
+"""Round-4 regression tests: emb_dim choice logging, float32 ANN wire
+format, GCN-Align weight parity, shuffle-width fallback."""
 
 import json
 
@@ -20,46 +20,35 @@ def _small_pair(spark, n_ents=120, n_links=90, link_ratio=0.3):
     return KGPair(kg1=kg1, kg2=kg2, links=lk), lk
 
 
-def _impl_choice(store):
+def _emb_dim_choice(store):
     rows = (
-        store.metrics().where(F.col("stage") == "structure_impl_choice")
+        store.metrics().where(F.col("stage") == "emb_dim_choice")
         .orderBy(F.col("logged_at").desc()).collect()
     )
-    assert rows, "structure_impl_choice metrics row missing"
+    assert rows, "emb_dim_choice metrics row missing"
     return json.loads(rows[0]["metrics"])
 
 
 # ---------------------------------------------------------------------------
-# structure_impl='auto' routing (VERDICT r3 #4): the default pipeline
-# never takes the 12× chunked-propagation path at high dim; an explicit
-# 'propagate' pin is honored but logged
+# emb_dim='auto' is an automatic choice (ROADMAP aim 4): every run logs
+# the requested and resolved width in one metrics row
 # ---------------------------------------------------------------------------
 
-def test_structure_impl_auto_routes_to_trainer_at_high_dim(spark, tmp_path):
+def test_emb_dim_choice_logged(spark, tmp_path):
     from largeea_spark.plans.pipeline import align_kg_pair
     from largeea_spark.sources.stage import StageStore
 
     pair, _ = _small_pair(spark)
+    assert pair.kg1.ent.count() + pair.kg2.ent.count() == 240
     store = StageStore(spark, str(tmp_path / "auto"))
+    align_kg_pair(spark, pair, store, knn_k=10, k_parts=2)
+    assert _emb_dim_choice(store) == {"requested": "auto", "resolved": 64}
+
+    store = StageStore(spark, str(tmp_path / "pinned"))
     align_kg_pair(spark, pair, store, knn_k=10, emb_dim=256, k_parts=2)
-    choice = _impl_choice(store)
-    assert choice["requested"] == "auto"
-    assert choice["resolved"] == "batched"
-    assert choice["emb_dim"] == 256
-    assert choice["high_dim_propagate_pinned"] is False
-
-
-def test_structure_impl_propagate_pin_honored_and_logged(spark, tmp_path):
-    from largeea_spark.plans.pipeline import align_kg_pair
-    from largeea_spark.sources.stage import StageStore
-
-    pair, _ = _small_pair(spark)
-    store = StageStore(spark, str(tmp_path / "pin"))
-    align_kg_pair(spark, pair, store, knn_k=10, emb_dim=256, k_parts=2,
-                  structure_impl="propagate")
-    choice = _impl_choice(store)
-    assert choice["resolved"] == "propagate"
-    assert choice["high_dim_propagate_pinned"] is True
+    assert _emb_dim_choice(store) == {"requested": 256, "resolved": 256}
+    rows = store.metrics().where(F.col("stage") == "emb_dim_choice").count()
+    assert rows == 1
 
 
 # ---------------------------------------------------------------------------
@@ -219,58 +208,6 @@ def test_align_kg_pair_through_encoder_seam(spark, tmp_path):
                 assert v == hash_m[k], (chan, k)
             else:
                 assert v == pytest.approx(hash_m[k], rel=1e-9), (chan, k)
-
-
-# ---------------------------------------------------------------------------
-# real in-sandbox image codec (VERDICT r3 #7): PPM/BMP decode → resize
-# → features runs on real pixels through the Spark plumbing
-# ---------------------------------------------------------------------------
-
-def test_real_codec_decode_resize_features(spark):
-    from largeea_spark.operators import multimodal
-
-    media = multimodal.synth_image_media(spark, n=12)
-    feats = {r.media_id: r.feature for r in multimodal.extract_features(
-        media, dim=24, use_real_codec=True).collect()}
-    assert len(feats) == 12
-    for v in feats.values():
-        assert len(v) == 24
-        assert abs(float(np.linalg.norm(v)) - 1.0) < 1e-4
-    # deterministic
-    again = {r.media_id: r.feature for r in multimodal.extract_features(
-        media, dim=24, use_real_codec=True).collect()}
-    assert feats == again
-
-    resized = multimodal.resize_images(
-        media, target_w=20, target_h=10, use_real_codec=True).collect()
-    assert len(resized) == 12
-    for r in resized:
-        img = multimodal.decode_image(bytes(r.content))
-        assert img.shape == (10, 20, 3)
-        assert (r.width, r.height) == (20, 10)
-
-    # non-decodable formats keep the documented PIL seam
-    fake = multimodal.synth_media(spark, n=3)
-    with pytest.raises(Exception) as ei:
-        multimodal.extract_features(fake, use_real_codec=True).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError)
-
-
-def test_codec_round_trips():
-    from largeea_spark.operators.multimodal import (
-        _encode_bmp24, decode_image, encode_ppm, resize_nn)
-
-    rng = np.random.default_rng(2)
-    img = rng.integers(0, 256, (17, 29, 3)).astype(np.uint8)
-    assert np.array_equal(decode_image(encode_ppm(img)), img)
-    assert np.array_equal(decode_image(_encode_bmp24(img)), img)
-    p3 = ("P3\n# c\n2 2\n255\n" + " ".join(
-        str(v) for v in img[:2, :2].reshape(-1))).encode()
-    assert np.array_equal(decode_image(p3), img[:2, :2])
-    assert resize_nn(img, 5, 9).shape == (9, 5, 3)
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG\r\n")
 
 
 # ---------------------------------------------------------------------------

@@ -167,28 +167,6 @@ def test_stream_state_ttl_evicts_idle_key(spark, tmp_path):  # noqa: F811
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r4 #5 (multimodal P6): malformed separator after maxval raises
-# instead of decoding garbage; valid files with comments still decode.
-# ---------------------------------------------------------------------------
-
-def test_p6_maxval_separator_validated():
-    from largeea_spark.operators.multimodal import decode_image
-
-    raster = bytes(range(2 * 2 * 3))
-    ok = b"P6\n2 2\n255\n" + raster
-    img = decode_image(ok)
-    assert img.shape == (2, 2, 3) and img[0, 0, 0] == 0
-
-    # comment in the header (before maxval) is fine
-    commented = b"P6\n# hi\n2 2\n255\n" + raster
-    assert np.array_equal(decode_image(commented), img)
-
-    # truncated right after maxval: separator byte missing → clear error
-    with pytest.raises(NotImplementedError, match="whitespace"):
-        decode_image(b"P6\n2 2\n255")
-
-
-# ---------------------------------------------------------------------------
 # VERDICT r4 #4: gradient-TRAINED RREA backbone ('rrea_sgd') — margin
 # ranking loss + Adam with hand-derived backprop through the
 # reflection-attention stack. These tests pin (a) the gradients against
@@ -303,113 +281,6 @@ def test_rrea_sgd_dispatch_through_train_batches(spark):  # noqa: F811
     out = train_batches(payload, algo="rrea_sgd").collect()
     assert len(out) == 12
     assert all(len(r.emb) == 4 for r in out)  # concat(struct d=2, name d=2)
-
-
-# ---------------------------------------------------------------------------
-# VERDICT r4 #6: PNG codec via stdlib zlib. Fixtures are hand-crafted
-# with the FORWARD filters applied independently, so the decoder's
-# unfiltering math is cross-checked, not round-tripped against itself.
-# ---------------------------------------------------------------------------
-
-def _png_chunks(ihdr_fields, idat_raw, plte=None):
-    import struct
-    import zlib
-
-    def chunk(typ, data):
-        return (struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data)))
-
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", struct.pack(">IIBBBBB", *ihdr_fields))
-    if plte is not None:
-        out += chunk(b"PLTE", plte)
-    return out + chunk(b"IDAT", zlib.compress(idat_raw)) + chunk(b"IEND", b"")
-
-
-def _forward_filter(img, filters):
-    """Apply PNG forward filters (spec §9) row by row; independent
-    implementation of the inverse the decoder performs."""
-    h, w, ch = img.shape
-    px = img.reshape(h, w * ch).astype(np.int64)
-    out = b""
-    for y, f in enumerate(filters):
-        row = px[y]
-        prior = px[y - 1] if y else np.zeros(w * ch, dtype=np.int64)
-        filt = np.zeros(w * ch, dtype=np.int64)
-        for x in range(w * ch):
-            left = row[x - ch] if x >= ch else 0
-            up = prior[x]
-            ul = prior[x - ch] if x >= ch else 0
-            if f == 0:
-                filt[x] = row[x]
-            elif f == 1:
-                filt[x] = row[x] - left
-            elif f == 2:
-                filt[x] = row[x] - up
-            elif f == 3:
-                filt[x] = row[x] - (left + up) // 2
-            else:
-                p = left + up - ul
-                pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
-                pred = left if pa <= pb and pa <= pc else (up if pb <= pc else ul)
-                filt[x] = row[x] - pred
-        out += bytes([f]) + bytes((filt % 256).astype(np.uint8).tolist())
-    return out
-
-
-def test_png_decode_all_filters_rgb():
-    from largeea_spark.operators.multimodal import decode_image
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (5, 4, 3)).astype(np.uint8)
-    # one row per filter type: None, Sub, Up, Average, Paeth
-    raw = _forward_filter(img, [0, 1, 2, 3, 4])
-    png = _png_chunks((4, 5, 8, 2, 0, 0, 0), raw)
-    assert np.array_equal(decode_image(png), img)
-
-
-def test_png_decode_gray_palette_rgba():
-    from largeea_spark.operators.multimodal import decode_image
-
-    # grayscale (type 0) replicates to RGB
-    g = np.array([[0, 128], [255, 7]], dtype=np.uint8)[:, :, None]
-    png_g = _png_chunks((2, 2, 8, 0, 0, 0, 0), _forward_filter(g, [0, 2]))
-    out = decode_image(png_g)
-    assert out.shape == (2, 2, 3) and np.array_equal(out[:, :, 0], g[:, :, 0])
-    assert np.array_equal(out[:, :, 0], out[:, :, 2])
-
-    # palette (type 3)
-    plte = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255])  # R, G, B entries
-    idx = np.array([[0, 1], [2, 0]], dtype=np.uint8)[:, :, None]
-    png_p = _png_chunks((2, 2, 8, 3, 0, 0, 0), _forward_filter(idx, [0, 0]), plte)
-    out = decode_image(png_p)
-    assert np.array_equal(out[0, 0], [255, 0, 0]) and np.array_equal(out[1, 0], [0, 0, 255])
-
-    # RGBA (type 6): alpha dropped
-    rgba = np.dstack([np.full((2, 2), 9, np.uint8), np.full((2, 2), 8, np.uint8),
-                      np.full((2, 2), 7, np.uint8), np.full((2, 2), 128, np.uint8)])
-    png_a = _png_chunks((2, 2, 8, 6, 0, 0, 0), _forward_filter(rgba, [1, 4]))
-    assert np.array_equal(decode_image(png_a), rgba[:, :, :3])
-
-
-def test_png_decode_full_path_and_seam():
-    from largeea_spark.operators.multimodal import (
-        decode_image, image_features, resize_nn)
-
-    rng = np.random.default_rng(5)
-    img = rng.integers(0, 256, (16, 12, 3)).astype(np.uint8)
-    png = _png_chunks((12, 16, 8, 2, 0, 0, 0),
-                      _forward_filter(img, [1, 2, 3, 4] * 4))
-    # decode → resize → features on real PNG bytes, end-to-end
-    dec = decode_image(png)
-    assert np.array_equal(dec, img)
-    small = resize_nn(dec, 4, 4)
-    assert small.shape == (4, 4, 3)
-    feats = image_features(dec)
-    assert np.isfinite(feats).all()
-
-    # 16-bit / interlaced stay behind the documented seam
-    with pytest.raises(NotImplementedError, match="bitdepth"):
-        decode_image(_png_chunks((2, 2, 16, 2, 0, 0, 0), b"\x00" * 26))
 
 
 # ---------------------------------------------------------------------------
@@ -683,222 +554,6 @@ def test_encode_graph_hash_keyed_matches_string_path(spark):  # noqa: F811
     assert sorted(map(tuple, kg_hash.ent.collect())) == sorted(
         map(tuple, kg_coll.ent.collect())
     )
-
-
-# ---------------------------------------------------------------------------
-# Round-5 baseline JPEG codec (jpeg.py): pure numpy + stdlib, closing
-# the dominant web-image format. Encoder exists to synthesize REAL
-# JPEG bytes deterministically; the decoder reads tables from the file.
-# ---------------------------------------------------------------------------
-
-def _smooth_img(h=45, w=62):
-    yy, xx = np.mgrid[0:h, 0:w]
-    return np.stack([
-        xx * 255 / w, yy * 255 / h,
-        127 + 120 * np.sin(xx / 9.0) * np.cos(yy / 7.0),
-    ], axis=-1).clip(0, 255).astype(np.uint8)
-
-
-def _psnr(a, b):
-    mse = np.mean((a.astype(float) - b.astype(float)) ** 2)
-    return 10 * np.log10(255 ** 2 / max(mse, 1e-12))
-
-
-@pytest.mark.parametrize("subsample,dri,min_psnr", [
-    ("444", 0, 40.0), ("444", 3, 40.0), ("420", 0, 33.0), ("420", 2, 33.0),
-])
-def test_jpeg_roundtrip_psnr(subsample, dri, min_psnr):
-    from largeea_spark.operators.jpeg import (
-        decode_jpeg_baseline, encode_jpeg_baseline,
-    )
-
-    img = _smooth_img()          # non-multiple-of-8/16 dims on purpose
-    b = encode_jpeg_baseline(img, 90, subsample=subsample,
-                             restart_interval=dri)
-    assert b[:2] == b"\xff\xd8" and b[-2:] == b"\xff\xd9"
-    out = decode_jpeg_baseline(b)
-    assert out.shape == img.shape
-    assert _psnr(img, out) >= min_psnr
-
-
-def test_jpeg_encoder_deterministic_and_quality_monotone():
-    from largeea_spark.operators.jpeg import (
-        decode_jpeg_baseline, encode_jpeg_baseline,
-    )
-
-    img = _smooth_img(24, 40)
-    assert encode_jpeg_baseline(img, 75) == encode_jpeg_baseline(img, 75)
-    psnrs = [
-        _psnr(img, decode_jpeg_baseline(encode_jpeg_baseline(img, q)))
-        for q in (25, 50, 90)
-    ]
-    assert psnrs == sorted(psnrs), f"PSNR not monotone in quality: {psnrs}"
-
-
-def test_jpeg_non_baseline_raises_pil_seam():
-    from largeea_spark.operators.jpeg import (
-        decode_jpeg_baseline, encode_jpeg_baseline,
-    )
-
-    b = bytearray(encode_jpeg_baseline(_smooth_img(16, 16), 90))
-    i = b.find(b"\xff\xc0")      # SOF0 → SOF2 (progressive)
-    b[i + 1] = 0xC2
-    with pytest.raises(NotImplementedError, match="progressive|non-baseline"):
-        decode_jpeg_baseline(bytes(b))
-    with pytest.raises(NotImplementedError, match="SOI"):
-        decode_jpeg_baseline(b"\x00\x01\x02")
-
-
-def test_jpeg_through_decode_image_and_media_pipeline(spark):  # noqa: F811
-    """decode_image dispatches on the FFD8 magic, and the synth media
-    fixture's JPEG rows flow through the real mapInPandas
-    decode→resize→features path with sane outputs."""
-    from largeea_spark.operators.jpeg import encode_jpeg_baseline
-    from largeea_spark.operators.multimodal import (
-        decode_image, extract_features, resize_images, synth_image_media,
-    )
-
-    img = _smooth_img(20, 28)
-    out = decode_image(encode_jpeg_baseline(img, 95))
-    assert out.shape == img.shape and _psnr(img, out) > 35
-
-    media = synth_image_media(spark, n=9)
-    assert media.where("mime = 'image/jpeg'").count() == 3
-    feats = extract_features(media, dim=16, use_real_codec=True).collect()
-    assert len(feats) == 9 and all(len(r["feature"]) == 16 for r in feats)
-    small = resize_images(media, 8, 8, use_real_codec=True).collect()
-    assert len(small) == 9
-
-
-# ---------------------------------------------------------------------------
-# Round-5 real audio (WAV PCM, audio.py) and video (MJPEG AVI, avi.py):
-# all three modalities now decode for real in-sandbox.
-# ---------------------------------------------------------------------------
-
-def test_wav_roundtrip_and_centroid():
-    from largeea_spark.operators.audio import (
-        audio_features, decode_wav, encode_wav, spectral_centroid_hz,
-    )
-
-    sr = 8000
-    t = np.arange(sr) / sr  # 1 s
-    for f in (440.0, 1200.0):
-        x = 0.8 * np.sin(2 * np.pi * f * t)
-        samples, rate = decode_wav(encode_wav(x, sr))
-        assert rate == sr and len(samples) == len(x)
-        assert np.max(np.abs(samples - x)) < 2 / 32768  # 16-bit quantization
-        c = spectral_centroid_hz(samples, rate)
-        assert abs(c - f) < 60, f"centroid {c} for pure tone {f}"
-    v = audio_features(samples, sr, dim=24)
-    assert v.shape == (24,) and v.dtype == np.float32
-    assert abs(np.linalg.norm(v) - 1.0) < 1e-5
-    # determinism + tone discrimination
-    x2 = 0.8 * np.sin(2 * np.pi * 440.0 * t)
-    a = audio_features(x2, sr, dim=24)
-    assert np.array_equal(a, audio_features(x2.copy(), sr, dim=24))
-    assert not np.array_equal(a, v)
-
-
-def test_wav_stereo_downmix_and_8bit_and_seams():
-    from largeea_spark.operators.audio import decode_wav, encode_wav
-
-    sr = 4000
-    t = np.arange(sr // 2) / sr
-    left = np.sin(2 * np.pi * 300 * t)
-    stereo = np.stack([left, -left], axis=1)       # downmix → silence
-    samples, _ = decode_wav(encode_wav(stereo, sr))
-    assert np.max(np.abs(samples)) < 2 / 32768
-
-    # 8-bit unsigned PCM path (hand-built container)
-    pcm8 = (np.clip(left, -1, 1) * 127 + 128).astype(np.uint8).tobytes()
-    fmt = ((1).to_bytes(2, "little") + (1).to_bytes(2, "little")
-           + sr.to_bytes(4, "little") + sr.to_bytes(4, "little")
-           + (1).to_bytes(2, "little") + (8).to_bytes(2, "little"))
-    body = (b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-            + b"data" + len(pcm8).to_bytes(4, "little") + pcm8)
-    wav8 = b"RIFF" + len(body).to_bytes(4, "little") + body
-    s8, r8 = decode_wav(wav8)
-    assert r8 == sr and np.max(np.abs(s8 - left)) < 2 / 128
-
-    with pytest.raises(NotImplementedError, match="WAV"):
-        decode_wav(b"OggS" + b"\0" * 40)
-    # float32 WAV (format 3) hits the librosa seam, not a wrong decode
-    bad = bytearray(wav8)
-    fmt_off = wav8.find(b"fmt ") + 8
-    bad[fmt_off:fmt_off + 2] = (3).to_bytes(2, "little")
-    with pytest.raises(NotImplementedError, match="format=3"):
-        decode_wav(bytes(bad))
-
-
-def test_mjpeg_avi_roundtrip_and_seams():
-    from largeea_spark.operators.avi import (
-        decode_avi_frames, decode_frame_at, encode_mjpeg_avi,
-    )
-
-    frames = [_smooth_img(24, 32) for _ in range(5)]
-    for k, f in enumerate(frames):
-        frames[k] = np.roll(f, k * 5, axis=1)      # distinguishable frames
-    b = encode_mjpeg_avi(frames, fps=10, quality=92)
-    jpegs, fps = decode_avi_frames(b)
-    assert len(jpegs) == 5 and fps == 10.0
-    assert all(j[:2] == b"\xff\xd8" for j in jpegs)
-    # frame addressed by timestamp decodes to the RIGHT frame's pixels
-    for ts, k in ((0, 0), (200, 2), (400, 4), (9999, 4)):
-        img = decode_frame_at(b, ts)
-        assert img.shape == frames[k].shape
-        assert _psnr(frames[k], img) > 28
-        if k != 2:
-            assert _psnr(frames[2], img) < 25 or k == 2
-
-    with pytest.raises(NotImplementedError, match="AVI"):
-        decode_avi_frames(b"\x00" * 16)
-    hacked = bytearray(b)
-    i = hacked.find(b"vids") + 4
-    hacked[i:i + 4] = b"H264"
-    with pytest.raises(NotImplementedError, match="codec"):
-        decode_avi_frames(bytes(hacked))
-
-
-def test_all_three_modalities_real_through_spark(spark):  # noqa: F811
-    """extract_features(use_real_codec=True) runs REAL decode kernels
-    for image, audio and video rows in one DataFrame, and
-    sample_frames(use_real_codec=True) decodes actual AVI frames."""
-    from pyspark.sql import functions as F
-
-    from largeea_spark.operators.multimodal import (
-        extract_features, sample_frames, synth_audio_media,
-        synth_image_media, synth_video_media,
-    )
-
-    media = (
-        synth_image_media(spark, n=3)
-        .unionByName(synth_audio_media(spark, n=3)
-                     .withColumn("media_id", F.col("media_id") + 100))
-        .unionByName(synth_video_media(spark, n=3)
-                     .withColumn("media_id", F.col("media_id") + 200))
-    )
-    feats = extract_features(media, dim=16, use_real_codec=True).collect()
-    assert len(feats) == 9
-    by_kind = {}
-    for r in feats:
-        v = np.array(r["feature"], dtype=np.float32)
-        assert v.shape == (16,) and abs(np.linalg.norm(v) - 1) < 1e-4
-        by_kind.setdefault(r["kind"], []).append(v)
-    assert set(by_kind) == {"image", "audio", "video"}
-
-    sampled = sample_frames(
-        media, every_ms=150, max_frames=4, use_real_codec=True
-    ).collect()
-    assert len(sampled) > 0
-    vids = media.where("kind = 'video'").count()
-    assert len(sampled) <= vids * 4
-    for r in sampled:
-        assert len(r["frame_feature"]) == 32
-
-    # cross-run determinism of the full real-codec feature path
-    feats2 = extract_features(media, dim=16, use_real_codec=True).collect()
-    assert sorted((r["media_id"], tuple(r["feature"])) for r in feats) == \
-        sorted((r["media_id"], tuple(r["feature"])) for r in feats2)
 
 
 # ---------------------------------------------------------------------------
