@@ -546,7 +546,7 @@ def _alignment_quality(spark) -> dict:
     e2 = encode_names(name_channel.entity_names(pair.kg2.ent, False), "name",
                       dim=64).select("id", "emb")
     stru, _ = trained_batched_structure_similarity(pair, e1, e2, k_parts=4,
-                                                   knn_k=50, algo="anchor")
+                                                   knn_k=50)
     stru = stru.cache()
     name_sim = simops.fuse([s_emb, s_str], [1.0, 0.05])
     fused = simops.fuse([stru, name_sim], [1.0, 1.0]).cache()
@@ -560,7 +560,7 @@ def _alignment_quality(spark) -> dict:
     boosted = KGPair(kg1=kg1, kg2=kg2, links=train.unionByName(mined).distinct()
                      .withColumn("split", F.lit("train")))
     stru2, _ = trained_batched_structure_similarity(boosted, e1, e2, k_parts=4,
-                                                    knn_k=50, algo="anchor")
+                                                    knn_k=50)
     fused2 = simops.fuse([stru2, name_sim], [1.0, 1.0])
     out = {}
     for name, s in (("structure", stru), ("fused", fused),

@@ -41,7 +41,7 @@ def cooccurrence_graph(triples: DataFrame) -> DataFrame:
 
 
 def _propagate(labels: DataFrame, edges: DataFrame, pinned: DataFrame,
-               n_iter: int, k: int) -> DataFrame:
+               n_iter: int) -> DataFrame:
     """Weighted label propagation. labels: (id, part nullable);
     pinned: (id) whose labels never change."""
     nbrs = edges.select(F.col("u").alias("id"), F.col("v").alias("nb"), "w").unionAll(
@@ -99,7 +99,7 @@ def seed_aware_partition(
     )
     ents1 = pair.kg1.ent.select("id")
     labels1 = ents1.join(seed1.select(F.col("e1").alias("id"), "part"), "id", "left")
-    labels1 = _propagate(labels1, g1, seed1.select(F.col("e1").alias("id")), n_iter, k)
+    labels1 = _propagate(labels1, g1, seed1.select(F.col("e1").alias("id")), n_iter)
     # unlabeled leftovers → deterministic hash part
     labels1 = labels1.withColumn(
         "part",
@@ -113,7 +113,7 @@ def seed_aware_partition(
     seed2 = seed2.groupBy("id").agg(F.min("part").alias("part"))
     ents2 = pair.kg2.ent.select("id")
     labels2 = ents2.join(seed2, "id", "left")
-    labels2 = _propagate(labels2, g2, seed2.select("id"), n_iter, k)
+    labels2 = _propagate(labels2, g2, seed2.select("id"), n_iter)
     labels2 = labels2.withColumn(
         "part",
         F.coalesce("part", F.pmod(F.xxhash64("id"), F.lit(k)).cast("int")),

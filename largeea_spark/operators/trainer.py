@@ -1,20 +1,22 @@
 """Per-batch embedding trainer (SURVEY.md M2 analogue): the reference
 trains an RREA GNN per METIS batch on GPU (`models/rrea/rrea.py:48-180`).
 This is the engine's executor-side counterpart — a deterministic numpy
-refinement loop inside grouped ``applyInPandas``: each batch (bounded by
-the partition cap, G4) is one pandas payload, trained independently on
-an executor, exactly the reference's memory contract.
+trainer inside grouped ``applyInPandas``: each batch (bounded by the
+partition cap, G4) is one pandas payload, trained independently on an
+executor, exactly the reference's memory contract.
 
-Objective per epoch (all vectorized numpy):
-  1. propagate: H ← L2norm(H + Â·H) over the batch's union graph
-     (both KGs + seed cross-edges) — the GNN forward;
-  2. seed pull: H[e1] += λ(H[e2]−H[e1]) and symmetrically — the
-     alignment loss gradient step on positive pairs;
-  3. negative push: for hashed negative partners ñ,
-     H[e] −= λ_neg·max(0, γ−d)·(H[ñ]−H[e]) — the margin term
-     (`models/utils.py:62-96` negative sampling, value-hashed here).
+The built-in trainer is seed-anchor identity propagation
+(:func:`train_embeddings_anchor_np`):
+  1. every train pair gets one shared hashed ±1/√d anchor vector;
+  2. ``rounds`` sym-normalized propagation layers over each KG's batch
+     triples, re-pinning the anchors after every layer;
+  3. output = concat(anchor_weight·anchor_space, name_space).
 
-Deterministic: no RNG beyond value hashes, fixed epoch count, float64.
+:func:`train_batches` takes the per-batch numpy callable as
+``trainer``, so another backbone can be swapped in without touching
+the payload or kNN stages.
+
+Deterministic: no RNG beyond value hashes, fixed round count, float64.
 """
 
 from __future__ import annotations
@@ -27,434 +29,6 @@ from pyspark.sql import DataFrame, functions as F
 def _norm_rows(h: np.ndarray) -> np.ndarray:
     n = np.linalg.norm(h, axis=1, keepdims=True)
     return h / np.maximum(n, 1e-12)
-
-
-def train_embeddings_np(
-    ids1: np.ndarray, emb1: np.ndarray, ids2: np.ndarray, emb2: np.ndarray,
-    triples1: np.ndarray, triples2: np.ndarray, seeds: np.ndarray,
-    epochs: int = 15, lam: float = 0.2, lam_neg: float = 0.02,
-    margin: float = 0.5, prop_rounds: int = 2,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Pure-numpy batch trainer; returns refined (emb1, emb2).
-
-    ids are global; triples are (src, rel, dst) global; seeds (e1, e2).
-    Entities referenced by triples but missing from the embedding rows
-    are ignored (the caller filters triples to the batch)."""
-    n1, n2 = len(ids1), len(ids2)
-    if n1 == 0 or n2 == 0:
-        return emb1, emb2
-    # the two KGs have OVERLAPPING 0-based id spaces (independent dense
-    # encodings) — each side needs its own global→local map
-    loc1 = {g: i for i, g in enumerate(ids1)}
-    loc2 = {g: n1 + i for i, g in enumerate(ids2)}
-    h = _norm_rows(np.vstack([emb1, emb2]).astype(np.float64))
-
-    edges = []
-    for tri, loc in ((triples1, loc1), (triples2, loc2)):
-        for s, _, d in tri:
-            if s in loc and d in loc:
-                edges.append((loc[s], loc[d]))
-    for e1, e2 in seeds:
-        if e1 in loc1 and e2 in loc2:
-            edges.append((loc1[e1], loc2[e2]))
-    edges.sort()  # fixed float-accumulation order at any shuffle order
-    if edges:
-        e = np.array(edges, dtype=np.int64)
-        src = np.concatenate([e[:, 0], e[:, 1]])
-        dst = np.concatenate([e[:, 1], e[:, 0]])
-        deg = np.bincount(src, minlength=len(h)).astype(np.float64)
-        w = 1.0 / np.sqrt(np.maximum(deg[src], 1.0) * np.maximum(deg[dst], 1.0))
-    sd = sorted((a, b) for a, b in seeds if a in loc1 and b in loc2)
-    s1 = np.array([loc1[a] for a, _ in sd], dtype=np.int64)
-    s2 = np.array([loc2[b] for _, b in sd], dtype=np.int64)
-
-    for ep in range(epochs):
-        # 1. propagation — only the first ``prop_rounds`` epochs: more
-        # rounds = a deeper GCN = oversmoothing toward the dominant
-        # eigenvector (the reference uses depth 2, `rrea.py:68-79`)
-        if edges and ep < prop_rounds:
-            msg = np.zeros_like(h)
-            np.add.at(msg, dst, h[src] * w[:, None])
-            h = _norm_rows(h + msg)
-        if len(s1):
-            # 2. seed pull
-            d12 = h[s2] - h[s1]
-            h[s1] += lam * d12
-            h[s2] -= lam * d12
-            # 3. negative push: deterministic partner = rolled seeds
-            if len(s1) > 1:
-                neg2 = np.roll(s2, 1 + (ep % max(1, len(s2) - 1)))
-                gap = h[neg2] - h[s1]
-                dist = np.linalg.norm(gap, axis=1, keepdims=True)
-                push = np.maximum(0.0, margin - dist)
-                h[s1] -= lam_neg * push * gap / np.maximum(dist, 1e-12)
-            h = _norm_rows(h)
-    return h[:n1], h[n1:]
-
-
-def _rel_embeddings(n_rel: int, dim: int, seed: int = 12345) -> np.ndarray:
-    """Deterministic relation embeddings (the reference trains a
-    rel_hidden=100 table, `rrea.py:70-76`; the deterministic stand-in is
-    a seeded-PCG64 normal table, row-normalized — identical at any
-    parallelism because relation ids are global)."""
-    rng = np.random.default_rng(seed)
-    r = rng.standard_normal((n_rel, dim))
-    return _norm_rows(r)
-
-
-def _rrea_layer(h: np.ndarray, e_src: np.ndarray, e_dst: np.ndarray,
-                e_rel: np.ndarray, rel_emb: np.ndarray, tau: float = 0.1
-                ) -> np.ndarray:
-    """One relational-reflection attention layer (`layer.py:109-146`):
-    neighbor j's message is its Householder reflection by the edge's
-    relation vector, ñ = h_j − 2(h_j·r̂)r̂, and messages aggregate with
-    a per-src softmax. The reference's attention logit uses a trained
-    kernel over [self‖ñ‖r̂]; the deterministic stand-in scores
-    ñ against the self vector (dot/τ) — same normalization shape,
-    no trained parameters."""
-    r = rel_emb[e_rel]
-    hj = h[e_dst]
-    neigh = hj - 2.0 * (hj * r).sum(axis=1, keepdims=True) * r
-    logit = (h[e_src] * neigh).sum(axis=1) / tau
-    m = np.full(len(h), -np.inf)
-    np.maximum.at(m, e_src, logit)
-    ex = np.exp(logit - m[e_src])
-    s = np.zeros(len(h))
-    np.add.at(s, e_src, ex)
-    att = ex / np.maximum(s[e_src], 1e-300)
-    out = np.zeros_like(h)
-    np.add.at(out, e_src, att[:, None] * neigh)
-    return out
-
-
-def train_embeddings_rrea_np(
-    ids1: np.ndarray, emb1: np.ndarray, ids2: np.ndarray, emb2: np.ndarray,
-    triples1: np.ndarray, triples2: np.ndarray, seeds: np.ndarray,
-    epochs: int = 15, lam: float = 0.3, lam_neg: float = 0.02,
-    margin: float = 0.5, prop_rounds: int = 2, tau: float = 0.1,
-) -> tuple[np.ndarray, np.ndarray]:
-    """RREA-shaped batch trainer: per epoch, (1) pull seed pairs
-    together + margin-push hashed negatives, then (2) one
-    relational-reflection attention propagation round (first
-    ``prop_rounds`` epochs only — deeper stacks oversmooth, the
-    reference uses depth 2) so seed corrections DIFFUSE to neighbors.
-    Returns refined (emb1, emb2); deterministic (seeded rel table,
-    value-hashed negatives, float64)."""
-    n1, n2 = len(ids1), len(ids2)
-    if n1 == 0 or n2 == 0:
-        return emb1, emb2
-    # overlapping per-KG id spaces → per-side maps (see train_embeddings_np)
-    loc1 = {g: i for i, g in enumerate(ids1)}
-    loc2 = {g: n1 + i for i, g in enumerate(ids2)}
-    h = _norm_rows(np.vstack([emb1, emb2]).astype(np.float64))
-    d = h.shape[1]
-
-    tri_edges = []
-    n_rel = 0
-    for tri in (triples1, triples2):
-        if len(tri):
-            n_rel = max(n_rel, int(tri[:, 1].max()) + 1)
-    seed_rel = 2 * n_rel  # forward rels [0,R), reverse [R,2R), seed edge 2R
-    for tri, loc in ((triples1, loc1), (triples2, loc2)):
-        for s_, r_, d_ in tri:
-            if s_ in loc and d_ in loc:
-                ls, ld = loc[s_], loc[d_]
-                tri_edges.append((ls, ld, int(r_)))
-                tri_edges.append((ld, ls, int(r_) + n_rel))
-    sd = sorted((a, b) for a, b in seeds if a in loc1 and b in loc2)
-    for a, b in sd:
-        la, lb = loc1[a], loc2[b]
-        tri_edges.append((la, lb, seed_rel))
-        tri_edges.append((lb, la, seed_rel))
-    tri_edges.sort()
-    srcs = [t[0] for t in tri_edges]
-    dsts = [t[1] for t in tri_edges]
-    rels = [t[2] for t in tri_edges]
-    s1 = np.array([loc1[a] for a, _ in sd], dtype=np.int64)
-    s2 = np.array([loc2[b] for _, b in sd], dtype=np.int64)
-    if not srcs:
-        e_src = e_dst = e_rel = np.zeros(0, dtype=np.int64)
-    else:
-        e_src = np.array(srcs, dtype=np.int64)
-        e_dst = np.array(dsts, dtype=np.int64)
-        e_rel = np.array(rels, dtype=np.int64)
-    rel_emb = _rel_embeddings(seed_rel + 1, d)
-
-    for ep in range(epochs):
-        if len(s1):
-            d12 = h[s2] - h[s1]
-            h[s1] += lam * d12
-            h[s2] -= lam * d12
-            if len(s1) > 1:
-                neg2 = np.roll(s2, 1 + (ep % max(1, len(s2) - 1)))
-                gap = h[neg2] - h[s1]
-                dist = np.linalg.norm(gap, axis=1, keepdims=True)
-                push = np.maximum(0.0, margin - dist)
-                h[s1] -= lam_neg * push * gap / np.maximum(dist, 1e-12)
-            h = _norm_rows(h)
-        if len(e_src) and ep < prop_rounds:
-            h = _norm_rows(h + _rrea_layer(h, e_src, e_dst, e_rel, rel_emb, tau))
-    return h[:n1], h[n1:]
-
-
-def _norm_rows_bwd(y: np.ndarray, h1: np.ndarray, g: np.ndarray) -> np.ndarray:
-    """Backward of h1 = y/‖y‖ (row-wise): dy = (g − h1·(g·h1))/‖y‖."""
-    ny = np.maximum(np.linalg.norm(y, axis=1, keepdims=True), 1e-12)
-    return (g - h1 * (g * h1).sum(axis=1, keepdims=True)) / ny
-
-
-def _rrea_layer_fwd(h: np.ndarray, e_src: np.ndarray, e_dst: np.ndarray,
-                    e_rel: np.ndarray, rel: np.ndarray, tau: float) -> dict:
-    """Differentiable relational-reflection attention layer
-    (`models/rrea/layer.py:109-146` shape): neighbor j's message is its
-    Householder reflection by the edge's (trainable, normalized)
-    relation vector, attention is a per-src softmax of (self·message)/τ.
-    Returns the cache needed by :func:`_rrea_layer_bwd`."""
-    r = rel[e_rel]
-    rn = np.maximum(np.linalg.norm(r, axis=1, keepdims=True), 1e-12)
-    rhat = r / rn
-    hj = h[e_dst]
-    p = (hj * rhat).sum(axis=1)
-    m = hj - 2.0 * p[:, None] * rhat
-    hsrc = h[e_src]
-    logit = (hsrc * m).sum(axis=1) / tau
-    mx = np.full(len(h), -np.inf)
-    np.maximum.at(mx, e_src, logit)
-    ex = np.exp(logit - mx[e_src])
-    s = np.zeros(len(h))
-    np.add.at(s, e_src, ex)
-    att = ex / np.maximum(s[e_src], 1e-300)
-    out = np.zeros_like(h)
-    np.add.at(out, e_src, att[:, None] * m)
-    y = h + out
-    h1 = _norm_rows(y)
-    return {"h": h, "rn": rn, "rhat": rhat, "hj": hj, "p": p, "m": m,
-            "att": att, "y": y, "h1": h1}
-
-
-def _rrea_layer_bwd(cache: dict, e_src: np.ndarray, e_dst: np.ndarray,
-                    e_rel: np.ndarray, n_rel_rows: int, tau: float,
-                    g1: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Hand-derived backward of :func:`_rrea_layer_fwd`: given
-    g1 = ∂L/∂h1 returns (∂L/∂h, ∂L/∂rel) — full gradient through the
-    row-normalize, the attention softmax, the bilinear logit, and the
-    Householder reflection (incl. the relation-vector normalize).
-    Validated against central finite differences in
-    tests/test_round5.py."""
-    h, rhat, rn = cache["h"], cache["rhat"], cache["rn"]
-    hj, p, m, att = cache["hj"], cache["p"], cache["m"], cache["att"]
-    dy = _norm_rows_bwd(cache["y"], cache["h1"], g1)
-    dh = dy.copy()
-    dout_src = dy[e_src]
-    datt = (dout_src * m).sum(axis=1)
-    dm = att[:, None] * dout_src
-    # softmax backward (per-src groups)
-    sg = np.zeros(len(h))
-    np.add.at(sg, e_src, att * datt)
-    dlogit = att * (datt - sg[e_src])
-    # logit = (h[src]·m)/τ
-    np.add.at(dh, e_src, (dlogit / tau)[:, None] * m)
-    dm += (dlogit / tau)[:, None] * h[e_src]
-    # m = hj − 2·p·r̂   (p and r̂ handled via their own chains below)
-    dhj = dm - 2.0 * (dm * rhat).sum(axis=1, keepdims=True) * rhat
-    # ^ folds in dp = −2(dm·r̂) through p = hj·r̂ → dhj += dp·r̂
-    dp = -2.0 * (dm * rhat).sum(axis=1)
-    drhat = -2.0 * p[:, None] * dm + dp[:, None] * hj
-    np.add.at(dh, e_dst, dhj)
-    # r̂ = r/‖r‖
-    dr = (drhat - rhat * (drhat * rhat).sum(axis=1, keepdims=True)) / rn
-    drel = np.zeros((n_rel_rows, h.shape[1]))
-    np.add.at(drel, e_rel, dr)
-    return dh, drel
-
-
-def _hashed_normal(keys: np.ndarray, d: int, salt: int) -> np.ndarray:
-    """Value-hashed standard-normal init (Box-Muller over splitmix64
-    uniforms) — a function of the GLOBAL key alone, so identical at any
-    parallelism / batch layout / row order."""
-    keys = keys.astype(np.uint64)
-    out = np.empty((len(keys), d), dtype=np.float64)
-    two_pi = 2.0 * np.pi
-    for j in range(0, d, 2):
-        s1 = np.uint64((salt * 0x9E37_79B9_7F4A_7C15 + (j + 1) * 0xBF58_476D_1CE4_E5B9) & 0xFFFFFFFFFFFFFFFF)
-        s2 = np.uint64((salt * 0x94D0_49BB_1331_11EB + (j + 1) * 0xD6E8_FEB8_6659_FD93) & 0xFFFFFFFFFFFFFFFF)
-        u1 = (_splitmix64(keys ^ s1).astype(np.float64) + 1.0) / 2.0**64
-        u2 = _splitmix64(keys ^ s2).astype(np.float64) / 2.0**64
-        rad = np.sqrt(-2.0 * np.log(u1))
-        out[:, j] = rad * np.cos(two_pi * u2)
-        if j + 1 < d:
-            out[:, j + 1] = rad * np.sin(two_pi * u2)
-    return out
-
-
-def _rrea_sgd_edges(ids1, ids2, triples1, triples2, seeds, n1):
-    """Shared edge assembly for the trained backbone: forward rels
-    [0,R), reverse [R,2R), seed-tie rel 2R; sorted for fixed
-    float-accumulation order. Returns (e_src, e_dst, e_rel, n_rel_rows,
-    s1, s2) in local index space."""
-    loc1 = {g: i for i, g in enumerate(ids1)}
-    loc2 = {g: n1 + i for i, g in enumerate(ids2)}
-    n_rel = 0
-    for tri in (triples1, triples2):
-        if len(tri):
-            n_rel = max(n_rel, int(tri[:, 1].max()) + 1)
-    seed_rel = 2 * n_rel
-    tri_edges = []
-    for tri, loc in ((triples1, loc1), (triples2, loc2)):
-        for s_, r_, d_ in tri:
-            if s_ in loc and d_ in loc:
-                ls, ld = loc[s_], loc[d_]
-                tri_edges.append((ls, ld, int(r_)))
-                tri_edges.append((ld, ls, int(r_) + n_rel))
-    sd = sorted((a, b) for a, b in seeds if a in loc1 and b in loc2)
-    for a, b in sd:
-        tri_edges.append((loc1[a], loc2[b], seed_rel))
-        tri_edges.append((loc2[b], loc1[a], seed_rel))
-    tri_edges.sort()
-    e = np.array(tri_edges, dtype=np.int64).reshape(-1, 3)
-    s1 = np.array([loc1[a] for a, _ in sd], dtype=np.int64)
-    s2 = np.array([loc2[b] for _, b in sd], dtype=np.int64)
-    return e[:, 0], e[:, 1], e[:, 2], seed_rel + 1, s1, s2
-
-
-def _rrea_sgd_forward(h0_raw, rel, e_src, e_dst, e_rel, depth, tau):
-    """Forward pass: row-normalize the entity table, then ``depth``
-    reflection-attention layers. Returns (final embedding, caches)."""
-    y0 = h0_raw
-    h = _norm_rows(y0)
-    caches = []
-    for _ in range(depth):
-        c = _rrea_layer_fwd(h, e_src, e_dst, e_rel, rel, tau)
-        caches.append(c)
-        h = c["h1"]
-    return h, (y0, caches)
-
-
-def _rrea_sgd_train(h0, rel, e_src, e_dst, e_rel, n_rel_rows, s1, s2,
-                    epochs, depth, lr, margin, n_neg, tau):
-    """Full-batch Adam loop over (entity table, relation table) with the
-    margin ranking loss; mutates and returns (h0, rel)."""
-    mh = np.zeros_like(h0); vh = np.zeros_like(h0)
-    mr = np.zeros_like(rel); vr = np.zeros_like(rel)
-    b1, b2, eps = 0.9, 0.999, 1e-8
-    inv_n = 1.0 / len(s1)
-    for ep in range(epochs):
-        e, (y0, caches) = _rrea_sgd_forward(
-            h0, rel, e_src, e_dst, e_rel, depth, tau)
-        ge = np.zeros_like(e)
-        a, b = e[s1], e[s2]
-        diff_pos = a - b
-        dpos = (diff_pos * diff_pos).sum(axis=1)
-        for k in range(n_neg):
-            off = 1 + ((ep * 13 + k * 7) % max(1, len(s1) - 1))
-            for pos_idx, neg_idx in ((s1, np.roll(s2, off)),
-                                     (s2, np.roll(s1, off))):
-                dn = e[pos_idx] - e[neg_idx]
-                dneg = (dn * dn).sum(axis=1)
-                viol = (margin + dpos - dneg) > 0
-                w = viol.astype(np.float64)[:, None] * inv_n
-                # ∂relu/∂dpos = 1 → 2(a−b) to a, −2(a−b) to b
-                np.add.at(ge, s1, 2.0 * w * diff_pos)
-                np.add.at(ge, s2, -2.0 * w * diff_pos)
-                # ∂relu/∂dneg = −1
-                np.add.at(ge, pos_idx, -2.0 * w * dn)
-                np.add.at(ge, neg_idx, 2.0 * w * dn)
-        gh = ge
-        grel = np.zeros_like(rel)
-        for c in reversed(caches):
-            gh, dr = _rrea_layer_bwd(
-                c, e_src, e_dst, e_rel, n_rel_rows, tau, gh)
-            grel += dr
-        gh0 = _norm_rows_bwd(y0, _norm_rows(y0), gh)
-        t = ep + 1
-        corr = np.sqrt(1.0 - b2**t) / (1.0 - b1**t)
-        mh = b1 * mh + (1 - b1) * gh0; vh = b2 * vh + (1 - b2) * gh0**2
-        h0 -= lr * corr * mh / (np.sqrt(vh) + eps)
-        mr = b1 * mr + (1 - b1) * grel; vr = b2 * vr + (1 - b2) * grel**2
-        rel -= lr * corr * mr / (np.sqrt(vr) + eps)
-    return h0, rel
-
-
-def train_embeddings_rrea_sgd_np(
-    ids1: np.ndarray, emb1: np.ndarray, ids2: np.ndarray, emb2: np.ndarray,
-    triples1: np.ndarray, triples2: np.ndarray, seeds: np.ndarray,
-    epochs: int = 60, dim: int = 32, depth: int = 2, lr: float | None = None,
-    margin: float = 1.0, n_neg: int = 4, tau: float = 0.1,
-    struct_weight: float = 0.5, init: str = "anchor",
-) -> tuple[np.ndarray, np.ndarray]:
-    """GRADIENT-TRAINED RREA backbone (VERDICT r4 #4): the reference
-    trains RREA (`models/rrea/rrea.py:48-180`) — randomly initialized
-    entity + relation embeddings, relational-reflection attention
-    forward, margin-based alignment ranking loss, gradient optimizer —
-    on GPU per batch. This is the same recipe in pure numpy inside the
-    applyInPandas trainer contract:
-
-      * trainable parameters: entity table H0 (n×dim) and relation
-        table R ((2·n_rel+1)×dim), value-hash initialized from GLOBAL
-        ids (deterministic at any parallelism; RREA's inputs are random
-        — names enter only through the name channel);
-      * forward: ``depth`` Householder-reflection attention layers
-        (full softmax attention, `layer.py:109-146`) over both KGs'
-        bidirectional triple edges + seed tie edges;
-      * loss: margin ranking over train seeds, L =
-        Σᵢ Σₖ relu(γ + ‖e₁ᵢ−e₂ᵢ‖² − ‖e₁ᵢ−negₖ‖²), negatives =
-        deterministic epoch-varying rolls on BOTH sides
-        (`models/utils.py:62-96` negative sampling, de-randomized);
-      * optimizer: Adam (β₁=.9, β₂=.999), full-batch, fixed epochs —
-        backprop through normalize/softmax/reflection is hand-derived
-        (`_rrea_layer_bwd`) and finite-difference-validated.
-
-    Deviation from the reference, documented: the attention logit is
-    (self·message)/τ with no trained kernel ([self‖ñ‖r̂]·w in
-    `layer.py:120-131`) — gradients flow through H0 and R instead.
-    Output keeps the anchor trainer's channel contract: concat of
-    ``struct_weight``·trained-structure-space and the input name space,
-    so kNN scores both jointly and rows are comparable with
-    ``algo='anchor'`` in QUALITY.md.
-
-    ``init``: 'anchor' (default) starts H0 from the seed-anchor
-    identity-propagation space (so gradient training REFINES the
-    engine's best deterministic structure signal — measured at anchor
-    parity, 0.675 fixture structure Hits@1); 'hashed' is the
-    reference-faithful random init (`rrea.py:60-66`), which on the
-    fixture memorizes seeds without the anchor prior (0.628 at
-    struct_weight 0.4 — the honest measured gap, QUALITY.md).
-    ``lr`` defaults to 0.02 for 'anchor' (fine-tune) and 0.05 for
-    'hashed' (train from scratch)."""
-    n1, n2 = len(ids1), len(ids2)
-    if n1 == 0 or n2 == 0:
-        return emb1, emb2
-    name = _norm_rows(np.vstack([emb1, emb2]).astype(np.float64))
-    e_src, e_dst, e_rel, n_rel_rows, s1, s2 = _rrea_sgd_edges(
-        ids1, ids2, triples1, triples2, seeds, n1)
-
-    if init == "anchor":
-        a1, a2 = train_embeddings_anchor_np(
-            ids1, emb1, ids2, emb2, triples1, triples2, seeds,
-            anchor_weight=1.0)
-        d_anchor = emb1.shape[1]  # anchor space = first d columns
-        h0 = np.vstack([a1[:, :d_anchor], a2[:, :d_anchor]])
-        lr = 0.02 if lr is None else lr
-    else:
-        # value-hashed init — salt by SIDE (the two KGs' dense id
-        # spaces overlap, the same global id must not collide)
-        h0 = np.vstack([
-            _hashed_normal(ids1, dim, salt=101),
-            _hashed_normal(ids2, dim, salt=202),
-        ]) / np.sqrt(dim)
-        lr = 0.05 if lr is None else lr
-    rel = _hashed_normal(
-        np.arange(n_rel_rows), h0.shape[1], salt=303) / np.sqrt(h0.shape[1])
-
-    if len(e_src) and len(s1):
-        h0, rel = _rrea_sgd_train(
-            h0, rel, e_src, e_dst, e_rel, n_rel_rows, s1, s2,
-            epochs, depth, lr, margin, n_neg, tau)
-        e, _ = _rrea_sgd_forward(h0, rel, e_src, e_dst, e_rel, depth, tau)
-    else:
-        e = _norm_rows(h0)  # nothing to train on
-    out = np.concatenate([struct_weight * e, name], axis=1)
-    return out[:n1], out[n1:]
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
@@ -485,8 +59,8 @@ def train_embeddings_anchor_np(
     triples1: np.ndarray, triples2: np.ndarray, seeds: np.ndarray,
     rounds: int = 6, anchor_weight: float = 0.7,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Seed-anchor identity propagation — the engine's strongest
-    deterministic stand-in for the reference's trained RREA
+    """Seed-anchor identity propagation — the engine's deterministic
+    stand-in for the reference's trained RREA
     (`models/rrea/rrea.py:48-180`), and like RREA it derives the
     structure signal from seeds + topology alone (RREA initializes
     embeddings randomly; names enter only through the name channel):
@@ -502,14 +76,15 @@ def train_embeddings_anchor_np(
          (sim = (w²·sim_anchor + sim_name)/(1+w²)).
 
     Measured on the 500-entity fixture: anchor-only 0.66 Hits@1 (pure
-    structure), concat 0.97 — vs 0.44 for the margin-refinement v1.
+    structure), concat 0.97.
     Deterministic: anchors are value hashes; edges/seeds are sorted
     before np.add.at so float accumulation order is fixed."""
     n1, n2 = len(ids1), len(ids2)
     d = emb1.shape[1] if n1 else (emb2.shape[1] if n2 else 0)
     if n1 == 0 or n2 == 0 or d == 0:
         return emb1, emb2
-    # overlapping per-KG id spaces → per-side maps (see train_embeddings_np)
+    # the two KGs have OVERLAPPING 0-based id spaces (independent dense
+    # encodings) — each side needs its own global→local map
     loc1 = {g: i for i, g in enumerate(ids1)}
     loc2 = {g: n1 + i for i, g in enumerate(ids2)}
     name = _norm_rows(np.vstack([emb1, emb2]).astype(np.float64))
@@ -551,139 +126,6 @@ def train_embeddings_anchor_np(
     return out[:n1], out[n1:]
 
 
-def _map_local(vals: np.ndarray, ids: np.ndarray, offset: int) -> np.ndarray:
-    """Global→local id mapping via searchsorted (−1 for unknown ids)."""
-    order = np.argsort(ids, kind="stable")
-    srt = ids[order]
-    pos = np.clip(np.searchsorted(srt, vals), 0, max(len(ids) - 1, 0))
-    ok = srt[pos] == vals
-    return np.where(ok, order[pos] + offset, -1)
-
-
-def _gcn_weighted_edges(
-    tri: np.ndarray, ids: np.ndarray, off: int,
-) -> tuple[np.ndarray, np.ndarray] | None:
-    """Functionality-weighted bidirectional edges for one KG's triples
-    (reference ``models/gcn_align/utils.py`` func/ifunc + get_weighted_adj).
-
-    fun/ifun are computed over the FULL triple set including self-loops —
-    the reference's func/ifunc count (h,r,h) triples in both n_tri and
-    the distinct head/tail sets; get_weighted_adj skips self-loops only
-    in the adjacency accumulation. Each surviving triple contributes
-    max(ifun(r), 0.3) to h→t and max(fun(r), 0.3) to t→h. Fully
-    vectorized: grouped unique counts, searchsorted id mapping — no
-    per-triple Python loop. Returns (edges[n,2], weights[n]) or None."""
-    if not len(tri) or not len(ids):
-        return None
-    uniq, inv = np.unique(tri[:, 1], return_inverse=True)
-    n_tri = np.bincount(inv).astype(np.float64)
-    heads = np.unique(np.stack([inv, tri[:, 0]], axis=1), axis=0)
-    tails = np.unique(np.stack([inv, tri[:, 2]], axis=1), axis=0)
-    fun = np.maximum(
-        np.bincount(heads[:, 0], minlength=len(uniq)) / n_tri, 0.3)
-    ifun = np.maximum(
-        np.bincount(tails[:, 0], minlength=len(uniq)) / n_tri, 0.3)
-    noloop = tri[:, 0] != tri[:, 2]
-    tri, inv = tri[noloop], inv[noloop]
-    if not len(tri):
-        return None
-    src = _map_local(tri[:, 0], ids, off)
-    dst = _map_local(tri[:, 2], ids, off)
-    keep = (src >= 0) & (dst >= 0)
-    src, dst, inv = src[keep], dst[keep], inv[keep]
-    if not len(src):
-        return None
-    edges = np.stack([np.concatenate([src, dst]),
-                      np.concatenate([dst, src])], axis=1)
-    weights = np.concatenate([ifun[inv], fun[inv]])
-    return edges, weights
-
-
-def train_embeddings_gcn_np(
-    ids1: np.ndarray, emb1: np.ndarray, ids2: np.ndarray, emb2: np.ndarray,
-    triples1: np.ndarray, triples2: np.ndarray, seeds: np.ndarray,
-    layers: int = 2, gate: float = 0.6,
-) -> tuple[np.ndarray, np.ndarray]:
-    """GCN-Align-shaped batch backbone (the M6 analogue with no TF):
-    a highway/gated GCN over a relation-FUNCTIONALITY-weighted
-    adjacency (`models/gcn_align/gcn_align.py:12-190`;
-    `models/gcn_align/utils.py:191-213` builds the same fun/ifun
-    weighted adjacency — A12 is the DataFrame-side measure).
-
-      edge weights: a non-self-loop triple (h, r, t) contributes
-        max(ifun(r), 0.3) to h→t and max(fun(r), 0.3) to t→h, where
-        fun(r) = |distinct heads of r| / |triples of r| and ifun(r)
-        likewise on tails — high-functionality relations carry more
-        alignment signal, the 0.3 floor (reference's get_weighted_adj)
-        keeps low-functionality relations from vanishing, and h==t
-        triples are skipped (reference does both);
-      propagation: h ← L2norm(gate·h + (1−gate)·Â_w·h) per layer
-        (the highway residual of GCN-Align's layer stack), Â_w the
-        weighted sym-normalized adjacency;
-      seed tying: every train pair is re-pinned to its MEAN after each
-        layer — the deterministic stand-in for the supervised loss that
-        pulls seed pairs together.
-
-    h⁰ = name embeddings (GCN-Align propagates attribute features, so
-    unlike 'anchor' the structure signal rides ON the name space rather
-    than a separate anchor subspace). Deterministic: edges sorted before
-    np.add.at, no RNG anywhere."""
-    n1, n2 = len(ids1), len(ids2)
-    d = emb1.shape[1] if n1 else (emb2.shape[1] if n2 else 0)
-    if n1 == 0 or n2 == 0 or d == 0:
-        return emb1, emb2
-    loc1 = {g: i for i, g in enumerate(ids1)}
-    loc2 = {g: n1 + i for i, g in enumerate(ids2)}
-    h = _norm_rows(np.vstack([emb1, emb2]).astype(np.float64))
-    n = n1 + n2
-
-    # Edge weights match get_weighted_adj (`models/gcn_align/utils.py`
-    # in the reference, func/ifunc + the M dict): self-loop (h==t)
-    # triples are SKIPPED, each surviving triple contributes
-    # max(ifun(r), 0.3) to h→t and max(fun(r), 0.3) to t→h (the weight
-    # floor keeps low-functionality relations from vanishing), and
-    # duplicate (h, t) pairs ACCUMULATE (np.add.at below). Fully
-    e_parts: list[np.ndarray] = []
-    w_parts: list[np.ndarray] = []
-    for tri, ids, off in ((triples1, ids1, 0), (triples2, ids2, n1)):
-        ew = _gcn_weighted_edges(tri, ids, off)
-        if ew is not None:
-            e_parts.append(ew[0])
-            w_parts.append(ew[1])
-    edges = bool(e_parts)
-
-    sd = np.array(sorted(
-        (int(a), int(b)) for a, b in seeds if a in loc1 and b in loc2
-    ), dtype=np.int64).reshape(-1, 2)
-    p1 = np.array([loc1[a] for a in sd[:, 0]], dtype=np.int64)
-    p2 = np.array([loc2[b] for b in sd[:, 1]], dtype=np.int64)
-
-    def pin(hh: np.ndarray) -> np.ndarray:
-        if len(sd):
-            m = (hh[p1] + hh[p2]) / 2.0
-            hh[p1] = m
-            hh[p2] = m
-        return hh
-
-    h = pin(h)
-    if edges:
-        e = np.concatenate(e_parts, axis=0).astype(np.int64)
-        ew = np.concatenate(w_parts).astype(np.float64)
-        # deterministic accumulation order regardless of shuffle arrival
-        order = np.lexsort((ew, e[:, 1], e[:, 0]))
-        e, ew = e[order], ew[order]
-        deg = np.zeros(n)
-        np.add.at(deg, e[:, 0], ew)
-        wn = ew / np.sqrt(
-            np.maximum(deg[e[:, 0]], 1e-12) * np.maximum(deg[e[:, 1]], 1e-12)
-        )
-        for _ in range(layers):
-            msg = np.zeros_like(h)
-            np.add.at(msg, e[:, 1], h[e[:, 0]] * wn[:, None])
-            h = pin(_norm_rows(gate * h + (1.0 - gate) * msg))
-    return h[:n1], h[n1:]
-
-
 PAYLOAD_SCHEMA = (
     "batch int, kind string, a long, b long, c long, vec array<double>"
 )
@@ -718,8 +160,8 @@ def pack_batch_payload(
     # KG1 triples depend only on p1 — join the DISTINCT p1 list (like the
     # entity/seed rows), NOT the full (p1, p2) corr: with top_k_corr > 1
     # the corr join would replicate every KG1 triple once per target
-    # partner, inflating the payload and skewing the shared degree /
-    # softmax normalization of 'rrea'/'margin' toward triple edges.
+    # partner, inflating the payload and skewing the trainer's degree
+    # normalization toward triple edges.
     rows.append(
         placed1.join(corr1, placed1.part == corr1.p1).select(
             F.col("p1").alias("batch"), F.lit("t1").alias("kind"),
@@ -761,28 +203,19 @@ def pack_batch_payload(
     return out
 
 
-def train_batches(payload: DataFrame, epochs: int = 15, lam: float = 0.2,
-                  lam_neg: float = 0.02, margin: float = 0.5,
-                  algo: str = "anchor", rounds: int = 6,
-                  anchor_weight: float = 0.7) -> DataFrame:
+def train_batches(
+    payload: DataFrame, trainer=train_embeddings_anchor_np,
+) -> DataFrame:
     """groupBy(batch).applyInPandas over the packed payload → refined
     embeddings (batch, side 1|2, id, emb). One executor task per batch;
     batch size bounded by the partition cap (G4 memory contract).
 
-    ``algo``: 'anchor' (default — seed-anchor identity propagation,
-    strongest), 'gcn' (GCN-Align-shaped functionality-weighted highway
-    GCN), 'margin' (v1 margin refinement), 'rrea' (relational
-    reflection attention, deterministic stand-in), 'rrea_sgd'
-    (gradient-TRAINED RREA: margin ranking loss + Adam, hand-derived
-    backprop — the closest torch-free analogue of the reference's
-    trained backbone), 'kge_transe' / 'kge_distmult' / 'kge_rotate'
-    (M7 — numpy-trained KGE decoders + align seed loss,
-    `operators/kge.py`), or a CALLABLE with the signature
-    ``(ids1, emb1, ids2, emb2, triples1, triples2, seeds) ->
-    (refined1, refined2)`` (numpy arrays, executed executor-side per
-    batch) — the pluggable seam for alternate backbones (M5-M7: an
-    EAKit/GCN-Align/KGE trainer slots in here on a cluster that has
-    torch/TF; `models/wrapper.py:11-263`)."""
+    ``trainer`` is called once per batch, executor-side, as
+    ``trainer(ids1, emb1, ids2, emb2, triples1, triples2, seeds) ->
+    (refined1, refined2)`` on numpy arrays sorted by id. The default is
+    :func:`train_embeddings_anchor_np`; another backbone (an
+    EAKit/GCN-Align/KGE trainer on a cluster that has torch/TF,
+    `models/wrapper.py:11-263`) slots in here."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         def rows(kind):
@@ -803,38 +236,7 @@ def train_batches(payload: DataFrame, epochs: int = 15, lam: float = 0.2,
             emb1 = emb1[o1]
         if len(emb2):
             emb2 = emb2[o2]
-        if callable(algo):
-            r1, r2 = algo(ids1, emb1, ids2, emb2, t1, t2, sd)
-        elif algo == "anchor":
-            r1, r2 = train_embeddings_anchor_np(
-                ids1, emb1, ids2, emb2, t1, t2, sd,
-                rounds=rounds, anchor_weight=anchor_weight,
-            )
-        elif algo == "gcn":
-            r1, r2 = train_embeddings_gcn_np(
-                ids1, emb1, ids2, emb2, t1, t2, sd,
-            )
-        elif algo == "rrea":
-            r1, r2 = train_embeddings_rrea_np(
-                ids1, emb1, ids2, emb2, t1, t2, sd,
-                epochs=epochs, lam=lam, lam_neg=lam_neg, margin=margin,
-            )
-        elif algo == "rrea_sgd":
-            r1, r2 = train_embeddings_rrea_sgd_np(
-                ids1, emb1, ids2, emb2, t1, t2, sd,
-            )
-        elif isinstance(algo, str) and algo.startswith("kge_"):
-            from largeea_spark.operators.kge import train_embeddings_kge_np
-
-            r1, r2 = train_embeddings_kge_np(
-                ids1, emb1, ids2, emb2, t1, t2, sd,
-                decoder=algo[len("kge_"):],
-            )
-        else:
-            r1, r2 = train_embeddings_np(
-                ids1, emb1, ids2, emb2, t1, t2, sd,
-                epochs=epochs, lam=lam, lam_neg=lam_neg, margin=margin,
-            )
+        r1, r2 = trainer(ids1, emb1, ids2, emb2, t1, t2, sd)
         # carry the batch id: when two KG1 parts share a KG2 part, the
         # KG2 entities are trained once per batch — downstream kNN must
         # select ONE trained copy per batch, not both (else coalesce_sum

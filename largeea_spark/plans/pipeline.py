@@ -105,7 +105,6 @@ def align_kg_pair(
     emb_dim: int | str = "auto",
     use_token_channel: bool = False, token_weight: float = 0.3,
     structure_weight: float = 1.0, k_parts: int = 4,
-    structure_algo: str = "anchor",
     top_k_corr: int = 1, it_rounds: int = 1, semi_margin: float = 0.05,
     knn_method: str = "auto", encoder="hashed",
 ) -> dict:
@@ -114,9 +113,8 @@ def align_kg_pair(
     Each sim is a checkpointed stage (S4 analogue).
 
     The structure channel is the batched seed-anchor trainer
-    (`run_batched_ea`, `main.py:58-88`; ``structure_algo='anchor'``)
-    trained on GOLD seeds only, fused at the reference's weight 1.0
-    (`main.py:356`).
+    (`run_batched_ea`, `main.py:58-88`), trained on GOLD seeds only,
+    fused at the reference's weight 1.0 (`main.py:356`).
 
     ``emb_dim='auto'`` (default) widens the hashed name encoder from
     64 to 128 dims above 60k total entities — collision noise at fixed
@@ -193,7 +191,7 @@ def align_kg_pair(
 
             sim, _ = trained_batched_structure_similarity(
                 kgp, e1, e2, k_parts=k_parts, knn_k=knn_k,
-                top_k_corr=top_k_corr, algo=structure_algo,
+                top_k_corr=top_k_corr,
             )
             return sim
 

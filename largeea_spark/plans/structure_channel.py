@@ -45,11 +45,10 @@ def _corr_batches(pair: KGPair, parts1: DataFrame, parts2: DataFrame,
 
 def trained_batched_structure_similarity(
     pair: KGPair, base_emb1: DataFrame, base_emb2: DataFrame,
-    k_parts: int = 4, knn_k: int = 50, lp_iters: int = 3,
-    cap: int | None = None, epochs: int = 15, top_k_corr: int = 1,
-    algo: str = "anchor",
+    k_parts: int = 4, knn_k: int = 50, cap: int | None = None,
+    top_k_corr: int = 1,
 ) -> tuple[DataFrame, dict]:
-    """M2-shaped: per-batch numpy TRAINING (margin refinement,
+    """M2-shaped: per-batch numpy TRAINING (the seed-anchor trainer,
     operators/trainer.py) inside grouped applyInPandas — one executor
     task per batch, memory bounded by the partition cap — then blocked
     kNN per batch and A10 accumulation. The reference's
@@ -59,7 +58,7 @@ def trained_batched_structure_similarity(
     (`sampler.py:211,248-262`)."""
     from ..operators.trainer import pack_batch_payload, train_batches
 
-    parts1, parts2 = seed_aware_partition(pair, k_parts, n_iter=lp_iters, cap=cap)
+    parts1, parts2 = seed_aware_partition(pair, k_parts, cap=cap)
     parts1 = parts1.localCheckpoint(eager=True)
     parts2 = parts2.localCheckpoint(eager=True)
     batches = _corr_batches(pair, parts1, parts2, top_k_corr)
@@ -70,7 +69,7 @@ def trained_batched_structure_similarity(
     payload = pack_batch_payload(
         batches, parts1, parts2, placed1, placed2, train, base_emb1, base_emb2
     )
-    refined = train_batches(payload, epochs=epochs, algo=algo).localCheckpoint(eager=True)
+    refined = train_batches(payload).localCheckpoint(eager=True)
     r1 = refined.where(F.col("side") == 1).select("batch", "id", "emb")
     r2 = refined.where(F.col("side") == 2).select("batch", "id", "emb")
 

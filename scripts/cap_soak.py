@@ -83,7 +83,7 @@ def main():
     for label, capv in (("uncapped", None), ("capped", cap)):
         t0 = time.time()
         stru, stats = trained_batched_structure_similarity(
-            pair, e1, e2, k_parts=k_parts, knn_k=50, algo="anchor", cap=capv
+            pair, e1, e2, k_parts=k_parts, knn_k=50, cap=capv
         )
         fused = simops.fuse([stru, name_sim], [1.0, 1.0]).localCheckpoint(eager=True)
         m = evalx.hits_and_mrr(fused, test, ks=(1,), n_src=n_src)

@@ -83,7 +83,7 @@ def main():
         encoder=enc,
     ).select("id", "emb")
     stru, _ = trained_batched_structure_similarity(
-        pair, e1, e2, k_parts=8, knn_k=50, algo="anchor"
+        pair, e1, e2, k_parts=8, knn_k=50
     )
     fused = simops.fuse([stru.localCheckpoint(eager=True), name_sim], [1.0, 1.0])
     m = evalx.hits_and_mrr(fused, test, ks=(1,), n_src=n_src)

@@ -116,7 +116,7 @@ def main():
         kgp = KGPair(kg1=kg1, kg2=kg2,
                      links=seeds.withColumn("split", F.lit("train")))
         stru, stats = trained_batched_structure_similarity(
-            kgp, e1, e2, k_parts=k_parts, knn_k=50, algo="anchor",
+            kgp, e1, e2, k_parts=k_parts, knn_k=50,
             top_k_corr=top_k_corr,
         )
         stru = stru.localCheckpoint(eager=True)

@@ -57,7 +57,7 @@ def main():
     e1 = encode_names(name_channel.entity_names(kg1.ent, False), "name", dim=64).select("id", "emb")
     e2 = encode_names(name_channel.entity_names(kg2.ent, False), "name", dim=64).select("id", "emb")
     stru, stats = trained_batched_structure_similarity(
-        pair, e1, e2, k_parts=k_parts, knn_k=50, algo="anchor"
+        pair, e1, e2, k_parts=k_parts, knn_k=50
     )
     sims["structure"] = stru.localCheckpoint(eager=True)
     times["structure"] = time.time() - t0
@@ -88,7 +88,7 @@ def main():
         links=train.unionByName(mined).distinct().withColumn("split", F.lit("train")),
     )
     stru2, _ = trained_batched_structure_similarity(
-        boosted, e1, e2, k_parts=k_parts, knn_k=50, algo="anchor"
+        boosted, e1, e2, k_parts=k_parts, knn_k=50
     )
     fused2 = simops.fuse([stru2, name_sim], [1.0, 1.0]).localCheckpoint(eager=True)
     metrics["fused_semi"] = evalx.hits_and_mrr(fused2, test, ks=(1, 5), n_src=n_src)

@@ -33,7 +33,7 @@ e1 = encode_names(name_channel.entity_names(pair.kg1.ent, False), "name",
 e2 = encode_names(name_channel.entity_names(pair.kg2.ent, False), "name",
                   dim=32).select("id", "emb")
 stru, _ = trained_batched_structure_similarity(pair, e1, e2, k_parts=3,
-                                               knn_k=10, algo="anchor")
+                                               knn_k=10)
 rows3 = sorted((r.src, r.dst, round(r.sim, 9)) for r in stru.collect())
 h3 = hashlib.md5(str(rows3).encode()).hexdigest()
 print(f"XPAR {master} string={h} n={len(rows)} embed={h2} n2={len(rows2)} "

@@ -52,14 +52,14 @@ def test_trained_batched_structure_channel(spark):
     e2 = encode_names(entity_names(pair.kg2.ent, False), "name", dim=32).select("id", "emb")
     test = lk.where(F.col("split") == "test")
     sim_tr, stats = trained_batched_structure_similarity(
-        pair, e1, e2, k_parts=2, knn_k=10, epochs=10
+        pair, e1, e2, k_parts=2, knn_k=10
     )
     acc_tr = evalx.accuracy(sim_tr, test)
     assert sim_tr.count() > 0 and len(stats["batches"]) >= 2
     assert acc_tr > 0.3, f"trained batched channel collapsed: {acc_tr}"
     # determinism: rerun → identical accuracy
     sim_tr2, _ = trained_batched_structure_similarity(
-        pair, e1, e2, k_parts=2, knn_k=10, epochs=10
+        pair, e1, e2, k_parts=2, knn_k=10
     )
     assert abs(evalx.accuracy(sim_tr2, test) - acc_tr) < 1e-9
 

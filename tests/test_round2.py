@@ -228,7 +228,7 @@ def test_trainer_pluggable_callable(spark):
 
     def constant_trainer(ids1, emb1, ids2, emb2, t1_, t2_, sd):
         # mock backbone: every embedding becomes [7, 0, ...] — provably
-        # NOT any built-in algorithm's output
+        # NOT the built-in trainer's output
         out1 = np.zeros_like(emb1)
         out2 = np.zeros_like(emb2)
         if out1.size:
@@ -237,7 +237,7 @@ def test_trainer_pluggable_callable(spark):
             out2[:, 0] = 7.0
         return out1, out2
 
-    refined = train_batches(payload, algo=constant_trainer)
+    refined = train_batches(payload, trainer=constant_trainer)
     row = refined.first()
     assert row["emb"][0] == 7.0 and all(v == 0.0 for v in row["emb"][1:])
 

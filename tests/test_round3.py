@@ -1,6 +1,6 @@
 """Round-3 regression tests: ANN auto-selection, payload replication
-fix, watermarked streaming dedup, d=768 chunked propagation, the
-GCN-Align-shaped backbone, and single-pass triple placement."""
+fix, watermarked streaming dedup, d=768 chunked propagation, and
+single-pass triple placement."""
 
 import numpy as np
 import pytest
@@ -161,50 +161,6 @@ def test_propagate_embeddings_matches_numpy(spark, dim):
     want = _numpy_propagate(edges, h0, n_layers=2)
     for i in range(4):
         assert np.allclose(got[i], want[i], atol=1e-9), f"node {i} (d={dim})"
-
-
-# ---------------------------------------------------------------------------
-# GCN-Align-shaped backbone (M6 analogue)
-# ---------------------------------------------------------------------------
-
-def test_gcn_backbone_deterministic_and_seed_tying():
-    from largeea_spark.operators.trainer import train_embeddings_gcn_np
-
-    rng = np.random.default_rng(5)
-    ids1 = np.arange(6, dtype=np.int64)
-    ids2 = np.arange(6, dtype=np.int64)
-    emb1 = rng.standard_normal((6, 16))
-    emb2 = rng.standard_normal((6, 16))
-    t1 = np.array([[0, 0, 1], [1, 0, 2], [2, 1, 3], [3, 1, 4], [4, 0, 5]],
-                  dtype=np.int64)
-    t2 = t1.copy()
-    seeds = np.array([[0, 0], [3, 3]], dtype=np.int64)
-    r1a, r2a = train_embeddings_gcn_np(ids1, emb1, ids2, emb2, t1, t2, seeds)
-    r1b, r2b = train_embeddings_gcn_np(ids1, emb1, ids2, emb2, t1, t2, seeds)
-    assert np.array_equal(r1a, r1b) and np.array_equal(r2a, r2b)
-    # seed pairs are pinned to the shared mean → identical vectors
-    assert np.allclose(r1a[0], r2a[0]) and np.allclose(r1a[3], r2a[3])
-    # non-seed vectors differ across sides (different name init)
-    assert not np.allclose(r1a[1], r2a[1])
-
-
-def test_gcn_backbone_channel_quality(spark):
-    from largeea_spark.functions.vectors import encode_names
-    from largeea_spark.operators import evalx
-    from largeea_spark.plans.name_channel import entity_names
-    from largeea_spark.plans.structure_channel import (
-        trained_batched_structure_similarity,
-    )
-
-    pair, lk = _small_pair(spark)
-    e1 = encode_names(entity_names(pair.kg1.ent, False), "name", dim=32).select("id", "emb")
-    e2 = encode_names(entity_names(pair.kg2.ent, False), "name", dim=32).select("id", "emb")
-    sim, stats = trained_batched_structure_similarity(
-        pair, e1, e2, k_parts=2, knn_k=10, algo="gcn"
-    )
-    test = lk.where(F.col("split") == "test")
-    acc = evalx.accuracy(sim, test)
-    assert sim.count() > 0 and acc > 0.3, f"gcn channel collapsed: {acc}"
 
 
 # ---------------------------------------------------------------------------

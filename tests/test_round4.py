@@ -1,5 +1,5 @@
 """Round-4 regression tests: emb_dim choice logging, float32 ANN wire
-format, GCN-Align weight parity, shuffle-width fallback."""
+format, shuffle-width fallback."""
 
 import json
 
@@ -107,62 +107,6 @@ def test_ivf_assign_widened_and_dedup_free(spark):
     above = plan[:cog]
     assert "HashAggregate" not in above, above[:1200]
     assert out.count() > 0
-
-
-# ---------------------------------------------------------------------------
-# GCN backbone parity details (ADVICE r3): weight floor + self-loop skip
-# match get_weighted_adj; vectorized edges stay deterministic
-# ---------------------------------------------------------------------------
-
-def test_gcn_weight_floor_and_self_loop_skip():
-    from largeea_spark.operators.trainer import train_embeddings_gcn_np
-
-    rng = np.random.default_rng(3)
-    ids = np.arange(4, dtype=np.int64)
-    emb1 = rng.standard_normal((4, 8))
-    emb2 = rng.standard_normal((4, 8))
-    seeds = np.zeros((0, 2), dtype=np.int64)
-    # relation 0 has fun=ifun=1/3 < 0.3 floor; a self-loop triple on a
-    # lone entity must contribute NO edge (its vector only self-decays)
-    t_floor = np.array([[0, 0, 1], [0, 0, 2], [0, 0, 3]], dtype=np.int64)
-    t_self = np.array([[3, 0, 3]], dtype=np.int64)
-    r1, _ = train_embeddings_gcn_np(ids, emb1, ids, emb2, t_floor,
-                                    np.zeros((0, 3), np.int64), seeds)
-    # with the 0.3 floor all three h→t edges carry equal weight → the
-    # three targets receive identical-norm messages from entity 0
-    m1 = np.linalg.norm(r1[1] - r1[2]), np.linalg.norm(r1[1] - r1[3])
-    assert np.isfinite(m1).all()
-    r1s, _ = train_embeddings_gcn_np(ids, emb1, ids, emb2, t_self,
-                                     np.zeros((0, 3), np.int64), seeds)
-    # self-loop-only triples → no edges at all → embeddings unchanged
-    # apart from the per-layer normalization of the input
-    base = emb1 / np.maximum(
-        np.linalg.norm(emb1, axis=1, keepdims=True), 1e-12)
-    assert np.allclose(r1s, base)
-
-
-def test_gcn_vectorized_edges_match_reference_weights():
-    """Hand-check fun/ifun + floor on a tiny graph against the formula
-    in the reference's get_weighted_adj."""
-    from largeea_spark.operators.trainer import train_embeddings_gcn_np
-
-    ids = np.arange(3, dtype=np.int64)
-    emb = np.eye(3, dtype=np.float64)
-    # relation 5: triples (0,5,1), (0,5,2) → fun = 1/2 (1 head / 2
-    # triples) → floored? 0.5 > 0.3 no; ifun = 2/2 = 1.0
-    t = np.array([[0, 5, 1], [0, 5, 2]], dtype=np.int64)
-    r1a, _ = train_embeddings_gcn_np(
-        ids, emb, ids, emb.copy(), t, np.zeros((0, 3), np.int64),
-        np.zeros((0, 2), np.int64))
-    r1b, _ = train_embeddings_gcn_np(
-        ids, emb, ids, emb.copy(), t, np.zeros((0, 3), np.int64),
-        np.zeros((0, 2), np.int64))
-    assert np.array_equal(r1a, r1b)
-    # entity 1 and 2 receive the same ifun-weighted message from 0 →
-    # symmetric updates: their distance to entity 0's vector is equal
-    d1 = np.linalg.norm(r1a[1] - r1a[0])
-    d2 = np.linalg.norm(r1a[2] - r1a[0])
-    assert d1 == pytest.approx(d2, abs=1e-12)
 
 
 # ---------------------------------------------------------------------------

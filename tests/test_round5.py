@@ -14,36 +14,6 @@ from tests.conftest import spark  # noqa: F401
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r4 #1 (trainer.py): fun/ifun must include self-loop triples —
-# the reference's func/ifunc (utils.py) run over the FULL KG; only the
-# adjacency accumulation skips (h, r, h) rows.
-# ---------------------------------------------------------------------------
-
-def test_gcn_weights_fun_ifun_include_self_loops():
-    from largeea_spark.operators.trainer import _gcn_weighted_edges
-
-    # relation 0: 3 non-loop triples {(0,0,1), (2,0,1), (5,0,4)} plus
-    # SELF-LOOP (3,0,3).
-    tri = np.array(
-        [[0, 0, 1], [2, 0, 1], [5, 0, 4], [3, 0, 3]], dtype=np.int64)
-    ids = np.array([0, 1, 2, 3, 4, 5], dtype=np.int64)
-
-    # reference semantics: n_tri=4 (loop counted), heads={0,2,5,3}→fun=1.0,
-    # tails={1,4,3}→ifun=3/4; the loop contributes NO edge.
-    edges, weights = _gcn_weighted_edges(tri, ids, 0)
-    # 3 surviving triples × 2 directions
-    assert edges.shape == (6, 2)
-    fwd = weights[:3]      # h→t carries ifun
-    bwd = weights[3:]      # t→h carries fun
-    assert np.allclose(fwd, 0.75), fwd
-    assert np.allclose(bwd, 1.0), bwd
-
-    # counter-case: computed on FILTERED triples ifun would be 2/3 —
-    # assert we are not doing that
-    assert not np.allclose(fwd, 2.0 / 3.0)
-
-
-# ---------------------------------------------------------------------------
 # ADVICE r4 #2 (knn._bounded_chunk): never exceed the budget on skewed
 # cells, never override a smaller explicit request.
 # ---------------------------------------------------------------------------
@@ -167,123 +137,6 @@ def test_stream_state_ttl_evicts_idle_key(spark, tmp_path):  # noqa: F811
 
 
 # ---------------------------------------------------------------------------
-# VERDICT r4 #4: gradient-TRAINED RREA backbone ('rrea_sgd') — margin
-# ranking loss + Adam with hand-derived backprop through the
-# reflection-attention stack. These tests pin (a) the gradients against
-# central finite differences, (b) determinism under input-order
-# shuffles, (c) that training actually reduces the loss.
-# ---------------------------------------------------------------------------
-
-def _tiny_rrea_graph():
-    rng = np.random.default_rng(0)
-    n, d, R = 7, 5, 3
-    h = rng.standard_normal((n, d))
-    rel = rng.standard_normal((R, d))
-    e_src = np.array([0, 0, 1, 2, 3, 4, 5, 6, 6])
-    e_dst = np.array([1, 2, 3, 4, 5, 6, 0, 1, 2])
-    e_rel = np.array([0, 1, 2, 0, 1, 2, 0, 1, 2])
-    return n, d, R, h, rel, e_src, e_dst, e_rel
-
-
-def test_rrea_sgd_gradients_match_finite_differences():
-    from largeea_spark.operators.trainer import (
-        _norm_rows, _norm_rows_bwd, _rrea_layer_bwd, _rrea_sgd_forward)
-
-    n, d, R, h, rel, e_src, e_dst, e_rel = _tiny_rrea_graph()
-    tau, depth = 0.1, 2
-    rng = np.random.default_rng(1)
-    W = rng.standard_normal((n, d))  # arbitrary linear loss: L = Σ W·e
-
-    def loss(h0, rl):
-        e, _ = _rrea_sgd_forward(h0, rl, e_src, e_dst, e_rel, depth, tau)
-        return float((W * e).sum())
-
-    e, (y0, caches) = _rrea_sgd_forward(h, rel, e_src, e_dst, e_rel, depth, tau)
-    gh = W.copy()
-    grel = np.zeros_like(rel)
-    for c in reversed(caches):
-        gh, dr = _rrea_layer_bwd(c, e_src, e_dst, e_rel, R, tau, gh)
-        grel += dr
-    gh0 = _norm_rows_bwd(y0, _norm_rows(y0), gh)
-
-    eps = 1e-6
-    for anal, param, which in ((gh0, h, "h"), (grel, rel, "rel")):
-        num = np.zeros_like(param)
-        for i in range(param.shape[0]):
-            for j in range(param.shape[1]):
-                pp, pm = param.copy(), param.copy()
-                pp[i, j] += eps
-                pm[i, j] -= eps
-                args = (pp, rel) if which == "h" else (h, pp)
-                args_m = (pm, rel) if which == "h" else (h, pm)
-                num[i, j] = (loss(*args) - loss(*args_m)) / (2 * eps)
-        rel_err = np.abs(num - anal).max() / np.abs(num).max()
-        assert rel_err < 1e-6, (which, rel_err)
-
-
-def test_rrea_sgd_trains_and_is_deterministic():
-    from largeea_spark.operators.trainer import train_embeddings_rrea_sgd_np
-
-    rng = np.random.default_rng(7)
-    n = 120
-    ids = np.arange(n, dtype=np.int64)
-    edges = [(v, rng.integers(0, 4), rng.integers(0, v)) for v in range(1, n)]
-    tri = np.array(edges, dtype=np.int64)
-    seeds = np.stack([np.arange(0, n, 4)] * 2, 1)
-    emb1 = rng.standard_normal((n, 8))
-    emb2 = rng.standard_normal((n, 8))
-
-    # training from the reference-faithful random init pulls seed pairs
-    # together in the structure space (anchor init starts them already
-    # tied, so the from-scratch variant is the probe)
-    sw, sd_ = 0.5, 32
-    s = seeds[:, 0]
-    t1, t2 = train_embeddings_rrea_sgd_np(
-        ids, emb1, ids, emb2, tri, tri.copy(), seeds, init="hashed",
-        epochs=30)
-    d_pair = np.linalg.norm(t1[s, :sd_] - t2[s, :sd_], axis=1).mean() / sw
-    u1, u2 = train_embeddings_rrea_sgd_np(
-        ids, emb1, ids, emb2, tri, tri.copy(), seeds, init="hashed",
-        epochs=0)
-    d_init = np.linalg.norm(u1[s, :sd_] - u2[s, :sd_], axis=1).mean() / sw
-    assert d_pair < d_init * 0.8, (d_pair, d_init)
-
-    r1, r2 = train_embeddings_rrea_sgd_np(
-        ids, emb1, ids, emb2, tri, tri.copy(), seeds)
-
-    # determinism: shuffling triple/seed row order changes nothing
-    # (edges are sorted before accumulation; init is value-hashed)
-    p = rng.permutation(len(tri))
-    q = rng.permutation(len(seeds))
-    b1, b2 = train_embeddings_rrea_sgd_np(
-        ids, emb1, ids, emb2, tri[p], tri.copy(), seeds[q])
-    assert np.array_equal(r1, b1) and np.array_equal(r2, b2)
-
-    # hashed init is the reference-faithful variant and stays available
-    h1, h2 = train_embeddings_rrea_sgd_np(
-        ids, emb1, ids, emb2, tri, tri.copy(), seeds, init="hashed",
-        epochs=5)
-    assert h1.shape == (n, 32 + 8) and h2.shape == (n, 32 + 8)
-
-
-def test_rrea_sgd_dispatch_through_train_batches(spark):  # noqa: F811
-    import pandas as pd
-    from largeea_spark.operators.trainer import train_batches
-
-    rows = []
-    for i in range(6):
-        rows.append((0, "e1", i, None, None, [float(i), 1.0]))
-        rows.append((0, "e2", i, None, None, [float(i), -1.0]))
-    rows += [(0, "t1", 0, 0, 1, None), (0, "t2", 0, 0, 1, None),
-             (0, "seed", 0, 0, None, None), (0, "seed", 2, 2, None, None)]
-    payload = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["batch", "kind", "a", "b", "c", "vec"]))
-    out = train_batches(payload, algo="rrea_sgd").collect()
-    assert len(out) == 12
-    assert all(len(r.emb) == 4 for r in out)  # concat(struct d=2, name d=2)
-
-
-# ---------------------------------------------------------------------------
 # VERDICT r4 #5: pinned-weights mini-transformer through the
 # model_name_encoder seam, vs the closed-form numpy oracle — bitwise.
 # Also pins the reference's mask+max-pool semantics (emb_loader.py
@@ -346,91 +199,13 @@ def test_minibert_tokenizer_contract():
 
 
 # ---------------------------------------------------------------------------
-# SURVEY §2 M7: KGE decoders (TransE / DistMult / RotatE + align seed
-# loss). Gradient correctness by central finite differences against the
-# closed-form loss; determinism across row order; dispatch contract.
+# train_batches: the default trainer is the seed-anchor trainer, run on
+# the id-sorted batch arrays whatever order the payload rows arrive in.
 # ---------------------------------------------------------------------------
 
-def _tiny_kge_setup(decoder_dim=6):
-    rng = np.random.default_rng(11)
-    n_ent, n_rel = 8, 3
-    ent = rng.standard_normal((n_ent, decoder_dim)) * 0.3
-    rel = rng.standard_normal((n_rel, decoder_dim)) * 0.3
-    tri = np.array([[0, 0, 1], [1, 1, 2], [2, 2, 3], [3, 0, 4],
-                    [4, 1, 5], [5, 2, 6], [6, 0, 7]], dtype=np.int64)
-    s1 = np.array([0, 2], dtype=np.int64)
-    s2 = np.array([4, 6], dtype=np.int64)
-    return ent, rel, tri, s1, s2
-
-
-@pytest.mark.parametrize("decoder", ["transe", "distmult", "rotate"])
-def test_kge_gradients_match_finite_differences(decoder):
-    from largeea_spark.operators.kge import kge_grads_np, kge_loss_np
-
-    ent, rel, tri, s1, s2 = _tiny_kge_setup()
-    # margin=5 keeps every hinge strictly active (scores are O(1)), so
-    # the loss is smooth at the evaluation point and FD is valid
-    kw = dict(decoder=decoder, margin=5.0, n_neg=2, align_weight=3.0, ep=1)
-    ge, gr = kge_grads_np(ent, rel, tri, s1, s2, **kw)
-
-    eps = 1e-6
-    for anal, which in ((ge, "ent"), (gr, "rel")):
-        param = ent if which == "ent" else rel
-        num = np.zeros_like(param)
-        for i in range(param.shape[0]):
-            for j in range(param.shape[1]):
-                pp, pm = param.copy(), param.copy()
-                pp[i, j] += eps
-                pm[i, j] -= eps
-                lp = kge_loss_np(pp if which == "ent" else ent,
-                                 pp if which == "rel" else rel,
-                                 tri, s1, s2, **kw)
-                lm = kge_loss_np(pm if which == "ent" else ent,
-                                 pm if which == "rel" else rel,
-                                 tri, s1, s2, **kw)
-                num[i, j] = (lp - lm) / (2 * eps)
-        denom = max(np.abs(num).max(), 1e-12)
-        rel_err = np.abs(num - anal).max() / denom
-        assert rel_err < 1e-5, (decoder, which, rel_err)
-
-
-@pytest.mark.parametrize("decoder", ["transe", "distmult", "rotate"])
-def test_kge_trains_pulls_seeds_and_is_deterministic(decoder):
-    from largeea_spark.operators.kge import train_embeddings_kge_np
-
-    rng = np.random.default_rng(5)
-    n = 60
-    ids = np.arange(n, dtype=np.int64)
-    tri = np.array(
-        [(v, rng.integers(0, 3), rng.integers(0, v)) for v in range(1, n)],
-        dtype=np.int64)
-    seeds = np.stack([np.arange(0, n, 3)] * 2, 1)
-    emb1 = rng.standard_normal((n, 4))
-    emb2 = rng.standard_normal((n, 4))
-    kw = dict(decoder=decoder, dim=16, struct_weight=0.5)
-    s = seeds[:, 0]
-
-    t1, t2 = train_embeddings_kge_np(
-        ids, emb1, ids, emb2, tri, tri.copy(), seeds, epochs=40, **kw)
-    u1, u2 = train_embeddings_kge_np(
-        ids, emb1, ids, emb2, tri, tri.copy(), seeds, epochs=0, **kw)
-    # the align pull moves seed pairs together in the KGE block
-    d_tr = np.linalg.norm(t1[s, :16] - t2[s, :16], axis=1).mean()
-    d_in = np.linalg.norm(u1[s, :16] - u2[s, :16], axis=1).mean()
-    assert d_tr < d_in * 0.8, (decoder, d_tr, d_in)
-
-    # deterministic under triple/seed row-order shuffles (sorted
-    # assembly + value-hashed init)
-    p = rng.permutation(len(tri))
-    q = rng.permutation(len(seeds))
-    b1, b2 = train_embeddings_kge_np(
-        ids, emb1, ids, emb2, tri[p], tri.copy(), seeds[q], epochs=40, **kw)
-    assert np.array_equal(t1, b1) and np.array_equal(t2, b2)
-
-
-def test_kge_dispatch_through_train_batches(spark):  # noqa: F811
-    import pandas as pd
-    from largeea_spark.operators.trainer import train_batches
+def test_anchor_dispatch_through_train_batches(spark):  # noqa: F811
+    from largeea_spark.operators.trainer import (
+        train_batches, train_embeddings_anchor_np)
 
     rows = []
     for i in range(6):
@@ -438,11 +213,30 @@ def test_kge_dispatch_through_train_batches(spark):  # noqa: F811
         rows.append((0, "e2", i, None, None, [float(i), -1.0]))
     rows += [(0, "t1", 0, 0, 1, None), (0, "t2", 0, 0, 1, None),
              (0, "seed", 0, 0, None, None), (0, "seed", 2, 2, None, None)]
-    payload = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["batch", "kind", "a", "b", "c", "vec"]))
-    out = train_batches(payload, algo="kge_transe").collect()
+
+    def run(rs):
+        payload = spark.createDataFrame(pd.DataFrame(
+            rs, columns=["batch", "kind", "a", "b", "c", "vec"]))
+        return {(r.side, r.id): r.emb
+                for r in train_batches(payload).collect()}
+
+    out = run(rows)
     assert len(out) == 12
-    assert all(len(r.emb) == 66 for r in out)  # concat(kge d=64, name d=2)
+    assert all(len(v) == 4 for v in out.values())  # concat(anchor d=2, name d=2)
+
+    ids = np.arange(6, dtype=np.int64)
+    want1, want2 = train_embeddings_anchor_np(
+        ids, np.array([[float(i), 1.0] for i in ids]),
+        ids, np.array([[float(i), -1.0] for i in ids]),
+        np.array([[0, 0, 1]], dtype=np.int64),
+        np.array([[0, 0, 1]], dtype=np.int64),
+        np.array([[0, 0], [2, 2]], dtype=np.int64))
+    for side, want in ((1, want1), (2, want2)):
+        got = np.array([out[(side, i)] for i in ids])
+        assert np.array_equal(got, want), side
+
+    perm = np.random.default_rng(3).permutation(len(rows))
+    assert run([rows[i] for i in perm]) == out
 
 
 # ---------------------------------------------------------------------------
