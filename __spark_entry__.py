@@ -639,7 +639,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["cube_rollup_orders"] = cube_rollup_orders
 
     def event_windowed_counts(spark, sf):
-        # batch counterpart of streaming.ingest.stream_windowed_event_counts
+        # batch event counts per event_type
         # (tumbling 1h window agg) — window starts exported as epoch
         # seconds so both engines compare tz-free integers
         ev = _t(spark, sf, "events")

@@ -20,7 +20,6 @@ Package layout (SURVEY.md §7.0):
               structure channel (the only structure path), fusion+eval,
               web-text extraction front-end, checkpointed end-to-end
               pipeline with lineage
-  streaming/  incremental ingest (Trigger.AvailableNow) over stage tables
 """
 
 __version__ = "0.1.0"

@@ -20,7 +20,7 @@ shuffle + one tiny driver-side prefix sum.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def dict_encode(df: DataFrame, key_col: str, id_col: str = "id") -> DataFrame:
@@ -159,7 +159,3 @@ def encode_column(
     )
     return clean.unionByName(dirty)
 
-
-def with_offset(df: DataFrame, col: str, offset: int) -> Column:
-    """Shifted id column (EAKit export shift, `dataset.py:66-85`)."""
-    return (F.col(col) + F.lit(offset)).alias(col)

@@ -12,9 +12,10 @@ Each block is bounded (≤ block_rows) so executor memory is bounded at
 any index size; query replication cost is B·|Q| rows — the same
 work/shape as the reference's index batching, but distributed.
 
-An LSH-bucketed ANN variant (`ann_topk_lsh`) trades recall for a
-candidate join instead of full replication — the 100TB path when B
-grows large.
+The approximate path is IVF (`ivf_topk`, the reference's FAISS IVF
+option): a k-means coarse quantizer assigns each index row to one cell
+and each query probes its nearest cells, trading recall for a cell
+join instead of full replication when B grows large.
 """
 
 from __future__ import annotations
@@ -109,7 +110,7 @@ def _widen_if_narrow(df: DataFrame) -> DataFrame:
     before a compute-dense mapInPandas pass (same starvation family as
     blocking.widen_if_narrow): checkpointed embedding tables arrive
     AQE-coalesced to 1-2 partitions (a 200k×128 table is ~10 MB of
-    compressed bytes — below one advisory partition), so the IVF/LSH
+    compressed bytes — below one advisory partition), so the IVF
     ASSIGN kernels (m @ centroids GEMM + per-row argsort) ran 2-wide on
     a 32-core session (94 s/task observed at 200k). Inputs already at
     width pass through untouched; row-level kernels are partition-
@@ -338,83 +339,6 @@ def knn_topk_grouped(
     return topk_per_row(per_cell, k, SRC)
 
 
-def ann_topk_lsh(
-    query: DataFrame, index: DataFrame, k: int = 50,
-    id_col: str = "id", emb_col: str = "emb",
-    n_planes: int = 12, seed: int = 7, normalize: bool = True,
-    probe_bits: int = 0, shuffle_dtype: str | None = "float32",
-) -> DataFrame:
-    """Approximate top-k via random-hyperplane LSH bucketing: both sides
-    hashed to a signed-projection bucket; candidates scored only within
-    matching buckets (optionally ± ``probe_bits`` one-bit probes).
-
-    Candidate join on the bucket key is a plain sort-merge equi-join —
-    at 1e9+ rows this is the scale path (no query replication)."""
-    query = _cast_shuffle_dtype(query, emb_col, shuffle_dtype)
-    index = _cast_shuffle_dtype(index, emb_col, shuffle_dtype)
-    dims = len(query.select(emb_col).first()[0])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dims))
-
-    def bucketize(role: str):
-        def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                m = _to_matrix(pdf[emb_col])
-                if normalize:
-                    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-                bits = (m @ planes.T) > 0
-                code = np.zeros(len(pdf), dtype=np.int64)
-                for i in range(n_planes):
-                    code |= bits[:, i].astype(np.int64) << i
-                base = pd.DataFrame({"id": pdf[id_col].to_numpy(), "bucket": code,
-                                     "emb": pdf[emb_col]})
-                if role == "q" and probe_bits > 0:
-                    frames = [base]
-                    for b in range(min(probe_bits, n_planes)):
-                        probe = base.copy()
-                        probe["bucket"] = probe["bucket"] ^ (1 << b)
-                        frames.append(probe)
-                    base = pd.concat(frames, ignore_index=True)
-                yield base
-
-        return fn
-
-    schema = f"id long, bucket long, emb array<{_elem_type(query, emb_col)}>"
-    qb = _widen_if_narrow(query).mapInPandas(bucketize("q"), schema=schema)
-    xb = _widen_if_narrow(index).mapInPandas(bucketize("x"), schema=schema)
-
-    def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({SRC: [], DST: [], SIM: []}).astype(
-                {SRC: "int64", DST: "int64", SIM: "float64"}
-            )
-        qm = _to_matrix(left["emb"])
-        xm = _to_matrix(right["emb"])
-        if normalize:
-            qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-            xm /= np.maximum(np.linalg.norm(xm, axis=1, keepdims=True), 1e-12)
-        sims = 1.0 - (
-            (qm * qm).sum(1)[:, None] + (xm * xm).sum(1)[None, :] - 2.0 * qm @ xm.T
-        )
-        kk = min(k, sims.shape[1])
-        part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-        rows = np.repeat(left["id"].to_numpy(), kk)
-        cols = right["id"].to_numpy()[part.ravel()]
-        vals = np.take_along_axis(sims, part, axis=1).ravel()
-        return pd.DataFrame({SRC: rows, DST: cols, SIM: vals})
-
-    per_bucket = (
-        _pin_partitions(qb, "bucket").groupBy("bucket")
-        .cogroup(_pin_partitions(xb, "bucket").groupBy("bucket"))
-        .applyInPandas(score, schema=f"{SRC} long, {DST} long, {SIM} double")
-    )
-    from .simops import topk_per_row
-
-    # probes can produce duplicate (src,dst) — keep the max-sim copy
-    dedup = per_bucket.groupBy(SRC, DST).agg(F.max(SIM).alias(SIM))
-    return topk_per_row(dedup, k, SRC)
-
-
 def _kmeans_lite(sample: np.ndarray, nlist: int, n_iter: int = 8,
                  seed: int = 11) -> np.ndarray:
     """Deterministic numpy Lloyd's k-means on a driver-side sample —
@@ -536,12 +460,10 @@ def ivf_topk(
     )
     from .simops import topk_per_row
 
-    # no (src,dst) dedup needed — unlike the LSH multiprobe path, every
-    # index row is assigned to exactly ONE cell (d2.argmin), so a query
-    # probing nprobe cells sees each dst at most once; the groupBy
-    # dedup that used to sit here re-shuffled all nprobe·k candidate
-    # rows per query (the largest incompressible shuffle in the job,
-    # SCALE.md "IVF economics") for nothing
+    # no (src,dst) dedup needed — every index row is assigned to
+    # exactly ONE cell (d2.argmin), so a query probing nprobe cells
+    # sees each dst at most once (a dedup would re-shuffle all
+    # nprobe·k candidate rows per query, SCALE.md "IVF economics")
     return topk_per_row(per_cell, k, SRC)
 
 

@@ -5,7 +5,7 @@ self-joins over the triple table").
 
 The pipeline's structure channel is the batched trainer
 (plans/structure_channel.py). This module holds the deterministic
-propagation operator and its supervised Procrustes variant:
+propagation operator (and the negative sampler):
 
   h⁰(e)   = name embedding (functions.vectors hashed n-gram, or any
             encoder honoring the id→array<float> contract)
@@ -21,8 +21,6 @@ Each layer localCheckpoints (◆ lineage hygiene, SURVEY.md §4.3.2).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-from ..sources.kg import KGPair
 
 
 def _norm_adj(triples: DataFrame) -> DataFrame:
@@ -143,38 +141,3 @@ def sample_negatives(triples: DataFrame, n_ents: int, n_per_pos: int = 1,
     )
     return proposals.join(triples, ["src", "rel", "dst"], "left_anti")
 
-
-def apply_linear_map(emb: DataFrame, w: list) -> DataFrame:
-    """x → xW for a small dense W (nested list, d×d) — JVM-side via a
-    literal matrix and aggregate expressions (no UDF, no broadcast var:
-    W is folded into the plan as literals)."""
-    d_out = len(w[0])
-    cols = []
-    for jcol in range(d_out):
-        expr = None
-        for i, row in enumerate(w):
-            term = F.element_at("emb", i + 1) * F.lit(float(row[jcol]))
-            expr = term if expr is None else expr + term
-        cols.append(expr)
-    return emb.select("id", F.array(*cols).alias("emb"))
-
-
-def procrustes_refined_similarity(
-    pair: KGPair, emb1: DataFrame, emb2: DataFrame,
-    n_layers: int = 2, k: int = 50,
-) -> DataFrame:
-    """Trained-alignment variant of propagation: propagate, then fit
-    the orthogonal map W on train seeds via Procrustes (L7,
-    `utils.py:162-164`) and score kNN in the mapped space — the
-    classic supervised linear alignment (deterministic, so it keeps the
-    engine's reproducibility contract where GPU GNN training can't,
-    SURVEY §7.4.7)."""
-    from ..functions.vectors import procrustes
-    from .knn import knn_topk
-
-    p1 = propagate_embeddings(pair.kg1.triples, emb1, n_layers)
-    p2 = propagate_embeddings(pair.kg2.triples, emb2, n_layers)
-    train = pair.links.where(F.col("split") == "train").select("e1", "e2")
-    w = procrustes(p1, p2, train)
-    mapped1 = apply_linear_map(p1, w)
-    return knn_topk(mapped1, p2, k=k)

@@ -108,8 +108,10 @@ def emit_triples_verified(pages: DataFrame, predicates: list[str] | None = None)
     """Single-pass extract + byte-identical verify + emit: extracts text
     from html, RAISES if it differs from the golden ``text`` column
     (driver invariant), and emits surface triples from the extracted
-    text — one scan, no second verification pass. The production path
-    for the timed pipeline; ``verify_byte_identical`` remains the
+    text — one scan, no second verification pass. Only ``bench.py``
+    and ``scripts/construct_probe.py`` call it; the pipeline
+    (``construct_kg_from_pages``) runs ``triples_for_parity`` →
+    ``emit_triples``, and ``verify_byte_identical`` remains the
     standalone audit."""
     preds = predicates or PREDICATES
     pat = re.compile(

@@ -207,18 +207,12 @@ def token_level_similarity(
     return simops.spspmm(simops.spspmm(m1, s_tok), m2)
 
 
-def fuse_name_sims(global_sim: DataFrame, string_sim: DataFrame,
-                   string_weight: float = 0.05) -> DataFrame:
-    """`main.py:350-354`: name = global + 0.05·string (A10/F11)."""
-    return simops.fuse([global_sim, string_sim], [1.0, string_weight])
-
-
-def semi_seeds(global_sim: DataFrame, string_sim: DataFrame,
-               weights: tuple = (1.0, 0.05)) -> DataFrame:
+def semi_seeds(global_sim: DataFrame, string_sim: DataFrame) -> DataFrame:
     """Phase 0 prologue (`get_semi_link`, `main.py:203-216`): fuse the
-    name sims then keep mutual-argmax pairs (W10) as training seeds.
+    name sims at the reference weights [1.0, 0.05] then keep
+    mutual-argmax pairs (W10) as training seeds.
     Returns DataFrame(e1, e2)."""
-    fused = simops.fuse([global_sim, string_sim], list(weights))
+    fused = simops.fuse([global_sim, string_sim], [1.0, 0.05])
     return simops.bi_mapping(fused).select(
         F.col("src").alias("e1"), F.col("dst").alias("e2")
     )

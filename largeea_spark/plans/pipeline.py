@@ -101,20 +101,21 @@ def construct_kg_from_pages(
 
 def align_kg_pair(
     spark: SparkSession, pair: KGPair, store: StageStore,
-    knn_k: int = 50, string_weight: float = 0.05, use_structure: bool = True,
-    emb_dim: int | str = "auto",
-    use_token_channel: bool = False, token_weight: float = 0.3,
-    structure_weight: float = 1.0, k_parts: int = 4,
-    top_k_corr: int = 1, it_rounds: int = 1, semi_margin: float = 0.05,
-    knn_method: str = "auto", encoder="hashed",
+    knn_k: int = 50, use_structure: bool = True,
+    emb_dim: int | str = "auto", use_token_channel: bool = False,
+    k_parts: int = 4, it_rounds: int = 1, encoder="hashed",
 ) -> dict:
     """Two-KG alignment, reference phase order (`main.py:242-369`):
     name channel (string+embedding) → structure channel → fusion → eval.
     Each sim is a checkpointed stage (S4 analogue).
 
     The structure channel is the batched seed-anchor trainer
-    (`run_batched_ea`, `main.py:58-88`), trained on GOLD seeds only,
-    fused at the reference's weight 1.0 (`main.py:356`).
+    (`run_batched_ea`, `main.py:58-88`), trained on GOLD seeds only.
+
+    Fusion weights are fixed at the reference's: name = 1.0·embed +
+    0.05·string (`main.py:350-354`), plus 0.3·token when
+    ``use_token_channel``; fused = 1.0·structure + 1.0·name
+    (`main.py:356`). Semi rounds mine at margin 0.05.
 
     ``emb_dim='auto'`` (default) widens the hashed name encoder from
     64 to 128 dims above 60k total entities — collision noise at fixed
@@ -162,7 +163,7 @@ def align_kg_pair(
     sim_embed = store.checkpoint(
         "sim_embed",
         lambda: name_channel.name_embedding_similarity(
-            pair, k=knn_k, dim=emb_dim, method=knn_method, encoder=encoder
+            pair, k=knn_k, dim=emb_dim, encoder=encoder
         ),
     )
     seeds = store.checkpoint(
@@ -191,7 +192,6 @@ def align_kg_pair(
 
             sim, _ = trained_batched_structure_similarity(
                 kgp, e1, e2, k_parts=k_parts, knn_k=knn_k,
-                top_k_corr=top_k_corr,
             )
             return sim
 
@@ -208,15 +208,15 @@ def align_kg_pair(
 
     def fuse_round(structure_sim: DataFrame | None) -> DataFrame:
         name_parts = [sim_embed, sim_string]
-        name_w = [1.0, string_weight]
+        # name = global + 0.05·string (`main.py:350-354`, A10/F11)
+        name_w = [1.0, 0.05]
         if use_token_channel:
             name_parts.append(sims["token"])
-            name_w.append(token_weight)
+            name_w.append(0.3)  # L4 token sim (`text_sim.py:247-262`)
         name_sim = simops.fuse(name_parts, name_w)
         if structure_sim is not None:
             # reference fuses stru + name at weight 1.0 (`main.py:356`)
-            return simops.fuse([structure_sim, name_sim],
-                               [structure_weight, 1.0])
+            return simops.fuse([structure_sim, name_sim], [1.0, 1.0])
         return name_sim
 
     fused = store.checkpoint(
@@ -237,7 +237,9 @@ def align_kg_pair(
             break
         mined = store.checkpoint(
             f"semi_mined_r{r}",
-            lambda: simops.margin_mutual_pairs(fused, semi_margin)
+            # top1−top2 margin threshold 0.05 (W11 `filter_mapping`,
+            # `sampler.py:13-34`)
+            lambda: simops.margin_mutual_pairs(fused, 0.05)
             .select(F.col("src").alias("e1"), F.col("dst").alias("e2"))
             .join(train.select("e1"), "e1", "left_anti")
             .join(train.select("e2"), "e2", "left_anti"),

@@ -1,5 +1,5 @@
-"""kNN family: exact grid-blocked vs brute force, LSH-ANN recall,
-IVF-ANN recall, FAISS sim semantics (J8/J9)."""
+"""kNN family: exact grid-blocked vs brute force, IVF-ANN recall,
+FAISS sim semantics (J8/J9)."""
 
 import math
 
@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from largeea_spark.operators.knn import ann_topk_lsh, ivf_topk, knn_topk
+from largeea_spark.operators.knn import ivf_topk, knn_topk
 
 
 @pytest.fixture(scope="module")
@@ -67,16 +67,6 @@ def test_ivf_recall(spark, emb_df):
         got.setdefault(r.src, set()).add(r.dst)
     recall = sum(len(got.get(i, set()) & want[i]) for i in want) / (10 * len(want))
     assert recall > 0.8, f"IVF recall {recall}"
-
-
-def test_lsh_ann_recall(spark, emb_df):
-    want = brute_force_pd(emb_df, 10)
-    res = ann_topk_lsh(emb_df, emb_df, k=10, n_planes=6, probe_bits=2).collect()
-    got = {}
-    for r in res:
-        got.setdefault(r.src, set()).add(r.dst)
-    recall = sum(len(got.get(i, set()) & want[i]) for i in want) / (10 * len(want))
-    assert recall > 0.5, f"LSH recall {recall}"
 
 
 def test_ivf_deterministic(spark, emb_df):

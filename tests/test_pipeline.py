@@ -64,26 +64,6 @@ def test_trained_batched_structure_channel(spark):
     assert abs(evalx.accuracy(sim_tr2, test) - acc_tr) < 1e-9
 
 
-def test_procrustes_refined_similarity(spark):
-    from largeea_spark.functions.vectors import encode_names
-    from largeea_spark.operators import evalx
-    from largeea_spark.operators.structure import procrustes_refined_similarity
-    from largeea_spark.plans.name_channel import entity_names
-
-    t1, t2, links, _ = fixtures.two_kg_fixture(spark, n_ents=120, n_triples=360,
-                                               n_links=90)
-    kg1, kg2 = encode_graph(t1), encode_graph(t2)
-    # W is d×d — keep anchors (45) comfortably above dim (16)
-    lk = encode_links(links, kg1.ent, kg2.ent, 0.5)
-    pair = KGPair(kg1=kg1, kg2=kg2, links=lk)
-    e1 = encode_names(entity_names(pair.kg1.ent, False), "name", dim=16).select("id", "emb")
-    e2 = encode_names(entity_names(pair.kg2.ent, False), "name", dim=16).select("id", "emb")
-    sim = procrustes_refined_similarity(pair, e1, e2, n_layers=1, k=10)
-    test = lk.where(F.col("split") == "test")
-    acc = evalx.accuracy(sim, test)
-    assert acc > 0.3, f"procrustes-refined channel collapsed: {acc}"
-
-
 def test_align_kg_pair_full(spark, tmp_path):
     t1, t2, links, _ = fixtures.two_kg_fixture(spark, n_ents=150, n_triples=450,
                                                n_links=120)

@@ -1,6 +1,5 @@
 """Round-3 regression tests: ANN auto-selection, payload replication
-fix, watermarked streaming dedup, d=768 chunked propagation, and
-single-pass triple placement."""
+fix, d=768 chunked propagation, and single-pass triple placement."""
 
 import numpy as np
 import pytest
@@ -87,34 +86,6 @@ def test_pack_payload_t1_not_replicated_with_topk_corr(spark):
     assert counts["seed"] == 2
     assert counts["e1"] == 4      # KG1 entities once per src batch
     assert counts["e2"] == 4      # both trg parts' entities
-
-
-# ---------------------------------------------------------------------------
-# streaming dedup: watermarked mode dedups on md5 alone (ADVICE r2)
-# ---------------------------------------------------------------------------
-
-def test_stream_dedup_watermark_md5_only(spark, tmp_path):
-    import datetime as dt
-
-    from largeea_spark.streaming.ingest import stream_dedup_documents
-
-    src = str(tmp_path / "wm_in")
-    ts0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        (0, "alpha text", "en", "web", 10, ts0),
-        # same text, DIFFERENT timestamp → must still be dropped
-        (1, "alpha text", "en", "web", 10, ts0 + dt.timedelta(minutes=5)),
-        (2, "beta text", "en", "web", 9, ts0),
-    ]
-    spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long, warc_ts timestamp",
-    ).write.parquet(src)
-    out, ckpt = str(tmp_path / "wm_out"), str(tmp_path / "wm_ckpt")
-    n = stream_dedup_documents(spark, src, out, ckpt,
-                               watermark_col="warc_ts", watermark="1 hour")
-    assert n == 2, "same-md5 rows with different event times were kept"
 
 
 # ---------------------------------------------------------------------------

@@ -155,41 +155,6 @@ def test_align_kg_pair_through_encoder_seam(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# custom stateful streaming operator (applyInPandasWithState): running
-# per-user stats with distinct-type tracking; GroupState must persist
-# across DRAINS through the checkpoint
-# ---------------------------------------------------------------------------
-
-def test_stream_running_user_stats_state_across_drains(spark, tmp_path):
-    from largeea_spark.streaming.ingest import stream_running_user_stats
-
-    src = str(tmp_path / "ev_in")
-    out, ckpt = str(tmp_path / "ev_out"), str(tmp_path / "ev_ckpt")
-    schema = ("event_id long, ts timestamp, user_id long,"
-              " event_type string, value double, props string")
-    import datetime
-
-    t = datetime.datetime(2026, 1, 1)
-    rows1 = [(1, t, 7, "click", 1.0, None), (2, t, 7, "view", 2.0, None),
-             (3, t, 9, "click", 5.0, None)]
-    spark.createDataFrame(rows1, schema).write.parquet(src)
-    n1 = stream_running_user_stats(spark, src, out, ckpt)
-    got1 = {r.user_id: (r.n_events, r.total_value, r.n_types)
-            for r in spark.read.parquet(out).collect()}
-    assert n1 == 2
-    assert got1[7] == (2, 3.0, 2) and got1[9] == (1, 5.0, 1)
-
-    # drain 2: user 7 returns with a NEW type; cumulative state must
-    # carry — 2+1 events, 3.0+4.0 value, 3 distinct types
-    rows2 = [(4, t, 7, "purchase", 4.0, None)]
-    spark.createDataFrame(rows2, schema).write.mode("append").parquet(src)
-    stream_running_user_stats(spark, src, out, ckpt)
-    rows = [r for r in spark.read.parquet(out).collect() if r.user_id == 7]
-    cum = max((r.n_events, r.total_value, r.n_types) for r in rows)
-    assert cum == (3, 7.0, 3), rows
-
-
-# ---------------------------------------------------------------------------
 # shuffle-width fallback (ADVICE r3): non-numeric conf value must not
 # raise — falls back to defaultParallelism
 # ---------------------------------------------------------------------------

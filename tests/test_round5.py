@@ -1,11 +1,9 @@
-"""Round-5 tests: the five ADVICE r4 fixes + stateful-op TTL (VERDICT #7).
+"""Round-5 tests: the kNN ADVICE r4 fixes, the train_batches dispatch,
+construct-path optimizations and the BPE tokenizer.
 
 Each test pins the FIXED behavior, not just absence of the bug, so a
 regression is a red assertion rather than a silent semantic drift.
 """
-import datetime
-import time
-
 import numpy as np
 import pandas as pd
 import pytest
@@ -54,148 +52,6 @@ def test_cast_shuffle_dtype_validation(spark):  # noqa: F811
         "emb"] == "array<double>"
     with pytest.raises(ValueError, match="shuffle_dtype"):
         _cast_shuffle_dtype(df, "emb", "float16")
-
-
-# ---------------------------------------------------------------------------
-# ADVICE r4 #4 (streaming state encoding): an event_type containing '|'
-# must stay ONE type across drains (json-encoded state set).
-# ---------------------------------------------------------------------------
-
-def test_stream_state_type_set_delimiter_safe(spark, tmp_path):  # noqa: F811
-    from largeea_spark.streaming.ingest import stream_running_user_stats
-
-    src = str(tmp_path / "in")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    schema = ("event_id long, ts timestamp, user_id long,"
-              " event_type string, value double, props string")
-    t = datetime.datetime(2026, 1, 1)
-    spark.createDataFrame(
-        [(1, t, 7, "a|b|c", 1.0, None)], schema).write.parquet(src)
-    stream_running_user_stats(spark, src, out, ckpt)
-
-    # drain 2: same composite type again — still exactly 1 distinct type
-    spark.createDataFrame(
-        [(2, t, 7, "a|b|c", 1.0, None)], schema
-    ).write.mode("append").parquet(src)
-    stream_running_user_stats(spark, src, out, ckpt)
-    rows = [r for r in spark.read.parquet(out).collect() if r.n_events == 2]
-    assert len(rows) == 1 and rows[0].n_types == 1, rows
-
-
-# ---------------------------------------------------------------------------
-# VERDICT r4 #7: state TTL — an idle key's state is evicted across
-# drains (ProcessingTimeTimeout); a returning key starts fresh.
-# ---------------------------------------------------------------------------
-
-def test_stream_state_ttl_evicts_idle_key(spark, tmp_path):  # noqa: F811
-    from largeea_spark.streaming.ingest import stream_running_user_stats
-
-    src = str(tmp_path / "in")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    schema = ("event_id long, ts timestamp, user_id long,"
-              " event_type string, value double, props string")
-    t = datetime.datetime(2026, 1, 1)
-    # TTL must comfortably exceed the inter-drain gap (a drain restart
-    # replays the previous drain's pending zero-input batch, whose
-    # timeout processing evicts any key already idle past the TTL —
-    # see stream_running_user_stats docstring), so only the DELIBERATE
-    # idle gap below crosses it. A 500ms TTL raced drain overhead.
-    ttl = 15000
-    spark.createDataFrame(
-        [(1, t, 7, "click", 1.0, None), (2, t, 9, "view", 2.0, None)],
-        schema).write.parquet(src)
-    stream_running_user_stats(spark, src, out, ckpt, state_ttl_ms=ttl)
-
-    # drain 2 well inside the TTL: user 9 active again — activity wins,
-    # cumulative totals carry (2 events, 5.0)
-    spark.createDataFrame(
-        [(3, t, 9, "view", 3.0, None)], schema
-    ).write.mode("append").parquet(src)
-    stream_running_user_stats(spark, src, out, ckpt, state_ttl_ms=ttl)
-    u9 = sorted((r.n_events, r.total_value)
-                for r in spark.read.parquet(out).collect() if r.user_id == 9)
-    assert u9[-1] == (2, 5.0), u9
-
-    # idle both keys past the TTL, then drain 3 with data only for a
-    # throwaway user: users 7 and 9's expired timers fire and their
-    # state is EVICTED — the state store stays bounded by activity
-    time.sleep((ttl + 2000) / 1000.0)
-    spark.createDataFrame(
-        [(4, t, 99, "ping", 7.0, None)], schema
-    ).write.mode("append").parquet(src)
-    stream_running_user_stats(spark, src, out, ckpt, state_ttl_ms=ttl)
-
-    # drain 4: user 7 returns AFTER eviction — totals start FRESH
-    # (1 event, 10.0); an uninterrupted carry would show (2, 11.0)
-    spark.createDataFrame(
-        [(5, t, 7, "click", 10.0, None)], schema
-    ).write.mode("append").parquet(src)
-    stream_running_user_stats(spark, src, out, ckpt, state_ttl_ms=ttl)
-    u7 = [(r.n_events, r.total_value)
-          for r in spark.read.parquet(out).collect() if r.user_id == 7]
-    assert (1, 10.0) in u7 and (2, 11.0) not in u7, u7
-
-
-# ---------------------------------------------------------------------------
-# VERDICT r4 #5: pinned-weights mini-transformer through the
-# model_name_encoder seam, vs the closed-form numpy oracle — bitwise.
-# Also pins the reference's mask+max-pool semantics (emb_loader.py
-# minus_mask): the intended -1e30 mask makes padding invisible; the
-# reference's literal 1e-30 constant leaks padding (documented quirk).
-# ---------------------------------------------------------------------------
-
-def test_minibert_seam_matches_numpy_oracle_bitwise(spark):  # noqa: F811
-    from largeea_spark.functions.minibert import (
-        MiniTransformerEncoder, mini_transformer_loader)
-    from largeea_spark.functions.vectors import encode_names
-
-    names = ["Alice_Springs", "Berlin", "", "Łódź_Voivodeship",
-             "a" * 500,  # exercises the 382-byte truncation
-             "Nürnberg", "東京", "x"]
-    df = spark.createDataFrame([(i, n) for i, n in enumerate(names)],
-                               "id long, name string").repartition(3)
-    got = {r.id: np.array(r.emb, dtype=np.float32) for r in
-           encode_names(df, "name",
-                        encoder=mini_transformer_loader()).collect()}
-
-    oracle = MiniTransformerEncoder()
-    want = oracle.encode(names).astype(np.float32)
-    for i in range(len(names)):
-        assert np.array_equal(got[i], want[i]), i  # BITWISE
-
-
-def test_minibert_mask_semantics():
-    from largeea_spark.functions.minibert import MiniTransformerEncoder
-
-    enc = MiniTransformerEncoder()
-    texts = ["short", "a_much_longer_entity_name_for_padding"]
-    unpadded = enc.encode(texts)
-    masked = enc.encode_padded(texts)  # attention mask + -1e30 pool mask
-    # intended mask: padding is invisible → the batch-padded path
-    # agrees with the per-sentence path
-    assert np.allclose(masked, unpadded, atol=1e-9)
-
-    # the reference's LITERAL path (no attention mask inside the
-    # model, 1e-30 pool "mask" that does not mask) — the short
-    # sentence's result changes with batch padding (the quirk we
-    # deviate from, made visible)
-    literal = enc.encode_padded(texts, mask_value=1e-30, attn_mask=False)
-    assert not np.allclose(literal[0], unpadded[0], atol=1e-9)
-    # the longest sentence has no padding: identical under any mask
-    assert np.allclose(literal[1], unpadded[1], atol=1e-9)
-
-
-def test_minibert_tokenizer_contract():
-    from largeea_spark.functions.minibert import (
-        CLS, SEP, MiniTransformerEncoder)
-
-    enc = MiniTransformerEncoder()
-    ids = enc.tokenize("ab")
-    assert ids[0] == CLS and ids[-1] == SEP
-    assert ids[1:-1] == [3 + ord("a"), 3 + ord("b")]
-    # truncation at 382 body bytes, like the reference's [:382]
-    long = enc.tokenize("z" * 1000)
-    assert len(long) == 384 and long[-1] == SEP
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
 """TF-IDF (sklearn parity), text stats, fingerprint, extraction plan,
-stage-store resume, streaming ingest."""
+stage-store resume."""
 
 import math
 
@@ -125,27 +125,3 @@ def test_stage_store_resume(spark, tmp_path):
     assert lin.agg(F.sum("rows")).first()[0] == 100
     store.log_metrics("stage_a", {"rows": 100})
     assert store.metrics().count() == 1
-
-
-def test_streaming_ingest_available_now(spark, tmp_path):
-    from largeea_spark.streaming.ingest import ingest_available_now
-
-    pages, gold = fixtures.web_pages_fixture(spark, n_pages=60)
-    src = str(tmp_path / "pages")
-    pages.write.mode("overwrite").parquet(src)
-    out = str(tmp_path / "triples")
-    ckpt = str(tmp_path / "ckpt")
-    n1 = ingest_available_now(spark, src, out, ckpt)
-    assert n1 > 0
-    # second drain with no new files: no duplicates
-    n2 = ingest_available_now(spark, src, out, ckpt)
-    assert n2 == n1
-    got = spark.read.parquet(out)
-    emitted = got.select(
-        F.regexp_replace("subj", " ", "_").alias("subj"), "pred",
-        F.regexp_replace("obj", " ", "_").alias("obj"),
-    ).distinct()
-    from largeea_spark.operators import evalx
-
-    pr = evalx.precision_recall_f1(emitted, gold, cols=("subj", "pred", "obj"))
-    assert pr["precision"] >= 0.95 and pr["recall"] >= 0.95
