@@ -20,56 +20,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def minhash_signature(token_array_col: str | Column, num_perm: int = 128) -> Column:
-    """array<string> token set → array<bigint> MinHash signature
-    (length ``num_perm``), computed with builtin expressions only:
-    for each seed i, min over tokens of xxhash64(i, token)."""
-    toks = F.col(token_array_col) if isinstance(token_array_col, str) else token_array_col
-    sig = F.array(
-        *[
-            F.array_min(F.transform(toks, lambda t: F.xxhash64(F.lit(i), t)))
-            for i in range(num_perm)
-        ]
-    )
-    return sig
-
-
-def lsh_band_keys(sig_col: str | Column, bands: int = 32, rows: int = 4) -> Column:
-    """Signature → array<struct<band int, key bigint>> of band bucket keys.
-
-    bands*rows must equal the signature length. Threshold ≈ (1/b)^(1/r);
-    defaults (32, 4) → ≈0.42, chosen to over-generate vs the reference's
-    Jaccard 0.5 (`text_sim.py:194-196`), SURVEY.md §7.4.6.
-    """
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    entries = []
-    for b in range(bands):
-        key = F.xxhash64(F.lit(b), *[sig[b * rows + r] for r in range(rows)])
-        entries.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
-    return F.array(*entries)
-
-
-def minhash_signature_agg(df: DataFrame, id_col: str, token_array_col: str,
-                          num_perm: int = 128) -> DataFrame:
-    """(id, tokens) → (id, sig array<bigint>) via explode + one groupBy
-    with ``num_perm`` min-aggregates — a SINGLE pass over the tokens
-    (the pure-expression `minhash_signature` traverses the array once
-    per permutation, which hurts on long documents). One shuffle on id;
-    map-side partial mins keep it small. Docs with zero tokens drop out
-    (they have no signature)."""
-    toks = df.select(
-        F.col(id_col), F.explode(F.array_distinct(F.col(token_array_col))).alias("tok")
-    )
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("tok"))).alias(f"h{i}")
-        for i in range(num_perm)
-    ]
-    wide = toks.groupBy(id_col).agg(*aggs)
-    return wide.select(
-        F.col(id_col), F.array(*[F.col(f"h{i}") for i in range(num_perm)]).alias("sig")
-    )
-
-
 def explode_band_keys(
     df: DataFrame, id_col: str, token_array_col: str,
     num_perm: int = 128, bands: int = 32, rows: int = 4,
@@ -78,47 +28,42 @@ def explode_band_keys(
 
     This is the block-key table; candidate pairs come from a self- or
     cross-join on (band, key) — a sort-merge equi-join, broadcast-free.
-    Signature computed with the single-pass aggregate form.
+
+    Signature: explode the distinct tokens, then ONE groupBy(id) with
+    ``num_perm`` min-aggregates ``h_i = min xxhash64(i, tok)`` — a single
+    pass over the tokens, one shuffle on id, map-side partial mins. Band
+    b's key is ``xxhash64(b, h_{b·rows}, …, h_{b·rows+rows-1})``.
+    bands*rows must equal num_perm. Threshold ≈ (1/b)^(1/r); defaults
+    (32, 4) → ≈0.42, chosen to over-generate vs the reference's Jaccard
+    0.5 (`text_sim.py:194-196`), SURVEY.md §7.4.6. Docs with zero tokens
+    drop out (they have no signature).
+
+    The whole plan is ONE SQL text: built through the Column API, its
+    ~160 expressions cost one py4j round trip per sub-expression.
     """
     assert bands * rows == num_perm, "bands*rows must equal num_perm"
-    sig_df = minhash_signature_agg(df, id_col, token_array_col, num_perm)
-    return (
-        sig_df.select(
-            F.col(id_col), F.explode(lsh_band_keys("sig", bands, rows)).alias("bk")
-        )
-        .select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    ident = f"`{id_col}`"
+    mins = ", ".join(f"min(xxhash64({i}, __tok)) AS __h{i}" for i in range(num_perm))
+    keys = ", ".join(
+        f"named_struct('band', {b}, 'key', xxhash64({b}, "
+        + ", ".join(f"__h{b * rows + r}" for r in range(rows)) + "))"
+        for b in range(bands)
     )
-
-
-def simhash64(token_array_col: str | Column) -> Column:
-    """64-bit SimHash of a token array, JVM-side.
-
-    sign-sum per bit of xxhash64(token); bit b of the result is 1 when
-    sum_t ((hash(t)>>b)&1 ? +1 : -1) > 0. Used for near-dup detection on
-    `documents` (training-data pipeline op; not in the reference).
-    """
-    toks = F.col(token_array_col) if isinstance(token_array_col, str) else token_array_col
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    bit_cols = []
-    for b in range(64):
-        vote = F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(h.bitwiseAND(F.lit(1 << b) if b < 63 else F.lit(-(2**63))) != 0, 1).otherwise(-1),
-        )
-        bit_cols.append(F.when(vote > 0, F.lit(1 << b if b < 63 else -(2**63))).otherwise(F.lit(0)))
-    out = F.lit(0)
-    for c in bit_cols:
-        out = out.bitwiseOR(c)
-    return out
+    q = (
+        f"SELECT {ident}, __bk.band AS band, __bk.key AS key FROM ("
+        f"SELECT {ident}, explode(array({keys})) AS __bk FROM ("
+        f"SELECT {ident}, {mins} FROM ("
+        f"SELECT {ident}, explode(array_distinct(`{token_array_col}`)) AS __tok "
+        "FROM {t}) GROUP BY " + ident + "))"
+    )
+    return df.sparkSession.sql(q, t=df)
 
 
 def simhash64_agg(df: DataFrame, id_col: str, token_array_col: str) -> DataFrame:
     """(id, tokens) → (id, fp bigint) single-pass SimHash: explode,
     hash once per token, 64 sign-vote sums in one groupBy (map-side
     partials), then bit reconstruction — avoids the 64 array traversals
-    of the pure-expression `simhash64` on long documents."""
+    of a per-row expression form on long documents."""
     toks = df.select(
         F.col(id_col), F.explode(F.col(token_array_col)).alias("tok")
     ).select(F.col(id_col), F.xxhash64("tok").alias("h"))

@@ -9,8 +9,9 @@ north star names this join shape explicitly). No server, no driver loop.
 Scale: band-bucket join cost is Σ_bucket |e1_bucket|·|e2_bucket|. Hot
 buckets (stop-token-heavy names) are handled by ``max_bucket`` — buckets
 larger than the cap on either side are dropped (they carry near-zero
-signal and quadratic cost); dropped-bucket count is observable via
-``bucket_stats``. AQE skew-join splits the survivors.
+signal and quadratic cost); the dropped buckets and rows per side are
+logged as the alignment pipeline's ``sim_string_blocking`` metrics row.
+AQE skew-join splits the survivors.
 """
 
 from __future__ import annotations
@@ -82,22 +83,6 @@ def _cap_buckets(bk: DataFrame, max_bucket: int, stats: dict | None = None,
         stats[f"dropped_rows_{side}"] = int(row["nr"])
     keep = counts.where(F.col("count") <= max_bucket)
     return bk.join(keep.select("band", "key"), ["band", "key"], "left_semi")
-
-
-def bucket_stats(df: DataFrame, id_col: str, token_col: str,
-                 num_perm: int = 128, bands: int = 32, rows: int = 4) -> DataFrame:
-    """Bucket-size distribution (skew observability; SURVEY.md G8-style
-    stats for the blocking stage)."""
-    bk = explode_band_keys(df, id_col, token_col, num_perm, bands, rows)
-    return (
-        bk.groupBy("band", "key").count()
-        .agg(
-            F.count("*").alias("n_buckets"),
-            F.max("count").alias("max_bucket"),
-            F.avg("count").alias("avg_bucket"),
-            F.expr("percentile_approx(count, 0.99)").alias("p99_bucket"),
-        )
-    )
 
 
 def jaccard_selfjoin_blocked(

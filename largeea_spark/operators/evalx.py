@@ -29,7 +29,10 @@ row carries ≥k entries (the kNN channels always emit exactly k).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections.abc import Mapping
+from functools import reduce
+
+from pyspark.sql import DataFrame, Window, functions as F
 
 from . import simops
 from .simops import DST, SIM, SRC
@@ -46,33 +49,64 @@ def accuracy(sim: DataFrame, links: DataFrame) -> float:
 
 
 def hits_and_mrr(
-    sim: DataFrame, links: DataFrame, ks: tuple = (1, 5, 50), fail_rank: int | None = None,
+    sim: DataFrame | Mapping[str, DataFrame], links: DataFrame,
+    ks: tuple = (1, 5, 50), fail_rank: int | None = None,
     n_src: int | None = None,
 ) -> dict:
     """`sparse_top_k` (`eval.py:202-220`): Hits@k for each k plus
     truncated MRR, computed in ONE pass over ranked entries.
 
     ``links``: DataFrame(e1, e2) gold pairs. ``fail_rank`` defaults to
-    n_src/2 (`eval.py:170-172`); ``n_src`` defaults to 1+max(src)."""
-    kmax = max(ks)
-    ranked = simops.rank_per_row(simops.topk_per_row(sim, kmax, SRC), SRC)
-    gold = links.select(F.col("e1").alias(SRC), F.col("e2").alias(DST))
-    joined = gold.join(ranked.select(SRC, DST, "rank"), [SRC, DST], "left")
-    if fail_rank is None:
-        if n_src is None:
-            n_src = (sim.agg(F.max(SRC)).first()[0] or 0) + 1
-        fail_rank = int(n_src / 2)
+    n_src/2 (`eval.py:170-172`); ``n_src`` defaults to 1+max(src).
+
+    ``sim`` may also be a ``{name: sim}`` mapping; the result is then
+    ``{name: metrics}``, and every entry is evaluated in ONE aggregate.
+    A single sim is the one-entry case. Plan: the sims, tagged with a
+    channel, and the gold pairs, replicated per channel, go through one
+    row-number window over (channel, src) that ranks the sim rows ahead
+    of the gold rows; a gold pair takes the rank of its sim row from a
+    second window over (channel, src, dst), which needs no exchange (the
+    gold "join"); then one ``groupBy(channel)``."""
+    named = {None: sim} if isinstance(sim, DataFrame) else dict(sim)
+    n = len(named)
+    sims = [s.select(F.lit(i).alias("channel"), SRC, DST, SIM, F.lit(False).alias("__gold"))
+            for i, s in enumerate(named.values())]
+    union = reduce(lambda a, b: a.unionByName(b), sims)
+    if fail_rank is not None:
+        fails = [fail_rank] * n
+    elif n_src is not None:
+        fails = [int(n_src / 2)] * n
+    else:
+        mx = dict(union.groupBy("channel").agg(F.max(SRC)).collect())
+        fails = [int(((mx.get(i) or 0) + 1) / 2) for i in range(n)]
+    gold = links.select(
+        F.explode(F.array(*[F.lit(i) for i in range(n)])).alias("channel"),
+        F.col("e1").alias(SRC), F.col("e2").alias(DST),
+        F.lit(None).cast("double").alias(SIM), F.lit(True).alias("__gold"),
+    )
+    w = Window.partitionBy("channel", SRC).orderBy("__gold", F.col(SIM).desc(), F.col(DST).asc())
+    rn = F.row_number().over(w)
+    ranked = union.unionByName(gold).withColumn(
+        "__rank", F.when(~F.col("__gold") & (rn <= max(ks)), rn)
+    )
+    joined = ranked.withColumn(
+        "rank", F.min("__rank").over(Window.partitionBy("channel", SRC, DST))
+    ).where(F.col("__gold"))
     # reference rank is 0-based with fail substituted, MRR=mean(1/(rank+1))
-    rank0 = F.coalesce(F.col("rank") - 1, F.lit(fail_rank))
+    fail = F.array(*[F.lit(f) for f in fails])[F.col("channel")]
+    rank0 = F.coalesce(F.col("rank") - 1, fail)
     aggs = [F.avg(1.0 / (rank0 + 1)).alias("MRR")]
     for k in ks:
         aggs.append(
             F.avg(F.when(F.col("rank") <= k, 1.0).otherwise(0.0)).alias(f"hits@{k}")
         )
-    row = joined.agg(*aggs).first().asDict()
-    # zero gold links → SQL avg returns null; report 0.0 (cf. sparse_acc
+    rows = {r["channel"]: r.asDict() for r in joined.groupBy("channel").agg(*aggs).collect()}
+    # zero gold links → no row; report 0.0 (cf. sparse_acc
     # empty-denominator behavior, eval.py:133-148)
-    return {k: (float(v) if v is not None else 0.0) for k, v in row.items()}
+    keys = ["MRR"] + [f"hits@{k}" for k in ks]
+    out = {name: {k: float(rows.get(i, {}).get(k) or 0.0) for k in keys}
+           for i, name in enumerate(named)}
+    return out[None] if isinstance(sim, DataFrame) else out
 
 
 def precision_recall_f1(pred_pairs: DataFrame, gold_pairs: DataFrame,

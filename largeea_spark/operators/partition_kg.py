@@ -9,9 +9,9 @@ Recipe:
   1. co-occurrence graph from triples with multiplicity weights
      (G1/A2, `partition.py:88-142`);
   2. seeds of KG1 get initial labels spread over k parts; weighted
-     label propagation for a few rounds (iterative groupBy-argmax
-     DataFrame loop, ◆), seeds pinned — the analogue of METIS's
-     seed-boosted cliques (G2, known_weight=1000 `partition.py:108-124`);
+     label propagation for a few synchronous rounds, seeds pinned —
+     the analogue of METIS's seed-boosted cliques (G2,
+     known_weight=1000 `partition.py:108-124`);
   3. KG2: train counterparts INHERIT their KG1 partner's label
      (hard co-location, stronger than the reference's weight boost),
      then propagate;
@@ -20,11 +20,17 @@ Recipe:
      sides, so train pairs stay co-located (north rule: no partition
      exceeds executor memory).
 
-Each iteration localCheckpoints to truncate lineage (SURVEY.md §4.3.2).
+Steps 2-3 run in numpy inside ONE grouped ``applyInPandas`` task over
+a packed payload of both KGs (entities, edges, train pairs): O(|V|+|E|)
+memory per KG in one task, the footprint METIS has in the reference's
+single process; the Spark job count does not grow with the rounds.
+Step 4 stays a DataFrame step.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..sources.kg import KGPair
@@ -40,37 +46,104 @@ def cooccurrence_graph(triples: DataFrame) -> DataFrame:
     return e.groupBy("u", "v").agg(F.count("*").cast("double").alias("w"))
 
 
-def _propagate(labels: DataFrame, edges: DataFrame, pinned: DataFrame,
-               n_iter: int) -> DataFrame:
-    """Weighted label propagation. labels: (id, part nullable);
-    pinned: (id) whose labels never change."""
-    nbrs = edges.select(F.col("u").alias("id"), F.col("v").alias("nb"), "w").unionAll(
-        edges.select(F.col("v").alias("id"), F.col("u").alias("nb"), "w")
-    )
+LP_SCHEMA = "side int, id long, part int"
+
+
+def _lookup(keys: np.ndarray, x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Positions of ``x`` in the sorted ``keys`` plus a found mask."""
+    if len(keys) == 0:
+        return np.zeros(len(x), np.int64), np.zeros(len(x), bool)
+    pos = np.minimum(np.searchsorted(keys, x), len(keys) - 1)
+    return pos, keys[pos] == x
+
+
+def _run_starts(sorted_keys: np.ndarray) -> np.ndarray:
+    """Mask of the first row of each run of equal ``sorted_keys``."""
+    first = np.ones(len(sorted_keys), bool)
+    first[1:] = sorted_keys[1:] != sorted_keys[:-1]
+    return first
+
+
+def _propagate_np(ids: np.ndarray, hpart: np.ndarray, edges: np.ndarray,
+                  w: np.ndarray, seed_ids: np.ndarray, seed_part: np.ndarray,
+                  k: int, n_iter: int) -> np.ndarray:
+    """Weighted label propagation over one KG, in numpy.
+
+    ``ids``: entity ids with their hash fallback parts ``hpart``;
+    ``edges``: (u, v) rows with weights ``w``; seeds keep their part
+    (pinned). Each synchronous round gives every entity the part with
+    the highest summed neighbour weight, ties to the smaller part; an
+    entity with no labelled neighbour keeps its label. Leftovers take
+    ``hpart``. Seeds and edge endpoints that are not entities are
+    ignored. Returns the part of each row of ``ids``."""
+    order = np.argsort(ids, kind="stable")
+    uniq = ids[order]
+    lab = np.full(len(uniq), -1, np.int64)
+    si, found = _lookup(uniq, seed_ids)
+    lab[si[found]] = seed_part[found]
+    pinned = np.zeros(len(uniq), bool)
+    pinned[si[found]] = True
+    ui, uok = _lookup(uniq, edges[:, 0])
+    vi, vok = _lookup(uniq, edges[:, 1])
+    keep = uok & vok
+    node = np.concatenate([ui[keep], vi[keep]])
+    nb = np.concatenate([vi[keep], ui[keep]])
+    nw = np.concatenate([w[keep], w[keep]])
     for _ in range(n_iter):
-        nb_lab = (
-            nbrs.join(labels.select(F.col("id").alias("nb"), "part"), "nb")
-            .where(F.col("part").isNotNull())
-            .groupBy("id", "part")
-            .agg(F.sum("w").alias("score"))
-        )
-        # deterministic argmax: max (score, -part)
-        best = nb_lab.groupBy("id").agg(
-            F.max_by("part", F.struct(F.col("score"), (-F.col("part")).alias("np"))).alias("new_part")
-        )
-        labels = (
-            labels.join(best, "id", "left")
-            .join(pinned.select("id").withColumn("__pin", F.lit(1)), "id", "left")
-            .withColumn(
-                "part",
-                F.when(F.col("__pin") == 1, F.col("part")).otherwise(
-                    F.coalesce("new_part", "part")
-                ),
+        nl = lab[nb]
+        m = nl >= 0
+        keys, inv = np.unique(node[m] * k + nl[m], return_inverse=True)
+        score = np.bincount(inv, weights=nw[m], minlength=len(keys))
+        who, part = keys // k, keys % k
+        o = np.lexsort((part, -score, who))
+        best = o[_run_starts(who[o])]
+        new = lab.copy()
+        new[who[best]] = part[best]
+        new[pinned] = lab[pinned]
+        lab = new
+    out = np.empty(len(ids), np.int64)
+    out[order] = lab
+    return np.where(out >= 0, out, hpart)
+
+
+def _lp_kernel(k: int, n_iter: int):
+    """Both KGs' label propagation as one pandas function over the packed
+    (side, kind, a, b, w, h) payload; see ``seed_aware_partition``."""
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        def rows(kind, side=0):
+            return pdf[(pdf["kind"] == kind) & (pdf["side"] == side)]
+
+        def arr(df, col, dtype=np.int64):
+            return df[col].to_numpy(dtype=dtype)
+
+        train = rows("seed")
+        tr1, tr2 = arr(train, "a"), arr(train, "b")
+        out = []
+        # KG1 seeds: distinct train e1 in id order, part = (rank + 1) % k
+        s1 = np.unique(tr1)
+        seed_ids, seed_part = s1, (np.arange(len(s1)) + 1) % k
+        for side in (1, 2):
+            ent, edge = rows("ent", side), rows("edge", side)
+            ids = arr(ent, "a")
+            part = _propagate_np(
+                ids, arr(ent, "h"), edge[["a", "b"]].to_numpy(dtype=np.int64),
+                arr(edge, "w", np.float64), seed_ids, seed_part, k, n_iter,
             )
-            .select("id", "part")
-            .localCheckpoint(eager=True)
-        )
-    return labels
+            out.append(pd.DataFrame({"side": np.full(len(ids), side, np.int32),
+                                     "id": ids, "part": part.astype(np.int32)}))
+            if side == 1:
+                # KG2 seeds inherit their KG1 partner's part; an e2 linked
+                # to several e1s keeps the smallest (determinism)
+                o = np.argsort(ids, kind="stable")
+                pos, found = _lookup(ids[o], tr1)
+                e2, p2 = tr2[found], part[o][pos[found]]
+                o2 = np.lexsort((p2, e2))
+                first = o2[_run_starts(e2[o2])]
+                seed_ids, seed_part = e2[first], p2[first]
+        return pd.concat(out, ignore_index=True)
+
+    return fn
 
 
 def seed_aware_partition(
@@ -82,42 +155,34 @@ def seed_aware_partition(
     pair co-located (same part id in both outputs); with ``cap``, no
     part larger than cap (salted subparts encoded as part*SALT+j)."""
     train = pair.links.where(F.col("split") == "train").select("e1", "e2")
-    g1 = cooccurrence_graph(pair.kg1.triples)
-    g2 = cooccurrence_graph(pair.kg2.triples)
+    zero = F.lit(0).cast("long")
 
-    # 1. KG1 seeds: deterministic spread over k parts by dense seed rank
-    # (distributed dense-rank — no single-reducer global window; DBP1M
-    # has ~200k distinct seeds and this stays fully parallel)
-    from .ids import assign_dense_ids
+    def pack(side, kind, a, b, w, h):
+        return (F.lit(0).alias("g"), F.lit(side).alias("side"),
+                F.lit(kind).alias("kind"), a.cast("long").alias("a"),
+                b.cast("long").alias("b"), w.cast("double").alias("w"),
+                h.cast("int").alias("h"))
 
-    seed1 = assign_dense_ids(
-        train.select("e1").distinct(), "e1", id_col="__rank"
-    ).select(
-        # +1 keeps the original 1-based row_number() % k assignment, so
-        # partition labels (and every downstream number) are unchanged
-        "e1", (F.pmod(F.col("__rank") + 1, F.lit(k))).cast("int").alias("part")
+    # one payload: entities with their hash fallback part, co-occurrence
+    # edges, train pairs; label propagation runs as ONE executor task
+    rows = [train.select(*pack(0, "seed", F.col("e1"), F.col("e2"), F.lit(0.0), zero))]
+    for side, kg in ((1, pair.kg1), (2, pair.kg2)):
+        rows.append(kg.ent.select(*pack(
+            side, "ent", F.col("id"), zero, F.lit(0.0),
+            F.pmod(F.xxhash64("id"), F.lit(k)),
+        )))
+        rows.append(cooccurrence_graph(kg.triples).select(*pack(
+            side, "edge", F.col("u"), F.col("v"), F.col("w"), zero,
+        )))
+    payload = rows[0]
+    for r in rows[1:]:
+        payload = payload.unionByName(r)
+    labels = (
+        payload.groupBy("g").applyInPandas(_lp_kernel(k, n_iter), schema=LP_SCHEMA)
+        .localCheckpoint(eager=True)
     )
-    ents1 = pair.kg1.ent.select("id")
-    labels1 = ents1.join(seed1.select(F.col("e1").alias("id"), "part"), "id", "left")
-    labels1 = _propagate(labels1, g1, seed1.select(F.col("e1").alias("id")), n_iter)
-    # unlabeled leftovers → deterministic hash part
-    labels1 = labels1.withColumn(
-        "part",
-        F.coalesce("part", F.pmod(F.xxhash64("id"), F.lit(k)).cast("int")),
-    )
-
-    # 2. KG2: inherit partner labels (hard co-location), then propagate
-    part_of_e1 = labels1.select(F.col("id").alias("e1"), F.col("part"))
-    seed2 = train.join(part_of_e1, "e1").select(F.col("e2").alias("id"), "part").distinct()
-    # an e2 linked to several e1s keeps the smallest part (determinism)
-    seed2 = seed2.groupBy("id").agg(F.min("part").alias("part"))
-    ents2 = pair.kg2.ent.select("id")
-    labels2 = ents2.join(seed2, "id", "left")
-    labels2 = _propagate(labels2, g2, seed2.select("id"), n_iter)
-    labels2 = labels2.withColumn(
-        "part",
-        F.coalesce("part", F.pmod(F.xxhash64("id"), F.lit(k)).cast("int")),
-    )
+    labels1 = labels.where(F.col("side") == 1).select("id", "part")
+    labels2 = labels.where(F.col("side") == 2).select("id", "part")
 
     if cap is not None:
         labels1, labels2 = _salt_oversized(labels1, labels2, train, cap)

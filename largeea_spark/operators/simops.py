@@ -164,19 +164,22 @@ def minmax_norm(df: DataFrame, by: str | None = None, eps: float = 0.0) -> DataF
 
 def csls_rescore(df: DataFrame, k: int = 10) -> DataFrame:
     """W7: CSLS — ``2·sim − mean(topk by src) − mean(topk by dst)``
-    (`eval.py:32-51`). Two window top-k means + two broadcastable joins."""
-    r_src = (
-        topk_per_row(df, k, SRC).groupBy(SRC).agg(F.avg(SIM).alias("r_src"))
-    )
-    r_dst = (
-        topk_per_row(df, k, DST).groupBy(DST).agg(F.avg(SIM).alias("r_dst"))
-    )
-    return (
-        df.join(r_src, SRC)
-        .join(r_dst, DST)
-        .withColumn(SIM, 2 * F.col(SIM) - F.col("r_src") - F.col("r_dst"))
-        .drop("r_src", "r_dst")
-        .select(SRC, DST, SIM)
+    (`eval.py:32-51`). Each mean is a window average over the row's
+    top-k, next to the row-number window it needs, so the plan has two
+    exchanges and no join. The average adds the top-k sims in rank order,
+    as a group-by over the top-k rows would."""
+
+    def with_topk_mean(d: DataFrame, by: str, out: str) -> DataFrame:
+        other = DST if by == SRC else SRC
+        w = Window.partitionBy(by).orderBy(F.col(SIM).desc(), F.col(other).asc())
+        top = F.when(F.row_number().over(w) <= k, F.col(SIM))
+        return d.withColumn("__top", top).withColumn(
+            out, F.avg("__top").over(Window.partitionBy(by))
+        ).drop("__top")
+
+    r = with_topk_mean(with_topk_mean(df, SRC, "r_src"), DST, "r_dst")
+    return r.select(
+        SRC, DST, (2 * F.col(SIM) - F.col("r_src") - F.col("r_dst")).alias(SIM)
     )
 
 

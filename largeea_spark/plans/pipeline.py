@@ -223,15 +223,11 @@ def align_kg_pair(
         "sim_fused", lambda: fuse_round(sims.get("structure"))
     )
 
-    test = pair.links.where(F.col("split") == "test")
-    n_src = (pair.kg1.ent.agg(F.max("id")).first()[0] or 0) + 1
-    metrics = {}
-    for name, s in {**sims, "fused": fused}.items():
-        metrics[name] = evalx.hits_and_mrr(s, test, ks=(1, 5, 50), n_src=n_src)
-        store.log_metrics(f"eval_{name}", metrics[name])
+    # every sim is evaluated once, at the end, in ONE hits_and_mrr pass
+    evals = {**sims, "fused": fused}
 
     # iterative semi-supervision (M4/M8): mine → conflict-filter →
-    # re-train structure → re-fuse; metrics logged per round
+    # re-train structure → re-fuse; every round's fused sim is evaluated
     for r in range(2, it_rounds + 1):
         if not use_structure:
             break
@@ -248,17 +244,20 @@ def align_kg_pair(
         fused = store.checkpoint(
             f"sim_fused_r{r}", lambda: fuse_round(sims[f"structure_r{r}"])
         )
-        metrics[f"fused_r{r}"] = evalx.hits_and_mrr(fused, test, ks=(1, 5, 50), n_src=n_src)
-        store.log_metrics(f"eval_fused_r{r}", metrics[f"fused_r{r}"])
-        metrics["fused"] = metrics[f"fused_r{r}"]  # final = last round
+        evals[f"fused_r{r}"] = fused
 
     # CSLS-rescored eval (the reference's test-time protocol, W7;
     # `eval.py:82-129`, `models/rrea/CSLS.py:56-95`) — computed on the
     # FINAL fused sim (after any semi-supervision rounds) so both
     # headline metrics describe the same sim table.
-    metrics["fused_csls"] = evalx.hits_and_mrr(
-        simops.csls_rescore(fused, k=10), test, ks=(1, 5, 50), n_src=n_src
-    )
-    store.log_metrics("eval_fused_csls", metrics["fused_csls"])
+    evals["fused_csls"] = simops.csls_rescore(fused, k=10)
+
+    test = pair.links.where(F.col("split") == "test")
+    n_src = (pair.kg1.ent.agg(F.max("id")).first()[0] or 0) + 1
+    metrics = evalx.hits_and_mrr(evals, test, ks=(1, 5, 50), n_src=n_src)
+    for name, m in metrics.items():
+        store.log_metrics(f"eval_{name}", m)
+    if use_structure and it_rounds > 1:
+        metrics["fused"] = metrics[f"fused_r{it_rounds}"]  # final = last round
 
     return {"sims": sims, "fused": fused, "seeds": seeds, "metrics": metrics}

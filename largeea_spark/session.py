@@ -6,7 +6,13 @@ Pinned settings that the whole engine assumes:
   skew handling leans on this plus explicit salting),
 - UTC session timezone (DuckDB-oracle comparison; DuckDB timestamps are
   UTC-naive),
-- shuffle partitions sized to cores, not the 200 default.
+- shuffle partitions sized to cores, not the 200 default,
+- DataFrame debugging off (``spark.python.sql.dataFrameDebugging.enabled``):
+  PySpark 4.1 otherwise reads a conf and sets and clears a JVM origin
+  around every ``functions.*`` call, which doubles the py4j traffic of
+  plan building (the alignment block builds hundreds of small plans).
+  The cost: DataFrame analysis errors lose the Python call-site
+  fragment.
 """
 
 from __future__ import annotations
@@ -77,6 +83,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     for k, v in _MALLOC_TUNING.items():

@@ -13,8 +13,11 @@ format-agnostic, `format=` is pluggable.)
 Lineage: alongside each stage, a ``_lineage`` table records one row per
 OUTPUT PARTITION (spark_partition_id): row count + min/max of the first
 output column + wall-clock — enough to audit which partition produced
-what, per the north rule. A ``_metrics`` table accumulates one row per
-stage run (S7, `log_information` `main.py:219-239`).
+what, per the north rule. The ``_metrics/`` directory holds one JSON
+line per stage run (S7, `log_information` `main.py:219-239`), appended
+with plain driver file I/O like the reference's log write, so logging
+runs no Spark job; ``metrics()`` reads the lines back as
+(stage, metrics, logged_at).
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from datetime import datetime, timezone
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -82,15 +86,23 @@ class StageStore:
 
     def log_metrics(self, stage: str, metrics: dict) -> None:
         """S7 metrics sink (`log_information` `main.py:219-239`):
-        append one JSON row per stage run."""
-        row = self.spark.createDataFrame(
-            [(stage, json.dumps(metrics, sort_keys=True, default=str))],
-            "stage string, metrics string",
-        ).withColumn("logged_at", F.current_timestamp())
-        row.write.format(self.fmt).mode("append").save(self._path("_metrics"))
+        append one JSON line per stage run. The file sits INSIDE
+        ``_metrics/``: Hadoop listing skips names that start with ``_``
+        or ``.``, so a bare ``_metrics.jsonl`` would read as empty."""
+        row = {
+            "stage": stage,
+            "metrics": json.dumps(metrics, sort_keys=True, default=str),
+            "logged_at": datetime.now(timezone.utc).isoformat(),
+        }
+        d = self._path("_metrics")
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, "metrics.jsonl"), "a", encoding="utf-8") as fh:
+            fh.write(json.dumps(row) + "\n")
 
     def metrics(self) -> DataFrame:
-        return self.read("_metrics")
+        return self.spark.read.schema(
+            "stage string, metrics string, logged_at timestamp"
+        ).json(self._path("_metrics"))
 
 
 class TableStageStore(StageStore):

@@ -103,3 +103,51 @@ def test_ngrams_and_shingles(spark):
     ).first()
     assert row.g == ["a b c", "b c d"]
     assert row.sh == ["abcde", "bcdef"]
+
+
+# --- MinHash band keys: the one-SQL-text plan vs the Column-API build
+def _band_keys_columns(df, id_col, tok_col, num_perm, bands, rows):
+    """The Column-expression construction the SQL text replaced: explode
+    distinct tokens, num_perm min(xxhash64(i, tok)) aggregates into an
+    array signature, then one xxhash64(b, sig[b·rows..]) struct per band."""
+    toks = df.select(F.col(id_col), F.explode(F.array_distinct(F.col(tok_col))).alias("tok"))
+    wide = toks.groupBy(id_col).agg(
+        *[F.min(F.xxhash64(F.lit(i), F.col("tok"))).alias(f"h{i}") for i in range(num_perm)]
+    )
+    sig = wide.select(
+        F.col(id_col), F.array(*[F.col(f"h{i}") for i in range(num_perm)]).alias("sig")
+    )
+    entries = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(F.lit(b), *[F.col("sig")[b * rows + r] for r in range(rows)]).alias("key"),
+        )
+        for b in range(bands)
+    ]
+    return sig.select(F.col(id_col), F.explode(F.array(*entries)).alias("bk")).select(
+        id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
+
+
+@pytest.mark.parametrize("id_col", ["id", "doc_id"])
+@pytest.mark.parametrize("num_perm,bands,rows", [(128, 32, 4), (64, 16, 4)])
+def test_explode_band_keys_matches_column_build(spark, id_col, num_perm, bands, rows):
+    from largeea_spark.functions.hashing import explode_band_keys
+
+    df = spark.createDataFrame(
+        [
+            (1, ["alpha", "beta", "alpha", "beta"]),  # duplicate tokens
+            (2, []),                                  # no signature
+            (3, ["Łódź", "東京", "Zürich"]),          # non-ASCII
+            (4, ["alpha", "beta"]),                   # same set as 1
+            (5, ["x"]),
+        ],
+        f"{id_col} long, toks array<string>",
+    )
+    got = explode_band_keys(df, id_col, "toks", num_perm, bands, rows)
+    want = _band_keys_columns(df, id_col, "toks", num_perm, bands, rows)
+    assert got.columns == [id_col, "band", "key"]
+    g = {tuple(r) for r in got.collect()}
+    assert g == {tuple(r) for r in want.collect()}
+    assert len(g) == 4 * bands  # doc 2 drops out; 1 and 4 share keys
+    assert {k for i, _, k in g if i == 1} == {k for i, _, k in g if i == 4}

@@ -1,6 +1,8 @@
 """Connected components, partitioner invariants, structure propagation,
 dedup strategies (SURVEY.md §5 plan items: partition invariants, CC)."""
 
+from collections import defaultdict
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -82,6 +84,114 @@ def test_place_triples_and_correspondence(spark, kg_pair):
     corr = partition_kg.correspondence(kg_pair.links, p1, p2, top_k=1)
     # by seed inheritance, every src part's top trg part is itself
     assert corr.where(F.col("p1") != F.col("p2")).count() == 0
+
+
+def _lp_oracle(ents1, tri1, ents2, tri2, train, k, n_iter, hpart):
+    """Dict-based label propagation with the semantics of the former
+    DataFrame loop: synchronous rounds, summed edge weights, highest
+    score wins with ties to the smaller part, pinned seeds, KG1 seed
+    part = (rank of distinct train e1 + 1) % k, KG2 seeds take the min
+    part of their partners, leftovers take ``hpart``."""
+
+    def edges(tri):
+        w = defaultdict(float)
+        for s, d in tri:
+            if s != d:
+                w[(min(s, d), max(s, d))] += 1.0
+        return w
+
+    def propagate(ents, tri, seeds):
+        labels = {e: seeds.get(e) for e in ents}
+        nbrs = defaultdict(list)
+        for (u, v), w in edges(tri).items():
+            nbrs[u].append((v, w))
+            nbrs[v].append((u, w))
+        for _ in range(n_iter):
+            new = {}
+            for e in ents:
+                score = defaultdict(float)
+                for nb, w in nbrs[e]:
+                    if labels.get(nb) is not None:
+                        score[labels[nb]] += w
+                if e in seeds or not score:
+                    new[e] = labels[e]
+                else:
+                    new[e] = min(score, key=lambda p: (-score[p], p))
+            labels = new
+        return {e: hpart[e] if p is None else p for e, p in labels.items()}
+
+    seeds1 = {e1: (i + 1) % k for i, e1 in enumerate(sorted({a for a, _ in train}))}
+    lab1 = propagate(ents1, tri1, seeds1)
+    seeds2 = {}
+    for e1, e2 in train:
+        if e1 in lab1:
+            seeds2[e2] = min(seeds2.get(e2, k), lab1[e1])
+    return lab1, propagate(ents2, tri2, seeds2)
+
+
+def _lp_case(spark, ents1, tri1, ents2, tri2, train, test=()):
+    from largeea_spark.sources.kg import KG, KGPair
+
+    def kg(ents, tri):
+        return KG(
+            ent=spark.createDataFrame([(f"u{e}", e) for e in ents], "uri string, id long"),
+            rel=None,
+            triples=spark.createDataFrame([(s, 0, d) for s, d in tri],
+                                          "src long, rel long, dst long"),
+        )
+
+    links = spark.createDataFrame(
+        [(a, b, "train") for a, b in train] + [(a, b, "test") for a, b in test],
+        "e1 long, e2 long, split string",
+    )
+    return KGPair(kg1=kg(ents1, tri1), kg2=kg(ents2, tri2), links=links)
+
+
+def _hash_parts(spark, ids, k):
+    df = spark.createDataFrame([(i,) for i in ids], "id long")
+    return {r.id: r.h for r in df.select(
+        "id", F.pmod(F.xxhash64("id"), F.lit(k)).cast("int").alias("h")).collect()}
+
+
+def _rand_graph(rng, ids, n_edges):
+    return [(rng.choice(ids), rng.choice(ids)) for _ in range(n_edges)]
+
+
+@pytest.mark.parametrize("n_iter", [0, 1, 3])
+def test_seed_aware_partition_matches_dict_lp(spark, n_iter):
+    """The one-task numpy label propagation equals a dict-based oracle
+    on hand-built edge cases and a random multigraph."""
+    import random
+
+    k = 3
+    ents1 = list(range(10))
+    tri1 = [
+        (1, 0), (1, 3),          # tie between parts of seeds 0 and 3
+        (2, 0), (2, 0), (2, 3),  # multiplicity: 0's part wins 2 vs 1
+        (2, 50),                 # endpoint 50 is not an entity
+        (6, 7), (7, 8), (8, 8),  # chain (labels reach 8 only at round 2)
+        (4, 5),                  # unlabeled component → hash parts
+    ]                            # 9: isolated
+    ents2 = list(range(100, 110))
+    tri2 = [(100, 102), (101, 102), (103, 104), (104, 100), (105, 105)]
+    # 99 is absent from KG1 and 200 from KG2; 100 is linked to KG1
+    # seeds in two parts
+    train = [(0, 100), (3, 100), (6, 103), (99, 101), (6, 200)]
+    rng = random.Random(7)
+    r1, r2 = list(range(300, 360)), list(range(400, 460))
+    cases = [
+        (ents1, tri1, ents2, tri2, train),
+        (ents1, tri1, ents2, tri2, []),  # no seeds
+        (r1, _rand_graph(rng, r1, 150), r2, _rand_graph(rng, r2, 150),
+         [(a, a + 100) for a in rng.sample(r1, 12)]),
+    ]
+    for e1, t1, e2, t2, tr in cases:
+        pair = _lp_case(spark, e1, t1, e2, t2, tr, test=[(9, 109)])
+        hpart = _hash_parts(spark, e1 + e2, k)
+        want1, want2 = _lp_oracle(e1, t1, e2, t2, tr, k, n_iter, hpart)
+        p1, p2 = partition_kg.seed_aware_partition(pair, k=k, n_iter=n_iter)
+        assert {r.id: r.part for r in p1.collect()} == want1
+        assert {r.id: r.part for r in p2.collect()} == want2
 
 
 def test_structure_propagation_improves_or_holds(spark, kg_pair):

@@ -96,6 +96,18 @@ def test_hits_mrr_and_accuracy(spark):
     assert math.isclose(res["MRR"], (1 + 1 / 3 + 1) / 3)
     acc = evalx.accuracy(sim, links)
     assert math.isclose(acc, 2 / 3)
+    # mapping form: every entry in one aggregate, each equal to its
+    # single-sim call (the default n_src = 1 + max(src) is per entry)
+    sims = {"a": sim, "b": to_df(spark, B), "csls": simops.csls_rescore(sim, k=2),
+            "empty": spark.createDataFrame([], "src long, dst long, sim double")}
+    for kw in ({"n_src": 4}, {}, {"fail_rank": 7}):
+        many = evalx.hits_and_mrr(sims, links, ks=(1, 2), **kw)
+        assert list(many) == list(sims)
+        for name, s in sims.items():
+            one = evalx.hits_and_mrr(s, links, ks=(1, 2), **kw)
+            assert list(many[name]) == list(one) == ["MRR", "hits@1", "hits@2"]
+            assert many[name] == pytest.approx(one, rel=1e-12, abs=0), (name, kw)
+    assert evalx.hits_and_mrr(sims, links, ks=(1, 2), n_src=4)["a"] == pytest.approx(res)
 
 
 def test_precision_recall(spark):

@@ -1,7 +1,9 @@
 """TF-IDF (sklearn parity), text stats, fingerprint, extraction plan,
 stage-store resume."""
 
+import json
 import math
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -123,5 +125,26 @@ def test_stage_store_resume(spark, tmp_path):
     assert b.count() == 100 and calls["n"] == 1
     lin = store.lineage("stage_a")
     assert lin.agg(F.sum("rows")).first()[0] == 100
-    store.log_metrics("stage_a", {"rows": 100})
-    assert store.metrics().count() == 1
+    # log_metrics is driver file I/O: no Spark job. Job-start events reach
+    # the status tracker in order, so once the later read's jobs show up,
+    # any job log_metrics had started would show up too.
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    try:
+        sc.setLocalProperty("spark.jobGroup.id", "log_metrics_probe")
+        store.log_metrics("stage_a", {"rows": 100})
+        store.log_metrics("stage_b", {"n": 1.5, "tag": "ü"})
+        sc.setLocalProperty("spark.jobGroup.id", "metrics_read_probe")
+        m = store.metrics()
+        rows = m.orderBy("logged_at", "stage").collect()
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup("metrics_read_probe") and time.time() < deadline:
+            time.sleep(0.1)
+        assert tracker.getJobIdsForGroup("metrics_read_probe")
+        assert tracker.getJobIdsForGroup("log_metrics_probe") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert m.schema.simpleString() == "struct<stage:string,metrics:string,logged_at:timestamp>"
+    assert [r.stage for r in rows] == ["stage_a", "stage_b"]
+    assert [json.loads(r.metrics) for r in rows] == [{"rows": 100}, {"n": 1.5, "tag": "ü"}]
+    assert all(r.logged_at is not None for r in rows)
