@@ -16,7 +16,7 @@ AQE skew-join splits the survivors.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.hashing import explode_band_keys
 from ..session import session_shuffle_width
@@ -57,32 +57,44 @@ def minhash_candidates(
                            num_perm, bands, rows)
     b2 = explode_band_keys(widen_if_narrow(df2, id_col), id_col, token_col,
                            num_perm, bands, rows)
-    if max_bucket is not None:
-        b1 = _cap_buckets(b1, max_bucket, stats, side=1)
-        b2 = _cap_buckets(b2, max_bucket, stats, side=2)
     left = b1.select(F.col(id_col).alias("src"), "band", "key")
     right = b2.select(F.col(id_col).alias("dst"), "band", "key")
+    if max_bucket is not None:
+        left, right = _cap_buckets(left, right, max_bucket, stats)
     return left.join(right, ["band", "key"]).select("src", "dst").distinct()
 
 
-def _cap_buckets(bk: DataFrame, max_bucket: int, stats: dict | None = None,
-                 side: int = 0) -> DataFrame:
-    counts = bk.groupBy("band", "key").count()
+def _cap_buckets(left: DataFrame, right: DataFrame, max_bucket: int,
+                 stats: dict | None = None) -> tuple[DataFrame, DataFrame]:
+    """Drop each side's (band, key) buckets holding more than
+    ``max_bucket`` of that side's rows. Both sides' band keys are tagged
+    with ``side`` and counted by ONE window over (side, band, key)."""
+    tagged = left.select(F.lit(1).alias("side"), F.col("src").alias("id"),
+                         "band", "key").unionByName(
+        right.select(F.lit(2).alias("side"), F.col("dst").alias("id"),
+                     "band", "key"))
+    counted = tagged.withColumn(
+        "n", F.count("*").over(Window.partitionBy("side", "band", "key")))
     if stats is not None:
-        # materialize the counts ONCE (localCheckpoint) so the eager
-        # stats action and the keep filter share one band-key groupBy
-        # instead of paying the shuffle twice for observability
-        counts = counts.localCheckpoint(eager=True)
-        row = (
-            counts.where(F.col("count") > max_bucket)
-            .agg(F.count("*").alias("nb"),
-                 F.coalesce(F.sum("count"), F.lit(0)).alias("nr"))
-            .first()
-        )
-        stats[f"dropped_buckets_{side}"] = int(row["nb"])
-        stats[f"dropped_rows_{side}"] = int(row["nr"])
-    keep = counts.where(F.col("count") <= max_bucket)
-    return bk.join(keep.select("band", "key"), ["band", "key"], "left_semi")
+        # materialize the counted band keys ONCE (localCheckpoint) so the
+        # stats action and the keep filter share one band-key pass
+        # instead of paying it twice for observability
+        counted = counted.localCheckpoint(eager=True)
+        hot = {r["side"]: r for r in (
+            counted.where(F.col("n") > max_bucket).groupBy("side")
+            .agg(F.countDistinct("band", "key").alias("nb"),
+                 F.count("*").alias("nr"))
+            .collect()
+        )}
+        for side in (1, 2):
+            r = hot.get(side)
+            stats[f"dropped_buckets_{side}"] = int(r["nb"]) if r else 0
+            stats[f"dropped_rows_{side}"] = int(r["nr"]) if r else 0
+    keep = counted.where(F.col("n") <= max_bucket)
+    return (
+        keep.where(F.col("side") == 1).select(F.col("id").alias("src"), "band", "key"),
+        keep.where(F.col("side") == 2).select(F.col("id").alias("dst"), "band", "key"),
+    )
 
 
 def jaccard_selfjoin_blocked(

@@ -276,14 +276,19 @@ def knn_topk_grouped(
     order there)."""
     query = _cast_shuffle_dtype(query, emb_col, shuffle_dtype)
     index = _cast_shuffle_dtype(index, emb_col, shuffle_dtype)
-    mx_i = index.groupBy(group_col).count().agg(F.max("count")).first()
-    mx_q = query.groupBy(group_col).count().agg(F.max("count")).first()
-    if mx_i is None or mx_i[0] is None or mx_q is None or mx_q[0] is None:
+    # largest group per side, both sides in ONE aggregate (s: 0 = index)
+    mx = dict(
+        query.select(F.lit(1).alias("s"), F.col(group_col).alias("g"))
+        .unionByName(index.select(F.lit(0).alias("s"), F.col(group_col).alias("g")))
+        .groupBy("s", "g").count().groupBy("s").agg(F.max("count"))
+        .collect()
+    )
+    if 0 not in mx or 1 not in mx:
         return query.sparkSession.createDataFrame(
             [], f"{SRC} long, {DST} long, {SIM} double"
         )
-    n_blocks = max(1, -(-int(mx_i[0]) // block_rows))
-    n_query_blocks = max(1, -(-int(mx_q[0]) // query_block_rows))
+    n_blocks = max(1, -(-int(mx[0]) // block_rows))
+    n_query_blocks = max(1, -(-int(mx[1]) // query_block_rows))
 
     q = query.select(
         F.col(group_col).alias("g"),

@@ -9,16 +9,35 @@ Phase graph (each phase = one StageStore checkpoint, resumable):
   triples_surface ──encode──▶ triples         (S1 joins)
   ent dims ──name channel──▶ sim_string, sim_embed   (phases 3, 1-2)
   sim_* ──semi seeds──▶ seeds                 (phase 0 prologue)
-  triples+seeds ──structure──▶ sim_structure  (phase 0)
+  triples+gold seeds ──structure──▶ sim_structure  (phase 0)
   sims ──fuse──▶ sim_fused ──mutual argmax──▶ links
   links ──connected components──▶ canonical ids
   triples×canonical ──▶ kg_canonical (materialized, partitioned)
 
 Single-KG (web corpus) and two-KG (alignment benchmark) entry points.
+
+Concurrency (two-KG path): sim_string, sim_embed, sim_structure (and
+sim_token when enabled) read only the input pair — the structure
+channel trains on GOLD seeds, not on semi_seeds — so ``align_kg_pair``
+checkpoints them together from a pool of driver threads, and
+semi_seeds starts as soon as string and embed are done. The reference
+runs the same independence as separate ``--phase`` processes that hand
+off through files (`main.py:183-200,282-368`). At benchmark size each
+stage is a chain of 1-4-task jobs, so one driver thread leaves most
+cores idle; overlapping the chains fills them. Fusion waits for every
+channel, and semi-supervision rounds stay sequential (each round reads
+the previous fused sim). The order is written as data dependencies
+(``_checkpoint_graph``): training structure on gold ∪ semi seeds would
+only add ``semi_seeds`` to its dependencies.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from functools import partial
+from typing import Callable
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import evalx, simops
@@ -99,6 +118,53 @@ def construct_kg_from_pages(
             "canonical": canon, "kg": kg}
 
 
+def _checkpoint_graph(
+    spark: SparkSession, store: StageStore,
+    graph: dict[str, tuple[tuple[str, ...], Callable[[dict], DataFrame]]],
+) -> dict[str, DataFrame]:
+    """Checkpoint every ``name: (deps, build)`` stage of ``graph`` from a
+    pool of driver threads, each as soon as the stages it reads are done;
+    ``build`` gets the dict of finished stage frames. The pool has one
+    thread per initially ready stage.
+
+    Why threads: at small sizes a stage's jobs have 1-4 tasks, so one
+    driver thread leaves most cores idle between and during its jobs;
+    independent stages submitted together fill them. Every target is
+    wrapped by its own ``inheritable_thread_target(spark)`` call, which
+    clones the caller's local properties (job group, tags) for that
+    thread alone. After a build raises, nothing new starts; the first
+    exception is raised once the running builds have finished, and no
+    thread outlives the call."""
+    done: dict[str, DataFrame] = {}
+    pending = dict(graph)
+
+    def ready() -> list[str]:
+        return [n for n, (deps, _) in pending.items() if all(d in done for d in deps)]
+
+    error: BaseException | None = None
+    with ThreadPoolExecutor(max_workers=len(ready())) as pool:
+        running = {}
+        while True:
+            if error is None:
+                for name in ready():
+                    build = partial(pending.pop(name)[1], done)
+                    task = inheritable_thread_target(spark)(
+                        partial(store.checkpoint, name, build))
+                    running[pool.submit(task)] = name
+            if not running:
+                break
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                name = running.pop(fut)
+                try:
+                    done[name] = fut.result()
+                except BaseException as e:  # re-raised below
+                    error = error or e
+    if error is not None:
+        raise error
+    return done
+
+
 def align_kg_pair(
     spark: SparkSession, pair: KGPair, store: StageStore,
     knn_k: int = 50, use_structure: bool = True,
@@ -106,8 +172,9 @@ def align_kg_pair(
     k_parts: int = 4, it_rounds: int = 1, encoder="hashed",
 ) -> dict:
     """Two-KG alignment, reference phase order (`main.py:242-369`):
-    name channel (string+embedding) → structure channel → fusion → eval.
-    Each sim is a checkpointed stage (S4 analogue).
+    name channel (string+embedding) and structure channel, built
+    concurrently (module docstring) → fusion → eval. Each sim is a
+    checkpointed stage (S4 analogue).
 
     The structure channel is the batched seed-anchor trainer
     (`run_batched_ea`, `main.py:58-88`), trained on GOLD seeds only.
@@ -135,6 +202,15 @@ def align_kg_pair(
     anti-joins on both sides), re-trains the structure channel with
     gold ∪ mined, and re-fuses."""
     requested_dim = emb_dim
+    # ONE aggregate over both entity dims: the entity count behind
+    # emb_dim='auto' and KG1's id range (n_src) for the evaluation
+    ent_stats = {r["side"]: r for r in (
+        pair.kg1.ent.select(F.lit(1).alias("side"), "id")
+        .unionByName(pair.kg2.ent.select(F.lit(2).alias("side"), "id"))
+        .groupBy("side").agg(F.count("*").alias("n"), F.max("id").alias("max_id"))
+        .collect()
+    )}
+    n_src = ((ent_stats[1]["max_id"] if 1 in ent_stats else None) or 0) + 1
     if emb_dim == "auto":
         # hashed-encoder collision noise grows with the entity count at
         # fixed width (numeric-suffix siblings nearly tie in trigram
@@ -142,39 +218,26 @@ def align_kg_pair(
         # 0.64 at 128 (SCALE.md "Iterative quality" / name_dim_probe).
         # 64 keeps small runs cheap; 128 above 30k entities. A real
         # transformer encoder (d=768 contract) makes this moot.
-        n_ents = pair.kg1.ent.count() + pair.kg2.ent.count()
+        n_ents = sum(r["n"] for r in ent_stats.values())
         emb_dim = 128 if n_ents >= 60_000 else 64
 
     store.log_metrics("emb_dim_choice", {
         "requested": requested_dim, "resolved": int(emb_dim),
     })
 
-    blocking_stats: dict = {}
-
-    def build_string():
-        # blocking_stats is only populated on a cold build (resume skips
-        # it); the metrics row records hot-bucket drops (no-silent-caps)
-        sim = name_channel.string_similarity(pair, stats=blocking_stats)
-        if blocking_stats:
-            store.log_metrics("sim_string_blocking", blocking_stats)
+    def build_string(_):
+        # stats are only populated on a cold build (resume skips it);
+        # the metrics row records hot-bucket drops (no-silent-caps)
+        stats: dict = {}
+        sim = name_channel.string_similarity(pair, stats=stats)
+        if stats:
+            store.log_metrics("sim_string_blocking", stats)
         return sim
 
-    sim_string = store.checkpoint("sim_string", build_string)
-    sim_embed = store.checkpoint(
-        "sim_embed",
-        lambda: name_channel.name_embedding_similarity(
-            pair, k=knn_k, dim=emb_dim, encoder=encoder
-        ),
-    )
-    seeds = store.checkpoint(
-        "semi_seeds", lambda: name_channel.semi_seeds(sim_embed, sim_string)
-    )
-
-    sims = {"string": sim_string, "embed": sim_embed}
     train = pair.links.where(F.col("split") == "train").select("e1", "e2")
 
-    def make_structure(extra_links: DataFrame | None, key: str) -> DataFrame:
-        def build():
+    def structure_build(extra_links: DataFrame | None):
+        def build(*_):
             from ..functions.vectors import encode_names
 
             n1 = name_channel.entity_names(pair.kg1.ent, punct_to_space=False)
@@ -195,16 +258,32 @@ def align_kg_pair(
             )
             return sim
 
-        return store.checkpoint(key, build)
+        return build
 
+    # stage → (stages it reads, build). The channels read only the input
+    # pair (structure trains on GOLD seeds), so they build concurrently;
+    # semi_seeds starts once string and embed are done.
+    graph = {
+        "sim_string": ((), build_string),
+        "sim_embed": ((), lambda _: name_channel.name_embedding_similarity(
+            pair, k=knn_k, dim=emb_dim, encoder=encoder)),
+        "semi_seeds": (("sim_string", "sim_embed"),
+                       lambda s: name_channel.semi_seeds(s["sim_embed"], s["sim_string"])),
+    }
     if use_structure:
-        sims["structure"] = make_structure(None, "sim_structure")
-
+        graph["sim_structure"] = ((), structure_build(None))
     if use_token_channel:
-        sims["token"] = store.checkpoint(
-            "sim_token",
-            lambda: name_channel.token_level_similarity(pair, dim=emb_dim),
-        )
+        graph["sim_token"] = ((), lambda _: name_channel.token_level_similarity(
+            pair, dim=emb_dim))
+    built = _checkpoint_graph(spark, store, graph)
+
+    sim_string, sim_embed, seeds = (built["sim_string"], built["sim_embed"],
+                                    built["semi_seeds"])
+    sims = {"string": sim_string, "embed": sim_embed}
+    if use_structure:
+        sims["structure"] = built["sim_structure"]
+    if use_token_channel:
+        sims["token"] = built["sim_token"]
 
     def fuse_round(structure_sim: DataFrame | None) -> DataFrame:
         name_parts = [sim_embed, sim_string]
@@ -240,7 +319,8 @@ def align_kg_pair(
             .join(train.select("e1"), "e1", "left_anti")
             .join(train.select("e2"), "e2", "left_anti"),
         )
-        sims[f"structure_r{r}"] = make_structure(mined, f"sim_structure_r{r}")
+        sims[f"structure_r{r}"] = store.checkpoint(
+            f"sim_structure_r{r}", structure_build(mined))
         fused = store.checkpoint(
             f"sim_fused_r{r}", lambda: fuse_round(sims[f"structure_r{r}"])
         )
@@ -253,7 +333,6 @@ def align_kg_pair(
     evals["fused_csls"] = simops.csls_rescore(fused, k=10)
 
     test = pair.links.where(F.col("split") == "test")
-    n_src = (pair.kg1.ent.agg(F.max("id")).first()[0] or 0) + 1
     metrics = evalx.hits_and_mrr(evals, test, ks=(1, 5, 50), n_src=n_src)
     for name, m in metrics.items():
         store.log_metrics(f"eval_{name}", m)

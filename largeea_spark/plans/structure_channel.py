@@ -35,11 +35,15 @@ def _corr_batches(pair: KGPair, parts1: DataFrame, parts2: DataFrame,
     separates them. Src parts with no train overlap pair with the same
     part id as a fallback."""
     corr = correspondence(pair.links, parts1, parts2, top_k=top_k_corr)
-    batches = [(r.p1, r.p2) for r in corr.collect()]
+    # correspondence rows and every src part in ONE collect (p2 null)
+    rows = corr.select("p1", "p2").unionByName(
+        parts1.select(F.col("part").alias("p1"),
+                      F.lit(None).cast("int").alias("p2")).distinct()
+    ).collect()
+    batches = [(r.p1, r.p2) for r in rows if r.p2 is not None]
     covered = {p1 for p1, _ in batches}
-    for r in parts1.select("part").distinct().collect():
-        if r.part not in covered:
-            batches.append((r.part, r.part))
+    batches += [(r.p1, r.p1) for r in rows
+                if r.p2 is None and r.p1 not in covered]
     return batches
 
 
@@ -58,9 +62,8 @@ def trained_batched_structure_similarity(
     (`sampler.py:211,248-262`)."""
     from ..operators.trainer import pack_batch_payload, train_batches
 
+    # slices of the partitioner's checkpointed label frame: no re-pin here
     parts1, parts2 = seed_aware_partition(pair, k_parts, cap=cap)
-    parts1 = parts1.localCheckpoint(eager=True)
-    parts2 = parts2.localCheckpoint(eager=True)
     batches = _corr_batches(pair, parts1, parts2, top_k_corr)
 
     train = pair.links.where(F.col("split") == "train").select("e1", "e2")
@@ -85,7 +88,7 @@ def trained_batched_structure_similarity(
     sim = knn_topk_grouped(r1, r2, k=knn_k, group_col="batch")
     return sim, {
         "batches": [{"p1": int(a), "p2": int(b)} for a, b in batches],
-        # checkpointed partition frames, exposed for co-location
+        # partition frames, exposed for co-location
         # diagnostics (scripts/quality_scale.py) and G8 stats
         "parts": (parts1, parts2),
     }

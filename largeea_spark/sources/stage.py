@@ -1,4 +1,4 @@
-"""Stage-table checkpointing with per-partition lineage (SURVEY.md S3/S4,
+"""Stage-table checkpointing with per-part-file lineage (SURVEY.md S3/S4,
 O8; north rule: "resumable from checkpoint with per-partition lineage +
 metrics").
 
@@ -8,27 +8,46 @@ analogue: every phase writes its output DataFrame to a Parquet stage
 table under a run directory; re-running a phase whose stage exists is a
 metadata-only read. (Iceberg would add snapshot isolation on a real
 cluster; the sandbox has no Iceberg jars — the layout and API below are
-format-agnostic, `format=` is pluggable.)
+format-agnostic, `format=` is pluggable for the stage tables; lineage
+reads Parquet footers.)
 
-Lineage: alongside each stage, a ``_lineage`` table records one row per
-OUTPUT PARTITION (spark_partition_id): row count + min/max of the first
-output column + wall-clock — enough to audit which partition produced
-what, per the north rule. The ``_metrics/`` directory holds one JSON
-line per stage run (S7, `log_information` `main.py:219-239`), appended
-with plain driver file I/O like the reference's log write, so logging
-runs no Spark job; ``metrics()`` reads the lines back as
-(stage, metrics, logged_at).
+Lineage: alongside each stage, a ``<stage>__lineage`` table records
+one row per PART FILE the write produced: its row count, the min/max of
+the first output column, and the write's wall-clock — enough to audit
+which write task produced what, per the north rule. Both come from the
+Parquet footers the write just left (row counts and typed column
+statistics; min/max are compared in the column's own type, e.g. 9 < 10,
+and stringified only afterwards; null when a footer has no statistics),
+and the table is written with pyarrow, so lineage runs no Spark job.
+The write's re-read passes the known schema, so it runs no inference
+job either: a checkpoint costs exactly its write job(s). The
+``_metrics/`` directory holds one JSON line per stage run (S7,
+`log_information` `main.py:219-239`), appended with plain driver file
+I/O like the reference's log write, so logging runs no Spark job;
+``metrics()`` reads the lines back as (stage, metrics, logged_at).
+Metrics appends are serialized by a lock: pipeline stages may build
+(and log) from concurrent driver threads.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import threading
 import time
 from datetime import datetime, timezone
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+_LINEAGE_SCHEMA = pa.schema([
+    ("partition_id", pa.int32()), ("file", pa.string()), ("rows", pa.int64()),
+    ("min_key", pa.string()), ("max_key", pa.string()), ("stage", pa.string()),
+    ("wall_sec", pa.float64()), ("written_at", pa.timestamp("us", tz="UTC")),
+])
 
 
 class StageStore:
@@ -36,6 +55,7 @@ class StageStore:
         self.spark = spark
         self.root = root.rstrip("/")
         self.fmt = fmt
+        self._metrics_lock = threading.Lock()
 
     def _path(self, name: str) -> str:
         return f"{self.root}/{name}"
@@ -53,25 +73,39 @@ class StageStore:
         w = df.write.format(self.fmt).mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.save(self._path(name))
-        out = self.read(name)
+        path = self._path(name)
+        w.save(path)
+        # known schema: no inference job (partition columns land last,
+        # where inference puts them too)
+        out = self.spark.read.schema(df.schema).format(self.fmt).load(path)
         self._write_lineage(name, out, time.time() - t0)
         return out
 
     def _write_lineage(self, name: str, out: DataFrame, wall_sec: float) -> None:
+        """One row per part file of stage ``name``, from its Parquet
+        footer (rows, typed min/max of ``out``'s first column), written
+        with pyarrow: no Spark job."""
+        root = self._path(name)
         first_col = out.columns[0]
-        lin = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.count("*").alias("rows"),
-                F.min(F.col(first_col).cast("string")).alias("min_key"),
-                F.max(F.col(first_col).cast("string")).alias("max_key"),
-            )
-            .withColumn("stage", F.lit(name))
-            .withColumn("wall_sec", F.lit(round(wall_sec, 3)))
-            .withColumn("written_at", F.current_timestamp())
-        )
-        lin.write.format(self.fmt).mode("overwrite").save(self._path(f"{name}__lineage"))
+        common = {"stage": name, "wall_sec": round(wall_sec, 3),
+                  "written_at": datetime.now(timezone.utc)}
+        rows = []
+        for dirpath, dirnames, filenames in os.walk(root):
+            dirnames.sort()
+            for fn in sorted(f for f in filenames if f.startswith("part-")):
+                n, lo, hi = _footer_lineage(os.path.join(dirpath, fn), first_col)
+                rows.append({
+                    # part-<write task partition>-<uuid>...: the writer task
+                    "partition_id": int(fn.split("-")[1]),
+                    "file": os.path.relpath(os.path.join(dirpath, fn), root),
+                    "rows": n, "min_key": lo, "max_key": hi, **common,
+                })
+        lin = self._path(f"{name}__lineage")
+        shutil.rmtree(lin, ignore_errors=True)
+        os.makedirs(lin)
+        pq.write_table(pa.Table.from_pylist(rows, schema=_LINEAGE_SCHEMA),
+                       os.path.join(lin, "part-00000.parquet"))
+        open(os.path.join(lin, "_SUCCESS"), "w").close()
 
     def lineage(self, name: str) -> DataFrame:
         return self.read(f"{name}__lineage")
@@ -95,14 +129,31 @@ class StageStore:
             "logged_at": datetime.now(timezone.utc).isoformat(),
         }
         d = self._path("_metrics")
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "metrics.jsonl"), "a", encoding="utf-8") as fh:
-            fh.write(json.dumps(row) + "\n")
+        with self._metrics_lock:
+            os.makedirs(d, exist_ok=True)
+            with open(os.path.join(d, "metrics.jsonl"), "a", encoding="utf-8") as fh:
+                fh.write(json.dumps(row) + "\n")
 
     def metrics(self) -> DataFrame:
         return self.spark.read.schema(
             "stage string, metrics string, logged_at timestamp"
         ).json(self._path("_metrics"))
+
+
+def _footer_lineage(path: str, col: str) -> tuple[int, str | None, str | None]:
+    """(rows, min, max) of ``col`` in one part file from its Parquet
+    footer. min/max are taken over the typed row-group statistics and
+    only then stringified; both are None when a row group lacks them
+    (or ``col`` is not a top-level leaf)."""
+    md = pq.ParquetFile(path).metadata
+    idx = next((i for i in range(md.num_columns)
+                if md.schema.column(i).path == col), None)
+    stats = [md.row_group(g).column(idx).statistics
+             for g in range(md.num_row_groups)] if idx is not None else []
+    if not stats or not all(s is not None and s.has_min_max for s in stats):
+        return md.num_rows, None, None
+    return (md.num_rows, str(min(s.min for s in stats)),
+            str(max(s.max for s in stats)))
 
 
 class TableStageStore(StageStore):

@@ -452,6 +452,14 @@ def test_minhash_drop_stats_surface(spark):
     assert stats["dropped_rows_1"] >= 60
     # hot group generates no candidates; cold self-pairs survive
     assert cand.where(F.col("src") < 100).count() == 0
+    # only side 1 hot: side 2's counts are 0, not missing
+    stats1: dict = {}
+    cand1 = minhash_candidates(df, df.where(F.col("id") >= 100), "id", "toks",
+                               max_bucket=10, stats=stats1)
+    assert stats1["dropped_buckets_1"] == stats["dropped_buckets_1"]
+    assert stats1["dropped_rows_1"] == stats["dropped_rows_1"]
+    assert stats1["dropped_buckets_2"] == 0 and stats1["dropped_rows_2"] == 0
+    assert sorted(tuple(r) for r in cand1.collect()) == [(100 + i, 100 + i) for i in range(5)]
 
 
 def test_pipeline_logs_blocking_metrics(spark, tmp_path):

@@ -125,6 +125,14 @@ def test_stage_store_resume(spark, tmp_path):
     assert b.count() == 100 and calls["n"] == 1
     lin = store.lineage("stage_a")
     assert lin.agg(F.sum("rows")).first()[0] == 100
+    # one row per part file, min/max from its footer's typed statistics:
+    # each file holds a contiguous id run, so rows = max − min + 1 (a
+    # min/max over the column cast to string reads '9' as the max of 0..24)
+    files = lin.collect()
+    assert min(int(r.min_key) for r in files) == 0
+    assert max(int(r.max_key) for r in files) == 99
+    assert all(r.rows == int(r.max_key) - int(r.min_key) + 1 for r in files)
+    assert len({r.file for r in files}) == len(files)
     # log_metrics is driver file I/O: no Spark job. Job-start events reach
     # the status tracker in order, so once the later read's jobs show up,
     # any job log_metrics had started would show up too.
@@ -148,3 +156,21 @@ def test_stage_store_resume(spark, tmp_path):
     assert [r.stage for r in rows] == ["stage_a", "stage_b"]
     assert [json.loads(r.metrics) for r in rows] == [{"rows": 100}, {"n": 1.5, "tag": "ü"}]
     assert all(r.logged_at is not None for r in rows)
+    # concurrent appends: 8 threads × 50 rows, every line intact
+    import threading
+
+    conc = StageStore(spark, str(tmp_path / "conc"))
+    threads = [
+        threading.Thread(target=lambda t=t: [
+            conc.log_metrics(f"t{t}", {"i": i, "pad": "x" * 500}) for i in range(50)])
+        for t in range(8)
+    ]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    with open(tmp_path / "conc" / "_metrics" / "metrics.jsonl", encoding="utf-8") as fh:
+        lines = [json.loads(line) for line in fh]
+    assert len(lines) == 400
+    assert sorted((r["stage"], json.loads(r["metrics"])["i"]) for r in lines) == [
+        (f"t{t}", i) for t in range(8) for i in range(50)]
