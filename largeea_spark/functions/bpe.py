@@ -1,42 +1,18 @@
-"""Real byte-pair-encoding subword tokenizer (SURVEY.md F5, upgraded
-from the hashed stand-in).
+"""Distributed word-frequency table (SURVEY.md F5).
 
-Training is Spark-first where the data is big and classical where it
-is small: the corpus (100 TB) is reduced to a WORD-FREQUENCY table by
-a JVM-side split + groupBy/count — the standard first step of every
-public BPE trainer (Sennrich et al. 2016; sentencepiece and HF
-tokenizers likewise aggregate counts before merging) — and only the
-top ``max_words`` distinct words (a few MB at any corpus size, Heaps'
-law) come to the driver for the merge loop. The merge loop itself is
-the textbook algorithm: repeatedly merge the most frequent adjacent
-symbol pair, ties broken lexicographically so training is
-deterministic at any parallelism.
-
-Encoding applies merges greedily by rank (the GPT-2 published scheme)
-inside an Arrow-batched pandas UDF with a per-task word cache — Zipf
-makes the cache hit rate high, so the hot path is a dict lookup.
-
-Reference parity: the reference tokenizes names with a pretrained BERT
-WordPiece vocab (`src/emb_loader.py:193-196`); no pretrained vocab
-files exist in-sandbox, so this trains the vocab from the corpus
-itself — same subword contract (`text -> list of subword strings /
-ids`), reproducible from data alone.
+This is the counting step that every public BPE trainer starts with
+(Sennrich et al. 2016; sentencepiece and HF tokenizers likewise
+aggregate counts before merging): the corpus is reduced to a
+WORD-FREQUENCY table by a JVM-side split + groupBy/count. The trained
+merge loop and the subword encoder on top of it are a documented
+omission (COVERAGE.md F5); the reference tokenizes names with a
+pretrained BERT WordPiece vocab (`src/emb_loader.py:193-196`).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from pyspark.sql import DataFrame, functions as F
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StringType
-
-EOW = "</w>"  # end-of-word marker (Sennrich's convention)
-
-
-# ---------------------------------------------------------------------------
-# training
-# ---------------------------------------------------------------------------
 
 def word_frequency_table(df: DataFrame, text_col: str,
                          max_words: int = 100_000,
@@ -58,169 +34,3 @@ def word_frequency_table(df: DataFrame, text_col: str,
         .orderBy(F.col("count").desc(), F.col("w"))
         .limit(max_words)
     )
-
-
-def word_frequencies(df: DataFrame, text_col: str,
-                     max_words: int = 100_000,
-                     lowercase: bool = True) -> list[tuple[str, int]]:
-    """Collected form of :func:`word_frequency_table` — the small side
-    that drives the driver-side merge loop."""
-    rows = word_frequency_table(df, text_col, max_words, lowercase).collect()
-    return [(r["w"], r["count"]) for r in rows]
-
-
-def train_bpe_merges(word_freqs: list[tuple[str, int]],
-                     n_merges: int = 1000) -> list[tuple[str, str]]:
-    """Classic BPE merge training over a word-frequency dict
-    (Sennrich et al. 2016, Algorithm 1). Deterministic: the argmax pair
-    is chosen by (count desc, pair asc). Incremental pair-count
-    maintenance keeps it O(n_merges × touched-words), not a full
-    recount per merge."""
-    # each word → list of symbols; last symbol carries the EOW marker
-    vocab: list[tuple[list[str], int]] = []
-    for w, n in word_freqs:
-        syms = list(w)
-        if not syms:
-            continue
-        syms[-1] = syms[-1] + EOW
-        vocab.append((syms, int(n)))
-
-    # pair -> count, and pair -> set of word indexes containing it
-    pair_counts: dict[tuple[str, str], int] = {}
-    pair_words: dict[tuple[str, str], set[int]] = {}
-
-    def add_word_pairs(wi: int, sign: int) -> None:
-        syms, n = vocab[wi]
-        for a, b in zip(syms, syms[1:]):
-            p = (a, b)
-            pair_counts[p] = pair_counts.get(p, 0) + sign * n
-            if sign > 0:
-                pair_words.setdefault(p, set()).add(wi)
-
-    for wi in range(len(vocab)):
-        add_word_pairs(wi, +1)
-
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        best, best_n = None, 0
-        for p, n in pair_counts.items():
-            if n > best_n or (n == best_n and best is not None and p < best):
-                best, best_n = p, n
-        if best is None or best_n < 2:
-            break  # nothing merges twice — further merges memorize noise
-        merges.append(best)
-        joined = best[0] + best[1]
-        for wi in list(pair_words.get(best, ())):
-            syms, n = vocab[wi]
-            add_word_pairs(wi, -1)
-            out, j = [], 0
-            while j < len(syms):
-                if (j + 1 < len(syms) and syms[j] == best[0]
-                        and syms[j + 1] == best[1]):
-                    out.append(joined)
-                    j += 2
-                else:
-                    out.append(syms[j])
-                    j += 1
-            vocab[wi] = (out, n)
-            add_word_pairs(wi, +1)
-        # drop exhausted entries so the argmax scan stays tight
-        pair_counts = {p: n for p, n in pair_counts.items() if n > 0}
-        pair_words = {p: s for p, s in pair_words.items() if p in pair_counts}
-    return merges
-
-
-def train_bpe(df: DataFrame, text_col: str, n_merges: int = 1000,
-              max_words: int = 100_000, lowercase: bool = True
-              ) -> list[tuple[str, str]]:
-    """End-to-end: distributed word counts → driver merge loop."""
-    return train_bpe_merges(
-        word_frequencies(df, text_col, max_words, lowercase), n_merges
-    )
-
-
-# ---------------------------------------------------------------------------
-# encoding
-# ---------------------------------------------------------------------------
-
-def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
-    """Greedy rank-order BPE encode of one word (GPT-2 scheme): always
-    merge the pair with the LOWEST training rank present."""
-    syms = list(word)
-    if not syms:
-        return []
-    syms[-1] = syms[-1] + EOW
-    while len(syms) > 1:
-        best_rank, best_i = None, -1
-        for i, p in enumerate(zip(syms, syms[1:])):
-            r = ranks.get(p)
-            if r is not None and (best_rank is None or r < best_rank):
-                best_rank, best_i = r, i
-        if best_rank is None:
-            break
-        syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-    return syms
-
-
-def bpe_vocabulary(merges: list[tuple[str, str]]) -> dict[str, int]:
-    """token string → id. Ids 0..N: merged tokens in training order
-    (rank = id), then a stable spot is NOT reserved for single
-    characters — unseen symbols map to id -1 ('unk') at lookup time in
-    :func:`bpe_tokenizer`, keeping the table reproducible from merges
-    alone."""
-    vocab: dict[str, int] = {}
-    for a, b in merges:
-        tok = a + b
-        if tok not in vocab:
-            vocab[tok] = len(vocab)
-    return vocab
-
-
-def bpe_tokenizer(merges: list[tuple[str, str]], lowercase: bool = True,
-                  as_ids: bool = False):
-    """pandas UDF ``text -> array<string>`` subword tokens (or
-    ``array<int>`` ids with ``as_ids``; characters never merged during
-    training get id -1). Merges ship to executors through the UDF
-    closure (a few KB); a per-task word→tokens cache exploits Zipf."""
-    ranks = {p: i for i, p in enumerate(merges)}
-    vocab = bpe_vocabulary(merges) if as_ids else None
-    ret = ArrayType(IntegerType()) if as_ids else ArrayType(StringType())
-
-    @F.pandas_udf(ret)
-    def tok(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        import re
-
-        split = re.compile(r"[^\w']+", re.UNICODE)
-        cache: dict[str, list] = {}
-
-        def one(text) -> list:
-            if text is None:
-                return []
-            if lowercase:
-                text = text.lower()
-            out: list = []
-            for w in split.split(text):
-                if not w:
-                    continue
-                got = cache.get(w)
-                if got is None:
-                    toks = encode_word(w, ranks)
-                    got = ([vocab.get(t, -1) for t in toks]
-                           if as_ids else toks)
-                    if len(cache) < 200_000:  # bound task memory
-                        cache[w] = got
-                out.extend(got)
-            return out
-
-        for s in it:
-            yield pd.Series([one(t) for t in s.tolist()])
-
-    return tok
-
-
-def bpe_token_count(text_col: str | Column,
-                    merges: list[tuple[str, str]]) -> Column:
-    """Subword token count column (textstats counterpart of
-    ``bpeish_token_count``, now against a REAL trained vocab)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.size(bpe_tokenizer(merges)(c))

@@ -145,31 +145,6 @@ def encode_names(df: DataFrame, name_col: str, out_col: str = "emb",
     return df.withColumn(out_col, udf(F.col(name_col)))
 
 
-def word_to_entity_embedding(e2w: DataFrame, word_emb: DataFrame,
-                             reduction: str = "mean") -> DataFrame:
-    """A5 / `embed_word2entity` (`text_utils.py:264-269`,
-    `text_utils.py:216-229`): pool word embeddings into entity
-    embeddings through the (ent_id, word_id) incidence table.
-
-    Pure join + posexplode + groupBy (codegen, no UDF). ``reduction``
-    ∈ {mean, max, sum}. Output: (ent_id, emb array<double>)."""
-    agg = {"mean": F.avg, "max": F.max, "sum": F.sum}[reduction]
-    flat = word_emb.select(
-        F.col("word_id"), F.posexplode("emb").alias("pos", "x")
-    )
-    pooled = (
-        e2w.select("ent_id", "word_id")
-        .join(flat, "word_id")
-        .groupBy("ent_id", "pos")
-        .agg(agg("x").alias("x"))
-    )
-    return (
-        pooled.groupBy("ent_id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "x"))).alias("px"))
-        .select("ent_id", F.col("px.x").alias("emb"))
-    )
-
-
 def power_mean_pooling(
     e2w: DataFrame, word_emb: DataFrame, ps: tuple = (1.0, 2.0, 3.0),
     include_minmax: bool = True,
@@ -222,31 +197,3 @@ def power_mean_pooling(
     return joined.groupBy("ent_id").applyInPandas(
         pool, schema="ent_id long, emb array<double>"
     )
-
-
-def procrustes(emb1: DataFrame, emb2: DataFrame, anchors: DataFrame) -> list:
-    """L7 (`proc` `utils.py:162-164`): orthogonal Procrustes rotation
-    W = UVᵀ from the SVD of X₁ᵀX₂ over anchor pairs. The d×d product is
-    computed DISTRIBUTED (join+agg over anchor rows); only the d×d
-    matrix is collected — numpy SVD on the driver is O(d³), d≤768.
-
-    anchors: (e1, e2). Returns W as a nested python list (d×d)."""
-    x1 = anchors.join(
-        emb1.select(F.col("id").alias("e1"), F.col("emb").alias("a")), "e1"
-    )
-    both = x1.join(
-        emb2.select(F.col("id").alias("e2"), F.col("emb").alias("b")), "e2"
-    )
-    f1 = both.select(F.posexplode("a").alias("i", "xi"), F.col("b"))
-    f2 = f1.select("i", "xi", F.posexplode("b").alias("j", "xj"))
-    m = (
-        f2.groupBy("i", "j").agg(F.sum(F.col("xi") * F.col("xj")).alias("v"))
-        .collect()
-    )
-    d1 = max(r.i for r in m) + 1
-    d2 = max(r.j for r in m) + 1
-    mat = np.zeros((d1, d2))
-    for r in m:
-        mat[r.i, r.j] = r.v
-    u, _, vt = np.linalg.svd(mat, full_matrices=False)
-    return (u @ vt).tolist()

@@ -94,68 +94,3 @@ def assign_dense_ids(distinct_df: DataFrame, key_col: str, id_col: str = "id") -
         .withColumn(id_col, F.col("__mid") - F.col("__base") + F.col("__off"))
         .drop("__pid", "__mid", "__off", "__base")
     )
-
-
-def encode_column(
-    df: DataFrame, dim: DataFrame, key_col: str, out_col: str, dim_key: str | None = None,
-    broadcast_dim: bool = False, via_hash: bool = False, _hash_fn=None,
-) -> DataFrame:
-    """Replace a string key column with its dense id via an equi-join.
-
-    Reference analogue: the dict lookup inside `dataset.py:92-99`.
-    ``broadcast_dim=True`` for small dims (rel vocabularies);
-    entity dims at 1e9 rows stay sort-merge (AQE handles skew).
-
-    ``via_hash=True`` joins on ``xxhash64(key)`` instead of the key
-    string, REQUIRING every fact key to be present in the dim (true by
-    construction in dict-encode flows: the dim is built from these very
-    facts). The fact side then shuffles an 8-byte long where a
-    sort-merge join on URI strings would shuffle-and-sort ~40-80 bytes
-    per key — at 1e9 triples that is the dominant exchange of the
-    construct phase, and the SMJ comparator becomes a long compare.
-    Dim keys whose hash collides (detected by one tiny agg over the
-    dim; ~n²/2⁶⁵ expected, i.e. none below ~10⁹ keys) fall back to the
-    exact string join, unioned in — correctness never rides on hash
-    uniqueness.
-    """
-    dkey = dim_key or key_col
-    if not via_hash:
-        d = dim.select(F.col(dkey).alias("__k"), F.col("id").alias(out_col))
-        if broadcast_dim:
-            d = F.broadcast(d)
-        return (
-            df.join(d, df[key_col] == d["__k"], "inner")
-            .drop("__k", key_col)
-        )
-    hash_fn = _hash_fn or F.xxhash64
-    dim_h = dim.select(
-        hash_fn(dkey).alias("__h"), F.col(dkey).alias("__k"),
-        F.col("id").alias(out_col),
-    )
-    colliding = [
-        r["__h"]
-        for r in dim_h.groupBy("__h").agg(F.count("*").alias("c"))
-        .where(F.col("c") > 1).select("__h").collect()
-    ]
-    fact = df.withColumn("__h", hash_fn(key_col))
-    if broadcast_dim:
-        dim_h = F.broadcast(dim_h)
-    if not colliding:
-        return (
-            fact.drop(key_col)
-            .join(dim_h.drop("__k"), "__h")
-            .drop("__h")
-        )
-    clean = (
-        fact.where(~F.col("__h").isin(colliding)).drop(key_col)
-        .join(dim_h.where(~F.col("__h").isin(colliding)).drop("__k"), "__h")
-        .drop("__h")
-    )
-    dirty_dim = dim_h.where(F.col("__h").isin(colliding)).drop("__h")
-    dirty = (
-        fact.where(F.col("__h").isin(colliding)).drop("__h")
-        .join(dirty_dim, F.col(key_col) == F.col("__k"), "inner")
-        .drop("__k", key_col)
-    )
-    return clean.unionByName(dirty)
-

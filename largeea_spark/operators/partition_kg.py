@@ -262,35 +262,6 @@ def _salt_oversized(labels1: DataFrame, labels2: DataFrame, train: DataFrame,
     return apply_salt(labels1, None), apply_salt(labels2, key2)
 
 
-def share_triples(pair: KGPair) -> tuple[DataFrame, DataFrame]:
-    """J4 (`share_triplets` `partition.py:160-172`; also
-    `models/wrapper.py:142-151`): triples whose head AND tail are both
-    train-linked get copied into the OTHER KG with counterpart ids,
-    deduplicated. Returns (triples1+, triples2+).
-
-    Spark shape: triples ⋈ links(on src) ⋈ links(on dst) → remap →
-    unionByName → dropDuplicates. Both joins are on entity id; the links
-    side is the small one → broadcast."""
-    train = pair.links.where(F.col("split") == "train").select("e1", "e2")
-    b = F.broadcast
-
-    def shared(triples: DataFrame, from_col: str, to_col: str) -> DataFrame:
-        mh = b(train.select(F.col(from_col).alias("src"), F.col(to_col).alias("new_src")))
-        mt = b(train.select(F.col(from_col).alias("dst"), F.col(to_col).alias("new_dst")))
-        return (
-            triples.join(mh, "src").join(mt, "dst")
-            .select(F.col("new_src").alias("src"), "rel", F.col("new_dst").alias("dst"))
-        )
-
-    t1_plus = pair.kg1.triples.unionByName(
-        shared(pair.kg2.triples, "e2", "e1")
-    ).dropDuplicates()
-    t2_plus = pair.kg2.triples.unionByName(
-        shared(pair.kg1.triples, "e1", "e2")
-    ).dropDuplicates()
-    return t1_plus, t2_plus
-
-
 def place_triples(triples: DataFrame, parts: DataFrame) -> tuple[DataFrame, int]:
     """J2 (`place_triplets` `sampler.py:212-227`): join head and tail to
     the assignment, keep only co-partitioned triples, count the drops."""
@@ -324,19 +295,3 @@ def correspondence(links: DataFrame, parts1: DataFrame, parts2: DataFrame,
     )
     w = Window.partitionBy("p1").orderBy(F.col("overlap").desc(), F.col("p2").asc())
     return j.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= top_k).drop("rk")
-
-
-def partition_stats(parts: DataFrame) -> dict:
-    """G8/A11 (`partition.py:250-269`): size distribution."""
-    row = (
-        parts.groupBy("part").count()
-        .agg(
-            F.count("*").alias("n_parts"),
-            F.min("count").alias("min_size"),
-            F.max("count").alias("max_size"),
-            F.avg("count").alias("avg_size"),
-            F.stddev_pop("count").alias("std_size"),
-        )
-        .first()
-    )
-    return {k: (float(v) if v is not None else None) for k, v in row.asDict().items()}

@@ -217,21 +217,6 @@ def margin_mutual_pairs(df: DataFrame, th: float) -> DataFrame:
     )
 
 
-def spspmm_pruned(a: DataFrame, b: DataFrame, softmax_by: str = SRC,
-                  eps: float = 0.01) -> DataFrame:
-    """L2 (`batch_spspmm` + filter_softmax, `utils.py:187-207`): spspmm
-    followed by a row-softmax threshold prune — keeps the product sparse
-    across iterative chains (O7). The reference batches rows to bound
-    memory; Spark partitions instead."""
-    prod = spspmm(a, b)
-    sm = sparse_softmax(prod, softmax_by).withColumnRenamed(SIM, "p")
-    return (
-        prod.join(sm.select(SRC, DST, "p"), [SRC, DST])
-        .where(F.col("p") >= eps)
-        .select(SRC, DST, SIM)
-    )
-
-
 def sinkhorn(df: DataFrame, n_iter: int = 5, eps: float = 1e-9) -> DataFrame:
     """L6 (`sinkhorn_process` `text_sim.py:23-45`): alternating row/col
     sum-normalization of a sparse nonnegative matrix (◆ iterative;
@@ -243,22 +228,4 @@ def sinkhorn(df: DataFrame, n_iter: int = 5, eps: float = 1e-9) -> DataFrame:
             out = out.withColumn(SIM, F.col(SIM) / (F.sum(SIM).over(w) + F.lit(eps)))
         if (i + 1) % 2 == 0:
             out = out.localCheckpoint(eager=True)
-    return out
-
-
-def filter_by_candidates(df: DataFrame, cand_src: DataFrame, cand_dst: DataFrame,
-                         src_id: str = "id", dst_id: str = "id") -> DataFrame:
-    """P6: keep entries whose src AND dst are in candidate sets
-    (`sampler.py:119-136`) — two semi-joins."""
-    return df.join(
-        cand_src.select(F.col(src_id).alias(SRC)), SRC, "left_semi"
-    ).join(cand_dst.select(F.col(dst_id).alias(DST)), DST, "left_semi")
-
-
-def slice_rows(df: DataFrame, lo: int, hi: int, shift: bool = True) -> DataFrame:
-    """P4: row-range slice [lo, hi) with optional re-basing
-    (`utils.py:443-450`, `eval.py:212-214`)."""
-    out = df.where(F.col(SRC).between(lo, hi - 1))
-    if shift:
-        out = out.withColumn(SRC, F.col(SRC) - F.lit(lo))
     return out

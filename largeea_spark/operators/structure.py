@@ -5,7 +5,7 @@ self-joins over the triple table").
 
 The pipeline's structure channel is the batched trainer
 (plans/structure_channel.py). This module holds the deterministic
-propagation operator (and the negative sampler):
+propagation operator:
 
   h⁰(e)   = name embedding (functions.vectors hashed n-gram, or any
             encoder honoring the id→array<float> contract)
@@ -114,30 +114,3 @@ def propagate_embeddings(
             eager=True
         )
     return cur
-
-
-def sample_negatives(triples: DataFrame, n_ents: int, n_per_pos: int = 1,
-                     seed: int = 42) -> DataFrame:
-    """M3/J12 (`models/utils.py:62-96`): negative triples by corrupting
-    head or tail with a pseudo-random entity, rejecting any proposal
-    that collides with a true triple (left_anti).
-
-    Randomness is VALUE-determined (xxhash64 of the triple + draw index
-    + seed), not rand(): reproducible at any parallelism. Draw i
-    corrupts the tail when i is even, the head when odd (the reference
-    alternates sides). Collision rejects shrink the sample slightly
-    rather than re-drawing (one anti-join instead of a driver loop; at
-    KG sparsity the loss is negligible)."""
-    draws = triples.withColumn(
-        "i", F.explode(F.sequence(F.lit(0), F.lit(n_per_pos - 1)))
-    )
-    rnd = F.pmod(
-        F.xxhash64("src", "rel", "dst", "i", F.lit(seed)), F.lit(n_ents)
-    )
-    proposals = draws.select(
-        F.when(F.col("i") % 2 == 1, rnd).otherwise(F.col("src")).alias("src"),
-        F.col("rel"),
-        F.when(F.col("i") % 2 == 0, rnd).otherwise(F.col("dst")).alias("dst"),
-    )
-    return proposals.join(triples, ["src", "rel", "dst"], "left_anti")
-

@@ -71,6 +71,30 @@ def verify_byte_identical(pages: DataFrame) -> int:
     return ext.where(F.col("extracted_text") != F.col("text")).count()
 
 
+_TRIPLE_SCHEMA = "subj string, pred string, obj string, url string"
+
+
+def _triple_pattern(predicates: list[str] | None) -> re.Pattern:
+    """``"{subj} {pred} {obj}."`` sentences over the predicate lexicon."""
+    preds = predicates or PREDICATES
+    return re.compile(
+        r"(?m)([^.\n]+?)\s+(" + "|".join(re.escape(p) for p in preds) + r")\s+([^.\n]+?)\."
+    )
+
+
+def _match_triples(pat: re.Pattern, docs) -> pd.DataFrame:
+    """Surface triples of ``(url, text)`` docs; the title line is skipped."""
+    out = {"subj": [], "pred": [], "obj": [], "url": []}
+    for url, text in docs:
+        body = text.split("\n", 1)[-1]
+        for m in pat.finditer(body):
+            out["subj"].append(m.group(1).strip())
+            out["pred"].append(m.group(2))
+            out["obj"].append(m.group(3).strip())
+            out["url"].append(url)
+    return pd.DataFrame(out)
+
+
 def emit_triples(pages: DataFrame, predicates: list[str] | None = None) -> DataFrame:
     """Mention detection + triple emission (north star): sentences of
     the form ``"{subj} {pred} {obj}."`` matched against a predicate
@@ -80,28 +104,16 @@ def emit_triples(pages: DataFrame, predicates: list[str] | None = None) -> DataF
     canonicalization joins them to the entity dim. The title line is the
     page's own subject context (not used by the template matcher but
     kept for future coref)."""
-    preds = predicates or PREDICATES
-    pat = re.compile(
-        r"(?m)([^.\n]+?)\s+(" + "|".join(re.escape(p) for p in preds) + r")\s+([^.\n]+?)\."
-    )
+    pat = _triple_pattern(predicates)
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {"subj": [], "pred": [], "obj": [], "url": []}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if text is None:
-                    continue
-                body = text.split("\n", 1)[-1]
-                for m in pat.finditer(body):
-                    out["subj"].append(m.group(1).strip())
-                    out["pred"].append(m.group(2))
-                    out["obj"].append(m.group(3).strip())
-                    out["url"].append(url)
-            yield pd.DataFrame(out)
+            yield _match_triples(pat, (
+                (url, text) for url, text in zip(pdf["url"], pdf["text"])
+                if text is not None
+            ))
 
-    return pages.select("url", "text").mapInPandas(
-        fn, schema="subj string, pred string, obj string, url string"
-    )
+    return pages.select("url", "text").mapInPandas(fn, schema=_TRIPLE_SCHEMA)
 
 
 def emit_triples_verified(pages: DataFrame, predicates: list[str] | None = None) -> DataFrame:
@@ -113,29 +125,20 @@ def emit_triples_verified(pages: DataFrame, predicates: list[str] | None = None)
     (``construct_kg_from_pages``) runs ``triples_for_parity`` →
     ``emit_triples``, and ``verify_byte_identical`` remains the
     standalone audit."""
-    preds = predicates or PREDICATES
-    pat = re.compile(
-        r"(?m)([^.\n]+?)\s+(" + "|".join(re.escape(p) for p in preds) + r")\s+([^.\n]+?)\."
-    )
+    pat = _triple_pattern(predicates)
+
+    def verified(pdf: pd.DataFrame):
+        for url, html, golden in zip(pdf["url"], pdf["html"], pdf["text"]):
+            text = extract_text_bytes(bytes(html) if html is not None else None)
+            if golden is not None and text != golden:
+                raise ValueError(f"byte-identical extraction violated for {url}")
+            yield url, text
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {"subj": [], "pred": [], "obj": [], "url": []}
-            for url, html, golden in zip(pdf["url"], pdf["html"], pdf["text"]):
-                text = extract_text_bytes(bytes(html) if html is not None else None)
-                if golden is not None and text != golden:
-                    raise ValueError(f"byte-identical extraction violated for {url}")
-                body = text.split("\n", 1)[-1]
-                for m in pat.finditer(body):
-                    out["subj"].append(m.group(1).strip())
-                    out["pred"].append(m.group(2))
-                    out["obj"].append(m.group(3).strip())
-                    out["url"].append(url)
-            yield pd.DataFrame(out)
+            yield _match_triples(pat, verified(pdf))
 
-    return pages.select("url", "html", "text").mapInPandas(
-        fn, schema="subj string, pred string, obj string, url string"
-    )
+    return pages.select("url", "html", "text").mapInPandas(fn, schema=_TRIPLE_SCHEMA)
 
 
 def surface_to_name(col):

@@ -39,19 +39,16 @@ def entity_names(ent: DataFrame, punct_to_space: bool) -> DataFrame:
 
 def string_similarity(
     pair: KGPair, num_perm: int = 128, bands: int = 32, rows: int = 4,
-    restrict_to_test: bool = False, stats: dict | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Phase 3 (`sparse_string_sim`, `text_sim.py:227-243`):
     MinHash-blocked Levenshtein-ratio sim between the two KGs' names.
 
-    ``restrict_to_test`` mirrors the reference's candidate-subspace
-    projection P5 (`main.py:302`, test-pair entities only)."""
+    The reference's candidate-subspace projection P5 (`main.py:302`,
+    test-pair entities only) is a caller-side semi-join of ``pair``'s
+    entity dims, as for every name-channel function."""
     n1 = entity_names(pair.kg1.ent, punct_to_space=True)
     n2 = entity_names(pair.kg2.ent, punct_to_space=True)
-    if restrict_to_test:
-        test = pair.links.where(F.col("split") == "test")
-        n1 = n1.join(test.select(F.col("e1").alias("id")), "id", "left_semi")
-        n2 = n2.join(test.select(F.col("e2").alias("id")), "id", "left_semi")
     t1 = n1.withColumn("toks", underscore_token_set("name"))
     t2 = n2.withColumn("toks", underscore_token_set("name"))
     cand = minhash_candidates(t1, t2, "id", "toks", num_perm, bands, rows,
@@ -87,7 +84,7 @@ IVF_AUTO_THRESHOLD = 100_000
 
 def name_embedding_similarity(
     pair: KGPair, k: int = 50, dim: int = 64, ngram: int = 3,
-    restrict_to_test: bool = False, encoder="hashed",
+    encoder="hashed",
     method: str = "auto", nlist: int | None = None,
     nprobe: int | None = None, ivf_threshold: int | None = None,
     stats: dict | None = None,
@@ -107,15 +104,11 @@ def name_embedding_similarity(
     quantizers, `text_utils.py:291-333`)."""
     n1 = entity_names(pair.kg1.ent, punct_to_space=False)
     n2 = entity_names(pair.kg2.ent, punct_to_space=False)
-    if restrict_to_test:
-        test = pair.links.where(F.col("split") == "test")
-        n1 = n1.join(test.select(F.col("e1").alias("id")), "id", "left_semi")
-        n2 = n2.join(test.select(F.col("e2").alias("id")), "id", "left_semi")
     e1 = encode_names(n1, "name", dim=dim, n=ngram, encoder=encoder)
     e2 = encode_names(n2, "name", dim=dim, n=ngram, encoder=encoder)
     n_idx = None
     if method in ("auto", "ivf"):
-        n_idx = n2.count()  # the actual index side (after any test restrict)
+        n_idx = n2.count()  # the actual index side
     if method == "auto":
         thr = IVF_AUTO_THRESHOLD if ivf_threshold is None else ivf_threshold
         method = "ivf" if n_idx >= thr else "brute"
@@ -145,7 +138,7 @@ def name_embedding_similarity(
 
 def token_level_similarity(
     pair: KGPair, dim: int = 64, ngram: int = 3, token_k: int = 5,
-    restrict_to_test: bool = False, drop_stop_tokens: int | None = 25,
+    drop_stop_tokens: int | None = 25,
 ) -> DataFrame:
     """L4 (`sparse_semantic_sim`, `text_sim.py:112-141,247-262`):
     TF-IDF-weighted token-level similarity — ``E1ᵀ · S_tok · E2`` where
@@ -166,10 +159,6 @@ def token_level_similarity(
 
     n1 = entity_names(pair.kg1.ent, punct_to_space=True)
     n2 = entity_names(pair.kg2.ent, punct_to_space=True)
-    if restrict_to_test:
-        test = pair.links.where(F.col("split") == "test")
-        n1 = n1.join(test.select(F.col("e1").alias("id")), "id", "left_semi")
-        n2 = n2.join(test.select(F.col("e2").alias("id")), "id", "left_semi")
     from ..functions.names import tokenize_ws
 
     t1 = n1.select("id", tokenize_ws(F.col("name")).alias("toks"))

@@ -1,4 +1,4 @@
-"""KG-pair data model + TSV ingest (SURVEY.md §1.1, S1-S3, S5).
+"""KG-pair data model + TSV ingest (SURVEY.md §1.1, S1-S2).
 
 Reference: ``EAData`` (`dataset.py:17-135`) holds two KGs (ent/rel dicts
 + int triples) and gold links with a first-20%-train split
@@ -166,64 +166,3 @@ def load_kg_pair(spark: SparkSession, triples1: str, triples2: str,
         read_links_tsv(spark, links), kg1, kg2, train_ratio
     )
     return KGPair(kg1=kg1, kg2=kg2, links=lk)
-
-
-def read_aligned_vectors(spark: SparkSession, path: str) -> DataFrame:
-    """S6 (`get_fasttext_aligned_vectors` `text_utils.py:159-174`):
-    fasttext-style text vectors `word v1 v2 ... vd` → (word string,
-    emb array<float>). First line (count dim header) is dropped by the
-    size filter; all parsing JVM-side."""
-    raw = spark.read.text(path)
-    parts = F.split(F.trim(F.col("value")), r"\s+")
-    return (
-        raw.select(
-            F.element_at(parts, 1).alias("word"),
-            F.slice(parts, 2, 100000).alias("rest"),
-        )
-        .where(F.size("rest") > 2)
-        .select(
-            "word",
-            F.transform(F.col("rest"), lambda x: x.cast("float")).alias("emb"),
-        )
-    )
-
-
-def save_eakit_format(pair: KGPair, out_dir: str, shift: bool = True,
-                      single_file: bool = False) -> None:
-    """S5 export (`save_eakit_format` `dataset.py:66-85`, `dto.py:7-29`):
-    KG2 ids shifted by |ent1| (rels by |rel1|), sorted TSV files.
-
-    ``single_file=True`` coalesces each table to one part file (exact
-    reference file layout — funnels through one task; compatibility
-    only). Default is sharded: the ``orderBy`` is a range-partitioned
-    sort, so concatenating parts in name order preserves global order."""
-    n_ent1 = pair.kg1.ent.count()
-    n_rel1 = pair.kg1.rel.count()
-    e_shift = n_ent1 if shift else 0
-    r_shift = n_rel1 if shift else 0
-
-    def w(df: DataFrame, name: str):
-        if single_file:
-            df = df.coalesce(1)
-        df.write.mode("overwrite").csv(f"{out_dir}/{name}", sep="\t")
-
-    w(pair.kg1.ent.select("id", "uri").orderBy("id"), "ent_ids_1")
-    w(
-        pair.kg2.ent.select((F.col("id") + e_shift).alias("id"), "uri").orderBy("id"),
-        "ent_ids_2",
-    )
-    w(pair.kg1.triples.orderBy("src", "rel", "dst"), "triples_1")
-    w(
-        pair.kg2.triples.select(
-            (F.col("src") + e_shift).alias("src"),
-            (F.col("rel") + r_shift).alias("rel"),
-            (F.col("dst") + e_shift).alias("dst"),
-        ).orderBy("src", "rel", "dst"),
-        "triples_2",
-    )
-    w(
-        pair.links.select("e1", (F.col("e2") + e_shift).alias("e2"), "split").orderBy(
-            "e1"
-        ),
-        "links",
-    )

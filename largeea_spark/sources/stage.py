@@ -6,10 +6,10 @@ The reference checkpoints each phase with ``torch.save`` and resumes by
 ``os.path.exists`` (`main.py:183-200`, `dataset.py:39-44`). The engine's
 analogue: every phase writes its output DataFrame to a Parquet stage
 table under a run directory; re-running a phase whose stage exists is a
-metadata-only read. (Iceberg would add snapshot isolation on a real
-cluster; the sandbox has no Iceberg jars — the layout and API below are
-format-agnostic, `format=` is pluggable for the stage tables; lineage
-reads Parquet footers.)
+metadata-only read. Stage tables are always Parquet, because lineage
+reads their Parquet footers. (Iceberg would add snapshot isolation on a
+real cluster: ``TableStageStore`` below writes catalog tables in any
+``fmt`` and computes its lineage in Spark.)
 
 Lineage: alongside each stage, a ``<stage>__lineage`` table records
 one row per PART FILE the write produced: its row count, the min/max of
@@ -51,10 +51,9 @@ _LINEAGE_SCHEMA = pa.schema([
 
 
 class StageStore:
-    def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-        self.fmt = fmt
         self._metrics_lock = threading.Lock()
 
     def _path(self, name: str) -> str:
@@ -66,18 +65,18 @@ class StageStore:
         return os.path.exists(f"{self._path(name)}/_SUCCESS")
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.format(self.fmt).load(self._path(name))
+        return self.spark.read.parquet(self._path(name))
 
     def write(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
         t0 = time.time()
-        w = df.write.format(self.fmt).mode("overwrite")
+        w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         path = self._path(name)
-        w.save(path)
+        w.parquet(path)
         # known schema: no inference job (partition columns land last,
         # where inference puts them too)
-        out = self.spark.read.schema(df.schema).format(self.fmt).load(path)
+        out = self.spark.read.schema(df.schema).parquet(path)
         self._write_lineage(name, out, time.time() - t0)
         return out
 
@@ -169,7 +168,8 @@ class TableStageStore(StageStore):
 
     def __init__(self, spark: SparkSession, namespace: str,
                  fmt: str = "parquet"):
-        super().__init__(spark, root=namespace, fmt=fmt)
+        super().__init__(spark, root=namespace)
+        self.fmt = fmt
         self.ns = namespace
         spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {namespace}")
 

@@ -9,7 +9,9 @@ from pyspark.sql import functions as F
 from largeea_spark.operators import evalx, simops
 from largeea_spark.plans import name_channel
 from largeea_spark.sources import fixtures
-from largeea_spark.sources.kg import KGPair, encode_graph, encode_links
+from largeea_spark.sources.kg import (
+    KG, KGPair, encode_graph, encode_links, encode_links_extending, load_kg_pair,
+)
 
 
 @pytest.fixture(scope="module")
@@ -36,6 +38,40 @@ def test_ingest_shapes(kg_pair):
     assert lk.where(F.col("split") == "train").count() == 30  # first 20%
     # deterministic ids: re-encoding yields identical dim
     again = encode_graph_ent_ids = None  # noqa: F841
+
+
+def test_load_kg_pair_from_tsv(spark, tmp_path):
+    """S1/S2 TSV ingest: ``load_kg_pair`` over the pair written as TSV
+    files (links in link-index order) gives the same ids, triples and
+    train/test split as ``encode_graph`` + ``encode_links_extending``
+    on the in-memory frames."""
+    t1, t2, links, _ = fixtures.two_kg_fixture(spark, n_ents=40, n_triples=120,
+                                               n_links=30)
+    files = {}
+    for name, df, cols in (("rel_triples_1", t1, ("s", "p", "o")),
+                           ("rel_triples_2", t2, ("s", "p", "o")),
+                           ("ent_links", links.orderBy("idx"), ("u1", "u2"))):
+        files[name] = tmp_path / name
+        files[name].write_text(
+            "".join("\t".join(r[c] for c in cols) + "\n" for r in df.collect()),
+            encoding="utf-8",
+        )
+    got = load_kg_pair(spark, str(files["rel_triples_1"]),
+                       str(files["rel_triples_2"]), str(files["ent_links"]),
+                       train_ratio=0.2)
+    lk, kg1, kg2 = encode_links_extending(links, encode_graph(t1), encode_graph(t2),
+                                          train_ratio=0.2)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    for a, b in ((got.kg1.ent, kg1.ent), (got.kg2.ent, kg2.ent),
+                 (got.kg1.rel, kg1.rel), (got.kg2.rel, kg2.rel),
+                 (got.kg1.triples, kg1.triples), (got.kg2.triples, kg2.triples),
+                 (got.links, lk)):
+        assert rows(a) == rows(b)
+    assert got.links.count() == 30
+    assert got.links.where(F.col("split") == "train").count() == 6  # first 20%
 
 
 def test_ids_deterministic_across_parallelism(spark, kg_pair):
@@ -71,11 +107,19 @@ def test_semi_seed_precision(kg_pair):
     (`main.py:203-216` feeds them to training as pseudo-labels)."""
     pair, _ = kg_pair
     # reference computes the name sims on the test-candidate subspace
-    # (P5, `main.py:302`) before mining seeds
-    string_sim = name_channel.string_similarity(pair, restrict_to_test=True)
-    emb_sim = name_channel.name_embedding_similarity(pair, k=10, restrict_to_test=True)
-    seeds = name_channel.semi_seeds(emb_sim, string_sim)
+    # (P5, `main.py:302`) before mining seeds: semi-join both entity
+    # dims to the test-link entities
     gold = pair.links.where(F.col("split") == "test").select("e1", "e2")
+    test_pair = KGPair(
+        kg1=KG(pair.kg1.ent.join(gold.select(F.col("e1").alias("id")), "id",
+                                 "left_semi"), pair.kg1.rel, pair.kg1.triples),
+        kg2=KG(pair.kg2.ent.join(gold.select(F.col("e2").alias("id")), "id",
+                                 "left_semi"), pair.kg2.rel, pair.kg2.triples),
+        links=pair.links,
+    )
+    string_sim = name_channel.string_similarity(test_pair)
+    emb_sim = name_channel.name_embedding_similarity(test_pair, k=10)
+    seeds = name_channel.semi_seeds(emb_sim, string_sim)
     pr = evalx.precision_recall_f1(seeds, gold)
     assert pr["precision"] > 0.8, pr
     assert pr["pred"] > 50

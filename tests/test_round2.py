@@ -318,28 +318,6 @@ def test_encode_links_cut_uses_full_count(spark):
 
 
 # ---------------------------------------------------------------------------
-# sharded EAKit export reads back identically
-# ---------------------------------------------------------------------------
-
-def test_save_eakit_sharded_roundtrip(spark, tmp_path):
-    from largeea_spark.sources.kg import save_eakit_format
-
-    t1, t2, links, _ = fixtures.two_kg_fixture(spark, n_ents=40, n_triples=120,
-                                               n_links=30)
-    kg1, kg2 = encode_graph(t1), encode_graph(t2)
-    lk = encode_links(links, kg1.ent, kg2.ent, 0.2)
-    pair = KGPair(kg1, kg2, lk)
-    out_m, out_s = str(tmp_path / "multi"), str(tmp_path / "single")
-    save_eakit_format(pair, out_m)                      # sharded default
-    save_eakit_format(pair, out_s, single_file=True)
-    for name, schema in [("triples_1", "src long, rel long, dst long"),
-                         ("links", "e1 long, e2 long, split string")]:
-        a = spark.read.csv(f"{out_m}/{name}", sep="\t", schema=schema)
-        b = spark.read.csv(f"{out_s}/{name}", sep="\t", schema=schema)
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-# ---------------------------------------------------------------------------
 # VERDICT #4: real-encoder seam — a swapped model flows through phases 1-2
 # ---------------------------------------------------------------------------
 
@@ -433,6 +411,15 @@ def test_power_mean_pooling_complex_root_parity(spark):
     # min / max blocks
     assert np.allclose(got[4:6], [-8.0, 1.0])
     assert np.allclose(got[6:8], [-8.0, 2.0])
+    # A5 word→entity mean/max pooling is the p=1 block plus the max block
+    e2w = spark.createDataFrame([(0, 0), (0, 1), (1, 1)], "ent_id long, word_id long")
+    wemb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 2.0])], "word_id long, emb array<double>"
+    )
+    a5 = {r.ent_id: r.emb for r in
+          power_mean_pooling(e2w, wemb, ps=(1.0,), include_minmax=True).collect()}
+    assert a5[0][:2] == [0.5, 1.0] and a5[1][:2] == [0.0, 2.0]
+    assert a5[0][4:] == [1.0, 2.0]
 
 
 # ---------------------------------------------------------------------------

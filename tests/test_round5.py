@@ -1,5 +1,5 @@
-"""Round-5 tests: the kNN ADVICE r4 fixes, the train_batches dispatch,
-construct-path optimizations and the BPE tokenizer.
+"""Round-5 tests: the kNN ADVICE r4 fixes, the train_batches dispatch
+and the construct-path optimizations.
 
 Each test pins the FIXED behavior, not just absence of the bug, so a
 regression is a red assertion rather than a silent semantic drift.
@@ -128,49 +128,6 @@ def test_assign_dense_ids_window_free_is_dense_and_stable(spark):  # noqa: F811
     assert "Window" not in plan
 
 
-def test_encode_column_via_hash_matches_string_join(spark):  # noqa: F811
-    from largeea_spark.operators.ids import dict_encode, encode_column
-
-    df = spark.createDataFrame(
-        [(f"uri/{i % 37}", i) for i in range(500)], "k string, v int"
-    )
-    dim = dict_encode(df.select("k"), "k")
-    want = sorted(
-        (r["v"], r["kid"])
-        for r in encode_column(df, dim, "k", "kid").collect()
-    )
-    got = sorted(
-        (r["v"], r["kid"])
-        for r in encode_column(df, dim, "k", "kid", via_hash=True).collect()
-    )
-    assert got == want and len(got) == 500
-
-
-def test_encode_column_hash_collision_falls_back_to_exact(spark):  # noqa: F811
-    """Force EVERY key onto one hash value: the result must still be the
-    exact string-join answer (the dirty branch carries correctness)."""
-    from pyspark.sql import functions as F
-
-    from largeea_spark.operators.ids import dict_encode, encode_column
-
-    df = spark.createDataFrame(
-        [(f"uri/{i % 11}", i) for i in range(200)], "k string, v int"
-    )
-    dim = dict_encode(df.select("k"), "k")
-    want = sorted(
-        (r["v"], r["kid"])
-        for r in encode_column(df, dim, "k", "kid").collect()
-    )
-    got = sorted(
-        (r["v"], r["kid"])
-        for r in encode_column(
-            df, dim, "k", "kid", via_hash=True,
-            _hash_fn=lambda c: F.lit(7).cast("long"),
-        ).collect()
-    )
-    assert got == want and len(got) == 200
-
-
 def test_encode_graph_hash_keyed_matches_string_path(spark):  # noqa: F811
     """Hash-keyed triple encoding ≡ string-keyed encoding, decoded back
     to URI space; and the forced-collision fallback gives the same."""
@@ -205,62 +162,3 @@ def test_encode_graph_hash_keyed_matches_string_path(spark):  # noqa: F811
         map(tuple, kg_coll.ent.collect())
     )
 
-
-# ---------------------------------------------------------------------------
-# Round-5 real BPE subword tokenizer (F5 upgraded from hashed stand-in)
-# ---------------------------------------------------------------------------
-
-def test_bpe_training_matches_sennrich_example():
-    from largeea_spark.functions.bpe import encode_word, train_bpe_merges
-
-    wf = [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)]
-    merges = train_bpe_merges(wf, 10)
-    # the canonical first merges with the </w> convention: ('e','s') and
-    # ('es','t</w>') both count 9 (newest 6 + widest 3), tie and then
-    # chain; the full list is pinned — training is deterministic
-    assert merges[:3] == [("e", "s"), ("es", "t</w>"), ("l", "o")]
-    ranks = {p: i for i, p in enumerate(merges)}
-    assert encode_word("low", ranks) == ["low</w>"]
-    assert encode_word("lowest", ranks) == ["lo", "w", "est</w>"]
-    # unseen characters fall back to single symbols, never crash
-    assert encode_word("xyz", ranks) == ["x", "y", "z</w>"]
-    # merges stop when no pair repeats: tiny vocab → short list
-    assert train_bpe_merges([("ab", 1)], 50) == []
-
-
-def test_bpe_spark_train_and_tokenize(spark):  # noqa: F811
-    from pyspark.sql import functions as F
-
-    from largeea_spark.functions.bpe import (
-        bpe_token_count, bpe_tokenizer, bpe_vocabulary, train_bpe,
-    )
-
-    texts = (["the lowest low", "newest widest lower", "the newest"] * 40
-             + ["The LOWEST", "the lowest", None, ""])
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
-                               "doc_id long, text string")
-    merges = train_bpe(df, "text", n_merges=40, max_words=1000)
-    assert ("e", "s") in merges
-    # same corpus → identical merges at a different shuffle width
-    assert merges == train_bpe(df.repartition(7), "text",
-                               n_merges=40, max_words=1000)
-
-    out = df.select("doc_id", bpe_tokenizer(merges)(F.col("text"))
-                    .alias("toks")).collect()
-    by_id = {r["doc_id"]: r["toks"] for r in out}
-    assert by_id[0][:1] == ["the</w>"]           # frequent word → one token
-    # case-folding: "The LOWEST" tokenizes identically to "the lowest",
-    # and both are a non-empty prefix of doc 0's tokens
-    n = len(texts)
-    assert by_id[n - 4] == by_id[n - 3] != []
-    assert by_id[0][: len(by_id[n - 3])] == by_id[n - 3]
-    assert by_id[n - 2] == [] and by_id[n - 1] == []
-
-    ids_df = df.select(bpe_tokenizer(merges, as_ids=True)(F.col("text"))
-                       .alias("ids"))
-    vocab = bpe_vocabulary(merges)
-    all_ids = [i for r in ids_df.collect() for i in r["ids"]]
-    assert all_ids and all(-1 <= i < len(vocab) for i in all_ids)
-
-    counts = df.select(bpe_token_count("text", merges).alias("n")).collect()
-    assert counts[0]["n"] == len(by_id[0])

@@ -115,13 +115,3 @@ def test_precision_recall(spark):
     gold = spark.createDataFrame([(1, 1), (3, 3)], "e1 long, e2 long")
     pr = evalx.precision_recall_f1(pred, gold)
     assert pr["precision"] == 0.5 and pr["recall"] == 0.5 and pr["tp"] == 1
-
-
-def test_slice_and_candidates(spark):
-    sim = to_df(spark, A)
-    sl = simops.slice_rows(sim, 1, 3).collect()
-    assert {r.src for r in sl} == {0, 1}
-    cand1 = spark.createDataFrame([(0,), (1,)], "id long")
-    cand2 = spark.createDataFrame([(1,), (2,)], "id long")
-    fc = simops.filter_by_candidates(sim, cand1, cand2).collect()
-    assert {(r.src, r.dst) for r in fc} == {(0, 2), (1, 1)}

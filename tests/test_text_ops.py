@@ -57,6 +57,20 @@ def test_token_counts(spark):
     assert got[0] == (2, 2)
     assert got[1] == (0, 0)
     assert got[2] == (2, 5)  # a , b c !
+    # word_frequency_table (F5 counting step)
+    from largeea_spark.functions.bpe import word_frequency_table
+
+    texts = (["the lowest low", "newest widest lower", "the newest"] * 40
+             + ["The LOWEST", "the lowest", None, ""])
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "doc_id long, text string")
+    rows = [tuple(r) for r in word_frequency_table(df, "text", max_words=1000).collect()]
+    # case-folded counts, ordered by (count desc, word asc); null/empty add nothing
+    assert rows == [("the", 82), ("newest", 80), ("lowest", 42), ("low", 40),
+                    ("lower", 40), ("widest", 40)]
+    # same corpus → identical rows at a different shuffle width
+    assert [tuple(r) for r in word_frequency_table(
+        df.repartition(7), "text", max_words=1000).collect()] == rows
 
 
 def test_langid(spark):
@@ -100,6 +114,15 @@ def test_extraction_byte_identical_and_parity(spark):
     emitted = extract.triples_for_parity(pages)
     pr = evalx.precision_recall_f1(emitted, gold, cols=("subj", "pred", "obj"))
     assert pr["precision"] >= 0.95 and pr["recall"] >= 0.95
+    # the verified single pass emits exactly what emit_triples emits,
+    # and raises when the extraction differs from the golden text
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert rows(extract.emit_triples_verified(pages)) == rows(extract.emit_triples(pages))
+    bad = pages.limit(3).withColumn("text", F.concat(F.col("text"), F.lit("!")))
+    with pytest.raises(Exception, match="byte-identical extraction violated"):
+        extract.emit_triples_verified(bad).collect()
 
 
 def test_extract_fallback_tag_strip(spark):
