@@ -170,8 +170,8 @@ def embedding_near_dups(embs: DataFrame, id_col: str = "vec_id",
                         emb_col: str = "embedding", threshold: float = 0.95,
                         k: int = 10) -> DataFrame:
     """Cosine near-dup pairs over an embedding column via blocked kNN.
-    sim column is true cosine (normalized inputs ⇒ (1+1−L2²)/2... we
-    convert: for unit vectors knn sim = 2cos−1 ⇒ cos = (sim+1)/2)."""
+    The ``cosine`` column is true cosine: knn normalizes its inputs, so
+    its sim = 1 − L2² = 2·cos − 1 ⇒ cos = (sim + 1)/2."""
     from .knn import knn_topk
 
     e = embs.select(F.col(id_col).alias("id"), F.col(emb_col).alias("emb"))

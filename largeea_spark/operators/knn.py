@@ -4,18 +4,23 @@ Reference: FAISS IndexFlat (squared-L2) over normalized embeddings,
 double-batched 50k queries × 500k index rows, similarity = ``1 − d²``
 (`text_utils.py:291-333`). For unit vectors that equals ``2·cos − 1``.
 
-Engine: block-nested-loop as a cogrouped Arrow job —
+Engine: one cell kernel, ``_cell_scorer`` — a cogroup function over
+queries ``(qid, qemb)`` × index rows ``(xid, xemb)``: one numpy matmul
++ argpartition top-k per GEMM chunk. The flat (``knn_topk``) and
+per-batch (``knn_topk_grouped``) exact paths build its cells with one
+grid builder, ``_grid``, a block-nested-loop:
   index side → B hash blocks; queries replicated to every block
-  (explode over block ids); per (block) cogroup: one numpy matmul +
-  argpartition top-k; then a global window top-k merges block results.
-Each block is bounded (≤ block_rows) so executor memory is bounded at
+  (explode over block ids); per (block) cogroup: the cell kernel;
+  then a global window top-k merges block results.
+Each block is bounded (≤ 100k rows) so executor memory is bounded at
 any index size; query replication cost is B·|Q| rows — the same
 work/shape as the reference's index batching, but distributed.
 
 The approximate path is IVF (`ivf_topk`, the reference's FAISS IVF
 option): a k-means coarse quantizer assigns each index row to one cell
 and each query probes its nearest cells, trading recall for a cell
-join instead of full replication when B grows large.
+join instead of full replication when B grows large. Its cells run
+the same kernel. All three take ``(id, emb)`` frames.
 """
 
 from __future__ import annotations
@@ -26,8 +31,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .simops import DST, SIM, SRC
+from .blocking import widen_if_narrow
+from .simops import DST, SIM, SRC, topk_per_row
 from ..session import session_shuffle_width
+
+# grid memory caps: index rows per block, query rows per block, and
+# query rows per GEMM chunk before the element budget below caps it
+_BLOCK_ROWS = 100_000
+_QUERY_BLOCK_ROWS = 25_000
+_GEMM_CHUNK = 4096
+_SCHEMA = f"{SRC} long, {DST} long, {SIM} double"
 
 
 def _to_matrix(series: pd.Series) -> np.ndarray:
@@ -59,31 +72,6 @@ def _cast_shuffle_dtype(df: DataFrame, emb_col: str,
     return df.withColumn(emb_col, F.col(emb_col).cast(f"array<{spark_t}>"))
 
 
-def _shuffle_width(df: DataFrame) -> int:
-    """The engine's canonical shuffle width (``spark.sql.shuffle.partitions``).
-
-    Used instead of ``defaultParallelism`` so blocking grids and pinned
-    repartitions are a function of the SESSION CONFIG, not the worker
-    count — results stay bit-identical across parallelism levels (the
-    xpar determinism contract). Falls back to ``defaultParallelism`` on
-    platforms where the conf is non-numeric (e.g. ``auto``)."""
-    return session_shuffle_width(df.sparkSession)
-
-
-def _pin_partitions(df: DataFrame, *cols: str) -> DataFrame:
-    """Hash-repartition on ``cols`` with an EXPLICIT partition count.
-
-    The GEMM cogroup stages downstream are compute-bound per row but
-    tiny in bytes (embedding arrays compress well), so AQE's byte-based
-    partition coalescing can legally squeeze their exchange to 1-2
-    partitions and serialize hundreds of GFLOPs onto one core. A
-    user-specified ``repartition(n, cols)`` both satisfies the
-    cogroup's ClusteredDistribution (no second exchange) and is exempt
-    from AQE coalescing (REPARTITION_BY_NUM shuffle origin), pinning
-    the stage at full width. PLANS.md "compute-dense Arrow stages"."""
-    return df.repartition(_shuffle_width(df), *[F.col(c) for c in cols])
-
-
 # per-task transient budget for GEMM scoring: the sims chunk plus
 # argpartition's negated copy are the peak allocations, each
 # chunk_rows × cell_rows float64. 50M elements ≈ 400 MB bounds peak
@@ -98,27 +86,108 @@ def _bounded_chunk(requested: int, n_index_rows: int) -> int:
     transient budget; chunking never changes results (per-row top-k).
 
     Never raises above the caller's request or the budget — the old
-    max(256, ...) floor could override an explicitly smaller gemm_chunk
+    max(256, ...) floor could override an explicitly smaller request
     AND exceed the budget on a >195k-row skewed IVF cell, re-opening the
     per-task memory blow-up the budget exists to fix."""
     budget_rows = max(_GEMM_BUDGET_ELEMS // max(n_index_rows, 1), 1)
     return max(1, min(requested, budget_rows))
 
 
-def _widen_if_narrow(df: DataFrame) -> DataFrame:
-    """Widen-only round-robin repartition to the session shuffle width
-    before a compute-dense mapInPandas pass (same starvation family as
-    blocking.widen_if_narrow): checkpointed embedding tables arrive
-    AQE-coalesced to 1-2 partitions (a 200k×128 table is ~10 MB of
-    compressed bytes — below one advisory partition), so the IVF
-    ASSIGN kernels (m @ centroids GEMM + per-row argsort) ran 2-wide on
-    a 32-core session (94 s/task observed at 200k). Inputs already at
-    width pass through untouched; row-level kernels are partition-
-    agnostic, so results are unchanged."""
-    width = session_shuffle_width(df.sparkSession)
-    if df.rdd.getNumPartitions() >= width:
-        return df
-    return df.repartition(width)
+def _cell_scorer(k: int, metric: str):
+    """The one cell kernel: a cogroup function over queries
+    ``(qid, qemb)`` × index rows ``(xid, xemb)`` returning each query's
+    top-k ``(src, dst, sim)`` within the cell.
+
+    ``metric``: 'l2sim' scores unit-normalized rows as 1−L2² (faiss
+    parity); 'dot' is the raw, unnormalized inner product. The GEMM is
+    chunked to at most ``min(4096, 50M elems / cell_rows)`` query rows,
+    so per-task transient memory is bounded by a FIXED element budget
+    independent of total size AND cell size."""
+    unit = metric != "dot"
+
+    def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if len(left) == 0 or len(right) == 0:
+            return pd.DataFrame({SRC: [], DST: [], SIM: []}).astype(
+                {SRC: "int64", DST: "int64", SIM: "float64"}
+            )
+        xm = _to_matrix(right["xemb"])
+        if unit:
+            xm /= np.maximum(np.linalg.norm(xm, axis=1, keepdims=True), 1e-12)
+            xsq = (xm * xm).sum(axis=1)[None, :]
+        xid = right["xid"].to_numpy()
+        frames = []
+        step = _bounded_chunk(_GEMM_CHUNK, len(xm))
+        for lo in range(0, len(left), step):
+            chunk = left.iloc[lo : lo + step]
+            qm = _to_matrix(chunk["qemb"])
+            if unit:
+                qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
+                # sim = 1 − ||q−x||² = 1 − (|q|² + |x|² − 2 q·x)  (faiss parity)
+                sims = 1.0 - (
+                    (qm * qm).sum(axis=1)[:, None] + xsq - 2.0 * (qm @ xm.T)
+                )
+            else:
+                sims = qm @ xm.T
+            kk = min(k, sims.shape[1])
+            part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
+            frames.append(pd.DataFrame({
+                SRC: np.repeat(chunk["qid"].to_numpy(), kk),
+                DST: xid[part.ravel()],
+                SIM: np.take_along_axis(sims, part, axis=1).ravel(),
+            }))
+        return pd.concat(frames, ignore_index=True)
+
+    return score
+
+
+def _cogroup(q: DataFrame, x: DataFrame, keys: list[str], k: int,
+             metric: str) -> DataFrame:
+    """Score every cell (rows sharing ``keys``) with the cell kernel.
+
+    Both sides are hash-repartitioned on ``keys`` with an EXPLICIT
+    partition count. The GEMM cogroup stage is compute-bound per row
+    but tiny in bytes (embedding arrays compress well), so AQE's
+    byte-based partition coalescing can legally squeeze its exchange
+    to 1-2 partitions and serialize hundreds of GFLOPs onto one core.
+    A user-specified ``repartition(n, cols)`` both satisfies the
+    cogroup's ClusteredDistribution (no second exchange) and is exempt
+    from AQE coalescing (REPARTITION_BY_NUM shuffle origin), pinning
+    the stage at full width. PLANS.md "compute-dense Arrow stages"."""
+    width = session_shuffle_width(q.sparkSession)
+
+    def pin(df: DataFrame) -> DataFrame:
+        return df.repartition(width, *[F.col(c) for c in keys])
+
+    return (
+        pin(q).groupBy(*keys).cogroup(pin(x).groupBy(*keys))
+        .applyInPandas(_cell_scorer(k, metric), schema=_SCHEMA)
+    )
+
+
+def _grid(query: DataFrame, index: DataFrame, group_keys: list[str],
+          n_query_blocks: int, n_blocks: int, k: int,
+          metric: str) -> DataFrame:
+    """Per-cell top-k over a (group × query-block × index-block) grid.
+
+    Index rows hash into ``n_blocks`` blocks and queries into
+    ``n_query_blocks``; queries replicate to every index block and index
+    rows to every query block, so each cell is one Arrow cogroup task.
+    Replication cost: queries ×n_blocks, index ×n_query_blocks (the
+    FAISS double-batching shape, `text_utils.py:291-333`, distributed).
+    Rows only meet rows sharing their ``group_keys``."""
+    q = query.select(
+        *group_keys, F.col("id").alias("qid"), F.col("emb").alias("qemb"),
+        F.pmod(F.xxhash64(F.col("id")), F.lit(n_query_blocks)).cast("int").alias("qb"),
+    ).withColumn(
+        "b", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
+    ).withColumn("b", F.col("b").cast("int"))
+    x = index.select(
+        *group_keys, F.col("id").alias("xid"), F.col("emb").alias("xemb"),
+        F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int").alias("b"),
+    ).withColumn(
+        "qb", F.explode(F.sequence(F.lit(0), F.lit(n_query_blocks - 1)))
+    ).withColumn("qb", F.col("qb").cast("int"))
+    return _cogroup(q, x, [*group_keys, "qb", "b"], k, metric)
 
 
 def _auto_grid(n_q: int, n_idx: int, n_query_blocks: int, n_blocks: int,
@@ -143,36 +212,28 @@ def _auto_grid(n_q: int, n_idx: int, n_query_blocks: int, n_blocks: int,
 
 def knn_topk(
     query: DataFrame, index: DataFrame, k: int = 50,
-    id_col: str = "id", emb_col: str = "emb",
-    block_rows: int = 100_000, query_block_rows: int = 25_000,
-    normalize: bool = True,
     n_blocks: int | None = None, n_query_blocks: int | None = None,
-    gemm_chunk: int = 4096, metric: str = "l2sim",
-    shuffle_dtype: str | None = "float32",
+    metric: str = "l2sim", shuffle_dtype: str | None = "float32",
 ) -> DataFrame:
     """Exact top-k: returns (src=query id, dst=index id, sim).
 
-    ``metric``: 'l2sim' (default, 1−L2² — faiss parity) or 'dot'
-    (raw inner product, used by the low-rank reconstruction path L5).
+    ``metric``: 'l2sim' (default, 1−L2² on unit-normalized rows —
+    faiss parity) or 'dot' (raw, unnormalized inner product, used by
+    the low-rank reconstruction path L5).
 
-    2-D grid block-nested-loop: index hashed into ``n_blocks`` blocks,
-    queries into ``n_query_blocks``; each (query-block × index-block)
-    cell is one Arrow cogroup task whose GEMM is chunked to at most
-    ``min(gemm_chunk, 50M elems / cell_rows)`` query rows — per-task
-    transient memory is bounded by a FIXED element budget independent
-    of total size AND cell size, so the same plan runs at 1e9 rows on
-    4 GB/core executors. Replication cost: queries ×n_blocks,
-    index ×n_query_blocks (the FAISS double-batching shape,
-    `text_utils.py:291-333`, distributed)."""
-    query = _cast_shuffle_dtype(query, emb_col, shuffle_dtype)
-    index = _cast_shuffle_dtype(index, emb_col, shuffle_dtype)
+    2-D grid block-nested-loop (``_grid``): each (query-block ×
+    index-block) cell is one Arrow cogroup task scored by the cell
+    kernel, so the same plan runs at 1e9 rows on 4 GB/core executors."""
+    query = _cast_shuffle_dtype(query, "emb", shuffle_dtype)
+    index = _cast_shuffle_dtype(index, "emb", shuffle_dtype)
     auto = n_blocks is None and n_query_blocks is None
+    width = session_shuffle_width(query.sparkSession)
     if n_blocks is None:
         n_idx = index.count()
-        n_blocks = max(1, -(-n_idx // block_rows))
+        n_blocks = max(1, -(-n_idx // _BLOCK_ROWS))
     if n_query_blocks is None:
         n_q = query.count()
-        n_query_blocks = max(1, -(-n_q // query_block_rows))
+        n_query_blocks = max(1, -(-n_q // _QUERY_BLOCK_ROWS))
         if not auto:
             # caller pinned n_blocks but left the query grid to us:
             # widen it toward the session width so the GEMM stage fans
@@ -184,86 +245,27 @@ def knn_topk(
             # keeps tiny inputs (every correctness-SF run) on their
             # original 1-block plan.
             n_query_blocks = max(n_query_blocks, min(
-                -(-_shuffle_width(query) // n_blocks), max(1, n_q // 1024)
+                -(-width // n_blocks), max(1, n_q // 1024)
             ))
     if auto:
         # widen the grid to the session's shuffle width so the GEMM
         # stage fans out even when the memory caps would allow 1×1
         # (explicit n_blocks/n_query_blocks are honored as-is)
         n_query_blocks, n_blocks = _auto_grid(
-            n_q, n_idx, n_query_blocks, n_blocks, _shuffle_width(query)
+            n_q, n_idx, n_query_blocks, n_blocks, width
         )
-
-    q = query.select(
-        F.col(id_col).alias("qid"), F.col(emb_col).alias("qemb"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_query_blocks)).cast("int").alias("qb"),
-    )
-    x = index.select(
-        F.col(id_col).alias("xid"), F.col(emb_col).alias("xemb"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("b"),
-    )
-    qrep = q.withColumn(
-        "b", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    ).withColumn("b", F.col("b").cast("int"))
-    xrep = x.withColumn(
-        "qb", F.explode(F.sequence(F.lit(0), F.lit(n_query_blocks - 1)))
-    ).withColumn("qb", F.col("qb").cast("int"))
-
-    def score(left_it: pd.DataFrame, right_it: pd.DataFrame) -> pd.DataFrame:
-        if len(left_it) == 0 or len(right_it) == 0:
-            return pd.DataFrame({SRC: [], DST: [], SIM: []}).astype(
-                {SRC: "int64", DST: "int64", SIM: "float64"}
-            )
-        xm = _to_matrix(right_it["xemb"])
-        if normalize:
-            xm /= np.maximum(np.linalg.norm(xm, axis=1, keepdims=True), 1e-12)
-        xsq = (xm * xm).sum(axis=1)[None, :]
-        xid = right_it["xid"].to_numpy()
-        frames = []
-        step = _bounded_chunk(gemm_chunk, len(xm))
-        for lo in range(0, len(left_it), step):
-            chunk = left_it.iloc[lo : lo + step]
-            qm = _to_matrix(chunk["qemb"])
-            if normalize:
-                qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-            if metric == "dot":
-                sims = qm @ xm.T
-            else:
-                # sim = 1 − ||q−x||² = 1 − (|q|² + |x|² − 2 q·x)  (faiss parity)
-                sims = 1.0 - (
-                    (qm * qm).sum(axis=1)[:, None] + xsq - 2.0 * (qm @ xm.T)
-                )
-            kk = min(k, sims.shape[1])
-            part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            frames.append(pd.DataFrame({
-                SRC: np.repeat(chunk["qid"].to_numpy(), kk),
-                DST: xid[part.ravel()],
-                SIM: np.take_along_axis(sims, part, axis=1).ravel(),
-            }))
-        return pd.concat(frames, ignore_index=True)
-
-    per_cell = (
-        _pin_partitions(qrep, "qb", "b").groupBy("qb", "b")
-        .cogroup(_pin_partitions(xrep, "qb", "b").groupBy("qb", "b"))
-        .applyInPandas(score, schema=f"{SRC} long, {DST} long, {SIM} double")
-    )
+    per_cell = _grid(query, index, [], n_query_blocks, n_blocks, k, metric)
     if n_blocks == 1:
+        # one index block: each cell already holds its queries' full
+        # top-k, in argpartition order
         return per_cell
-    from .simops import topk_per_row
-
     return topk_per_row(per_cell, k, SRC)
 
 
-def knn_topk_grouped(
-    query: DataFrame, index: DataFrame, k: int = 50,
-    group_col: str = "batch", id_col: str = "id", emb_col: str = "emb",
-    block_rows: int = 100_000, query_block_rows: int = 25_000,
-    normalize: bool = True, gemm_chunk: int = 4096,
-    shuffle_dtype: str | None = "float32",
-) -> DataFrame:
+def knn_topk_grouped(query: DataFrame, index: DataFrame, k: int = 50) -> DataFrame:
     """Exact per-group top-k in ONE cogrouped stage: queries only match
-    index rows sharing ``group_col`` (the batch id). Replaces a
-    driver-side loop of per-batch knn_topk calls — B batches become one
+    index rows sharing their ``batch`` id. Replaces a driver-side loop
+    of per-batch knn_topk calls — B batches become one
     wide stage whose (group × query-block × index-block) cells all run
     CONCURRENTLY on the cluster instead of as B sequential jobs, with
     the same bounded per-task memory. Returns (src, dst, sim=1−L2²)
@@ -274,73 +276,20 @@ def knn_topk_grouped(
     results match a per-group loop of knn_topk up to exact-tie selection
     at the k boundary (the loop's single-block path keeps argpartition
     order there)."""
-    query = _cast_shuffle_dtype(query, emb_col, shuffle_dtype)
-    index = _cast_shuffle_dtype(index, emb_col, shuffle_dtype)
+    query = _cast_shuffle_dtype(query, "emb", "float32")
+    index = _cast_shuffle_dtype(index, "emb", "float32")
     # largest group per side, both sides in ONE aggregate (s: 0 = index)
     mx = dict(
-        query.select(F.lit(1).alias("s"), F.col(group_col).alias("g"))
-        .unionByName(index.select(F.lit(0).alias("s"), F.col(group_col).alias("g")))
+        query.select(F.lit(1).alias("s"), F.col("batch").alias("g"))
+        .unionByName(index.select(F.lit(0).alias("s"), F.col("batch").alias("g")))
         .groupBy("s", "g").count().groupBy("s").agg(F.max("count"))
         .collect()
     )
     if 0 not in mx or 1 not in mx:
-        return query.sparkSession.createDataFrame(
-            [], f"{SRC} long, {DST} long, {SIM} double"
-        )
-    n_blocks = max(1, -(-int(mx[0]) // block_rows))
-    n_query_blocks = max(1, -(-int(mx[1]) // query_block_rows))
-
-    q = query.select(
-        F.col(group_col).alias("g"),
-        F.col(id_col).alias("qid"), F.col(emb_col).alias("qemb"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_query_blocks)).cast("int").alias("qb"),
-    ).withColumn(
-        "b", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    ).withColumn("b", F.col("b").cast("int"))
-    x = index.select(
-        F.col(group_col).alias("g"),
-        F.col(id_col).alias("xid"), F.col(emb_col).alias("xemb"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("b"),
-    ).withColumn(
-        "qb", F.explode(F.sequence(F.lit(0), F.lit(n_query_blocks - 1)))
-    ).withColumn("qb", F.col("qb").cast("int"))
-
-    def score(left_it: pd.DataFrame, right_it: pd.DataFrame) -> pd.DataFrame:
-        if len(left_it) == 0 or len(right_it) == 0:
-            return pd.DataFrame({SRC: [], DST: [], SIM: []}).astype(
-                {SRC: "int64", DST: "int64", SIM: "float64"}
-            )
-        xm = _to_matrix(right_it["xemb"])
-        if normalize:
-            xm /= np.maximum(np.linalg.norm(xm, axis=1, keepdims=True), 1e-12)
-        xsq = (xm * xm).sum(axis=1)[None, :]
-        xid = right_it["xid"].to_numpy()
-        frames = []
-        step = _bounded_chunk(gemm_chunk, len(xm))
-        for lo in range(0, len(left_it), step):
-            chunk = left_it.iloc[lo : lo + step]
-            qm = _to_matrix(chunk["qemb"])
-            if normalize:
-                qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-            sims = 1.0 - (
-                (qm * qm).sum(axis=1)[:, None] + xsq - 2.0 * (qm @ xm.T)
-            )
-            kk = min(k, sims.shape[1])
-            part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            frames.append(pd.DataFrame({
-                SRC: np.repeat(chunk["qid"].to_numpy(), kk),
-                DST: xid[part.ravel()],
-                SIM: np.take_along_axis(sims, part, axis=1).ravel(),
-            }))
-        return pd.concat(frames, ignore_index=True)
-
-    per_cell = (
-        _pin_partitions(q, "g", "qb", "b").groupBy("g", "qb", "b")
-        .cogroup(_pin_partitions(x, "g", "qb", "b").groupBy("g", "qb", "b"))
-        .applyInPandas(score, schema=f"{SRC} long, {DST} long, {SIM} double")
-    )
-    from .simops import topk_per_row
-
+        return query.sparkSession.createDataFrame([], _SCHEMA)
+    n_blocks = max(1, -(-int(mx[0]) // _BLOCK_ROWS))
+    n_query_blocks = max(1, -(-int(mx[1]) // _QUERY_BLOCK_ROWS))
+    per_cell = _grid(query, index, ["batch"], n_query_blocks, n_blocks, k, "l2sim")
     return topk_per_row(per_cell, k, SRC)
 
 
@@ -368,16 +317,14 @@ def _kmeans_lite(sample: np.ndarray, nlist: int, n_iter: int = 8,
 
 def ivf_topk(
     query: DataFrame, index: DataFrame, k: int = 50,
-    id_col: str = "id", emb_col: str = "emb",
     nlist: int = 64, nprobe: int = 8, sample_rows: int = 20_000,
-    normalize: bool = True, seed: int = 11,
     shuffle_dtype: str | None = "float32",
 ) -> DataFrame:
     """IVF approximate top-k (the 1e9-row scale path): a k-means coarse
     quantizer partitions the index into ``nlist`` cells; each query
     probes its ``nprobe`` nearest cells only — candidate work drops by
     ~nlist/nprobe vs exact, recall controlled by nprobe (FAISS IVFFlat
-    semantics; same sim = 1−L2² scoring as knn_topk).
+    semantics; each cell is scored by the same cell kernel as knn_topk).
 
     Centroids are trained on a deterministic driver-side sample
     (smallest xxhash64(id) rows — reproducible at any parallelism).
@@ -386,92 +333,51 @@ def ivf_topk(
     the dominant IVF data movement — so ``shuffle_dtype='float32'``
     (default) halves it for float64 inputs; scoring still accumulates
     in float64 executor-side."""
-    query = _cast_shuffle_dtype(query, emb_col, shuffle_dtype)
-    index = _cast_shuffle_dtype(index, emb_col, shuffle_dtype)
+    query = _cast_shuffle_dtype(query, "emb", shuffle_dtype)
+    index = _cast_shuffle_dtype(index, "emb", shuffle_dtype)
     samp_pdf = (
-        index.select(F.col(id_col), F.col(emb_col))
-        .orderBy(F.xxhash64(F.col(id_col)))
+        index.select(F.col("id"), F.col("emb"))
+        .orderBy(F.xxhash64(F.col("id")))
         .limit(sample_rows)
         .toPandas()
     )
-    samp = _to_matrix(samp_pdf[emb_col])
-    if normalize:
-        samp /= np.maximum(np.linalg.norm(samp, axis=1, keepdims=True), 1e-12)
-    centroids = _kmeans_lite(samp, nlist, seed=seed)
+    samp = _to_matrix(samp_pdf["emb"])
+    samp /= np.maximum(np.linalg.norm(samp, axis=1, keepdims=True), 1e-12)
+    centroids = _kmeans_lite(samp, nlist)
 
     def assign(role: str):
+        # role "x" (index): one cell per row; role "q" (query): its
+        # nprobe nearest cells, one row each
         def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in it:
                 if len(pdf) == 0:
                     continue
-                m = _to_matrix(pdf[emb_col])
-                if normalize:
-                    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+                m = _to_matrix(pdf["emb"])
+                m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
                 d2 = (
                     (m * m).sum(1)[:, None]
                     + (centroids * centroids).sum(1)[None, :]
                     - 2.0 * m @ centroids.T
                 )
                 if role == "x":
-                    yield pd.DataFrame({
-                        "id": pdf[id_col].to_numpy(), "cell": d2.argmin(1),
-                        "emb": pdf[emb_col],
-                    })
+                    cells, reps = d2.argmin(1), 1
                 else:
-                    order = np.argsort(d2, axis=1)[:, :nprobe]
-                    yield pd.DataFrame({
-                        "id": np.repeat(pdf[id_col].to_numpy(), nprobe),
-                        "cell": order.ravel(),
-                        "emb": pdf[emb_col].repeat(nprobe).reset_index(drop=True),
-                    })
+                    cells, reps = np.argsort(d2, axis=1)[:, :nprobe].ravel(), nprobe
+                yield pd.DataFrame({
+                    f"{role}id": np.repeat(pdf["id"].to_numpy(), reps),
+                    "cell": cells,
+                    f"{role}emb": pdf["emb"].repeat(reps).reset_index(drop=True),
+                })
 
         return fn
 
-    schema = f"id long, cell int, emb array<{_elem_type(index, emb_col)}>"
-    xa = _widen_if_narrow(index).mapInPandas(assign("x"), schema=schema)
-    qa = _widen_if_narrow(query).mapInPandas(assign("q"), schema=schema)
-
-    def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({SRC: [], DST: [], SIM: []}).astype(
-                {SRC: "int64", DST: "int64", SIM: "float64"}
-            )
-        xm = _to_matrix(right["emb"])
-        if normalize:
-            xm /= np.maximum(np.linalg.norm(xm, axis=1, keepdims=True), 1e-12)
-        xsq = (xm * xm).sum(1)[None, :]
-        xid = right["id"].to_numpy()
-        frames = []
-        step = _bounded_chunk(4096, len(xm))
-        for lo in range(0, len(left), step):
-            chunk = left.iloc[lo: lo + step]
-            qm = _to_matrix(chunk["emb"])
-            if normalize:
-                qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-            sims = 1.0 - ((qm * qm).sum(1)[:, None] + xsq - 2.0 * qm @ xm.T)
-            kk = min(k, sims.shape[1])
-            part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            frames.append(pd.DataFrame({
-                SRC: np.repeat(chunk["id"].to_numpy(), kk),
-                DST: xid[part.ravel()],
-                SIM: np.take_along_axis(sims, part, axis=1).ravel(),
-            }))
-        return pd.concat(frames, ignore_index=True)
-
-    per_cell = (
-        _pin_partitions(qa, "cell").groupBy("cell")
-        .cogroup(_pin_partitions(xa, "cell").groupBy("cell"))
-        .applyInPandas(score, schema=f"{SRC} long, {DST} long, {SIM} double")
-    )
-    from .simops import topk_per_row
-
+    elem = "double" if "double" in dict(index.dtypes)["emb"] else "float"
+    xa = widen_if_narrow(index).mapInPandas(
+        assign("x"), schema=f"xid long, cell int, xemb array<{elem}>")
+    qa = widen_if_narrow(query).mapInPandas(
+        assign("q"), schema=f"qid long, cell int, qemb array<{elem}>")
     # no (src,dst) dedup needed — every index row is assigned to
     # exactly ONE cell (d2.argmin), so a query probing nprobe cells
     # sees each dst at most once (a dedup would re-shuffle all
     # nprobe·k candidate rows per query, SCALE.md "IVF economics")
-    return topk_per_row(per_cell, k, SRC)
-
-
-def _elem_type(df: DataFrame, emb_col: str) -> str:
-    t = dict(df.dtypes)[emb_col]
-    return "double" if "double" in t else "float"
+    return topk_per_row(_cogroup(qa, xa, ["cell"], k, "l2sim"), k, SRC)

@@ -132,7 +132,7 @@ def low_rank_sim_topk(
     return knn_topk(
         q.withColumnRenamed("vid", "id").withColumnRenamed("vec", "emb"),
         b.withColumnRenamed("vid", "id").withColumnRenamed("vec", "emb"),
-        k=k, normalize=False, metric="dot",
+        k=k, metric="dot",
         # factor coordinates, not raw embeddings: the full-rank
         # reconstruction gate (low-rank ≡ exact) needs every float64
         # bit, so this path opts out of the float32 shuffle cast

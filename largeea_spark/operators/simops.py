@@ -9,8 +9,8 @@ aggregations; nothing is ever materialized dense.
 
 Scale notes:
 - every op below is a single shuffle on its natural key (src, dst, or
-  (src,dst)); AQE handles skew, and hot rows can be pre-salted by the
-  caller (partition_kg.salt_hot_keys).
+  (src,dst)); AQE's skew-join handling splits hot keys (the engine
+  has no caller-side salting step).
 - top-k per row uses window row_number; Spark's window top-k with a
   rank filter does a partial sort per partition (no global sort).
 """

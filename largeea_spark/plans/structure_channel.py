@@ -85,7 +85,7 @@ def trained_batched_structure_similarity(
     # of any KG2 part shared by two batches (no double-added pairs),
     # and each src lives in exactly one batch, so the output is already
     # the accumulated sim (A10).
-    sim = knn_topk_grouped(r1, r2, k=knn_k, group_col="batch")
+    sim = knn_topk_grouped(r1, r2, k=knn_k)
     return sim, {
         "batches": [{"p1": int(a), "p2": int(b)} for a, b in batches],
         # partition frames, exposed for co-location

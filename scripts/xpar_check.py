@@ -36,6 +36,10 @@ stru, _ = trained_batched_structure_similarity(pair, e1, e2, k_parts=3,
                                                knn_k=10)
 rows3 = sorted((r.src, r.dst, round(r.sim, 9)) for r in stru.collect())
 h3 = hashlib.md5(str(rows3).encode()).hexdigest()
+# IVF path: the cell cogroup of ivf_topk, forced on this small fixture
+ivf = name_channel.name_embedding_similarity(pair, k=10, method="ivf")
+rows4 = sorted((r.src, r.dst, round(r.sim, 9)) for r in ivf.collect())
+h4 = hashlib.md5(str(rows4).encode()).hexdigest()
 print(f"XPAR {master} string={h} n={len(rows)} embed={h2} n2={len(rows2)} "
-      f"structure={h3} n3={len(rows3)}")
+      f"structure={h3} n3={len(rows3)} ivf={h4} n4={len(rows4)}")
 spark.stop()

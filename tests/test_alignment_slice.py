@@ -28,7 +28,7 @@ def kg_pair(spark):
     return pair, variants
 
 
-def test_ingest_shapes(kg_pair):
+def test_ingest_shapes(spark, kg_pair):
     pair, _ = kg_pair
     assert pair.kg1.ent.count() == 200
     assert pair.kg2.ent.count() == 200
@@ -36,8 +36,14 @@ def test_ingest_shapes(kg_pair):
     lk = pair.links
     assert lk.count() == 150
     assert lk.where(F.col("split") == "train").count() == 30  # first 20%
-    # deterministic ids: re-encoding yields identical dim
-    again = encode_graph_ent_ids = None  # noqa: F841
+    # deterministic ids: re-encoding the regenerated KG1 yields the
+    # identical (uri, id) dim and int-encoded triples
+    t1, _, _, _ = fixtures.two_kg_fixture(spark, n_ents=200, n_triples=600,
+                                          n_links=150)
+    again = encode_graph(t1)
+    for a, b in ((again.ent.select("uri", "id"), pair.kg1.ent.select("uri", "id")),
+                 (again.triples, pair.kg1.triples)):
+        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_load_kg_pair_from_tsv(spark, tmp_path):

@@ -59,14 +59,31 @@ def test_faiss_sim_semantics(spark, emb_df):
         assert r.dst == r.src and math.isclose(r.sim, 1.0, abs_tol=1e-9)
 
 
-def test_ivf_recall(spark, emb_df):
-    want = brute_force_pd(emb_df, 10)
-    res = ivf_topk(emb_df, emb_df, k=10, nlist=12, nprobe=4, sample_rows=600).collect()
+def recall_at(res, want, k):
     got = {}
     for r in res:
         got.setdefault(r.src, set()).add(r.dst)
-    recall = sum(len(got.get(i, set()) & want[i]) for i in want) / (10 * len(want))
+    return sum(len(got.get(i, set()) & want[i]) for i in want) / (k * len(want))
+
+
+def test_ivf_recall(spark, emb_df):
+    want = brute_force_pd(emb_df, 10)
+    res = ivf_topk(emb_df, emb_df, k=10, nlist=12, nprobe=4, sample_rows=600).collect()
+    recall = recall_at(res, want, 10)
     assert recall > 0.8, f"IVF recall {recall}"
+
+
+def test_ivf_full_probe_is_exact(spark, emb_df):
+    """nprobe == nlist: every query sees every cell, so IVF scores with
+    the exact kernel — the grid path's pairs and sims, recall 1.0."""
+    res = ivf_topk(emb_df, emb_df, k=10, nlist=12, nprobe=12, sample_rows=600).collect()
+    assert recall_at(res, brute_force_pd(emb_df, 10), 10) == 1.0
+    exact = {(r.src, r.dst): r.sim
+             for r in knn_topk(emb_df, emb_df, k=10, n_blocks=2).collect()}
+    approx = {(r.src, r.dst): r.sim for r in res}
+    assert approx.keys() == exact.keys()
+    for key, v in approx.items():
+        assert round(v, 9) == round(exact[key], 9), key
 
 
 def test_ivf_deterministic(spark, emb_df):

@@ -191,7 +191,7 @@ def test_knn_topk_grouped_matches_per_group_loop(spark):
     q = spark.createDataFrame(rows_q, "batch int, id long, emb array<double>")
     x = spark.createDataFrame(rows_x, "batch int, id long, emb array<double>")
     got = {(r.src, r.dst): round(r.sim, 9)
-           for r in knn_topk_grouped(q, x, k=5, group_col="batch").collect()}
+           for r in knn_topk_grouped(q, x, k=5).collect()}
     want = {}
     for g in (0, 1, 2):
         sub = knn_topk(q.where(F.col("batch") == g).select("id", "emb"),
