@@ -6,9 +6,8 @@ double-batched 50k queries × 500k index rows, similarity = ``1 − d²``
 
 Engine: one cell kernel, ``_cell_scorer`` — a cogroup function over
 queries ``(qid, qemb)`` × index rows ``(xid, xemb)``: one numpy matmul
-+ argpartition top-k per GEMM chunk. The flat (``knn_topk``) and
-per-batch (``knn_topk_grouped``) exact paths build its cells with one
-grid builder, ``_grid``, a block-nested-loop:
++ argpartition top-k per GEMM chunk. The exact path (``knn_topk``)
+builds its cells with one grid builder, ``_grid``, a block-nested-loop:
   index side → B hash blocks; queries replicated to every block
   (explode over block ids); per (block) cogroup: the cell kernel;
   then a global window top-k merges block results.
@@ -20,7 +19,11 @@ The approximate path is IVF (`ivf_topk`, the reference's FAISS IVF
 option): a k-means coarse quantizer assigns each index row to one cell
 and each query probes its nearest cells, trading recall for a cell
 join instead of full replication when B grows large. Its cells run
-the same kernel. All three take ``(id, emb)`` frames.
+the same kernel. Both take ``(id, emb)`` frames.
+
+The structure channel scores each trained batch with the same kernel
+inside the task that trains it (``trainer.train_batches``), so it
+needs no grouped kNN stage of its own.
 """
 
 from __future__ import annotations
@@ -164,30 +167,28 @@ def _cogroup(q: DataFrame, x: DataFrame, keys: list[str], k: int,
     )
 
 
-def _grid(query: DataFrame, index: DataFrame, group_keys: list[str],
-          n_query_blocks: int, n_blocks: int, k: int,
-          metric: str) -> DataFrame:
-    """Per-cell top-k over a (group × query-block × index-block) grid.
+def _grid(query: DataFrame, index: DataFrame, n_query_blocks: int,
+          n_blocks: int, k: int, metric: str) -> DataFrame:
+    """Per-cell top-k over a (query-block × index-block) grid.
 
     Index rows hash into ``n_blocks`` blocks and queries into
     ``n_query_blocks``; queries replicate to every index block and index
     rows to every query block, so each cell is one Arrow cogroup task.
     Replication cost: queries ×n_blocks, index ×n_query_blocks (the
-    FAISS double-batching shape, `text_utils.py:291-333`, distributed).
-    Rows only meet rows sharing their ``group_keys``."""
+    FAISS double-batching shape, `text_utils.py:291-333`, distributed)."""
     q = query.select(
-        *group_keys, F.col("id").alias("qid"), F.col("emb").alias("qemb"),
+        F.col("id").alias("qid"), F.col("emb").alias("qemb"),
         F.pmod(F.xxhash64(F.col("id")), F.lit(n_query_blocks)).cast("int").alias("qb"),
     ).withColumn(
         "b", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
     ).withColumn("b", F.col("b").cast("int"))
     x = index.select(
-        *group_keys, F.col("id").alias("xid"), F.col("emb").alias("xemb"),
+        F.col("id").alias("xid"), F.col("emb").alias("xemb"),
         F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int").alias("b"),
     ).withColumn(
         "qb", F.explode(F.sequence(F.lit(0), F.lit(n_query_blocks - 1)))
     ).withColumn("qb", F.col("qb").cast("int"))
-    return _cogroup(q, x, [*group_keys, "qb", "b"], k, metric)
+    return _cogroup(q, x, ["qb", "b"], k, metric)
 
 
 def _auto_grid(n_q: int, n_idx: int, n_query_blocks: int, n_blocks: int,
@@ -224,15 +225,18 @@ def knn_topk(
     2-D grid block-nested-loop (``_grid``): each (query-block ×
     index-block) cell is one Arrow cogroup task scored by the cell
     kernel, so the same plan runs at 1e9 rows on 4 GB/core executors."""
+    # a self-join (``knn_topk(e, e)``) sizes both grid axes from one count
+    self_join = query is index
     query = _cast_shuffle_dtype(query, "emb", shuffle_dtype)
-    index = _cast_shuffle_dtype(index, "emb", shuffle_dtype)
+    index = query if self_join else _cast_shuffle_dtype(index, "emb", shuffle_dtype)
     auto = n_blocks is None and n_query_blocks is None
     width = session_shuffle_width(query.sparkSession)
+    n_idx = None
     if n_blocks is None:
         n_idx = index.count()
         n_blocks = max(1, -(-n_idx // _BLOCK_ROWS))
     if n_query_blocks is None:
-        n_q = query.count()
+        n_q = n_idx if self_join and n_idx is not None else query.count()
         n_query_blocks = max(1, -(-n_q // _QUERY_BLOCK_ROWS))
         if not auto:
             # caller pinned n_blocks but left the query grid to us:
@@ -254,42 +258,11 @@ def knn_topk(
         n_query_blocks, n_blocks = _auto_grid(
             n_q, n_idx, n_query_blocks, n_blocks, width
         )
-    per_cell = _grid(query, index, [], n_query_blocks, n_blocks, k, metric)
+    per_cell = _grid(query, index, n_query_blocks, n_blocks, k, metric)
     if n_blocks == 1:
         # one index block: each cell already holds its queries' full
         # top-k, in argpartition order
         return per_cell
-    return topk_per_row(per_cell, k, SRC)
-
-
-def knn_topk_grouped(query: DataFrame, index: DataFrame, k: int = 50) -> DataFrame:
-    """Exact per-group top-k in ONE cogrouped stage: queries only match
-    index rows sharing their ``batch`` id. Replaces a driver-side loop
-    of per-batch knn_topk calls — B batches become one
-    wide stage whose (group × query-block × index-block) cells all run
-    CONCURRENTLY on the cluster instead of as B sequential jobs, with
-    the same bounded per-task memory. Returns (src, dst, sim=1−L2²)
-    with src scored only against its own group's index side.
-
-    Per-pair sims are computed identically to knn_topk, and the final
-    per-src top-k uses the deterministic (sim desc, dst asc) tie-break —
-    results match a per-group loop of knn_topk up to exact-tie selection
-    at the k boundary (the loop's single-block path keeps argpartition
-    order there)."""
-    query = _cast_shuffle_dtype(query, "emb", "float32")
-    index = _cast_shuffle_dtype(index, "emb", "float32")
-    # largest group per side, both sides in ONE aggregate (s: 0 = index)
-    mx = dict(
-        query.select(F.lit(1).alias("s"), F.col("batch").alias("g"))
-        .unionByName(index.select(F.lit(0).alias("s"), F.col("batch").alias("g")))
-        .groupBy("s", "g").count().groupBy("s").agg(F.max("count"))
-        .collect()
-    )
-    if 0 not in mx or 1 not in mx:
-        return query.sparkSession.createDataFrame([], _SCHEMA)
-    n_blocks = max(1, -(-int(mx[0]) // _BLOCK_ROWS))
-    n_query_blocks = max(1, -(-int(mx[1]) // _QUERY_BLOCK_ROWS))
-    per_cell = _grid(query, index, ["batch"], n_query_blocks, n_blocks, k, "l2sim")
     return topk_per_row(per_cell, k, SRC)
 
 

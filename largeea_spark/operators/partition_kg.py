@@ -262,25 +262,19 @@ def _salt_oversized(labels1: DataFrame, labels2: DataFrame, train: DataFrame,
     return apply_salt(labels1, None), apply_salt(labels2, key2)
 
 
-def place_triples(triples: DataFrame, parts: DataFrame) -> tuple[DataFrame, int]:
+def place_triples(triples: DataFrame, parts: DataFrame) -> DataFrame:
     """J2 (`place_triplets` `sampler.py:212-227`): join head and tail to
-    the assignment, keep only co-partitioned triples, count the drops."""
+    the assignment and keep only co-partitioned triples
+    ``(src, rel, dst, part)``. Lazy: the batch payload consumes it once,
+    and, with every entity assigned a part, the dropped count is
+    ``triples.count() - kept.count()``."""
     ph = parts.select(F.col("id").alias("src"), F.col("part").alias("p_h"))
     pt = parts.select(F.col("id").alias("dst"), F.col("part").alias("p_t"))
-    # materialize the double join ONCE; total + co-partitioned counts in
-    # one aggregation pass (was: two .count() jobs re-running the join,
-    # plus a third execution when the caller consumed `kept`)
-    placed = triples.join(ph, "src").join(pt, "dst").localCheckpoint(eager=True)
-    row = placed.agg(
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.sum((F.col("p_h") == F.col("p_t")).cast("long")), F.lit(0)
-        ).alias("k"),
-    ).first()
-    kept = placed.where(F.col("p_h") == F.col("p_t")).select(
-        "src", "rel", "dst", F.col("p_h").alias("part")
+    return (
+        triples.join(ph, "src").join(pt, "dst")
+        .where(F.col("p_h") == F.col("p_t"))
+        .select("src", "rel", "dst", F.col("p_h").alias("part"))
     )
-    return kept, int(row["n"]) - int(row["k"])
 
 
 def correspondence(links: DataFrame, parts1: DataFrame, parts2: DataFrame,

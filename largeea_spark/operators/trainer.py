@@ -1,9 +1,13 @@
 """Per-batch embedding trainer (SURVEY.md M2 analogue): the reference
-trains an RREA GNN per METIS batch on GPU (`models/rrea/rrea.py:48-180`).
-This is the engine's executor-side counterpart — a deterministic numpy
-trainer inside grouped ``applyInPandas``: each batch (bounded by the
-partition cap, G4) is one pandas payload, trained independently on an
-executor, exactly the reference's memory contract.
+trains an RREA GNN per METIS batch on GPU (`models/rrea/rrea.py:48-180`)
+and scores that batch's similarity in the same step
+(`run_batched_ea`, `main.py:58-88`). This is the engine's
+executor-side counterpart — a deterministic numpy trainer inside
+grouped ``applyInPandas``: each batch (bounded by the partition cap,
+G4) is one pandas payload, trained and then scored with the kNN cell
+kernel (``knn._cell_scorer``) in the same executor task, exactly the
+reference's memory contract. The refined embeddings never leave the
+task; the stage emits the batch's top-k ``(src, dst, sim)`` rows.
 
 The built-in trainer is seed-anchor identity propagation
 (:func:`train_embeddings_anchor_np`):
@@ -14,7 +18,7 @@ The built-in trainer is seed-anchor identity propagation
 
 :func:`train_batches` takes the per-batch numpy callable as
 ``trainer``, so another backbone can be swapped in without touching
-the payload or kNN stages.
+the payload or the scoring.
 
 Deterministic: no RNG beyond value hashes, fixed round count, float64.
 """
@@ -24,6 +28,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from .knn import _SCHEMA, _cell_scorer
+from ..session import session_shuffle_width
 
 
 def _norm_rows(h: np.ndarray) -> np.ndarray:
@@ -129,7 +136,6 @@ def train_embeddings_anchor_np(
 PAYLOAD_SCHEMA = (
     "batch int, kind string, a long, b long, c long, vec array<double>"
 )
-OUT_SCHEMA = "batch int, side int, id long, emb array<double>"
 
 
 def pack_batch_payload(
@@ -204,11 +210,13 @@ def pack_batch_payload(
 
 
 def train_batches(
-    payload: DataFrame, trainer=train_embeddings_anchor_np,
+    payload: DataFrame, k: int, trainer=train_embeddings_anchor_np,
 ) -> DataFrame:
-    """groupBy(batch).applyInPandas over the packed payload → refined
-    embeddings (batch, side 1|2, id, emb). One executor task per batch;
-    batch size bounded by the partition cap (G4 memory contract).
+    """groupBy(batch).applyInPandas over the packed payload → the batch's
+    top-``k`` structure sims ``(src, dst, sim)``. One executor task per
+    batch trains it and scores its KG1 rows against its KG2 rows (the
+    reference's per-batch GPU step, `main.py:58-88`); batch size is
+    bounded by the partition cap (G4 memory contract).
 
     ``trainer`` is called once per batch, executor-side, as
     ``trainer(ids1, emb1, ids2, emb2, triples1, triples2, seeds) ->
@@ -216,6 +224,7 @@ def train_batches(
     :func:`train_embeddings_anchor_np`; another backbone (an
     EAKit/GCN-Align/KGE trainer on a cluster that has torch/TF,
     `models/wrapper.py:11-263`) slots in here."""
+    score = _cell_scorer(k, "l2sim")
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         def rows(kind):
@@ -229,7 +238,8 @@ def train_batches(
         t1 = rows("t1")[["a", "b", "c"]].to_numpy(dtype=np.int64) if len(rows("t1")) else np.zeros((0, 3), np.int64)
         t2 = rows("t2")[["a", "b", "c"]].to_numpy(dtype=np.int64) if len(rows("t2")) else np.zeros((0, 3), np.int64)
         sd = rows("seed")[["a", "b"]].to_numpy(dtype=np.int64) if len(rows("seed")) else np.zeros((0, 2), np.int64)
-        # deterministic order regardless of shuffle arrival
+        # deterministic order regardless of shuffle arrival (this also
+        # fixes the kernel's argpartition tie order)
         o1, o2 = np.argsort(ids1), np.argsort(ids2)
         ids1, ids2 = ids1[o1], ids2[o2]
         if len(emb1):
@@ -237,17 +247,22 @@ def train_batches(
         if len(emb2):
             emb2 = emb2[o2]
         r1, r2 = trainer(ids1, emb1, ids2, emb2, t1, t2, sd)
-        # carry the batch id: when two KG1 parts share a KG2 part, the
-        # KG2 entities are trained once per batch — downstream kNN must
-        # select ONE trained copy per batch, not both (else coalesce_sum
-        # double-adds duplicate (src,dst) rows).
-        return pd.DataFrame({
-            "batch": np.full(len(ids1) + len(ids2),
-                             int(pdf["batch"].iloc[0]), np.int32),
-            "side": np.concatenate([np.ones(len(ids1), np.int32),
-                                    np.full(len(ids2), 2, np.int32)]),
-            "id": np.concatenate([ids1, ids2]),
-            "emb": [list(v) for v in r1] + [list(v) for v in r2],
-        })
+        # score through float32, the precision the kNN family ships
+        # embeddings at (knn._cast_shuffle_dtype), so these sims equal
+        # knn_topk's over the same refined rows. Only this batch's
+        # trained copy of a KG2 part shared with another batch is
+        # scored, and each src lives in one batch, so the union over
+        # batches is already the accumulated sim (A10).
+        return score(
+            pd.DataFrame({"qid": ids1, "qemb": list(np.asarray(r1, np.float32))}),
+            pd.DataFrame({"xid": ids2, "xemb": list(np.asarray(r2, np.float32))}),
+        )
 
-    return payload.groupBy("batch").applyInPandas(fn, schema=OUT_SCHEMA)
+    # pinned at the session's shuffle width like the kNN cogroups
+    # (knn._cogroup): the payload is small in bytes, so AQE would
+    # otherwise coalesce every batch's training and GEMM into one task
+    width = session_shuffle_width(payload.sparkSession)
+    return (
+        payload.repartition(width, F.col("batch")).groupBy("batch")
+        .applyInPandas(fn, schema=_SCHEMA)
+    )

@@ -3,19 +3,22 @@
 DataFrame partitioner:
 
   seed-aware partition (G4 analogue) → batch correspondence (G7) →
-  place triples (J2) → per batch: train the structure embeddings
-  (operators/trainer.py, the GPU GNN step) → blocked kNN within the
-  batch (J9) → accumulate per-batch sims (A10, `curr_sim += sim`
-  `main.py:85`).
+  place triples (J2, a lazy co-partition filter) → per batch, in ONE
+  executor task: train the structure embeddings (operators/trainer.py,
+  the GPU GNN step), then exact kNN of the batch's KG1 rows against
+  its KG2 rows (the J9 cell kernel) → the union over batches is the
+  accumulated sim (A10, `curr_sim += sim` `main.py:85`).
 
 This is the engine's only structure path.
 
 Each batch touches only its partition's entities/triples, so executor
 memory per batch is bounded by the partition cap — the same memory
 contract METIS gives the reference's GPU. There is NO driver loop over
-batches: training and kNN are grouped stages keyed by the batch id, so
-every batch executes concurrently and the batch count only widens the
-stages (the 1000-executor shape).
+batches: training and scoring are one grouped stage keyed by the
+batch id, so every batch executes concurrently and the batch count
+only widens the stage (the 1000-executor shape). The refined
+embeddings never leave the task that trains them: no checkpoint and
+no second shuffle sit between training and scoring.
 """
 
 from __future__ import annotations
@@ -53,9 +56,9 @@ def trained_batched_structure_similarity(
     top_k_corr: int = 1,
 ) -> tuple[DataFrame, dict]:
     """M2-shaped: per-batch numpy TRAINING (the seed-anchor trainer,
-    operators/trainer.py) inside grouped applyInPandas — one executor
-    task per batch, memory bounded by the partition cap — then blocked
-    kNN per batch and A10 accumulation. The reference's
+    operators/trainer.py) and top-``knn_k`` scoring in the same grouped
+    applyInPandas task — one executor task per batch, memory bounded by
+    the partition cap — and A10 accumulation. The reference's
     `run_batched_ea` with the GPU GNN swapped for the deterministic
     executor-side trainer. ``top_k_corr``: each src batch trains/scores
     against the union of its top-k corresponding trg parts
@@ -67,25 +70,16 @@ def trained_batched_structure_similarity(
     batches = _corr_batches(pair, parts1, parts2, top_k_corr)
 
     train = pair.links.where(F.col("split") == "train").select("e1", "e2")
-    placed1, _ = place_triples(pair.kg1.triples, parts1)
-    placed2, _ = place_triples(pair.kg2.triples, parts2)
     payload = pack_batch_payload(
-        batches, parts1, parts2, placed1, placed2, train, base_emb1, base_emb2
+        batches, parts1, parts2,
+        place_triples(pair.kg1.triples, parts1),
+        place_triples(pair.kg2.triples, parts2),
+        train, base_emb1, base_emb2,
     )
-    refined = train_batches(payload).localCheckpoint(eager=True)
-    r1 = refined.where(F.col("side") == 1).select("batch", "id", "emb")
-    r2 = refined.where(F.col("side") == 2).select("batch", "id", "emb")
-
-    from ..operators.knn import knn_topk_grouped
-
-    # ONE grouped-cogroup stage scores every batch concurrently (the
-    # 1000-executor shape) instead of a sequential driver loop of
-    # per-batch kNN jobs. Grouping on the TRAINING batch id also
-    # guarantees each batch's kNN indexes exactly its own trained copy
-    # of any KG2 part shared by two batches (no double-added pairs),
-    # and each src lives in exactly one batch, so the output is already
-    # the accumulated sim (A10).
-    sim = knn_topk_grouped(r1, r2, k=knn_k)
+    # ONE grouped stage trains and scores every batch concurrently (the
+    # 1000-executor shape); each src lives in exactly one batch, so the
+    # output is already the accumulated sim (A10)
+    sim = train_batches(payload, knn_k)
     return sim, {
         "batches": [{"p1": int(a), "p2": int(b)} for a, b in batches],
         # partition frames, exposed for co-location

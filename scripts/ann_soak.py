@@ -8,10 +8,12 @@ Usage: python scripts/ann_soak.py [big_ents] [small_ents]
 Appends rows to SCALE.md (section "ANN auto-selection").
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -82,8 +84,8 @@ def main():
            "delta": round(delta, 4)}, flush=True)
     assert delta <= 0.005, f"IVF fused quality drifted: {h1}"
 
-    hdr_needed = "## ANN auto-selection" not in open("/root/repo/SCALE.md").read()
-    with open("/root/repo/SCALE.md", "a") as f:
+    hdr_needed = "## ANN auto-selection" not in open(os.path.join(REPO, "SCALE.md")).read()
+    with open(os.path.join(REPO, "SCALE.md"), "a") as f:
         if hdr_needed:
             f.write(
                 "\n## ANN auto-selection soak\n\n"

@@ -15,10 +15,12 @@ Appends a row to SCALE.md. Usage:
   python scripts/cap_soak.py [n_ents] [hub_frac] [k_parts] [cap]
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -121,8 +123,8 @@ def main():
         f" {uncapped['fused_h1']} | {capped['fused_h1']} | {delta:+.4f} |"
         f" {capped['coloc_violations']} | {capped['sec']} |"
     )
-    hdr_needed = "## Cap-salting soak" not in open("/root/repo/SCALE.md").read()
-    with open("/root/repo/SCALE.md", "a") as f:
+    hdr_needed = "## Cap-salting soak" not in open(os.path.join(REPO, "SCALE.md")).read()
+    with open(os.path.join(REPO, "SCALE.md"), "a") as f:
         if hdr_needed:
             f.write(
                 "\n## Cap-salting soak — skewed hub fixture\n\n"

@@ -9,12 +9,14 @@ value comparison). Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from largeea_spark.session import get_spark  # noqa: E402

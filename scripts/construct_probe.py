@@ -30,9 +30,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 SCALE_TMP = "/tmp/largeea_bench_kg"
 
 

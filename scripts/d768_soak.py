@@ -14,10 +14,12 @@ old direct-UDF path.
 Usage: python scripts/d768_soak.py [n_ents] [seam|hashed]
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

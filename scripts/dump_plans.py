@@ -1,8 +1,10 @@
 """Dump formatted physical plans for the audit in PLANS.md."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as e  # noqa: E402
 from largeea_spark.session import get_spark  # noqa: E402

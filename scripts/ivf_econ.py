@@ -12,12 +12,14 @@ Usage: python scripts/ivf_econ.py [n_ents ...]   (default: 200000 500000)
 """
 
 import json
+import os
 import sys
 import time
 import urllib.request
 from math import isqrt
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -133,8 +135,8 @@ def main():
 
 
 def _append_row(r: dict):
-    md = open("/root/repo/SCALE.md").read()
-    with open("/root/repo/SCALE.md", "a") as f:
+    md = open(os.path.join(REPO, "SCALE.md")).read()
+    with open(os.path.join(REPO, "SCALE.md"), "a") as f:
         if "## IVF economics" not in md:
             f.write(
                 "\n## IVF economics at the auto-trigger scale"

@@ -11,10 +11,12 @@ re-scored variant, without any structure training (fast).
 Usage: python scripts/name_dim_probe.py [n_ents] [dim ...]
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 

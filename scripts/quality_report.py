@@ -6,10 +6,12 @@ string / name / structure / fused rows, Hits@{1,5,50} + MRR columns).
 Usage: python scripts/quality_report.py [n_ents] [n_links]
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -139,7 +141,7 @@ def main():
         " closed-form difficulty mix, so these numbers are exactly"
         " reproducible run-to-run and across parallelism levels.",
     ]
-    with open("/root/repo/QUALITY.md", "w") as f:
+    with open(os.path.join(REPO, "QUALITY.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote QUALITY.md")
     spark.stop()

@@ -23,7 +23,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -150,7 +151,7 @@ def main():
         f" {row['csls_h1']} | {row['fused_mrr']} | {row['sec']} |\n"
         for row in rows
     )
-    text = open("/root/repo/SCALE.md").read()
+    text = open(os.path.join(REPO, "SCALE.md")).read()
     if "## Iterative quality" in text:
         # insert at the END of this section's table (other sections may
         # follow in the file — a plain append would orphan the rows)
@@ -159,10 +160,10 @@ def main():
         end = len(text) if end < 0 else end
         block = text[start:end].rstrip("\n") + "\n" + new_rows
         text = text[:start] + block + text[end:]
-        open("/root/repo/SCALE.md", "w").write(text)
+        open(os.path.join(REPO, "SCALE.md"), "w").write(text)
         spark.stop()
         return
-    with open("/root/repo/SCALE.md", "a") as f:
+    with open(os.path.join(REPO, "SCALE.md"), "a") as f:
         f.write(
             "\n## Iterative quality — semi-supervision rounds, mined"
                 " precision, co-location ceiling\n\n"

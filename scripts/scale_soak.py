@@ -11,7 +11,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -103,8 +104,8 @@ def main():
         + " | ".join(f"{metrics[k]['hits@1']:.4f}" for k in ("string", "embed", "structure", "fused", "fused_semi"))
         + f" | {metrics['fused_semi']['MRR']:.4f} |"
     )
-    header_needed = not os.path.exists("/root/repo/SCALE.md")
-    with open("/root/repo/SCALE.md", "a") as f:
+    header_needed = not os.path.exists(os.path.join(REPO, "SCALE.md"))
+    with open(os.path.join(REPO, "SCALE.md"), "a") as f:
         if header_needed:
             f.write(
                 "# SCALE — alignment soak at growing fixture sizes\n\n"

@@ -1,7 +1,9 @@
 """Cross-parallelism determinism check: identical alignment RESULTS
 (not just metrics) at different local[N]."""
+import os
 import sys
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from pyspark.sql import functions as F
 from largeea_spark.session import get_spark
 from largeea_spark.plans import name_channel

@@ -10,15 +10,15 @@ def _empty(spark, schema):
 
 
 def test_knn_empty_sides(spark):
-    from largeea_spark.operators.knn import knn_topk, knn_topk_grouped
+    from largeea_spark.operators.knn import knn_topk
+    from largeea_spark.operators.trainer import PAYLOAD_SCHEMA, train_batches
 
     emb = "id long, emb array<double>"
     e = _empty(spark, emb)
     one = spark.createDataFrame([(1, [1.0, 0.0])], emb)
     assert knn_topk(e, one, k=3).count() == 0
     assert knn_topk(one, e, k=3).count() == 0
-    gemb = "batch int, id long, emb array<double>"
-    assert knn_topk_grouped(_empty(spark, gemb), _empty(spark, gemb), k=3).count() == 0
+    assert train_batches(_empty(spark, PAYLOAD_SCHEMA), k=3).count() == 0
 
 
 def test_propagate_empty(spark):

@@ -77,7 +77,8 @@ def test_partition_cap_salting(spark, kg_pair):
 
 def test_place_triples_and_correspondence(spark, kg_pair):
     p1, p2 = partition_kg.seed_aware_partition(kg_pair, k=3, n_iter=2)
-    kept, dropped = partition_kg.place_triples(kg_pair.kg1.triples, p1)
+    kept = partition_kg.place_triples(kg_pair.kg1.triples, p1)
+    dropped = kg_pair.kg1.triples.count() - kept.count()
     assert kept.count() + dropped == kg_pair.kg1.triples.count()
     assert kept.where(F.col("part").isNull()).count() == 0
     corr = partition_kg.correspondence(kg_pair.links, p1, p2, top_k=1)

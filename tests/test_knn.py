@@ -66,6 +66,41 @@ def recall_at(res, want, k):
     return sum(len(got.get(i, set()) & want[i]) for i in want) / (k * len(want))
 
 
+def test_self_join_counts_once(spark, emb_df):
+    """knn_topk(e, e) sizes both grid axes from ONE count: building the
+    plan starts exactly the jobs of one ``e.count()`` (under AQE a count
+    is a map-stage job plus a result job), and the rows equal those of a
+    copy of ``e``."""
+    import time
+
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+
+    def jobs(group, build):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        res = build()
+        # job-start events reach the tracker in order: once this later
+        # job is listed, every job ``build`` started is too
+        sc.setLocalProperty("spark.jobGroup.id", group + "_barrier")
+        spark.range(1).count()
+        deadline = time.time() + 30
+        while (not tracker.getJobIdsForGroup(group + "_barrier")
+               and time.time() < deadline):
+            time.sleep(0.1)
+        assert tracker.getJobIdsForGroup(group + "_barrier")
+        return len(tracker.getJobIdsForGroup(group)), res
+
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    try:
+        n_count, _ = jobs("knn_one_count", emb_df.count)
+        n_self, same = jobs("knn_self_join", lambda: knn_topk(emb_df, emb_df, k=3))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert n_count >= 1 and n_self == n_count
+    copy = emb_df.select("id", "emb")
+    want = sorted(tuple(r) for r in knn_topk(emb_df, copy, k=3).collect())
+    assert sorted(tuple(r) for r in same.collect()) == want
+
+
 def test_ivf_recall(spark, emb_df):
     want = brute_force_pd(emb_df, 10)
     res = ivf_topk(emb_df, emb_df, k=10, nlist=12, nprobe=4, sample_rows=600).collect()

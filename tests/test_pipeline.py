@@ -71,6 +71,38 @@ def test_trained_batched_structure_channel(spark):
     assert abs(evalx.accuracy(sim_tr2, test) - acc_tr) < 1e-9
 
 
+def test_structure_channel_independent_of_input_partitioning(spark):
+    """ROADMAP aim 3: the structure sim is the same rows whether the
+    pair's entity and triple frames arrive in 1 or 7 partitions."""
+    from largeea_spark.functions.vectors import encode_names
+    from largeea_spark.plans.name_channel import entity_names
+    from largeea_spark.plans.structure_channel import (
+        trained_batched_structure_similarity,
+    )
+    from largeea_spark.sources.kg import KG
+
+    t1, t2, links, _ = fixtures.two_kg_fixture(spark, n_ents=300, n_triples=900,
+                                               n_links=240)
+    kg1, kg2 = encode_graph(t1), encode_graph(t2)
+    lk = encode_links(links, kg1.ent, kg2.ent, 0.3)
+
+    def run(n):
+        def kg(g):
+            return KG(ent=g.ent.repartition(n), rel=g.rel,
+                      triples=g.triples.repartition(n))
+
+        pair = KGPair(kg1=kg(kg1), kg2=kg(kg2), links=lk)
+        e1 = encode_names(entity_names(pair.kg1.ent, False), "name", dim=32).select("id", "emb")
+        e2 = encode_names(entity_names(pair.kg2.ent, False), "name", dim=32).select("id", "emb")
+        sim, _ = trained_batched_structure_similarity(pair, e1, e2, k_parts=3,
+                                                      knn_k=10)
+        return sorted(tuple(r) for r in sim.collect())
+
+    one = run(1)
+    assert one
+    assert run(7) == one
+
+
 def _tracker_barrier(spark, group: str) -> None:
     """Run one job in ``group`` and wait until the status tracker lists
     it: job-start events arrive in order, so every earlier job is listed

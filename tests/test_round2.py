@@ -175,12 +175,13 @@ def test_low_rank_sim_topk_exact_at_full_rank(spark):
         assert abs(v - true[key]) < 1e-8
 
 
-def test_knn_topk_grouped_matches_per_group_loop(spark):
-    """The one-stage grouped kNN must equal a driver loop of per-group
-    knn_topk calls (same sims, same deterministic tie-break)."""
+def test_train_batches_matches_per_group_knn_loop(spark):
+    """The trainer's grouped task scores each batch like a driver loop of
+    per-group knn_topk calls (same sims, same selection)."""
     import random
 
-    from largeea_spark.operators.knn import knn_topk, knn_topk_grouped
+    from largeea_spark.operators.knn import knn_topk
+    from largeea_spark.operators.trainer import PAYLOAD_SCHEMA, train_batches
 
     rng = random.Random(3)
     rows_q, rows_x = [], []
@@ -190,8 +191,15 @@ def test_knn_topk_grouped_matches_per_group_loop(spark):
             rows_x.append((g, g * 100 + 50 + i, [rng.uniform(-1, 1) for _ in range(8)]))
     q = spark.createDataFrame(rows_q, "batch int, id long, emb array<double>")
     x = spark.createDataFrame(rows_x, "batch int, id long, emb array<double>")
+    payload = spark.createDataFrame(
+        [(g, "e1", i, None, None, v) for g, i, v in rows_q]
+        + [(g, "e2", i, None, None, v) for g, i, v in rows_x], PAYLOAD_SCHEMA)
+
+    def identity(ids1, emb1, ids2, emb2, *_):
+        return emb1, emb2
+
     got = {(r.src, r.dst): round(r.sim, 9)
-           for r in knn_topk_grouped(q, x, k=5).collect()}
+           for r in train_batches(payload, k=5, trainer=identity).collect()}
     want = {}
     for g in (0, 1, 2):
         sub = knn_topk(q.where(F.col("batch") == g).select("id", "emb"),
@@ -220,8 +228,8 @@ def test_trainer_pluggable_callable(spark):
     e2 = encode_names(entity_names(kg2.ent, False), "name", dim=8).select("id", "emb")
     parts1, parts2 = seed_aware_partition(pair, 2, n_iter=2)
     train = lk.where(F.col("split") == "train").select("e1", "e2")
-    placed1, _ = place_triples(kg1.triples, parts1)
-    placed2, _ = place_triples(kg2.triples, parts2)
+    placed1 = place_triples(kg1.triples, parts1)
+    placed2 = place_triples(kg2.triples, parts2)
     batches = [(r.part, r.part) for r in parts1.select("part").distinct().collect()]
     payload = pack_batch_payload(batches, parts1, parts2, placed1, placed2,
                                  train, e1, e2)
@@ -237,9 +245,11 @@ def test_trainer_pluggable_callable(spark):
             out2[:, 0] = 7.0
         return out1, out2
 
-    refined = train_batches(payload, trainer=constant_trainer)
-    row = refined.first()
-    assert row["emb"][0] == 7.0 and all(v == 0.0 for v in row["emb"][1:])
+    # every refined vector is [7, 0, ...], so every pair scores exactly
+    # 1 − ‖q − x‖² = 1.0 (the built-in trainer's sims are spread)
+    sims = [r.sim for r in train_batches(payload, k=5,
+                                         trainer=constant_trainer).collect()]
+    assert sims and all(v == 1.0 for v in sims)
 
 
 # ---------------------------------------------------------------------------
@@ -493,8 +503,9 @@ def test_random_partition_invariants(spark):
     # G8 comparison: random drops ≥ seed-aware drops (structure-blind
     # placement cuts more triples — the reason seed-aware exists)
     s1, s2 = seed_aware_partition(pair, 4, n_iter=3)
-    _, drop_rand = place_triples(pair.kg1.triples, p1)
-    _, drop_seed = place_triples(pair.kg1.triples, s1)
+    n_triples = pair.kg1.triples.count()
+    drop_rand = n_triples - place_triples(pair.kg1.triples, p1).count()
+    drop_seed = n_triples - place_triples(pair.kg1.triples, s1).count()
     assert drop_rand >= drop_seed
 
 

@@ -135,7 +135,7 @@ def test_propagate_embeddings_matches_numpy(spark, dim):
 
 
 # ---------------------------------------------------------------------------
-# single-pass place_triples (VERDICT r2 #8): same counts as the old form
+# place_triples (VERDICT r2 #8): kept rows and drop count
 # ---------------------------------------------------------------------------
 
 def test_place_triples_counts(spark):
@@ -148,7 +148,8 @@ def test_place_triples_counts(spark):
     parts = spark.createDataFrame(
         [(0, 0), (1, 0), (2, 1), (3, 1)], "id long, part int"
     )
-    kept, dropped = place_triples(triples, parts)
+    kept = place_triples(triples, parts)
+    dropped = triples.count() - kept.count()
     rows = {(r.src, r.rel, r.dst, r.part) for r in kept.collect()}
     assert rows == {(0, 0, 1, 0), (2, 0, 3, 1)}
     assert dropped == 2

@@ -56,13 +56,15 @@ def test_cast_shuffle_dtype_validation(spark):  # noqa: F811
 
 # ---------------------------------------------------------------------------
 # train_batches: the default trainer is the seed-anchor trainer, run on
-# the id-sorted batch arrays whatever order the payload rows arrive in.
+# the id-sorted batch arrays whatever order the payload rows arrive in,
+# and its output is scored in the same task (1 − L2² top-k).
 # ---------------------------------------------------------------------------
 
 def test_anchor_dispatch_through_train_batches(spark):  # noqa: F811
     from largeea_spark.operators.trainer import (
         train_batches, train_embeddings_anchor_np)
 
+    k = 3
     rows = []
     for i in range(6):
         rows.append((0, "e1", i, None, None, [float(i), 1.0]))
@@ -73,23 +75,33 @@ def test_anchor_dispatch_through_train_batches(spark):  # noqa: F811
     def run(rs):
         payload = spark.createDataFrame(pd.DataFrame(
             rs, columns=["batch", "kind", "a", "b", "c", "vec"]))
-        return {(r.side, r.id): r.emb
-                for r in train_batches(payload).collect()}
+        return {(r.src, r.dst): r.sim
+                for r in train_batches(payload, k).collect()}
 
     out = run(rows)
-    assert len(out) == 12
-    assert all(len(v) == 4 for v in out.values())  # concat(anchor d=2, name d=2)
+    assert len(out) == 6 * k
 
     ids = np.arange(6, dtype=np.int64)
-    want1, want2 = train_embeddings_anchor_np(
+    ref1, ref2 = train_embeddings_anchor_np(
         ids, np.array([[float(i), 1.0] for i in ids]),
         ids, np.array([[float(i), -1.0] for i in ids]),
         np.array([[0, 0, 1]], dtype=np.int64),
         np.array([[0, 0, 1]], dtype=np.int64),
         np.array([[0, 0], [2, 2]], dtype=np.int64))
-    for side, want in ((1, want1), (2, want2)):
-        got = np.array([out[(side, i)] for i in ids])
-        assert np.array_equal(got, want), side
+
+    def unit(m):  # scored at float32 wire precision, normalized in float64
+        m = m.astype(np.float32).astype(np.float64)
+        return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+    q, x = unit(ref1), unit(ref2)
+    sims = 1.0 - ((q[:, None, :] - x[None, :, :]) ** 2).sum(axis=2)
+    want = {}
+    for i in ids:
+        for j in np.argsort(-sims[i], kind="stable")[:k]:
+            want[(int(i), int(j))] = sims[i, j]
+    assert out.keys() == want.keys()
+    for key, v in want.items():
+        assert abs(out[key] - v) < 1e-9, key
 
     perm = np.random.default_rng(3).permutation(len(rows))
     assert run([rows[i] for i in perm]) == out
