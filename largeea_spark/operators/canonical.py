@@ -12,9 +12,17 @@ shuffle-bounded CC at web scale:
   small-star: for each node u, link every neighbor v ≤ u (and u) to
               the minimum of those.
 
-Each round is groupBy(min) + explode — two shuffles; iteration stops
-when the edge multiset is stable (checked via a cheap aggregate hash).
-Lineage truncation: ``localCheckpoint`` every round (SURVEY.md §4.3.2).
+Stop rule: the rounds' fixpoint is a star forest. Canonical edges
+(a, b) with a < b form one exactly when no node appears as ``b`` more
+than once and no node appears both as ``a`` and as ``b``; every star
+is then centred on its component's minimum, so the labels are
+``b → a`` and ``a → a``. One aggregate action tests this before the
+first round, so input that is already a star forest (disjoint pairs,
+star edges to a group minimum, no edges at all) runs zero rounds, and
+again after each round, so the loop stops at the round that reaches
+the fixpoint instead of paying a confirming round. Lineage
+truncation: ``localCheckpoint`` every round (SURVEY.md §4.3.2),
+materialized by that round's test.
 
 Output: DataFrame(node long, component long) where component is the
 minimum node id in the component — deterministic across parallelism.
@@ -82,37 +90,42 @@ def _small_star(e: DataFrame) -> DataFrame:
     return pairs
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 50, checkpoint_every: int = 1,
-) -> DataFrame:
+def _is_star_forest(e: DataFrame) -> bool:
+    """True when canonical edges ``e`` are the rounds' fixpoint: every
+    node appears at most once as ``b``, and never as both ``a`` and
+    ``b``. One aggregate over (node, is_b) rows; the partial
+    aggregation keeps its shuffle at one row per node and partition."""
+    ends = e.select(F.inline(F.array(
+        F.struct(F.col("a").alias("node"), F.lit(0).alias("is_b")),
+        F.struct(F.col("b").alias("node"), F.lit(1).alias("is_b")),
+    )))
+    # a node that appears as b and has any second endpoint row breaks
+    # the star: a second b row (two parents) or an a row (a chain)
+    bad = (
+        ends.groupBy("node")
+        .agg(F.max("is_b").alias("is_b"), F.count("*").alias("n"))
+        .where((F.col("is_b") == 1) & (F.col("n") > 1))
+    )
+    return bad.isEmpty()
+
+
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """Returns DataFrame(node, component). Deterministic min-id labels."""
     e = _canonical_edges(edges).localCheckpoint(eager=False)
-    prev_sig = None
-    for it in range(max_iter):
-        e = _small_star(_large_star(e))
-        if checkpoint_every and it % checkpoint_every == 0:
-            # lazy checkpoint: the signature action below materializes
-            # it, so each round runs ONE job (the eager form ran a
-            # checkpoint job AND a signature job per round)
-            e = e.localCheckpoint(eager=False)
-        sig_row = e.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-        ).first()
-        sig = (sig_row.n, sig_row.h)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
-    # converged: every edge is canonical (root, node) with root = a < b.
+    it = 0
+    while not _is_star_forest(e):
+        if it == max_iter:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds")
+        # lazy checkpoint: the next test's action materializes it, so
+        # a round runs no separate checkpoint job
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        it += 1
+    # star forest: members point at their root, roots at themselves
     members = e.select(F.col("b").alias("node"), F.col("a").alias("component"))
     roots = e.select(F.col("a").alias("node")).distinct().withColumn(
-        "component", F.col("node")
-    )
-    out = members.unionByName(roots)
-    # a node may briefly carry >1 label candidate; keep the min
-    return out.groupBy("node").agg(F.min("component").alias("component"))
+        "component", F.col("node"))
+    return members.unionByName(roots)
 
 
 def canonical_ids(edges: DataFrame, all_nodes: DataFrame | None = None,
@@ -123,8 +136,13 @@ def canonical_ids(edges: DataFrame, all_nodes: DataFrame | None = None,
     cc = connected_components(edges)
     if all_nodes is None:
         return cc
+    # A root's label is its own id, so the non-root members plus the
+    # fallback to the node's own id label roots and isolated nodes
+    # alike. The filter also drops the roots' distinct from the plan:
+    # the optimizer folds ``node != node`` to false there.
+    members = cc.where(F.col("node") != F.col("component"))
     nodes = all_nodes.select(F.col(node_col).alias("node")).distinct()
     return (
-        nodes.join(cc, "node", "left")
+        nodes.join(members, "node", "left")
         .withColumn("component", F.coalesce("component", F.col("node")))
     )

@@ -187,7 +187,14 @@ def embedding_near_dups(embs: DataFrame, id_col: str = "vec_id",
 def dedup_keep_from_pairs(docs: DataFrame, pairs: DataFrame,
                           id_col: str = "doc_id") -> DataFrame:
     """Survivors given near-dup pairs (a,b): connected components over
-    the pair graph; keep the min-id member of each cluster."""
-    cc = canonical_ids(pairs.select("a", "b"), docs, node_col=id_col)
-    keep = cc.groupBy("component").agg(F.min("node").alias(id_col))
-    return docs.join(keep.select(id_col), id_col, "left_semi")
+    the pair graph; keep the min-id member of each cluster and every doc
+    in no pair.
+
+    Contract: pair ids are ids of ``docs`` (every pair producer here
+    derives them from ``docs``). A cluster's min id is its CC label, so
+    the survivors are ``docs`` minus the nodes labelled with another id."""
+    dropped = canonical_ids(pairs.select("a", "b")).where(
+        F.col("node") != F.col("component")
+    )
+    return docs.join(dropped.select(F.col("node").alias(id_col)), id_col,
+                     "left_anti")

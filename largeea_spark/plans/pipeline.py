@@ -57,7 +57,7 @@ def construct_kg_from_pages(
     surface = store.checkpoint(
         "triples_surface", lambda: extract.triples_for_parity(pages)
     )
-    store.log_metrics("triples_surface", {"rows": surface.count()})
+    store.log_metrics("triples_surface", {"rows": store.rows("triples_surface")})
 
     def build_ents():
         names = surface.select(F.col("subj").alias("name")).unionByName(
@@ -113,7 +113,7 @@ def construct_kg_from_pages(
         )
 
     kg = store.checkpoint("kg_canonical", build_materialized, partition_by=["bucket"])
-    store.log_metrics("kg_canonical", {"rows": kg.count()})
+    store.log_metrics("kg_canonical", {"rows": store.rows("kg_canonical")})
     return {"surface": surface, "entities": ents, "triples": triples,
             "canonical": canon, "kg": kg}
 

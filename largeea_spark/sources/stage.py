@@ -25,6 +25,8 @@ job either: a checkpoint costs exactly its write job(s). The
 `log_information` `main.py:219-239`), appended with plain driver file
 I/O like the reference's log write, so logging runs no Spark job;
 ``metrics()`` reads the lines back as (stage, metrics, logged_at).
+``rows(name)`` sums a stage's footer row counts, so a row-count metric
+runs no Spark job either.
 Metrics appends are serialized by a lock: pipeline stages may build
 (and log) from concurrent driver threads.
 """
@@ -89,16 +91,15 @@ class StageStore:
         common = {"stage": name, "wall_sec": round(wall_sec, 3),
                   "written_at": datetime.now(timezone.utc)}
         rows = []
-        for dirpath, dirnames, filenames in os.walk(root):
-            dirnames.sort()
-            for fn in sorted(f for f in filenames if f.startswith("part-")):
-                n, lo, hi = _footer_lineage(os.path.join(dirpath, fn), first_col)
-                rows.append({
-                    # part-<write task partition>-<uuid>...: the writer task
-                    "partition_id": int(fn.split("-")[1]),
-                    "file": os.path.relpath(os.path.join(dirpath, fn), root),
-                    "rows": n, "min_key": lo, "max_key": hi, **common,
-                })
+        for path in _part_files(root):
+            n, lo, hi = _footer_lineage(path, first_col)
+            fn = os.path.basename(path)
+            rows.append({
+                # part-<write task partition>-<uuid>...: the writer task
+                "partition_id": int(fn.split("-")[1]),
+                "file": os.path.relpath(path, root),
+                "rows": n, "min_key": lo, "max_key": hi, **common,
+            })
         lin = self._path(f"{name}__lineage")
         shutil.rmtree(lin, ignore_errors=True)
         os.makedirs(lin)
@@ -108,6 +109,14 @@ class StageStore:
 
     def lineage(self, name: str) -> DataFrame:
         return self.read(f"{name}__lineage")
+
+    def rows(self, name: str) -> int:
+        """Row count of stage ``name``: the sum of its part files'
+        Parquet footer row counts, so no Spark job. Works for any
+        complete stage on disk, written in this run or resumed, and
+        across ``partition_by`` directories."""
+        return sum(pq.read_metadata(p).num_rows
+                   for p in _part_files(self._path(name)))
 
     def checkpoint(self, name: str, build: Callable[[], DataFrame],
                    partition_by: list[str] | None = None) -> DataFrame:
@@ -137,6 +146,15 @@ class StageStore:
         return self.spark.read.schema(
             "stage string, metrics string, logged_at timestamp"
         ).json(self._path("_metrics"))
+
+
+def _part_files(root: str):
+    """Paths of the part files under stage directory ``root``, partition
+    subdirectories included, in a stable order."""
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames.sort()
+        for fn in sorted(f for f in filenames if f.startswith("part-")):
+            yield os.path.join(dirpath, fn)
 
 
 def _footer_lineage(path: str, col: str) -> tuple[int, str | None, str | None]:
@@ -210,6 +228,10 @@ class TableStageStore(StageStore):
 
     def lineage(self, name: str) -> DataFrame:
         return self.read(f"{name}__lineage")
+
+    def rows(self, name: str) -> int:
+        # a catalog table's files belong to the catalog: count in Spark
+        return self.read(name).count()
 
     def log_metrics(self, stage: str, metrics: dict) -> None:
         row = self.spark.createDataFrame(

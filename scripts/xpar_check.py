@@ -42,6 +42,22 @@ h3 = hashlib.md5(str(rows3).encode()).hexdigest()
 ivf = name_channel.name_embedding_similarity(pair, k=10, method="ivf")
 rows4 = sorted((r.src, r.dst, round(r.sim, 9)) for r in ivf.collect())
 h4 = hashlib.md5(str(rows4).encode()).hexdigest()
+# connected components: min-id labels over a seeded graph of chains (in
+# both orientations), cliques and random edges
+import random
+
+from largeea_spark.operators.canonical import connected_components
+
+rng = random.Random(12)
+cc_edges = [(i + 1, i) if i % 2 else (i, i + 1) for i in range(0, 40)]
+for base in range(100, 400, 50):
+    nodes = rng.sample(range(base, base + 50), 6)
+    cc_edges += [(u, v) for u in nodes for v in nodes if u < v]
+cc_edges += [(rng.randrange(400, 700), rng.randrange(400, 700)) for _ in range(250)]
+cc = connected_components(spark.createDataFrame(cc_edges, "a long, b long"))
+rows5 = sorted((r.node, r.component) for r in cc.collect())
+h5 = hashlib.md5(str(rows5).encode()).hexdigest()
 print(f"XPAR {master} string={h} n={len(rows)} embed={h2} n2={len(rows2)} "
-      f"structure={h3} n3={len(rows3)} ivf={h4} n4={len(rows4)}")
+      f"structure={h3} n3={len(rows3)} ivf={h4} n4={len(rows4)} "
+      f"cc={h5} n5={len(rows5)}")
 spark.stop()

@@ -1,6 +1,7 @@
 """Connected components, partitioner invariants, structure propagation,
 dedup strategies (SURVEY.md §5 plan items: partition invariants, CC)."""
 
+import random
 from collections import defaultdict
 
 import pytest
@@ -30,6 +31,91 @@ def test_connected_components_long_chain(spark):
     cc = connected_components(edges).collect()
     assert {r.component for r in cc} == {0}
     assert len(cc) == 33
+
+
+def _union_find(edges):
+    """Reference labels: node → min node id of its component. Self-loops
+    add no node (CC drops them before the rounds)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        if u != v:
+            ru, rv = find(u), find(v)
+            parent[max(ru, rv)] = min(ru, rv)
+    return {x: find(x) for x in parent}
+
+
+def _random_graph(seed, n_nodes=80, n_edges=60):
+    rng = random.Random(seed)
+    return [(rng.randrange(n_nodes), rng.randrange(n_nodes))
+            for _ in range(n_edges)]
+
+
+def _shapes():
+    """Disjoint union of the shapes the rounds must handle, each in its
+    own id range, some with self-loops mixed in."""
+    perm = random.Random(5).sample(range(300, 320), 20)
+    return (
+        [(i, i + 1) for i in range(0, 12)]                 # chain
+        + [(i + 1, i) for i in range(100, 112)]            # reversed chain
+        + list(zip(perm, perm[1:]))                        # chain, shuffled ids
+        + [(u, v) for u in range(200, 206) for v in range(200, 206) if u < v]
+        + [(255, x) for x in [250, 251, 252, 253, 254, 256, 257]]  # star, centre not min
+        + [(400 + 2 * i, 401 + 2 * i) for i in range(5)]   # disjoint pairs
+        + [(500, 501), (500, 502), (510, 511)]             # star forest
+        + [(600, 600), (601, 601), (200, 200), (255, 255)]  # self-loops
+    )
+
+
+CC_CASES = {
+    "shapes": _shapes(),
+    "random0": _random_graph(0),
+    "random1": _random_graph(1, n_nodes=40),
+    "random2": _random_graph(2, n_nodes=150, n_edges=140),
+    "empty": [],
+    "self_loops": [(1, 1), (2, 2)],
+}
+
+
+@pytest.mark.parametrize("case", sorted(CC_CASES))
+def test_cc_matches_union_find(spark, case):
+    edges = CC_CASES[case]
+    want = _union_find(edges)
+    df = spark.createDataFrame(edges, "a long, b long")
+    cc = connected_components(df).collect()
+    assert len(cc) == len(want)  # one label per node
+    assert {r.node: r.component for r in cc} == want
+    # canonical_ids: CC labels, plus isolated nodes labelled by their own id
+    nodes = sorted(set(want) | {990, 991})
+    ids = canonical_ids(df, spark.createDataFrame([(x,) for x in nodes], "id long"),
+                        node_col="id").collect()
+    assert len(ids) == len(nodes)
+    assert {r.node: r.component for r in ids} == {x: want.get(x, x) for x in nodes}
+
+
+def test_cc_star_forest_runs_no_round(spark, monkeypatch):
+    from largeea_spark.operators import canonical
+
+    calls = []
+    large_star = canonical._large_star
+    monkeypatch.setattr(canonical, "_large_star",
+                        lambda e: calls.append(1) or large_star(e))
+    # disjoint pairs and stars on their minimum, given in either orientation
+    forest = spark.createDataFrame([(2, 1), (3, 4), (1, 5), (9, 1)], "a long, b long")
+    got = {(r.node, r.component) for r in connected_components(forest).collect()}
+    assert got == {(1, 1), (2, 1), (5, 1), (9, 1), (3, 3), (4, 3)}
+    assert calls == []
+    # a chain is no star forest: the counter does see its rounds
+    chain = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+    assert {r.component for r in connected_components(chain).collect()} == {1}
+    assert calls
 
 
 @pytest.fixture(scope="module")
@@ -250,6 +336,23 @@ def test_ngram_jaccard_dedup(spark, dup_docs):
     )
     assert {r.doc_id for r in kept.select("doc_id").collect()} >= {0, 3, 5}
     assert kept.where(F.col("doc_id").isin(1, 2)).count() == 0
+
+
+def test_dedup_keep_from_pairs_matches_min_per_component(spark):
+    # survivors: the min doc of each pair component, plus every doc in
+    # no pair; pairs only between docs (the producers' contract)
+    for seed in (0, 1, 2):
+        rng = random.Random(seed)
+        doc_ids = sorted(rng.sample(range(500), 60))
+        pairs = {tuple(sorted(rng.sample(doc_ids, 2))) for _ in range(45)}
+        label = _union_find(pairs)
+        want = {d for d in doc_ids if label.get(d, d) == d}
+        docs = spark.createDataFrame([(d, f"text {d}") for d in doc_ids],
+                                     "doc_id long, text string")
+        kept = dedup.dedup_keep_from_pairs(
+            docs, spark.createDataFrame(sorted(pairs), "a long, b long"))
+        got = [r.doc_id for r in kept.collect()]
+        assert len(got) == len(want) and set(got) == want, seed
 
 
 def test_minhash_lsh_recall_vs_exact(spark, dup_docs):

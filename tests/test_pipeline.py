@@ -2,6 +2,7 @@
 checkpoint/resume + lineage, and the full two-KG alignment phase graph
 (SURVEY.md §3 lifecycle, north rule)."""
 
+import json
 import time
 
 import pytest
@@ -33,11 +34,50 @@ def test_construct_kg_from_pages(spark, tmp_path):
     lin = store.lineage("kg_canonical")
     assert lin.agg(F.sum("rows")).first()[0] == out["kg"].count()
     assert lin.where(~F.col("file").startswith("bucket=")).count() == 0
+    # stage row counts come from the part files' footers, the
+    # bucket-partitioned kg_canonical included, and feed the metrics rows
+    stages = {"triples_surface": "surface", "entities": "entities",
+              "triples": "triples", "canonical": "canonical", "kg_canonical": "kg"}
+    counts = {st: out[k].count() for st, k in stages.items()}
+    assert {st: store.rows(st) for st in stages} == counts
+    logged = {r.stage: json.loads(r.metrics)["rows"] for r in store.metrics().collect()}
+    assert logged == {"triples_surface": counts["triples_surface"],
+                      "kg_canonical": counts["kg_canonical"]}
     # resume: second run rebuilds nothing and returns identical counts
-    out2 = construct_kg_from_pages(spark, pages, store)
+    resumed = StageStore(spark, str(tmp_path / "kgrun"))
+    out2 = construct_kg_from_pages(spark, pages, resumed)
     assert out2["kg"].count() == out["kg"].count()
+    assert {st: resumed.rows(st) for st in stages} == counts
     # metrics rows appended on both runs
-    assert store.metrics().count() >= 2
+    assert store.metrics().count() == 4
+
+
+def test_construct_canonical_ids_merge_normalized_names(spark, tmp_path):
+    """Entities whose names normalize equal (case; punctuation other
+    than ``_``) share one canonical id, the group's min id; every other
+    entity keeps its own id. Surface spaces become ``_`` first, so
+    "Hot Name" and "HOT NAME" meet at "hot_name", and "Hot-Name" and
+    "hot,name" at "hot name"."""
+    import pandas as pd
+
+    groups = [["Hot Name", "HOT NAME", "hot name"], ["Hot-Name", "hot,name", "HOT!NAME"]]
+    subjects = [n for g in groups for n in g] + ["Cold Name", "Other"]
+    rows = [{"url": f"http://site.example/p{i}", "warc_ts": None,
+             "html": f"<html><body><h1>T</h1><p>{n} locatedIn Uniq{i}.</p></body></html>".encode(),
+             "text": f"T\n{n} locatedIn Uniq{i}.", "lang": "en"}
+            for i, n in enumerate(subjects)]
+    pages = spark.createDataFrame(
+        pd.DataFrame(rows),
+        schema="url string, warc_ts timestamp, html binary, text string, lang string")
+    out = construct_kg_from_pages(spark, pages, StageStore(spark, str(tmp_path / "run")))
+    ids = {r.name: r.id for r in out["entities"].collect()}
+    canon = {r.node: r.component for r in out["canonical"].collect()}
+    assert len(ids) == len(subjects) * 2 and len(canon) == len(ids)
+    want = {i: i for i in ids.values()}
+    for g in groups:
+        members = [ids[n.replace(" ", "_")] for n in g]
+        want.update({m: min(members) for m in members})
+    assert canon == want
 
 
 def test_trained_batched_structure_channel(spark):
