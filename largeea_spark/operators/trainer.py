@@ -9,6 +9,11 @@ kernel (``knn._cell_scorer``) in the same executor task, exactly the
 reference's memory contract. The refined embeddings never leave the
 task; the stage emits the batch's top-k ``(src, dst, sim)`` rows.
 
+The payload is built by :func:`batch_payload`: the batch layout comes
+whole from the placement task (``partition_kg.seed_aware_placement``:
+partition, correspondence and triple placement in one task), and one
+join on ``(kind, id)`` attaches the name vectors to its entity rows.
+
 The built-in trainer is seed-anchor identity propagation
 (:func:`train_embeddings_anchor_np`):
   1. every train pair gets one shared hashed ±1/√d anchor vector;
@@ -138,75 +143,18 @@ PAYLOAD_SCHEMA = (
 )
 
 
-def pack_batch_payload(
-    batches: list, parts1: DataFrame, parts2: DataFrame,
-    placed1: DataFrame, placed2: DataFrame, train: DataFrame,
-    emb1: DataFrame, emb2: DataFrame,
-) -> DataFrame:
-    """Build the unified (batch, kind, a, b, c, vec) payload DF for
-    grouped training. ``batches``: [(p1, p2)] correspondence pairs; the
-    batch id is the src part p1."""
-    spark = parts1.sparkSession
-    # batches may repeat p1 (top_k_corr > 1: one src batch unions
-    # several trg parts) — KG1-side payload joins the DISTINCT p1 list
-    # so entities/triples/seeds aren't duplicated per (p1, p2) pair.
-    corr = spark.createDataFrame(
-        sorted({(int(p1), int(p2)) for p1, p2 in batches}), "p1 int, p2 int"
-    )
-    corr1 = corr.select("p1").distinct()
-    b1 = parts1.join(corr1, parts1.part == corr1.p1).select(
-        F.col("p1").alias("batch"), F.col("id")
-    )
-    b2 = parts2.join(corr, parts2.part == corr.p2).select(
-        F.col("p1").alias("batch"), F.col("id")
-    )
-    nul = F.lit(None).cast("long")
+def batch_payload(placed: DataFrame, emb1: DataFrame, emb2: DataFrame) -> DataFrame:
+    """The grouped trainer's ``PAYLOAD_SCHEMA`` rows: the batch layout of
+    ``partition_kg.seed_aware_placement`` (``t1``/``t2``/``seed``/
+    ``e1``/``e2`` rows) with each entity row's name vector attached by
+    ONE join on ``(kind, id)``. Entities without a vector drop out."""
     nulv = F.lit(None).cast("array<double>")
-    rows = []
-    # KG1 triples depend only on p1 — join the DISTINCT p1 list (like the
-    # entity/seed rows), NOT the full (p1, p2) corr: with top_k_corr > 1
-    # the corr join would replicate every KG1 triple once per target
-    # partner, inflating the payload and skewing the trainer's degree
-    # normalization toward triple edges.
-    rows.append(
-        placed1.join(corr1, placed1.part == corr1.p1).select(
-            F.col("p1").alias("batch"), F.lit("t1").alias("kind"),
-            F.col("src").alias("a"), F.col("rel").alias("b"), F.col("dst").alias("c"),
-            nulv.alias("vec"),
-        )
-    )
-    rows.append(
-        placed2.join(corr, placed2.part == corr.p2).select(
-            F.col("p1").alias("batch"), F.lit("t2").alias("kind"),
-            F.col("src").alias("a"), F.col("rel").alias("b"), F.col("dst").alias("c"),
-            nulv.alias("vec"),
-        )
-    )
-    rows.append(
-        train.join(b1.withColumnRenamed("id", "e1"), "e1").select(
-            F.col("batch"), F.lit("seed").alias("kind"),
-            F.col("e1").alias("a"), F.col("e2").alias("b"), nul.alias("c"),
-            nulv.alias("vec"),
-        )
-    )
-    rows.append(
-        emb1.join(b1, "id").select(
-            F.col("batch"), F.lit("e1").alias("kind"),
-            F.col("id").alias("a"), nul.alias("b"), nul.alias("c"),
-            F.col("emb").cast("array<double>").alias("vec"),
-        )
-    )
-    rows.append(
-        emb2.join(b2, "id").select(
-            F.col("batch"), F.lit("e2").alias("kind"),
-            F.col("id").alias("a"), nul.alias("b"), nul.alias("c"),
-            F.col("emb").cast("array<double>").alias("vec"),
-        )
-    )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+    vecs = emb1.select(F.lit("e1").alias("kind"), F.col("id").alias("a"), "emb").unionByName(
+        emb2.select(F.lit("e2").alias("kind"), F.col("id").alias("a"), "emb"))
+    rows = placed.where(F.col("kind").isin("t1", "t2", "seed")).withColumn("vec", nulv)
+    ents = placed.where(F.col("kind").isin("e1", "e2")).join(vecs, ["kind", "a"]).select(
+        "batch", "kind", "a", "b", "c", F.col("emb").cast("array<double>").alias("vec"))
+    return rows.unionByName(ents)
 
 
 def train_batches(

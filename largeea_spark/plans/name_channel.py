@@ -12,7 +12,10 @@ Lifecycle parity (`main.py:301-336`):
              weights [1.0, 0.05] → mutual argmax (W10) → semi seeds.
 
 Every stage returns the long-format sim IR (src, dst, sim) keyed by
-GLOBAL entity ids of the two KGs.
+GLOBAL entity ids of the two KGs. Phases 1-2 split into an encode half
+(``name_embeddings``) and a kNN half (``name_embedding_knn``), so the
+alignment pipeline encodes the names once and hands the same vectors to
+the structure channel.
 """
 
 from __future__ import annotations
@@ -82,19 +85,29 @@ def string_similarity(
 IVF_AUTO_THRESHOLD = 100_000
 
 
-def name_embedding_similarity(
-    pair: KGPair, k: int = 50, dim: int = 64, ngram: int = 3,
-    encoder="hashed",
-    method: str = "auto", nlist: int | None = None,
-    nprobe: int | None = None, ivf_threshold: int | None = None,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Phases 1-2 (`main.py:301-320`): encoder + global top-k kNN.
+def name_embeddings(
+    pair: KGPair, dim: int = 64, ngram: int = 3, encoder="hashed",
+) -> tuple[DataFrame, DataFrame]:
+    """Encode half of phases 1-2: (id, emb) per KG for the normalized
+    (P1, punc='') names. Encoder is the deterministic hashed
+    char-n-gram stand-in for BERT max-pooling (`emb_loader.py:119-182`);
+    same DataFrame contract, swap freely."""
+    return tuple(
+        encode_names(entity_names(kg.ent, punct_to_space=False), "name",
+                     dim=dim, n=ngram, encoder=encoder).select("id", "emb")
+        for kg in (pair.kg1, pair.kg2)
+    )
 
-    Encoder is the deterministic hashed char-n-gram stand-in for BERT
-    max-pooling (`emb_loader.py:119-182`); same DataFrame contract, swap
-    freely. kNN sim = 1−L2² on normalized vectors (`text_utils.py:301`),
-    k=50 (`text_utils.py:311-313`).
+
+def name_embedding_knn(
+    e1: DataFrame, e2: DataFrame, k: int = 50, method: str = "auto",
+    nlist: int | None = None, nprobe: int | None = None,
+    ivf_threshold: int | None = None, stats: dict | None = None,
+) -> DataFrame:
+    """kNN half of phases 1-2 (`main.py:301-320`): global top-``k`` of
+    KG1's name vectors ``e1`` against KG2's ``e2``, sim = 1−L2² on
+    normalized vectors (`text_utils.py:301`), k=50
+    (`text_utils.py:311-313`).
 
     ``method``: 'brute' (exact blocked kNN), 'ivf' (FAISS-IVFFlat-style
     approximate — the 1e9-row scale path), or 'auto' (default): brute
@@ -102,13 +115,9 @@ def name_embedding_similarity(
     IVF above it (brute's ×n_blocks query replication would dominate —
     the same regime where the reference reaches for FAISS's coarse
     quantizers, `text_utils.py:291-333`)."""
-    n1 = entity_names(pair.kg1.ent, punct_to_space=False)
-    n2 = entity_names(pair.kg2.ent, punct_to_space=False)
-    e1 = encode_names(n1, "name", dim=dim, n=ngram, encoder=encoder)
-    e2 = encode_names(n2, "name", dim=dim, n=ngram, encoder=encoder)
     n_idx = None
     if method in ("auto", "ivf"):
-        n_idx = n2.count()  # the actual index side
+        n_idx = e2.count()  # the actual index side
     if method == "auto":
         thr = IVF_AUTO_THRESHOLD if ivf_threshold is None else ivf_threshold
         method = "ivf" if n_idx >= thr else "brute"
@@ -134,6 +143,22 @@ def name_embedding_similarity(
             stats.update({"nlist": nl, "nprobe": np_})
         return ivf_topk(e1, e2, k=k, nlist=nl, nprobe=np_)
     return knn_topk(e1, e2, k=k)
+
+
+def name_embedding_similarity(
+    pair: KGPair, k: int = 50, dim: int = 64, ngram: int = 3,
+    encoder="hashed",
+    method: str = "auto", nlist: int | None = None,
+    nprobe: int | None = None, ivf_threshold: int | None = None,
+    stats: dict | None = None,
+) -> DataFrame:
+    """Phases 1-2 (`main.py:301-320`): ``name_embeddings`` (encoder)
+    then ``name_embedding_knn`` (global top-k kNN); see both for the
+    parameters."""
+    e1, e2 = name_embeddings(pair, dim=dim, ngram=ngram, encoder=encoder)
+    return name_embedding_knn(e1, e2, k=k, method=method, nlist=nlist,
+                              nprobe=nprobe, ivf_threshold=ivf_threshold,
+                              stats=stats)
 
 
 def token_level_similarity(

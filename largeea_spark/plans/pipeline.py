@@ -25,10 +25,13 @@ runs the same independence as separate ``--phase`` processes that hand
 off through files (`main.py:183-200,282-368`). At benchmark size each
 stage is a chain of 1-4-task jobs, so one driver thread leaves most
 cores idle; overlapping the chains fills them. Fusion waits for every
-channel, and semi-supervision rounds stay sequential (each round reads
-the previous fused sim). The order is written as data dependencies
+channel and runs beside semi_seeds, which it never reads;
+semi-supervision rounds stay sequential (each round reads the previous
+fused sim). The order is written as data dependencies
 (``_checkpoint_graph``): training structure on gold ∪ semi seeds would
-only add ``semi_seeds`` to its dependencies.
+only add ``semi_seeds`` to its dependencies. The name vectors are
+encoded once per op, into a lazily persisted pair of frames that the
+embedding channel and every structure round read.
 """
 
 from __future__ import annotations
@@ -192,8 +195,9 @@ def align_kg_pair(
 
     ``encoder``: ``'hashed'`` (default) or a zero-arg model loader for
     a real transformer encoder (``model_name_encoder`` seam,
-    `emb_loader.py:119-182`) — threads through BOTH channels' name
-    embeddings (the structure channel initializes from them too).
+    `emb_loader.py:119-182`). Its vectors are computed once per op and
+    feed BOTH channels: the embedding channel's kNN and the structure
+    channel's initial embeddings in every round.
 
     ``it_rounds > 1`` enables iterative semi-supervision (M4/M8,
     `models/rrea/rrea.py:182-211`, `EAKit/semi_utils.py:20-110`): each
@@ -235,38 +239,48 @@ def align_kg_pair(
         return sim
 
     train = pair.links.where(F.col("split") == "train").select("e1", "e2")
+    # the name vectors, encoded once per op: sim_embed and every
+    # structure round read this lazily persisted pair of frames, and a
+    # resume that skips all of them never encodes
+    emb1, emb2 = (e.localCheckpoint(eager=False) for e in name_channel.name_embeddings(
+        pair, dim=emb_dim, encoder=encoder))
 
     def structure_build(extra_links: DataFrame | None):
         def build(*_):
-            from ..functions.vectors import encode_names
+            from .structure_channel import trained_batched_structure_similarity
 
-            n1 = name_channel.entity_names(pair.kg1.ent, punct_to_space=False)
-            n2 = name_channel.entity_names(pair.kg2.ent, punct_to_space=False)
-            e1 = encode_names(n1, "name", dim=emb_dim,
-                              encoder=encoder).select("id", "emb")
-            e2 = encode_names(n2, "name", dim=emb_dim,
-                              encoder=encoder).select("id", "emb")
             lks = train if extra_links is None else (
                 train.unionByName(extra_links.select("e1", "e2")).distinct()
             )
             kgp = KGPair(kg1=pair.kg1, kg2=pair.kg2,
                          links=lks.withColumn("split", F.lit("train")))
-            from .structure_channel import trained_batched_structure_similarity
-
             sim, _ = trained_batched_structure_similarity(
-                kgp, e1, e2, k_parts=k_parts, knn_k=knn_k,
+                kgp, emb1, emb2, k_parts=k_parts, knn_k=knn_k,
             )
             return sim
 
         return build
 
+    def fuse_round(built: dict, structure_sim: DataFrame | None) -> DataFrame:
+        name_parts = [built["sim_embed"], built["sim_string"]]
+        # name = global + 0.05·string (`main.py:350-354`, A10/F11)
+        name_w = [1.0, 0.05]
+        if use_token_channel:
+            name_parts.append(built["sim_token"])
+            name_w.append(0.3)  # L4 token sim (`text_sim.py:247-262`)
+        name_sim = simops.fuse(name_parts, name_w)
+        if structure_sim is not None:
+            # reference fuses stru + name at weight 1.0 (`main.py:356`)
+            return simops.fuse([structure_sim, name_sim], [1.0, 1.0])
+        return name_sim
+
     # stage → (stages it reads, build). The channels read only the input
     # pair (structure trains on GOLD seeds), so they build concurrently;
-    # semi_seeds starts once string and embed are done.
+    # semi_seeds starts once string and embed are done, and sim_fused,
+    # which semi_seeds never reads, once every channel is.
     graph = {
         "sim_string": ((), build_string),
-        "sim_embed": ((), lambda _: name_channel.name_embedding_similarity(
-            pair, k=knn_k, dim=emb_dim, encoder=encoder)),
+        "sim_embed": ((), lambda _: name_channel.name_embedding_knn(emb1, emb2, k=knn_k)),
         "semi_seeds": (("sim_string", "sim_embed"),
                        lambda s: name_channel.semi_seeds(s["sim_embed"], s["sim_string"])),
     }
@@ -275,32 +289,16 @@ def align_kg_pair(
     if use_token_channel:
         graph["sim_token"] = ((), lambda _: name_channel.token_level_similarity(
             pair, dim=emb_dim))
+    graph["sim_fused"] = (tuple(n for n in graph if n != "semi_seeds"),
+                          lambda s: fuse_round(s, s.get("sim_structure")))
     built = _checkpoint_graph(spark, store, graph)
 
-    sim_string, sim_embed, seeds = (built["sim_string"], built["sim_embed"],
-                                    built["semi_seeds"])
-    sims = {"string": sim_string, "embed": sim_embed}
+    fused, seeds = built["sim_fused"], built["semi_seeds"]
+    sims = {"string": built["sim_string"], "embed": built["sim_embed"]}
     if use_structure:
         sims["structure"] = built["sim_structure"]
     if use_token_channel:
         sims["token"] = built["sim_token"]
-
-    def fuse_round(structure_sim: DataFrame | None) -> DataFrame:
-        name_parts = [sim_embed, sim_string]
-        # name = global + 0.05·string (`main.py:350-354`, A10/F11)
-        name_w = [1.0, 0.05]
-        if use_token_channel:
-            name_parts.append(sims["token"])
-            name_w.append(0.3)  # L4 token sim (`text_sim.py:247-262`)
-        name_sim = simops.fuse(name_parts, name_w)
-        if structure_sim is not None:
-            # reference fuses stru + name at weight 1.0 (`main.py:356`)
-            return simops.fuse([structure_sim, name_sim], [1.0, 1.0])
-        return name_sim
-
-    fused = store.checkpoint(
-        "sim_fused", lambda: fuse_round(sims.get("structure"))
-    )
 
     # every sim is evaluated once, at the end, in ONE hits_and_mrr pass
     evals = {**sims, "fused": fused}
@@ -322,7 +320,7 @@ def align_kg_pair(
         sims[f"structure_r{r}"] = store.checkpoint(
             f"sim_structure_r{r}", structure_build(mined))
         fused = store.checkpoint(
-            f"sim_fused_r{r}", lambda: fuse_round(sims[f"structure_r{r}"])
+            f"sim_fused_r{r}", lambda: fuse_round(built, sims[f"structure_r{r}"])
         )
         evals[f"fused_r{r}"] = fused
 

@@ -43,13 +43,10 @@ def coloc_rate(spark, test, stats) -> float:
     """Fraction of test pairs (e1, e2) whose parts are a corresponding
     batch (p1, p2) — the recall ceiling of the batched structure kNN."""
     parts1, parts2 = stats["parts"]
-    bdf = spark.createDataFrame(
-        sorted({(b["p1"], b["p2"]) for b in stats["batches"]}), "p1 int, p2 int"
-    )
     j = (
         test.join(parts1.select(F.col("id").alias("e1"), F.col("part").alias("p1")), "e1")
         .join(parts2.select(F.col("id").alias("e2"), F.col("part").alias("p2e")), "e2")
-        .join(bdf, "p1")
+        .join(stats["batches"], "p1")
         .where(F.col("p2e") == F.col("p2"))
         .select("e1").distinct()
     )

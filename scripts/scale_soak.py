@@ -97,7 +97,7 @@ def main():
     total = sum(times.values())
 
     line = (
-        f"| {n_ents} | {k_parts} | {len(stats['batches'])} | "
+        f"| {n_ents} | {k_parts} | {stats['batches'].count()} | "
         f"{t_gen:.0f} | "
         + " | ".join(f"{times[k]:.0f}" for k in ("string", "embed", "structure", "fuse", "eval", "semi_r2"))
         + f" | {total:.0f} | "

@@ -161,15 +161,126 @@ def test_partition_cap_salting(spark, kg_pair):
     assert j.where(F.col("pa") != F.col("pb")).count() == 0
 
 
-def test_place_triples_and_correspondence(spark, kg_pair):
-    p1, p2 = partition_kg.seed_aware_partition(kg_pair, k=3, n_iter=2)
-    kept = partition_kg.place_triples(kg_pair.kg1.triples, p1)
+def test_placement_triples_and_correspondence(spark, kg_pair):
+    placed = partition_kg.seed_aware_placement(kg_pair, k=3, n_iter=2)
+    p1, _ = partition_kg.placement_parts(placed)
+    kept = placed.where(F.col("kind") == "t1")
     dropped = kg_pair.kg1.triples.count() - kept.count()
     assert kept.count() + dropped == kg_pair.kg1.triples.count()
-    assert kept.where(F.col("part").isNull()).count() == 0
-    corr = partition_kg.correspondence(kg_pair.links, p1, p2, top_k=1)
+    assert kept.where(F.col("batch").isNull()).count() == 0
+    # a kept triple's batch is the part of both its endpoints
+    for end in ("a", "c"):
+        j = kept.join(p1.select(F.col("id").alias(end), "part"), end)
+        assert j.where(F.col("part") != F.col("batch")).count() == 0
+        assert j.count() == kept.count()
+    corr = placed.where(F.col("kind") == "corr")
     # by seed inheritance, every src part's top trg part is itself
-    assert corr.where(F.col("p1") != F.col("p2")).count() == 0
+    assert corr.where(F.col("batch") != F.col("a")).count() == 0
+
+
+def _placement_oracle(parts1, parts2, tri1, tri2, train, top_k):
+    """Pure-pandas batch layout of the former DataFrame path: top-k
+    correspondence by train overlap (ties to the smaller p2), uncovered
+    KG1 parts paired with themselves, co-partitioned triples, and the
+    five-way payload join (KG1 rows joined on the distinct src parts,
+    KG2 rows on every (p1, p2) pair). Returns sorted (batch, kind, a, b,
+    c) rows, b/c None where unset, plus the sorted corr pairs."""
+    import pandas as pd
+
+    p1 = pd.DataFrame(sorted(parts1.items()), columns=["id", "part"])
+    p2 = pd.DataFrame(sorted(parts2.items()), columns=["id", "part"])
+    tr = pd.DataFrame(train, columns=["e1", "e2"], dtype="int64")
+    ov = (tr.merge(p1.rename(columns={"id": "e1", "part": "p1"}), on="e1")
+          .merge(p2.rename(columns={"id": "e2", "part": "p2"}), on="e2")
+          .groupby(["p1", "p2"]).size().rename("n").reset_index()
+          .sort_values(["p1", "n", "p2"], ascending=[True, False, True]))
+    corr = ov.groupby("p1").head(top_k)[["p1", "p2"]]
+    lonely = sorted(set(p1.part) - set(corr.p1))
+    corr = pd.concat([corr, pd.DataFrame({"p1": lonely, "p2": lonely})])
+
+    def placed(tri, parts):
+        t = pd.DataFrame(tri, columns=["src", "rel", "dst"], dtype="int64")
+        t = (t.merge(parts.rename(columns={"id": "src", "part": "ph"}), on="src")
+             .merge(parts.rename(columns={"id": "dst", "part": "pt"}), on="dst"))
+        return t[t.ph == t.pt].rename(columns={"ph": "part"})
+
+    src = pd.DataFrame({"p1": sorted(set(corr.p1))})
+    b1 = p1.merge(src, left_on="part", right_on="p1")
+    b2 = p2.merge(corr, left_on="part", right_on="p2")
+    rows = []
+    for kind, df, cols in (
+        ("t1", placed(tri1, p1).merge(src, left_on="part", right_on="p1"),
+         ["src", "rel", "dst"]),
+        ("t2", placed(tri2, p2).merge(corr, left_on="part", right_on="p2"),
+         ["src", "rel", "dst"]),
+        ("seed", tr.merge(b1, left_on="e1", right_on="id"), ["e1", "e2"]),
+        ("e1", b1, ["id"]),
+        ("e2", b2, ["id"]),
+    ):
+        for r in df.itertuples(index=False):
+            vals = [int(getattr(r, c)) for c in cols] + [None] * (3 - len(cols))
+            rows.append((int(r.p1), kind, *vals))
+    return sorted(rows, key=repr), sorted(map(tuple, corr.to_numpy().tolist()))
+
+
+@pytest.mark.parametrize("top_k", [1, 2])
+def test_placement_matches_pandas_payload_join(spark, top_k):
+    """The placement task's batch rows equal the former five-way payload
+    join, recomputed in pandas over the task's own part rows: top-k
+    replication of KG2 rows, dropped cross-part triples and the
+    self-pairing of KG1 parts with no train overlap."""
+    import random
+
+    from largeea_spark.sources.kg import KG, KGPair
+
+    rng = random.Random(11)
+    r1, r2 = list(range(300, 390)), list(range(500, 590))
+    tri1 = [(a, rng.randrange(3), b) for a, b in _rand_graph(rng, r1, 120)]
+    tri2 = [(a, rng.randrange(3), b) for a, b in _rand_graph(rng, r2, 120)]
+    tri1 += tri1[:5]  # duplicate triples stay duplicated
+    x, y = sorted(rng.sample(r1, 4)), rng.sample(r2, 4)
+    # 4 distinct KG1 seeds take parts 1-4 of k=6, so parts 0 and 5 hold
+    # only unreached entities (hash parts) and have no train overlap;
+    # y[0] is linked to x[0] and x[1] and inherits x[0]'s smaller part,
+    # so x[1]'s part overlaps two KG2 parts; 999 is no KG1 entity and 77 no KG2 entity
+    train = list(zip(x, y)) + [(x[1], y[0]), (999, y[2]), (x[0], 77)]
+
+    def kg(ents, tri):
+        return KG(ent=spark.createDataFrame([(f"u{e}", e) for e in ents],
+                                            "uri string, id long"),
+                  rel=None,
+                  triples=spark.createDataFrame(tri, "src long, rel long, dst long"))
+
+    links = spark.createDataFrame([(a, b, "train") for a, b in train],
+                                  "e1 long, e2 long, split string")
+    pair = KGPair(kg1=kg(r1, tri1), kg2=kg(r2, tri2), links=links)
+    placed = partition_kg.seed_aware_placement(pair, k=6, n_iter=1, top_k_corr=top_k)
+    p1, p2 = partition_kg.placement_parts(placed)
+    parts1 = {r.id: r.part for r in p1.collect()}
+    parts2 = {r.id: r.part for r in p2.collect()}
+    want, want_corr = _placement_oracle(parts1, parts2, tri1, tri2, train, top_k)
+    got = sorted(((r.batch, r.kind, r.a, r.b, r.c) for r in placed.where(
+        F.col("kind").isin("t1", "t2", "seed", "e1", "e2")).collect()), key=repr)
+    got_corr = sorted((r.batch, r.a) for r in placed.where(F.col("kind") == "corr").collect())
+    assert got_corr == want_corr
+    assert got == want
+    # the case covers what the layout must get right
+    src_parts = [a for a, _ in got_corr]
+    assert (max(src_parts.count(a) for a in src_parts) == 2) == (top_k == 2)
+    assert any(a == b and a in (0, 5) for a, b in got_corr)
+    assert sum(1 for r in got if r[1] == "t1") < len(tri1)
+
+
+def test_xxhash64_long_matches_spark(spark):
+    """The placement kernel's salt hash is Spark's xxhash64 of a long."""
+    import numpy as np
+
+    vals = [0, 1, -1, 42, 7, 123456789012, -987654321, 2**63 - 1, -2**63,
+            *range(1000, 1100)]
+    df = spark.createDataFrame([(v,) for v in vals], "v long")
+    want = [r.h for r in df.select(F.xxhash64("v").alias("h")).collect()]
+    got = partition_kg._xxhash64_long(np.array(vals, np.int64))
+    assert got.tolist() == want
 
 
 def _lp_oracle(ents1, tri1, ents2, tri2, train, k, n_iter, hpart):

@@ -212,10 +212,8 @@ def test_trainer_pluggable_callable(spark):
     """M5-M7 seam: a custom per-batch trainer callable (e.g. a torch
     GNN on a real cluster) slots into train_batches; verified with a
     numpy mock whose output is provably used."""
-    from largeea_spark.operators.trainer import pack_batch_payload, train_batches
-    from largeea_spark.operators.partition_kg import (
-        place_triples, seed_aware_partition,
-    )
+    from largeea_spark.operators.trainer import batch_payload, train_batches
+    from largeea_spark.operators.partition_kg import seed_aware_placement
     from largeea_spark.functions.vectors import encode_names
     from largeea_spark.plans.name_channel import entity_names
 
@@ -226,13 +224,7 @@ def test_trainer_pluggable_callable(spark):
     pair = KGPair(kg1=kg1, kg2=kg2, links=lk)
     e1 = encode_names(entity_names(kg1.ent, False), "name", dim=8).select("id", "emb")
     e2 = encode_names(entity_names(kg2.ent, False), "name", dim=8).select("id", "emb")
-    parts1, parts2 = seed_aware_partition(pair, 2, n_iter=2)
-    train = lk.where(F.col("split") == "train").select("e1", "e2")
-    placed1 = place_triples(kg1.triples, parts1)
-    placed2 = place_triples(kg2.triples, parts2)
-    batches = [(r.part, r.part) for r in parts1.select("part").distinct().collect()]
-    payload = pack_batch_payload(batches, parts1, parts2, placed1, placed2,
-                                 train, e1, e2)
+    payload = batch_payload(seed_aware_placement(pair, 2, n_iter=2), e1, e2)
 
     def constant_trainer(ids1, emb1, ids2, emb2, t1_, t2_, sd):
         # mock backbone: every embedding becomes [7, 0, ...] — provably
@@ -481,7 +473,7 @@ def test_pipeline_logs_blocking_metrics(spark, tmp_path):
 
 def test_random_partition_invariants(spark):
     from largeea_spark.operators.partition_kg import (
-        place_triples, random_partition, seed_aware_partition,
+        random_partition, seed_aware_placement,
     )
 
     t1, t2, links, _ = fixtures.two_kg_fixture(spark, n_ents=150, n_triples=450,
@@ -502,10 +494,16 @@ def test_random_partition_invariants(spark):
     assert j.where(F.col("q1") != F.col("q2")).count() == 0
     # G8 comparison: random drops ≥ seed-aware drops (structure-blind
     # placement cuts more triples — the reason seed-aware exists)
-    s1, s2 = seed_aware_partition(pair, 4, n_iter=3)
-    n_triples = pair.kg1.triples.count()
-    drop_rand = n_triples - place_triples(pair.kg1.triples, p1).count()
-    drop_seed = n_triples - place_triples(pair.kg1.triples, s1).count()
+    tri = pair.kg1.triples
+    n_triples = tri.count()
+    kept_rand = (
+        tri.join(p1.select(F.col("id").alias("src"), F.col("part").alias("ph")), "src")
+        .join(p1.select(F.col("id").alias("dst"), F.col("part").alias("pt")), "dst")
+        .where(F.col("ph") == F.col("pt")).count()
+    )
+    placed = seed_aware_placement(pair, 4, n_iter=3)
+    drop_rand = n_triples - kept_rand
+    drop_seed = n_triples - placed.where(F.col("kind") == "t1").count()
     assert drop_rand >= drop_seed
 
 

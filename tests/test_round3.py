@@ -1,5 +1,6 @@
 """Round-3 regression tests: ANN auto-selection, payload replication
-fix, d=768 chunked propagation, and single-pass triple placement."""
+fix (on the placement task), d=768 chunked propagation, and triple
+placement."""
 
 import numpy as np
 import pytest
@@ -51,41 +52,53 @@ def test_name_embedding_auto_selects_by_index_size(spark):
 
 
 # ---------------------------------------------------------------------------
-# pack_batch_payload: KG1 triples joined on distinct p1 (ADVICE r2)
+# placement task: KG1 triples laid out once per src batch (ADVICE r2)
 # ---------------------------------------------------------------------------
 
-def test_pack_payload_t1_not_replicated_with_topk_corr(spark):
-    from largeea_spark.operators.trainer import pack_batch_payload
+def _hand_pair(spark, ents1, tri1, ents2, tri2, train):
+    from largeea_spark.sources.kg import KG
 
-    parts1 = spark.createDataFrame([(i, 0) for i in range(4)], "id long, part int")
-    parts2 = spark.createDataFrame(
-        [(0, 0), (1, 0), (2, 1), (3, 1)], "id long, part int"
+    def kg(ents, tri):
+        return KG(
+            ent=spark.createDataFrame([(f"u{e}", e) for e in ents], "uri string, id long"),
+            rel=None,
+            triples=spark.createDataFrame(tri, "src long, rel long, dst long"),
+        )
+
+    links = spark.createDataFrame([(a, b, "train") for a, b in train],
+                                  "e1 long, e2 long, split string")
+    return KGPair(kg1=kg(ents1, tri1), kg2=kg(ents2, tri2), links=links)
+
+
+def _kind_counts(placed):
+    return {r.kind: r.n for r in
+            placed.groupBy("kind").agg(F.count("*").alias("n")).collect()}
+
+
+def test_placement_t1_not_replicated_with_topk_corr(spark):
+    from largeea_spark.operators.partition_kg import seed_aware_placement
+
+    # k=2, no propagation: train e1 ranks give parts {0: 1, 1: 0, 2: 1};
+    # KG2 seeds inherit the min partner part {10: 0, 11: 1, 12: 1, 13: 0}.
+    # KG1 part 1 overlaps KG2 part 1 twice and part 0 once, so at
+    # top_k_corr=2 src batch 1 unions BOTH trg parts
+    pair = _hand_pair(
+        spark, [0, 1, 2], [(0, 0, 2), (0, 0, 1), (1, 0, 1)],
+        [10, 11, 12, 13], [(10, 0, 13), (11, 0, 12), (10, 0, 11)],
+        [(0, 10), (1, 10), (2, 11), (2, 12), (1, 13)],
     )
-    placed1 = spark.createDataFrame(
-        [(0, 0, 1, 0), (1, 0, 2, 0), (2, 0, 3, 0)],
-        "src long, rel long, dst long, part int",
-    )
-    placed2 = spark.createDataFrame(
-        [(0, 0, 1, 0), (2, 0, 3, 1)], "src long, rel long, dst long, part int"
-    )
-    train = spark.createDataFrame([(0, 0), (1, 1)], "e1 long, e2 long")
-    emb1 = spark.createDataFrame(
-        [(i, [0.1, 0.2]) for i in range(4)], "id long, emb array<double>"
-    )
-    emb2 = spark.createDataFrame(
-        [(i, [0.3, 0.4]) for i in range(4)], "id long, emb array<double>"
-    )
-    # top_k_corr=2 shape: src part 0 unions BOTH trg parts
-    payload = pack_batch_payload(
-        [(0, 0), (0, 1)], parts1, parts2, placed1, placed2, train, emb1, emb2
-    )
-    counts = {r.kind: r.n for r in
-              payload.groupBy("kind").agg(F.count("*").alias("n")).collect()}
-    assert counts["t1"] == 3, f"KG1 triples replicated per (p1,p2): {counts}"
-    assert counts["t2"] == 2      # trg triples DO come from both parts
-    assert counts["seed"] == 2
-    assert counts["e1"] == 4      # KG1 entities once per src batch
-    assert counts["e2"] == 4      # both trg parts' entities
+    placed = seed_aware_placement(pair, 2, n_iter=0, top_k_corr=2)
+    corr = {(r.batch, r.a) for r in placed.where(F.col("kind") == "corr").collect()}
+    assert corr == {(0, 0), (1, 0), (1, 1)}
+    counts = _kind_counts(placed)
+    assert counts["t1"] == 2, f"KG1 triples replicated per (p1,p2): {counts}"
+    assert counts["t2"] == 3      # part 0's triple in batches 0 and 1
+    assert counts["seed"] == 5
+    assert counts["e1"] == 3      # KG1 entities once per src batch
+    assert counts["e2"] == 6      # part 0's two entities twice
+    # top_k_corr=1 keeps each trg part in one batch
+    counts1 = _kind_counts(seed_aware_placement(pair, 2, n_iter=0, top_k_corr=1))
+    assert (counts1["t1"], counts1["t2"], counts1["e2"]) == (2, 2, 4)
 
 
 # ---------------------------------------------------------------------------
@@ -135,24 +148,22 @@ def test_propagate_embeddings_matches_numpy(spark, dim):
 
 
 # ---------------------------------------------------------------------------
-# place_triples (VERDICT r2 #8): kept rows and drop count
+# triple placement (VERDICT r2 #8): kept rows and drop count
 # ---------------------------------------------------------------------------
 
-def test_place_triples_counts(spark):
-    from largeea_spark.operators.partition_kg import place_triples
+def test_placement_triple_counts(spark):
+    from largeea_spark.operators.partition_kg import seed_aware_placement
 
-    triples = spark.createDataFrame(
-        [(0, 0, 1), (1, 0, 2), (2, 0, 3), (0, 1, 3)],
-        "src long, rel long, dst long",
-    )
-    parts = spark.createDataFrame(
-        [(0, 0), (1, 0), (2, 1), (3, 1)], "id long, part int"
-    )
-    kept = place_triples(triples, parts)
-    dropped = triples.count() - kept.count()
-    rows = {(r.src, r.rel, r.dst, r.part) for r in kept.collect()}
-    assert rows == {(0, 0, 1, 0), (2, 0, 3, 1)}
-    assert dropped == 2
+    # seeds 0 → part 1 and 3 → part 0 (k=2); one round pulls 1 to 0's
+    # part and 2 to 3's, so the 4-cycle keeps (0,1) and (2,3) only
+    tri = [(0, 0, 1), (1, 0, 2), (2, 0, 3), (0, 1, 3)]
+    pair = _hand_pair(spark, [0, 1, 2, 3], tri, [10, 13], [],
+                      [(0, 10), (3, 13)])
+    placed = seed_aware_placement(pair, 2, n_iter=1)
+    kept = placed.where(F.col("kind") == "t1")
+    rows = {(r.a, r.b, r.c, r.batch) for r in kept.collect()}
+    assert rows == {(0, 0, 1, 1), (2, 0, 3, 0)}
+    assert len(tri) - kept.count() == 2
 
 
 # ---------------------------------------------------------------------------
