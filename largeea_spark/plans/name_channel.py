@@ -65,11 +65,16 @@ def string_similarity(
     # DP so its width survives into the scoring stage regardless of how
     # the two dimension joins above were planned; the pair rows are tiny
     # so the extra exchange is bytes-cheap even at full corpus scale.
+    # Keyed (dst, src), not (src, dst): the candidates' distinct is
+    # already hash-partitioned on (src, dst), and when both name joins
+    # broadcast, Spark drops a repartition whose partitioning equals
+    # its child's (EnsureRequirements), which left the DP stage to
+    # AQE's coalescing after all.
     width = session_shuffle_width(cand.sparkSession)
     scored = (
         cand.join(n1.select(F.col("id").alias("src"), F.col("name").alias("n1")), "src")
         .join(n2.select(F.col("id").alias("dst"), F.col("name").alias("n2")), "dst")
-        .repartition(width, F.col("src"), F.col("dst"))
+        .repartition(width, F.col("dst"), F.col("src"))
         .select("src", "dst", levenshtein_ratio(F.col("n1"), F.col("n2")).alias("sim"))
     )
     return scored

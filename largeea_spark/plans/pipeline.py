@@ -16,22 +16,25 @@ Phase graph (each phase = one StageStore checkpoint, resumable):
 
 Single-KG (web corpus) and two-KG (alignment benchmark) entry points.
 
-Concurrency (two-KG path): sim_string, sim_embed, sim_structure (and
-sim_token when enabled) read only the input pair — the structure
+Concurrency: independent stages are checkpointed together from a pool
+of driver threads (``_checkpoint_graph``). In construction, triples
+and canonical read only the entity dim (and the surface triples), so
+they build side by side once entities is written; kg_canonical waits
+for both. In the two-KG path, sim_string, sim_embed, sim_structure
+(and sim_token when enabled) read only the input pair — the structure
 channel trains on GOLD seeds, not on semi_seeds — so ``align_kg_pair``
-checkpoints them together from a pool of driver threads, and
-semi_seeds starts as soon as string and embed are done. The reference
-runs the same independence as separate ``--phase`` processes that hand
-off through files (`main.py:183-200,282-368`). At benchmark size each
-stage is a chain of 1-4-task jobs, so one driver thread leaves most
-cores idle; overlapping the chains fills them. Fusion waits for every
-channel and runs beside semi_seeds, which it never reads;
-semi-supervision rounds stay sequential (each round reads the previous
-fused sim). The order is written as data dependencies
-(``_checkpoint_graph``): training structure on gold ∪ semi seeds would
-only add ``semi_seeds`` to its dependencies. The name vectors are
-encoded once per op, into a lazily persisted pair of frames that the
-embedding channel and every structure round read.
+checkpoints them together, and semi_seeds starts as soon as string and
+embed are done. The reference runs the same independence as separate
+``--phase`` processes that hand off through files
+(`main.py:183-200,282-368`). At benchmark size each stage is a chain
+of 1-4-task jobs, so one driver thread leaves most cores idle;
+overlapping the chains fills them. Fusion waits for every channel and
+runs beside semi_seeds, which it never reads; semi-supervision rounds
+stay sequential (each round reads the previous fused sim). The order
+is written as data dependencies: training structure on gold ∪ semi
+seeds would only add ``semi_seeds`` to its dependencies. The name
+vectors are encoded once per op, into a lazily persisted pair of
+frames that the embedding channel and every structure round read.
 """
 
 from __future__ import annotations
@@ -62,15 +65,14 @@ def construct_kg_from_pages(
     )
     store.log_metrics("triples_surface", {"rows": store.rows("triples_surface")})
 
-    def build_ents():
+    def build_ents(_):
         names = surface.select(F.col("subj").alias("name")).unionByName(
             surface.select(F.col("obj").alias("name"))
         ).distinct()
         return assign_dense_ids(names, "name")
 
-    ents = store.checkpoint("entities", build_ents)
-
-    def build_triples():
+    def build_triples(done):
+        ents = done["entities"]
         es = ents.select(F.col("name").alias("subj"), F.col("id").alias("src"))
         eo = ents.select(F.col("name").alias("obj"), F.col("id").alias("dst"))
         preds = assign_dense_ids(surface.select(F.col("pred").alias("name")).distinct(), "name")
@@ -79,9 +81,8 @@ def construct_kg_from_pages(
             "src", "rel", "dst"
         ).distinct()
 
-    triples = store.checkpoint("triples", build_triples)
-
-    def build_canonical():
+    def build_canonical(done):
+        ents = done["entities"]
         if not dedup_names:
             return ents.select(F.col("id").alias("node"), F.col("id").alias("component"))
         # same-normalized-name edges → CC → canonical ids
@@ -101,7 +102,14 @@ def construct_kg_from_pages(
         )
         return canonical_ids(pairs, ents, node_col="id")
 
-    canon = store.checkpoint("canonical", build_canonical)
+    # triples and canonical read only entities (and the surface), so
+    # they build together
+    built = _checkpoint_graph(spark, store, {
+        "entities": ((), build_ents),
+        "triples": (("entities",), build_triples),
+        "canonical": (("entities",), build_canonical),
+    })
+    ents, triples, canon = built["entities"], built["triples"], built["canonical"]
 
     def build_materialized():
         c_src = canon.select(F.col("node").alias("src"), F.col("component").alias("c_src"))
@@ -127,8 +135,9 @@ def _checkpoint_graph(
 ) -> dict[str, DataFrame]:
     """Checkpoint every ``name: (deps, build)`` stage of ``graph`` from a
     pool of driver threads, each as soon as the stages it reads are done;
-    ``build`` gets the dict of finished stage frames. The pool has one
-    thread per initially ready stage.
+    ``build`` gets the dict of finished stage frames. The pool may hold
+    one thread per stage, so stages that become ready together (a
+    diamond's two arms) also run together; its threads start on demand.
 
     Why threads: at small sizes a stage's jobs have 1-4 tasks, so one
     driver thread leaves most cores idle between and during its jobs;
@@ -145,7 +154,7 @@ def _checkpoint_graph(
         return [n for n, (deps, _) in pending.items() if all(d in done for d in deps)]
 
     error: BaseException | None = None
-    with ThreadPoolExecutor(max_workers=len(ready())) as pool:
+    with ThreadPoolExecutor(max_workers=len(graph)) as pool:
         running = {}
         while True:
             if error is None:

@@ -13,6 +13,21 @@ Pinned settings that the whole engine assumes:
   plan building (the alignment block builds hundreds of small plans).
   The cost: DataFrame analysis errors lose the Python call-site
   fragment.
+- ICU case mappings off (``spark.sql.icu.caseMappings.enabled``):
+  ``lower``/``upper`` of non-ASCII strings use the JVM's
+  ``String.toLowerCase``/``toUpperCase`` instead of ICU4J. The first
+  ICU case mapping of a session loads ICU's data: a first ``lower()``
+  over seven short names took 1.85 s with ICU and 0.25 s without
+  (local[2], 4 vCPU), and in construct's ``canonical`` stage it was
+  1.7-2.3 s of the first job. Both mappings fold like Python's
+  ``str.lower`` (``École``/``école`` meet, ``Straße`` stays apart from
+  ``STRASSE``) under an English or root locale. The cost: the JVM
+  mapping follows the JVM's DEFAULT LOCALE. Under a Turkish or Azeri
+  default locale, a non-ASCII string lowers ``I`` to dotless ``ı``
+  (``IĞDIR`` → ``ığdır``, not ``iğdir``) and ``İ`` to plain ``i``;
+  all-ASCII strings take Spark's ASCII path and never depend on it.
+  Run the driver and executors with ``-Duser.language=en`` on such
+  hosts to keep canonical names locale-free.
 """
 
 from __future__ import annotations
@@ -84,6 +99,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     for k, v in _MALLOC_TUNING.items():

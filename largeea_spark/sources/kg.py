@@ -21,7 +21,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.ids import assign_dense_ids, dict_encode
+from ..operators.ids import assign_dense_ids, dict_encode, row_index
 
 TRIPLE_SCHEMA = "s string, p string, o string"
 LINK_SCHEMA = "u1 string, u2 string"
@@ -98,12 +98,14 @@ def read_links_tsv(spark: SparkSession, path: str) -> DataFrame:
     """S2 scan: gold links TSV in file order (`dataset.py:103-111`).
 
     File order matters for the reference's first-20% train split
-    (`dataset.py:32`), so we attach a file-order index via zipWithIndex
-    (single-file TSV compatibility path; engine-native fixtures carry an
-    explicit ``idx`` column instead)."""
+    (`dataset.py:32`), so we attach a file-order index ``idx``: the
+    row's position in scan order (for one file, its 0-based line
+    number, however many splits the scan cuts it into), numbered in
+    the JVM by ``row_index``, so no link row goes through a Python
+    worker (single-file TSV compatibility path; engine-native fixtures
+    carry an explicit ``idx`` column instead)."""
     raw = spark.read.csv(path, sep="\t", schema=LINK_SCHEMA, quote="")
-    indexed = raw.rdd.zipWithIndex().map(lambda p: (*p[0], p[1]))
-    return spark.createDataFrame(indexed, "u1 string, u2 string, idx long")
+    return row_index(raw, "idx")
 
 
 def encode_links(raw_links: DataFrame, ent1: DataFrame, ent2: DataFrame,

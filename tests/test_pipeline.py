@@ -80,6 +80,35 @@ def test_construct_canonical_ids_merge_normalized_names(spark, tmp_path):
     assert canon == want
 
 
+def test_construct_canonical_case_folding_matches_python_lower(spark, tmp_path):
+    """Canonical names fold case as Python's ``str.lower`` does, under
+    the session's pinned JVM case mapping: accented names that differ
+    only in case merge (``École``/``école``), and ``Straße`` does not
+    meet ``STRASSE`` (``straße`` ≠ ``strasse``)."""
+    import pandas as pd
+
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    subjects = ["École Normale", "école normale", "ÉCOLE NORMALE", "Straße",
+                "STRASSE", "strasse", "ΟΔΟΣ", "οδος", "Ärger", "ärger"]
+    rows = [{"url": f"http://site.example/p{i}", "warc_ts": None,
+             "html": f"<html><body><h1>T</h1><p>{n} locatedIn Uniq{i}.</p></body></html>".encode(),
+             "text": f"T\n{n} locatedIn Uniq{i}.", "lang": "en"}
+            for i, n in enumerate(subjects)]
+    pages = spark.createDataFrame(
+        pd.DataFrame(rows),
+        schema="url string, warc_ts timestamp, html binary, text string, lang string")
+    out = construct_kg_from_pages(spark, pages, StageStore(spark, str(tmp_path / "run")))
+    ids = {r.name: r.id for r in out["entities"].collect()}
+    canon = {r.node: r.component for r in out["canonical"].collect()}
+    assert set(ids) >= {n.replace(" ", "_") for n in subjects}
+    want = {i: min(j for m, j in ids.items() if m.lower() == n.lower())
+            for n, i in ids.items()}
+    assert canon == want
+    c = {n: canon[ids[n.replace(" ", "_")]] for n in subjects}
+    assert c["École Normale"] == c["école normale"] == c["ÉCOLE NORMALE"]
+    assert c["Straße"] != c["STRASSE"] == c["strasse"]
+
+
 def test_trained_batched_structure_channel(spark):
     """M2 shape: per-batch numpy margin training in applyInPandas must
     produce a usable, deterministic structure sim."""
@@ -234,3 +263,29 @@ def test_checkpoint_graph_failure_joins_every_build(spark, tmp_path):
         "b": (("a",), lambda s: s["a"].where("id % 2 = 0")),
     })
     assert sorted(r.id for r in out["b"].collect()) == [0, 2, 4]
+
+
+def test_checkpoint_graph_runs_stages_ready_together(spark, tmp_path):
+    """A diamond: both arms become ready when the root is written, and
+    they build at the same time. Each arm waits at a two-party barrier,
+    which breaks if the pool runs the arms one after the other."""
+    import threading
+
+    from largeea_spark.plans.pipeline import _checkpoint_graph
+
+    meet = threading.Barrier(2, timeout=20)
+
+    def arm(parity):
+        def build(s):
+            meet.wait()
+            return s["root"].where(f"id % 2 = {parity}")
+
+        return build
+
+    out = _checkpoint_graph(spark, StageStore(spark, str(tmp_path / "diamond")), {
+        "root": ((), lambda _: spark.range(6)),
+        "even": (("root",), arm(0)),
+        "odd": (("root",), arm(1)),
+        "both": (("even", "odd"), lambda s: s["even"].unionByName(s["odd"])),
+    })
+    assert sorted(r.id for r in out["both"].collect()) == list(range(6))

@@ -140,6 +140,63 @@ def test_assign_dense_ids_window_free_is_dense_and_stable(spark):  # noqa: F811
     assert "Window" not in plan
 
 
+def test_assign_dense_ids_more_partitions_than_keys(spark):  # noqa: F811
+    """5 keys over 17 range partitions: some partitions are empty, and
+    the ids are still the dense lexicographic rank."""
+    from largeea_spark.operators.ids import assign_dense_ids
+
+    keys = ["e", "a", "d", "b", "c"]
+    df = spark.createDataFrame([(k,) for k in keys], "key string")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "17")
+        got = sorted(tuple(r) for r in assign_dense_ids(df, "key").collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert got == [(k, i) for i, k in enumerate(sorted(keys))]
+
+
+def test_assign_dense_ids_empty_input(spark):  # noqa: F811
+    from largeea_spark.operators.ids import assign_dense_ids
+
+    out = assign_dense_ids(spark.createDataFrame([], "key string"), "key", "kid")
+    assert out.columns == ["key", "kid"]
+    assert dict(out.dtypes)["kid"] == "bigint"
+    assert out.collect() == []
+
+
+def test_assign_dense_ids_offsets_stay_in_jvm(spark):  # noqa: F811
+    """The per-partition offsets are a literal of the id plan, not a
+    DataFrame built on the driver: the plan over the checkpointed
+    layout has no join and no exchange (a broadcast of Python rows
+    would start a Python worker on a cold session)."""
+    from largeea_spark.operators.ids import assign_dense_ids
+
+    df = spark.createDataFrame([(f"k{i}",) for i in range(50)], "key string")
+    plan = assign_dense_ids(df, "key")._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Exchange" not in plan, plan
+
+
+def test_read_links_tsv_idx_is_line_number_across_splits(spark, tmp_path):  # noqa: F811
+    """A links TSV cut into several scan splits: ``idx`` is still each
+    row's 0-based line number in the file."""
+    from largeea_spark.sources.kg import read_links_tsv
+
+    path = tmp_path / "ent_links"
+    n = 300
+    path.write_text("".join(f"http://a/e{i}\thttp://b/{'x' * (i % 7)}e{i}\n"
+                            for i in range(n)), encoding="utf-8")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1024")
+        assert spark.read.csv(str(path), sep="\t").rdd.getNumPartitions() > 4
+        got = [(r.u1, r.idx) for r in read_links_tsv(spark, str(path)).collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert sorted(got, key=lambda t: t[1]) == [(f"http://a/e{i}", i) for i in range(n)]
+
+
 def test_encode_graph_hash_keyed_matches_string_path(spark):  # noqa: F811
     """Hash-keyed triple encoding ≡ string-keyed encoding, decoded back
     to URI space; and the forced-collision fallback gives the same."""
