@@ -33,10 +33,10 @@ def explode_band_keys(
     ``num_perm`` min-aggregates ``h_i = min xxhash64(i, tok)`` — a single
     pass over the tokens, one shuffle on id, map-side partial mins. Band
     b's key is ``xxhash64(b, h_{b·rows}, …, h_{b·rows+rows-1})``.
-    bands*rows must equal num_perm. Threshold ≈ (1/b)^(1/r); defaults
-    (32, 4) → ≈0.42, chosen to over-generate vs the reference's Jaccard
-    0.5 (`text_sim.py:194-196`), SURVEY.md §7.4.6. Docs with zero tokens
-    drop out (they have no signature).
+    bands*rows must equal num_perm. Threshold ≈ (1/b)^(1/r); the string
+    channel's (32, 4) → ≈0.42 is ``operators.blocking.NAME_LSH``. Docs
+    with zero tokens drop out (they have no signature). ``id_col`` may
+    be any groupable column, a struct included.
 
     The whole plan is ONE SQL text: built through the Column API, its
     ~160 expressions cost one py4j round trip per sub-expression.

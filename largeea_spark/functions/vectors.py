@@ -129,15 +129,15 @@ def model_name_encoder(loader, batch_size: int = 512):
 
 
 def encode_names(df: DataFrame, name_col: str, out_col: str = "emb",
-                 dim: int = 64, n: int = 3, encoder="hashed") -> DataFrame:
+                 dim: int = 64, encoder="hashed") -> DataFrame:
     """Attach the name embedding (contract of A6/M9:
     ``id → array<float>``).
 
-    ``encoder``: ``"hashed"`` (default — deterministic char-n-gram
+    ``encoder``: ``"hashed"`` (default — deterministic char-trigram
     feature hashing) or a zero-arg model loader (see
     ``model_name_encoder``) for a real transformer encoder."""
     if encoder == "hashed":
-        udf = hashed_name_encoder(dim, n)
+        udf = hashed_name_encoder(dim)
     elif callable(encoder):
         udf = model_name_encoder(encoder)
     else:

@@ -1,10 +1,12 @@
 """MinHash-LSH candidate blocking (SURVEY.md J7/F14/O2).
 
 Reference: datasketch MinHashLSH at Jaccard 0.5, 128 perms, redis store,
-queried per-entity (`text_sim.py:181-224`). Engine: signatures +
-band keys computed JVM-side (functions.hashing), candidates from a
-sort-merge equi-join on ``(band, key)`` — broadcast-free by design (the
-north star names this join shape explicitly). No server, no driver loop.
+queried per-entity (`text_sim.py:181-224`). Engine: both KGs' token
+sets are tagged with their side and run through ONE band-key plan
+(signatures + band keys computed JVM-side, functions.hashing);
+candidates come from a sort-merge equi-join of side 1 to side 2 on
+``(band, key)`` — broadcast-free by design (the north star names this
+join shape explicitly). No server, no driver loop.
 
 Scale: band-bucket join cost is Σ_bucket |e1_bucket|·|e2_bucket|. Hot
 buckets (stop-token-heavy names) are handled by ``max_bucket`` — buckets
@@ -41,47 +43,44 @@ def widen_if_narrow(df: DataFrame, *cols: str) -> DataFrame:
     )
 
 
+# the string channel's LSH shape (num_perm, bands, rows): banding fires
+# at Jaccard ≈ (1/32)^(1/4) ≈ 0.42, over-generating vs the reference's
+# 0.5 (`text_sim.py:194-196`), SURVEY.md §7.4.6
+NAME_LSH = (128, 32, 4)
+
+
 def minhash_candidates(
     df1: DataFrame, df2: DataFrame, id_col: str, token_col: str,
-    num_perm: int = 128, bands: int = 32, rows: int = 4,
-    max_bucket: int | None = 10000, stats: dict | None = None,
+    max_bucket: int = 10000, stats: dict | None = None,
 ) -> DataFrame:
     """Candidate pairs (src=id from df1, dst=id from df2) whose MinHash
     band keys collide in ≥1 band. Distinct pairs, long-format.
+
+    Both sides are tagged ``sid = struct(side, id)`` and go through ONE
+    band-key plan; one window over (side, band, key) drops each side's
+    buckets holding more than ``max_bucket`` of that side's rows.
 
     ``stats``: pass a dict to receive hot-bucket drop counts
     (``dropped_buckets_{1,2}``, ``dropped_rows_{1,2}``) — the no-silent-
     caps observability hook (wired into StageStore metrics by the
     pipeline's string-channel stage)."""
-    b1 = explode_band_keys(widen_if_narrow(df1, id_col), id_col, token_col,
-                           num_perm, bands, rows)
-    b2 = explode_band_keys(widen_if_narrow(df2, id_col), id_col, token_col,
-                           num_perm, bands, rows)
-    left = b1.select(F.col(id_col).alias("src"), "band", "key")
-    right = b2.select(F.col(id_col).alias("dst"), "band", "key")
-    if max_bucket is not None:
-        left, right = _cap_buckets(left, right, max_bucket, stats)
-    return left.join(right, ["band", "key"]).select("src", "dst").distinct()
+    def tag(df, side):
+        return df.select(F.struct(F.lit(side).alias("side"), F.col(id_col).alias("id"))
+                         .alias("sid"), F.col(token_col).alias("toks"))
 
-
-def _cap_buckets(left: DataFrame, right: DataFrame, max_bucket: int,
-                 stats: dict | None = None) -> tuple[DataFrame, DataFrame]:
-    """Drop each side's (band, key) buckets holding more than
-    ``max_bucket`` of that side's rows. Both sides' band keys are tagged
-    with ``side`` and counted by ONE window over (side, band, key)."""
-    tagged = left.select(F.lit(1).alias("side"), F.col("src").alias("id"),
-                         "band", "key").unionByName(
-        right.select(F.lit(2).alias("side"), F.col("dst").alias("id"),
-                     "band", "key"))
-    counted = tagged.withColumn(
-        "n", F.count("*").over(Window.partitionBy("side", "band", "key")))
+    keys = explode_band_keys(
+        widen_if_narrow(tag(df1, 1).unionByName(tag(df2, 2)), "sid"), "sid", "toks",
+        *NAME_LSH)
+    counted = keys.withColumn("n", F.count("*").over(
+        Window.partitionBy("sid.side", "band", "key")))
     if stats is not None:
         # materialize the counted band keys ONCE (localCheckpoint) so the
         # stats action and the keep filter share one band-key pass
         # instead of paying it twice for observability
         counted = counted.localCheckpoint(eager=True)
         hot = {r["side"]: r for r in (
-            counted.where(F.col("n") > max_bucket).groupBy("side")
+            counted.where(F.col("n") > max_bucket)
+            .groupBy(F.col("sid.side").alias("side"))
             .agg(F.countDistinct("band", "key").alias("nb"),
                  F.count("*").alias("nr"))
             .collect()
@@ -91,10 +90,13 @@ def _cap_buckets(left: DataFrame, right: DataFrame, max_bucket: int,
             stats[f"dropped_buckets_{side}"] = int(r["nb"]) if r else 0
             stats[f"dropped_rows_{side}"] = int(r["nr"]) if r else 0
     keep = counted.where(F.col("n") <= max_bucket)
-    return (
-        keep.where(F.col("side") == 1).select(F.col("id").alias("src"), "band", "key"),
-        keep.where(F.col("side") == 2).select(F.col("id").alias("dst"), "band", "key"),
-    )
+
+    def kept(side, name):
+        return keep.where(F.col("sid.side") == side).select(
+            F.col("sid.id").alias(name), "band", "key")
+
+    return kept(1, "src").join(kept(2, "dst"), ["band", "key"]).select(
+        "src", "dst").distinct()
 
 
 def jaccard_selfjoin_blocked(

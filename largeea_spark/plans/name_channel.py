@@ -23,11 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.levenshtein import levenshtein_ratio
-from ..functions.names import normalize_name, underscore_token_set
+from ..functions.names import normalize_name, tokenize_ws, underscore_token_set
 from ..functions.vectors import encode_names
 from ..operators import simops
 from ..operators.blocking import minhash_candidates
+from ..operators.ids import assign_dense_ids
 from ..operators.knn import knn_topk
+from ..operators.tfidf import stop_tokens, tf_idf
 from ..sources.kg import KGPair
 from ..session import session_shuffle_width
 
@@ -40,12 +42,11 @@ def entity_names(ent: DataFrame, punct_to_space: bool) -> DataFrame:
     )
 
 
-def string_similarity(
-    pair: KGPair, num_perm: int = 128, bands: int = 32, rows: int = 4,
-    stats: dict | None = None,
-) -> DataFrame:
+def string_similarity(pair: KGPair, stats: dict | None = None) -> DataFrame:
     """Phase 3 (`sparse_string_sim`, `text_sim.py:227-243`):
-    MinHash-blocked Levenshtein-ratio sim between the two KGs' names.
+    MinHash-blocked Levenshtein-ratio sim between the two KGs' names
+    (LSH shape ``blocking.NAME_LSH``; ``stats`` as in
+    ``minhash_candidates``).
 
     The reference's candidate-subspace projection P5 (`main.py:302`,
     test-pair entities only) is a caller-side semi-join of ``pair``'s
@@ -54,8 +55,7 @@ def string_similarity(
     n2 = entity_names(pair.kg2.ent, punct_to_space=True)
     t1 = n1.withColumn("toks", underscore_token_set("name"))
     t2 = n2.withColumn("toks", underscore_token_set("name"))
-    cand = minhash_candidates(t1, t2, "id", "toks", num_perm, bands, rows,
-                              stats=stats)
+    cand = minhash_candidates(t1, t2, "id", "toks", stats=stats)
     # pin the DP-scoring stage at full shuffle width: candidate-pair
     # rows are ~100 bytes but the Levenshtein DP is O(|a|·|b|) compute
     # per row — AQE's byte-based coalescing would serialize it (the
@@ -91,7 +91,7 @@ IVF_AUTO_THRESHOLD = 100_000
 
 
 def name_embeddings(
-    pair: KGPair, dim: int = 64, ngram: int = 3, encoder="hashed",
+    pair: KGPair, dim: int = 64, encoder="hashed",
 ) -> tuple[DataFrame, DataFrame]:
     """Encode half of phases 1-2: (id, emb) per KG for the normalized
     (P1, punc='') names. Encoder is the deterministic hashed
@@ -99,7 +99,7 @@ def name_embeddings(
     same DataFrame contract, swap freely."""
     return tuple(
         encode_names(entity_names(kg.ent, punct_to_space=False), "name",
-                     dim=dim, n=ngram, encoder=encoder).select("id", "emb")
+                     dim=dim, encoder=encoder).select("id", "emb")
         for kg in (pair.kg1, pair.kg2)
     )
 
@@ -151,8 +151,7 @@ def name_embedding_knn(
 
 
 def name_embedding_similarity(
-    pair: KGPair, k: int = 50, dim: int = 64, ngram: int = 3,
-    encoder="hashed",
+    pair: KGPair, k: int = 50, dim: int = 64, encoder="hashed",
     method: str = "auto", nlist: int | None = None,
     nprobe: int | None = None, ivf_threshold: int | None = None,
     stats: dict | None = None,
@@ -160,15 +159,14 @@ def name_embedding_similarity(
     """Phases 1-2 (`main.py:301-320`): ``name_embeddings`` (encoder)
     then ``name_embedding_knn`` (global top-k kNN); see both for the
     parameters."""
-    e1, e2 = name_embeddings(pair, dim=dim, ngram=ngram, encoder=encoder)
+    e1, e2 = name_embeddings(pair, dim=dim, encoder=encoder)
     return name_embedding_knn(e1, e2, k=k, method=method, nlist=nlist,
                               nprobe=nprobe, ivf_threshold=ivf_threshold,
                               stats=stats)
 
 
 def token_level_similarity(
-    pair: KGPair, dim: int = 64, ngram: int = 3, token_k: int = 5,
-    drop_stop_tokens: int | None = 25,
+    pair: KGPair, dim: int = 64, token_k: int = 5,
 ) -> DataFrame:
     """L4 (`sparse_semantic_sim`, `text_sim.py:112-141,247-262`):
     TF-IDF-weighted token-level similarity — ``E1ᵀ · S_tok · E2`` where
@@ -180,34 +178,22 @@ def token_level_similarity(
         S_tok  ← blocked kNN over hashed token embeddings (J9, top-k)
         sim    ← spspmm(spspmm(E1, S_tok), E2ᵀ)   (two L1 contractions)
 
-    Optionally drops the ``drop_stop_tokens`` highest-df tokens (U6,
-    `text_utils.py:63-89` high-freq + punct stop set)."""
-    from ..functions.vectors import encode_names
-    from ..operators import simops
-    from ..operators.knn import knn_topk
-    from ..operators.tfidf import stop_tokens, tf_idf
-
+    Each KG drops its 25 highest-df tokens (U6, `text_utils.py:63-89`
+    high-freq + punct stop set)."""
     n1 = entity_names(pair.kg1.ent, punct_to_space=True)
     n2 = entity_names(pair.kg2.ent, punct_to_space=True)
-    from ..functions.names import tokenize_ws
-
     t1 = n1.select("id", tokenize_ws(F.col("name")).alias("toks"))
     t2 = n2.select("id", tokenize_ws(F.col("name")).alias("toks"))
-    post1 = tf_idf(t1, "id", "toks")
-    post2 = tf_idf(t2, "id", "toks")
-    if drop_stop_tokens:
-        stops1 = stop_tokens(t1, "id", "toks", k=drop_stop_tokens).select("token")
-        stops2 = stop_tokens(t2, "id", "toks", k=drop_stop_tokens).select("token")
-        post1 = post1.join(stops1, "token", "left_anti")
-        post2 = post2.join(stops2, "token", "left_anti")
+    post1 = tf_idf(t1, "id", "toks").join(
+        stop_tokens(t1, "id", "toks", k=25).select("token"), "token", "left_anti")
+    post2 = tf_idf(t2, "id", "toks").join(
+        stop_tokens(t2, "id", "toks", k=25).select("token"), "token", "left_anti")
 
     # token dictionaries + embeddings (hashed n-gram encoder, A6 contract)
-    from ..operators.ids import assign_dense_ids
-
     v1 = assign_dense_ids(post1.select("token").distinct(), "token", "tid")
     v2 = assign_dense_ids(post2.select("token").distinct(), "token", "tid")
-    e1 = encode_names(v1.withColumnRenamed("token", "name"), "name", dim=dim, n=ngram)
-    e2 = encode_names(v2.withColumnRenamed("token", "name"), "name", dim=dim, n=ngram)
+    e1 = encode_names(v1.withColumnRenamed("token", "name"), "name", dim=dim)
+    e2 = encode_names(v2.withColumnRenamed("token", "name"), "name", dim=dim)
     s_tok = knn_topk(
         e1.select(F.col("tid").alias("id"), "emb"),
         e2.select(F.col("tid").alias("id"), "emb"),

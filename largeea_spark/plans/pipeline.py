@@ -254,6 +254,13 @@ def align_kg_pair(
     emb1, emb2 = (e.localCheckpoint(eager=False) for e in name_channel.name_embeddings(
         pair, dim=emb_dim, encoder=encoder))
 
+    def build_embed(_):
+        # cold build only, as for sim_string: the kNN path 'auto' chose
+        stats: dict = {}
+        sim = name_channel.name_embedding_knn(emb1, emb2, k=knn_k, stats=stats)
+        store.log_metrics("sim_embed_knn", stats)
+        return sim
+
     def structure_build(extra_links: DataFrame | None):
         def build(*_):
             from .structure_channel import trained_batched_structure_similarity
@@ -289,7 +296,7 @@ def align_kg_pair(
     # which semi_seeds never reads, once every channel is.
     graph = {
         "sim_string": ((), build_string),
-        "sim_embed": ((), lambda _: name_channel.name_embedding_knn(emb1, emb2, k=knn_k)),
+        "sim_embed": ((), build_embed),
         "semi_seeds": (("sim_string", "sim_embed"),
                        lambda s: name_channel.semi_seeds(s["sim_embed"], s["sim_string"])),
     }

@@ -1,5 +1,9 @@
 """Cross-parallelism determinism check: identical alignment RESULTS
-(not just metrics) at different local[N]."""
+(not just metrics) at different local[N].
+
+Usage: python scripts/xpar_check.py MASTER SHUFFLE_PARTITIONS
+(e.g. "local[4]" 4). Prints the five result hashes and compares them
+with PINNED; exits 1, naming each hash that differs, when any does."""
 import os
 import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -9,6 +13,15 @@ from largeea_spark.session import get_spark
 from largeea_spark.plans import name_channel
 from largeea_spark.sources import fixtures
 from largeea_spark.sources.kg import KGPair, encode_graph, encode_links
+
+# md5 of the sorted result rows; equal at every master and width
+PINNED = {
+    "string": "169a15a484534d08f9237fbe738d21f7",
+    "embed": "6fcd1f4bc9220cedbdf0e1ccf9d65669",
+    "structure": "48256d8664596777b8c5df24522099e2",
+    "ivf": "c419e4257d6cec50e1d023c8439a4240",
+    "cc": "7883fd579a96f648c96e5118b78d3425",
+}
 
 master = sys.argv[1]
 spark = get_spark("xpar", master=master, shuffle_partitions=int(sys.argv[2]))
@@ -61,3 +74,9 @@ print(f"XPAR {master} string={h} n={len(rows)} embed={h2} n2={len(rows2)} "
       f"structure={h3} n3={len(rows3)} ivf={h4} n4={len(rows4)} "
       f"cc={h5} n5={len(rows5)}")
 spark.stop()
+got = {"string": h, "embed": h2, "structure": h3, "ivf": h4, "cc": h5}
+bad = [k for k in PINNED if got[k] != PINNED[k]]
+if bad:
+    print("XPAR FAIL: differs from the pinned hash: " + ", ".join(bad))
+    sys.exit(1)
+print("XPAR OK: all five hashes equal the pinned values")

@@ -3,6 +3,8 @@ seed-anchor trainer, iterative semi-supervision, link extension,
 top-k correspondence batching, sharded export, tokenizer/levenshtein
 edge cases."""
 
+import json
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -431,24 +433,90 @@ def test_power_mean_pooling_complex_root_parity(spark):
 def test_minhash_drop_stats_surface(spark):
     from largeea_spark.operators.blocking import minhash_candidates
 
-    # 60 rows share one token set → every band bucket is hot at cap 10
+    # 60 rows share one token set → all 32 band buckets are hot at cap
+    # 10: 32 buckets and 32 × 60 = 1920 band-key rows dropped per side
     hot = [(i, ["same", "tokens", "here"]) for i in range(60)]
     cold = [(100 + i, [f"uniq{i}", f"tok{i}"]) for i in range(5)]
     df = spark.createDataFrame(hot + cold, "id long, toks array<string>")
     stats: dict = {}
     cand = minhash_candidates(df, df, "id", "toks", max_bucket=10, stats=stats)
-    assert stats["dropped_buckets_1"] > 0
-    assert stats["dropped_rows_1"] >= 60
+    assert stats == {"dropped_buckets_1": 32, "dropped_rows_1": 1920,
+                     "dropped_buckets_2": 32, "dropped_rows_2": 1920}
     # hot group generates no candidates; cold self-pairs survive
     assert cand.where(F.col("src") < 100).count() == 0
     # only side 1 hot: side 2's counts are 0, not missing
     stats1: dict = {}
     cand1 = minhash_candidates(df, df.where(F.col("id") >= 100), "id", "toks",
                                max_bucket=10, stats=stats1)
-    assert stats1["dropped_buckets_1"] == stats["dropped_buckets_1"]
-    assert stats1["dropped_rows_1"] == stats["dropped_rows_1"]
-    assert stats1["dropped_buckets_2"] == 0 and stats1["dropped_rows_2"] == 0
+    assert stats1 == {"dropped_buckets_1": 32, "dropped_rows_1": 1920,
+                      "dropped_buckets_2": 0, "dropped_rows_2": 0}
     assert sorted(tuple(r) for r in cand1.collect()) == [(100 + i, 100 + i) for i in range(5)]
+    # side 1 is only the hot rows: every side-1 band key is dropped, so
+    # the join has an empty side and yields nothing
+    stats2: dict = {}
+    cand2 = minhash_candidates(df.where(F.col("id") < 100), df, "id", "toks",
+                               max_bucket=10, stats=stats2)
+    assert stats2 == stats
+    assert cand2.count() == 0
+
+
+def test_minhash_candidates_match_per_side_band_keys(spark):
+    """The one tagged band-key plan gives exactly the cross-side (band,
+    key) collisions of two separate ``explode_band_keys`` calls, with
+    each side's buckets over the cap removed (computed here in Python)."""
+    from collections import Counter
+
+    from largeea_spark.functions.hashing import explode_band_keys
+    from largeea_spark.operators.blocking import NAME_LSH, minhash_candidates
+
+    base = [f"t{j}" for j in range(8)]
+    side1 = [
+        (1, base),                                  # shared verbatim
+        (2, base[:7] + ["x1"]),                     # near-duplicates of 1:
+        (3, base[:7] + ["x2"]),                     # a band where all four
+        (4, base[:7] + ["x3"]),                     # collide is over the cap
+        (5, ["solo", "left"]),                      # disjoint
+        (6, ["alpha", "beta", "gamma", "delta"]),
+    ]
+    side2 = [
+        (11, base),
+        (12, base[:7] + ["y1"]),
+        (13, ["alpha", "beta", "gamma", "epsilon"]),  # near-duplicate of 6
+        (14, ["solo", "right"]),
+        (15, ["nothing", "shared"]),
+    ]
+    schema = "id long, toks array<string>"
+    df1 = spark.createDataFrame(side1, schema)
+    df2 = spark.createDataFrame(side2, schema)
+    cap = 3
+
+    def bucket_rows(df):
+        return [(r["id"], r["band"], r["key"]) for r in
+                explode_band_keys(df, "id", "toks", *NAME_LSH).collect()]
+
+    def capped(rows):
+        n = Counter((b, k) for _, b, k in rows)
+        kept = [(i, b, k) for i, b, k in rows if n[(b, k)] <= cap]
+        return kept, sum(1 for c in n.values() if c > cap), len(rows) - len(kept)
+
+    kept1, hot1, hot_rows1 = capped(bucket_rows(df1))
+    kept2, hot2, _ = capped(bucket_rows(df2))
+    by_key: dict = {}
+    for i, b, k in kept2:
+        by_key.setdefault((b, k), []).append(i)
+    want = sorted({(i, j) for i, b, k in kept1 for j in by_key.get((b, k), [])})
+    # the fixture exercises the cap, and collisions survive it
+    assert hot1 >= 1 and hot2 == 0
+    assert want and (1, 11) in want
+
+    stats: dict = {}
+    got = minhash_candidates(df1, df2, "id", "toks", max_bucket=cap, stats=stats)
+    assert sorted(tuple(r) for r in got.collect()) == want
+    # without stats the counted keys are not checkpointed: same pairs
+    lazy = minhash_candidates(df1, df2, "id", "toks", max_bucket=cap)
+    assert sorted(tuple(r) for r in lazy.collect()) == want
+    assert stats == {"dropped_buckets_1": hot1, "dropped_rows_1": hot_rows1,
+                     "dropped_buckets_2": 0, "dropped_rows_2": 0}
 
 
 def test_pipeline_logs_blocking_metrics(spark, tmp_path):
@@ -465,6 +533,10 @@ def test_pipeline_logs_blocking_metrics(spark, tmp_path):
                   use_structure=False)
     m = store.metrics()
     assert m.where(F.col("stage") == "sim_string_blocking").count() == 1
+    # the kNN path 'auto' chose, and the index size it chose from
+    knn = [json.loads(r.metrics) for r in
+           m.where(F.col("stage") == "sim_embed_knn").collect()]
+    assert knn == [{"knn_method": "brute", "n_index": kg2.ent.count()}]
 
 
 # ---------------------------------------------------------------------------
