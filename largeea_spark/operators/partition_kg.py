@@ -292,8 +292,8 @@ def seed_aware_placement(
     triples in ONE executor task (``_placement_kernel``); returns its
     ``PLACEMENT_SCHEMA`` rows, checkpointed: the output is read by the
     batch payload and by the partition and correspondence slices
-    (``seed_aware_partition``, the structure channel's stats), so the
-    task runs once however many of them are used.
+    (``placement_parts``, the structure channel's stats), so the task
+    runs once however many of them are used.
 
     ``top_k_corr``: each KG1 part's batch unions its top-k
     corresponding KG2 parts (`top_k_corr=5`, `sampler.py:211,248-262`)
@@ -326,24 +326,17 @@ def seed_aware_placement(
 
 def placement_parts(placed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(parts1, parts2): DataFrame(id, part int) per KG from the
-    placement rows."""
+    placement rows of ``seed_aware_placement``.
+
+    Invariants (tested): every entity in exactly one part; every train
+    pair co-located (same part id in both outputs); with the placement's
+    ``cap``, no part larger than cap (salted subparts encoded as
+    part*SALT+j)."""
     return tuple(
         placed.where(F.col("kind") == f"part{s}")
         .select(F.col("a").alias("id"), F.col("batch").alias("part"))
         for s in (1, 2)
     )
-
-
-def seed_aware_partition(
-    pair: KGPair, k: int, n_iter: int = 3, cap: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (parts1, parts2): DataFrame(id, part int) per KG — the
-    part rows of ``seed_aware_placement``.
-
-    Invariants (tested): every entity in exactly one part; every train
-    pair co-located (same part id in both outputs); with ``cap``, no
-    part larger than cap (salted subparts encoded as part*SALT+j)."""
-    return placement_parts(seed_aware_placement(pair, k, n_iter, cap))
 
 
 def random_partition(
@@ -355,7 +348,7 @@ def random_partition(
     counterparts inherit their partner's part (the same hard train
     co-location invariant as the seed-aware path, so G8 comparisons
     isolate the effect of structure-aware placement), all other KG2
-    entities hashed. Same output contract as ``seed_aware_partition``."""
+    entities hashed. Same output contract as ``placement_parts``."""
     train = pair.links.where(F.col("split") == "train").select("e1", "e2")
     part_of = F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(k)).cast("int")
     parts1 = pair.kg1.ent.select("id").withColumn("part", part_of)

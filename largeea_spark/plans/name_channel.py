@@ -1,6 +1,5 @@
 """Name channel: string similarity (reference phase 3) + name-embedding
-similarity (phases 1-2) + semi-seed mining (phase 0 prologue).
-SURVEY.md §3.1, §3.2.
+similarity (phases 1-2). SURVEY.md §3.1, §3.2.
 
 Lifecycle parity (`main.py:301-336`):
   phase 1-2: normalize names (P1, punc='') → encode → top-k kNN with
@@ -8,8 +7,6 @@ Lifecycle parity (`main.py:301-336`):
   phase 3:   normalize (P1+P2) → underscore token sets (F4) →
              MinHash-LSH candidates (J7) → Levenshtein ratio (F6/J10)
              → sim table.
-  phase 0 prologue (`main.py:203-216`): fuse [global, string] with
-             weights [1.0, 0.05] → mutual argmax (W10) → semi seeds.
 
 Every stage returns the long-format sim IR (src, dst, sim) keyed by
 GLOBAL entity ids of the two KGs. Phases 1-2 split into an encode half
@@ -210,14 +207,3 @@ def token_level_similarity(
         F.col("tid").alias("src"), F.col("id").alias("dst"), F.col("tf_idf").alias("sim")
     )
     return simops.spspmm(simops.spspmm(m1, s_tok), m2)
-
-
-def semi_seeds(global_sim: DataFrame, string_sim: DataFrame) -> DataFrame:
-    """Phase 0 prologue (`get_semi_link`, `main.py:203-216`): fuse the
-    name sims at the reference weights [1.0, 0.05] then keep
-    mutual-argmax pairs (W10) as training seeds.
-    Returns DataFrame(e1, e2)."""
-    fused = simops.fuse([global_sim, string_sim], [1.0, 0.05])
-    return simops.bi_mapping(fused).select(
-        F.col("src").alias("e1"), F.col("dst").alias("e2")
-    )

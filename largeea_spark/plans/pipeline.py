@@ -8,7 +8,6 @@ Phase graph (each phase = one StageStore checkpoint, resumable):
         └──────────▶ entity dim (dict-encode) (A1)
   triples_surface ──encode──▶ triples         (S1 joins)
   ent dims ──name channel──▶ sim_string, sim_embed   (phases 3, 1-2)
-  sim_* ──semi seeds──▶ seeds                 (phase 0 prologue)
   triples+gold seeds ──structure──▶ sim_structure  (phase 0)
   sims ──fuse──▶ sim_fused ──mutual argmax──▶ links
   links ──connected components──▶ canonical ids
@@ -22,19 +21,20 @@ and canonical read only the entity dim (and the surface triples), so
 they build side by side once entities is written; kg_canonical waits
 for both. In the two-KG path, sim_string, sim_embed, sim_structure
 (and sim_token when enabled) read only the input pair — the structure
-channel trains on GOLD seeds, not on semi_seeds — so ``align_kg_pair``
-checkpoints them together, and semi_seeds starts as soon as string and
-embed are done. The reference runs the same independence as separate
+channel trains on GOLD seeds — so ``align_kg_pair`` checkpoints them
+together. The reference runs the same independence as separate
 ``--phase`` processes that hand off through files
 (`main.py:183-200,282-368`). At benchmark size each stage is a chain
 of 1-4-task jobs, so one driver thread leaves most cores idle;
 overlapping the chains fills them. Fusion waits for every channel and
-runs beside semi_seeds, which it never reads; semi-supervision rounds
-stay sequential (each round reads the previous fused sim). The order
-is written as data dependencies: training structure on gold ∪ semi
-seeds would only add ``semi_seeds`` to its dependencies. The name
-vectors are encoded once per op, into a lazily persisted pair of
-frames that the embedding channel and every structure round read.
+is the last stage of the graph; semi-supervision rounds stay
+sequential (each round reads the previous fused sim). The order is
+written as data dependencies, so training structure on name-mined
+seeds (the reference's ``get_semi_link`` augmentation,
+`main.py:203-216,286`) would be one more node that ``sim_structure``
+depends on. The name vectors are encoded once per op, into a lazily
+persisted pair of frames that the embedding channel and every
+structure round read.
 """
 
 from __future__ import annotations
@@ -292,24 +292,20 @@ def align_kg_pair(
 
     # stage → (stages it reads, build). The channels read only the input
     # pair (structure trains on GOLD seeds), so they build concurrently;
-    # semi_seeds starts once string and embed are done, and sim_fused,
-    # which semi_seeds never reads, once every channel is.
+    # sim_fused starts once every channel is done.
     graph = {
         "sim_string": ((), build_string),
         "sim_embed": ((), build_embed),
-        "semi_seeds": (("sim_string", "sim_embed"),
-                       lambda s: name_channel.semi_seeds(s["sim_embed"], s["sim_string"])),
     }
     if use_structure:
         graph["sim_structure"] = ((), structure_build(None))
     if use_token_channel:
         graph["sim_token"] = ((), lambda _: name_channel.token_level_similarity(
             pair, dim=emb_dim))
-    graph["sim_fused"] = (tuple(n for n in graph if n != "semi_seeds"),
-                          lambda s: fuse_round(s, s.get("sim_structure")))
+    graph["sim_fused"] = (tuple(graph), lambda s: fuse_round(s, s.get("sim_structure")))
     built = _checkpoint_graph(spark, store, graph)
 
-    fused, seeds = built["sim_fused"], built["semi_seeds"]
+    fused = built["sim_fused"]
     sims = {"string": built["sim_string"], "embed": built["sim_embed"]}
     if use_structure:
         sims["structure"] = built["sim_structure"]
@@ -353,4 +349,4 @@ def align_kg_pair(
     if use_structure and it_rounds > 1:
         metrics["fused"] = metrics[f"fused_r{it_rounds}"]  # final = last round
 
-    return {"sims": sims, "fused": fused, "seeds": seeds, "metrics": metrics}
+    return {"sims": sims, "fused": fused, "metrics": metrics}

@@ -114,11 +114,6 @@ def get_spark(
     return spark
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver testdata table (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def session_shuffle_width(spark: SparkSession) -> int:
     """Canonical shuffle width for pinned repartitions and blocking grids.
 

@@ -214,8 +214,9 @@ class TableStageStore(StageStore):
             out.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(
                 F.count("*").alias("rows"),
-                F.min(F.col(first_col).cast("string")).alias("min_key"),
-                F.max(F.col(first_col).cast("string")).alias("max_key"),
+                # typed min/max (9 < 10), stringified afterwards
+                F.min(first_col).cast("string").alias("min_key"),
+                F.max(first_col).cast("string").alias("max_key"),
             )
             .withColumn("stage", F.lit(name))
             .withColumn("wall_sec", F.lit(round(lin_t0, 3)))
@@ -225,9 +226,6 @@ class TableStageStore(StageStore):
             self._table(f"{name}__lineage")
         )
         return out
-
-    def lineage(self, name: str) -> DataFrame:
-        return self.read(f"{name}__lineage")
 
     def rows(self, name: str) -> int:
         # a catalog table's files belong to the catalog: count in Spark

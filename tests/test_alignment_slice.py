@@ -109,8 +109,9 @@ def test_string_channel_alignment(kg_pair):
 
 
 def test_semi_seed_precision(kg_pair):
-    """Mutual-argmax seeds (phase-0 prologue) should be high-precision
-    (`main.py:203-216` feeds them to training as pseudo-labels)."""
+    """Mutual-argmax seeds of the fused name sims (the reference's
+    ``get_semi_link``, `main.py:203-216`, which feeds them to training
+    as pseudo-labels) should be high-precision."""
     pair, _ = kg_pair
     # reference computes the name sims on the test-candidate subspace
     # (P5, `main.py:302`) before mining seeds: semi-join both entity
@@ -125,7 +126,10 @@ def test_semi_seed_precision(kg_pair):
     )
     string_sim = name_channel.string_similarity(test_pair)
     emb_sim = name_channel.name_embedding_similarity(test_pair, k=10)
-    seeds = name_channel.semi_seeds(emb_sim, string_sim)
+    # name sims fused at the reference weights [1.0, 0.05], then
+    # mutual argmax (W10)
+    seeds = simops.bi_mapping(simops.fuse([emb_sim, string_sim], [1.0, 0.05])).select(
+        F.col("src").alias("e1"), F.col("dst").alias("e2"))
     pr = evalx.precision_recall_f1(seeds, gold)
     assert pr["precision"] > 0.8, pr
     assert pr["pred"] > 50

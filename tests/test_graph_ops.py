@@ -134,7 +134,8 @@ def test_partition_invariants(spark, kg_pair):
     """FIXTURES.md §4 'partition invariants': total coverage, uniqueness,
     seed co-location (`partition.py:250-269` analogue)."""
     k = 4
-    p1, p2 = partition_kg.seed_aware_partition(kg_pair, k=k, n_iter=2)
+    p1, p2 = partition_kg.placement_parts(
+        partition_kg.seed_aware_placement(kg_pair, k=k, n_iter=2))
     n1 = kg_pair.kg1.ent.count()
     assert p1.count() == n1
     assert p1.select("id").distinct().count() == n1  # exactly one part each
@@ -150,7 +151,8 @@ def test_partition_invariants(spark, kg_pair):
 
 def test_partition_cap_salting(spark, kg_pair):
     cap = 40
-    p1, p2 = partition_kg.seed_aware_partition(kg_pair, k=2, n_iter=2, cap=cap)
+    p1, p2 = partition_kg.placement_parts(
+        partition_kg.seed_aware_placement(kg_pair, k=2, n_iter=2, cap=cap))
     mx = p1.groupBy("part").count().agg(F.max("count")).first()[0]
     assert mx <= cap
     train = kg_pair.links.where(F.col("split") == "train")
@@ -386,7 +388,8 @@ def test_seed_aware_partition_matches_dict_lp(spark, n_iter):
         pair = _lp_case(spark, e1, t1, e2, t2, tr, test=[(9, 109)])
         hpart = _hash_parts(spark, e1 + e2, k)
         want1, want2 = _lp_oracle(e1, t1, e2, t2, tr, k, n_iter, hpart)
-        p1, p2 = partition_kg.seed_aware_partition(pair, k=k, n_iter=n_iter)
+        p1, p2 = partition_kg.placement_parts(
+            partition_kg.seed_aware_placement(pair, k=k, n_iter=n_iter))
         assert {r.id: r.part for r in p1.collect()} == want1
         assert {r.id: r.part for r in p2.collect()} == want2
 

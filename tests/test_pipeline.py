@@ -216,6 +216,9 @@ def test_align_kg_pair_full(spark, tmp_path):
     assert m["fused"]["hits@1"] >= best_single - 0.05, m
     # checkpoints exist and resume path returns same fused metric
     assert store.exists("sim_fused")
+    # the op builds no table that nobody reads
+    assert not store.exists("semi_seeds")
+    assert set(res) == {"sims", "fused", "metrics"}
 
     def failing_loader():
         raise RuntimeError("a resume that skips every stage must not encode")

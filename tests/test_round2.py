@@ -650,7 +650,14 @@ def test_table_stage_store_construct_resume(spark, tmp_path):
         out = construct_kg_from_pages(spark, pages, store)
         n = out["kg"].count()
         assert n > 0
-        assert store.lineage("triples").count() > 0
+        lin = store.lineage("triples").collect()
+        assert lin
+        # min/max compare in the column's own type (9 < 10), and the
+        # rows together span the stage's key range
+        assert all(int(r.min_key) <= int(r.max_key) for r in lin), lin
+        lo, hi = out["triples"].agg(F.min("src"), F.max("src")).first()
+        assert min(int(r.min_key) for r in lin) == lo
+        assert max(int(r.max_key) for r in lin) == hi
         assert store.metrics().count() >= 1
         # resume: rebuild returns identical counts without rebuilding
         out2 = construct_kg_from_pages(spark, pages, store)
