@@ -99,7 +99,11 @@ def hashed_name_encoder(dim: int = 64, n: int = 3):
     return encode
 
 
-def model_name_encoder(loader, batch_size: int = 512):
+# texts per ``model.encode`` call of model_name_encoder's UDF
+_ENCODE_BATCH = 512
+
+
+def model_name_encoder(loader):
     """A6 real-encoder seam (`emb_loader.py:119-182`): wrap any
     sentence-encoder model behind the same ``string → array<float>``
     pandas-UDF contract as the hashed default.
@@ -119,8 +123,8 @@ def model_name_encoder(loader, batch_size: int = 512):
         for s in it:
             texts = ["" if t is None else t for t in s.tolist()]
             out = []
-            for lo in range(0, len(texts), batch_size):
-                mat = np.asarray(model.encode(texts[lo:lo + batch_size]),
+            for lo in range(0, len(texts), _ENCODE_BATCH):
+                mat = np.asarray(model.encode(texts[lo:lo + _ENCODE_BATCH]),
                                  dtype=np.float32)
                 out.extend(list(mat))
             yield pd.Series(out)

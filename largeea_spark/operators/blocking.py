@@ -6,7 +6,10 @@ sets are tagged with their side and run through ONE band-key plan
 (signatures + band keys computed JVM-side, functions.hashing);
 candidates come from a sort-merge equi-join of side 1 to side 2 on
 ``(band, key)`` — broadcast-free by design (the north star names this
-join shape explicitly). No server, no driver loop.
+join shape explicitly). No server, no driver loop. The id may be any
+groupable column: the string channel blocks on ``struct(id, name)``,
+so its candidates carry the names its Levenshtein stage verifies
+(filter-then-verify, no join back to the entity dims).
 
 Scale: band-bucket join cost is Σ_bucket |e1_bucket|·|e2_bucket|. Hot
 buckets (stop-token-heavy names) are handled by ``max_bucket`` — buckets
@@ -54,7 +57,8 @@ def minhash_candidates(
     max_bucket: int = 10000, stats: dict | None = None,
 ) -> DataFrame:
     """Candidate pairs (src=id from df1, dst=id from df2) whose MinHash
-    band keys collide in ≥1 band. Distinct pairs, long-format.
+    band keys collide in ≥1 band. Distinct pairs, long-format; ``id_col``
+    may be any groupable column, a struct included.
 
     Both sides are tagged ``sid = struct(side, id)`` and go through ONE
     band-key plan; one window over (side, band, key) drops each side's
@@ -99,10 +103,15 @@ def minhash_candidates(
         "src", "dst").distinct()
 
 
+# rows per block of jaccard_selfjoin_blocked's grid: cells of at most
+# _BLOCK_ROWS² pairs keep the kernel's pair keys in int32 radix-sort
+# territory and its per-task arrays bounded at any corpus size
+_BLOCK_ROWS = 30_000
+
+
 def jaccard_selfjoin_blocked(
     df: DataFrame, id_col: str, token_col: str, threshold: float,
     pair_budget: int = 8_000_000, n_rows: int | None = None,
-    block_rows: int = 30_000,
 ) -> DataFrame:
     """EXACT self-join Jaccard ≥ threshold via a blocked numpy kernel —
     identical result set to the posting join (`exact_jaccard_pairs` on
@@ -144,11 +153,9 @@ def jaccard_selfjoin_blocked(
     # partitioning keys with too few distinct values")
     n_blocks = max(2, math.ceil((math.sqrt(16 * width + 1) - 1) / 2))
     if n_rows is not None:
-        # keep cells ≤ block_rows² so the kernel's pair keys stay in
-        # int32 radix-sort territory and per-task arrays stay bounded
-        # at any corpus size (blocking is purely physical — results
-        # are identical at any B)
-        n_blocks = max(n_blocks, math.ceil(n_rows / block_rows))
+        # keep cells ≤ _BLOCK_ROWS² (blocking is purely physical —
+        # results are identical at any B)
+        n_blocks = max(n_blocks, math.ceil(n_rows / _BLOCK_ROWS))
     n_cells = n_blocks * (n_blocks + 1) // 2
 
     toks = F.array_distinct(F.col(token_col))
@@ -332,7 +339,7 @@ def _make_jaccard_cell_kernel(threshold: float, pair_budget: int):
 
 def exact_jaccard_pairs(
     df1: DataFrame, df2: DataFrame, id_col: str, token_col: str,
-    threshold: float = 0.5, max_df: int | None = None,
+    threshold: float = 0.5,
 ) -> DataFrame:
     """Exact n-gram/token Jaccard join via posting-list self-join —
     the oracle-checkable counterpart of MinHash blocking (and the exact
@@ -342,13 +349,9 @@ def exact_jaccard_pairs(
     two small aggs → |A∩B| / (|A|+|B|−|A∩B|). One shuffle on token,
     one on the pair.
 
-    Skew: a token appearing in f docs contributes f² join rows.
-    ``max_df`` drops tokens with df > max_df from the INTERSECTION join
-    only (sizes keep them), making the result a LOWER bound on Jaccard —
-    candidates are under-generated only for pairs whose sole overlap is
-    stop-token-grade tokens, which sit far below any useful threshold.
-    At web scale set max_df ≈ 1000 (the reference's high-freq stop-token
-    drop, `text_utils.py:63-72`, is the same idea)."""
+    Skew: a token appearing in f docs contributes f² join rows, so this
+    is the small-input path; above ``dedup._BLOCKED_MIN_DOCS`` the
+    self-join runs ``jaccard_selfjoin_blocked`` instead."""
     t1 = df1.select(F.col(id_col).alias("src"), F.explode(F.array_distinct(F.col(token_col))).alias("tok"))
     t2 = df2.select(F.col(id_col).alias("dst"), F.explode(F.array_distinct(F.col(token_col))).alias("tok"))
     # set sizes come straight off the array column — a narrow projection
@@ -362,16 +365,7 @@ def exact_jaccard_pairs(
         F.col(id_col).alias("dst"),
         F.size(F.array_distinct(F.col(token_col))).alias("n_dst"),
     )
-    j1, j2 = t1, t2
-    if max_df is not None:
-        hot = (
-            t1.groupBy("tok").count().unionByName(t2.groupBy("tok").count())
-            .groupBy("tok").agg(F.max("count").alias("c"))
-            .where(F.col("c") > max_df).select("tok")
-        )
-        j1 = t1.join(hot, "tok", "left_anti")
-        j2 = t2.join(hot, "tok", "left_anti")
-    inter = j1.join(j2, "tok").groupBy("src", "dst").agg(F.count("*").alias("n_int"))
+    inter = t1.join(t2, "tok").groupBy("src", "dst").agg(F.count("*").alias("n_int"))
     return (
         inter.join(n1, "src").join(n2, "dst")
         .withColumn(

@@ -109,14 +109,19 @@ def _is_star_forest(e: DataFrame) -> bool:
     return bad.isEmpty()
 
 
-def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
+# large/small-star rounds before connected_components gives up; the
+# alternation converges in O(log² n) rounds
+_MAX_CC_ROUNDS = 50
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """Returns DataFrame(node, component). Deterministic min-id labels."""
     e = _canonical_edges(edges).localCheckpoint(eager=False)
     it = 0
     while not _is_star_forest(e):
-        if it == max_iter:
+        if it == _MAX_CC_ROUNDS:
             raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds")
+                f"connected_components did not converge in {_MAX_CC_ROUNDS} rounds")
         # lazy checkpoint: the next test's action materializes it, so
         # a round runs no separate checkpoint job
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)

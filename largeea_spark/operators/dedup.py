@@ -6,7 +6,7 @@ Five strategies, each returning a decision the others can compose:
   exact_duplicates     hash-groupBy on the full text (md5)
   ngram_jaccard_pairs  word-n-gram shingles → exact Jaccard join
   minhash_lsh_pairs    shingle → minhash → band → bucket join (O2 path)
-  simhash_pairs        64-bit simhash + hamming ≤ r within LSH chunks
+  simhash_pairs        64-bit simhash + hamming ≤ r within r+1 bit ranges
   embedding_near_dups  cosine top-k over an embedding column
 
 All JVM-side except the embedding path (Arrow kNN). Each has a
@@ -138,22 +138,31 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
 
 
 def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", max_hamming: int = 3,
-                  n_chunks: int = 4) -> DataFrame:
-    """SimHash near-dup pairs: 64-bit fingerprint; by pigeonhole, two
-    fingerprints within hamming r < n_chunks share ≥1 identical 16-bit
-    chunk → equi-join on (chunk_idx, chunk_value), verify hamming."""
+                  text_col: str = "text", max_hamming: int = 3) -> DataFrame:
+    """SimHash near-dup pairs (Manku et al., "Detecting Near-Duplicates
+    for Web Crawling", WWW 2007): 64-bit fingerprints cut into
+    ``max_hamming + 1`` disjoint bit ranges that cover all 64 bits. By
+    pigeonhole, two fingerprints within hamming ``max_hamming`` agree on
+    at least one whole range → equi-join on (range, value), verify
+    hamming. The default ``max_hamming=3`` gives four 16-bit ranges."""
     from ..functions.hashing import simhash64_agg
 
     fp = simhash64_agg(
         docs.select(F.col(id_col), tokenize_ws(F.col(text_col)).alias("toks")),
         id_col, "toks",
     )
-    chunk = lambda i: F.shiftright("fp", i * 16).bitwiseAND(F.lit(0xFFFF))  # noqa: E731
+    n = max_hamming + 1
+    cuts = [i * 64 // n for i in range(n + 1)]
+
+    def chunk(i):
+        width = cuts[i + 1] - cuts[i]
+        mask = -1 if width == 64 else (1 << width) - 1  # int64 all-ones
+        return F.shiftright("fp", cuts[i]).bitwiseAND(F.lit(mask))
+
     keyed = fp.select(
         id_col, "fp",
         F.explode(F.array(*[F.struct(F.lit(i).alias("ci"), chunk(i).alias("cv"))
-                            for i in range(n_chunks)])).alias("c"),
+                            for i in range(n)])).alias("c"),
     ).select(id_col, "fp", "c.ci", "c.cv")
     a = keyed.select(F.col(id_col).alias("a"), F.col("fp").alias("fa"), "ci", "cv")
     b = keyed.select(F.col(id_col).alias("b"), F.col("fp").alias("fb"), "ci", "cv")

@@ -8,7 +8,7 @@ Reference formulas reproduced:
 - ``get_hit_k`` (`eval.py:8-29`): fraction of links whose gold dst is
   among the k best-ranked entries of the src row.
 - ``truncated_mrr`` (`eval.py:168-180`): 0-based rank of gold within the
-  stored top-k entries; absent → rank := fail (default n_src/2);
+  stored top-k entries; absent → rank := fail = n_src/2;
   MRR = mean(1/(rank+1)).
 - seed P/R/F1 (`models/rrea/rrea.py:213-232`): set-intersection counts.
 
@@ -21,7 +21,7 @@ row batch, so ``torch.topk`` pads rows having fewer than k STORED
 entries with zero-valued columns — a gold dst with no stored entry can
 still land in the reference's top-k of such a row (at an arbitrary
 position among the ties at 0). The engine ranks only stored entries and
-counts those golds as ``fail_rank`` misses — a small, systematically
+counts those golds as misses at the fail rank — a small, systematically
 PESSIMISTIC bias on sparse rows (never optimistic), inert under the
 metric-tolerance gating of SURVEY.md §7.4.7 and nonexistent when every
 row carries ≥k entries (the kNN channels always emit exactly k).
@@ -50,14 +50,14 @@ def accuracy(sim: DataFrame, links: DataFrame) -> float:
 
 def hits_and_mrr(
     sim: DataFrame | Mapping[str, DataFrame], links: DataFrame,
-    ks: tuple = (1, 5, 50), fail_rank: int | None = None,
-    n_src: int | None = None,
+    ks: tuple = (1, 5, 50), *, n_src: int,
 ) -> dict:
     """`sparse_top_k` (`eval.py:202-220`): Hits@k for each k plus
     truncated MRR, computed in ONE pass over ranked entries.
 
-    ``links``: DataFrame(e1, e2) gold pairs. ``fail_rank`` defaults to
-    n_src/2 (`eval.py:170-172`); ``n_src`` defaults to 1+max(src).
+    ``links``: DataFrame(e1, e2) gold pairs. An absent gold takes the
+    0-based fail rank ``n_src/2`` (`eval.py:170-172`); ``n_src`` is the
+    source KG's entity count.
 
     ``sim`` may also be a ``{name: sim}`` mapping; the result is then
     ``{name: metrics}``, and every entry is evaluated in ONE aggregate.
@@ -72,13 +72,6 @@ def hits_and_mrr(
     sims = [s.select(F.lit(i).alias("channel"), SRC, DST, SIM, F.lit(False).alias("__gold"))
             for i, s in enumerate(named.values())]
     union = reduce(lambda a, b: a.unionByName(b), sims)
-    if fail_rank is not None:
-        fails = [fail_rank] * n
-    elif n_src is not None:
-        fails = [int(n_src / 2)] * n
-    else:
-        mx = dict(union.groupBy("channel").agg(F.max(SRC)).collect())
-        fails = [int(((mx.get(i) or 0) + 1) / 2) for i in range(n)]
     gold = links.select(
         F.explode(F.array(*[F.lit(i) for i in range(n)])).alias("channel"),
         F.col("e1").alias(SRC), F.col("e2").alias(DST),
@@ -93,8 +86,7 @@ def hits_and_mrr(
         "rank", F.min("__rank").over(Window.partitionBy("channel", SRC, DST))
     ).where(F.col("__gold"))
     # reference rank is 0-based with fail substituted, MRR=mean(1/(rank+1))
-    fail = F.array(*[F.lit(f) for f in fails])[F.col("channel")]
-    rank0 = F.coalesce(F.col("rank") - 1, fail)
+    rank0 = F.coalesce(F.col("rank") - 1, F.lit(int(n_src / 2)))
     aggs = [F.avg(1.0 / (rank0 + 1)).alias("MRR")]
     for k in ks:
         aggs.append(

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import session_shuffle_width
+
 
 def dict_encode(df: DataFrame, key_col: str, id_col: str = "id") -> DataFrame:
     """Distinct values of ``key_col`` → dense, deterministic 0-based ids.
@@ -56,8 +58,7 @@ def assign_dense_ids(distinct_df: DataFrame, key_col: str, id_col: str = "id") -
     bytes through the (bandwidth-bound) exchange for ranks the sorted
     layout already determines.
     """
-    spark = distinct_df.sparkSession
-    n_part = max(2, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+    n_part = max(2, session_shuffle_width(distinct_df.sparkSession))
     return row_index(
         distinct_df.repartitionByRange(n_part, F.col(key_col)).sortWithinPartitions(key_col),
         id_col,

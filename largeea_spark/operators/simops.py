@@ -35,16 +35,12 @@ def scale(df: DataFrame, w: float) -> DataFrame:
     return df.withColumn(SIM, F.col(SIM) * F.lit(float(w)))
 
 
-def fuse(sims: list[DataFrame], weights: list[float] | None = None) -> DataFrame:
+def fuse(sims: list[DataFrame], weights: list[float]) -> DataFrame:
     """A10/F11: ``naive_sim_fuser`` (`fuse.py:21-30`) — weighted sparse
     sum; overlapping entries coalesce-add."""
-    parts = []
-    for i, s in enumerate(sims):
-        if s is None:
-            continue
-        parts.append(scale(s, weights[i]) if weights is not None else s)
-    if not parts:
+    if not sims:
         raise ValueError("no sim matrices to fuse")
+    parts = [scale(s, w) for s, w in zip(sims, weights, strict=True)]
     return coalesce_sum(reduce(lambda a, b: a.unionByName(b), parts))
 
 

@@ -12,7 +12,7 @@ this is the north rule's added front-end. Design:
   html shape is the fixture's template (FIXTURES.md §1): title in
   ``<h1>``, body in ``<p>``; anything else falls back to tag-stripping.
 - ``emit_triples``: sentence split + predicate-lexicon matching in
-  ``mapInPandas`` (Arrow-batched; regex precompiled per batch) →
+  ``mapInPandas`` (Arrow-batched; one module-level regex) →
   surface triples (subj, pred, obj) with url lineage.
 - ``canonicalize_triples``: surface names → canonical entity ids via
   dict-encode + connected-components over same-name/alias edges.
@@ -74,20 +74,18 @@ def verify_byte_identical(pages: DataFrame) -> int:
 _TRIPLE_SCHEMA = "subj string, pred string, obj string, url string"
 
 
-def _triple_pattern(predicates: list[str] | None) -> re.Pattern:
-    """``"{subj} {pred} {obj}."`` sentences over the predicate lexicon."""
-    preds = predicates or PREDICATES
-    return re.compile(
-        r"(?m)([^.\n]+?)\s+(" + "|".join(re.escape(p) for p in preds) + r")\s+([^.\n]+?)\."
-    )
+# ``"{subj} {pred} {obj}."`` sentences over the predicate lexicon
+_TRIPLE = re.compile(
+    r"(?m)([^.\n]+?)\s+(" + "|".join(re.escape(p) for p in PREDICATES) + r")\s+([^.\n]+?)\."
+)
 
 
-def _match_triples(pat: re.Pattern, docs) -> pd.DataFrame:
+def _match_triples(docs) -> pd.DataFrame:
     """Surface triples of ``(url, text)`` docs; the title line is skipped."""
     out = {"subj": [], "pred": [], "obj": [], "url": []}
     for url, text in docs:
         body = text.split("\n", 1)[-1]
-        for m in pat.finditer(body):
+        for m in _TRIPLE.finditer(body):
             out["subj"].append(m.group(1).strip())
             out["pred"].append(m.group(2))
             out["obj"].append(m.group(3).strip())
@@ -95,7 +93,7 @@ def _match_triples(pat: re.Pattern, docs) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def emit_triples(pages: DataFrame, predicates: list[str] | None = None) -> DataFrame:
+def emit_triples(pages: DataFrame) -> DataFrame:
     """Mention detection + triple emission (north star): sentences of
     the form ``"{subj} {pred} {obj}."`` matched against a predicate
     lexicon. Returns (subj, pred, obj, url) surface triples with lineage.
@@ -104,11 +102,9 @@ def emit_triples(pages: DataFrame, predicates: list[str] | None = None) -> DataF
     canonicalization joins them to the entity dim. The title line is the
     page's own subject context (not used by the template matcher but
     kept for future coref)."""
-    pat = _triple_pattern(predicates)
-
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            yield _match_triples(pat, (
+            yield _match_triples((
                 (url, text) for url, text in zip(pdf["url"], pdf["text"])
                 if text is not None
             ))
@@ -116,7 +112,7 @@ def emit_triples(pages: DataFrame, predicates: list[str] | None = None) -> DataF
     return pages.select("url", "text").mapInPandas(fn, schema=_TRIPLE_SCHEMA)
 
 
-def emit_triples_verified(pages: DataFrame, predicates: list[str] | None = None) -> DataFrame:
+def emit_triples_verified(pages: DataFrame) -> DataFrame:
     """Single-pass extract + byte-identical verify + emit: extracts text
     from html, RAISES if it differs from the golden ``text`` column
     (driver invariant), and emits surface triples from the extracted
@@ -125,8 +121,6 @@ def emit_triples_verified(pages: DataFrame, predicates: list[str] | None = None)
     (``construct_kg_from_pages``) runs ``triples_for_parity`` →
     ``emit_triples``, and ``verify_byte_identical`` remains the
     standalone audit."""
-    pat = _triple_pattern(predicates)
-
     def verified(pdf: pd.DataFrame):
         for url, html, golden in zip(pdf["url"], pdf["html"], pdf["text"]):
             text = extract_text_bytes(bytes(html) if html is not None else None)
@@ -136,7 +130,7 @@ def emit_triples_verified(pages: DataFrame, predicates: list[str] | None = None)
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            yield _match_triples(pat, verified(pdf))
+            yield _match_triples(verified(pdf))
 
     return pages.select("url", "html", "text").mapInPandas(fn, schema=_TRIPLE_SCHEMA)
 

@@ -5,8 +5,8 @@ Lifecycle parity (`main.py:301-336`):
   phase 1-2: normalize names (P1, punc='') → encode → top-k kNN with
              sim = 1−L2² on normalized vectors (J9) → sim table.
   phase 3:   normalize (P1+P2) → underscore token sets (F4) →
-             MinHash-LSH candidates (J7) → Levenshtein ratio (F6/J10)
-             → sim table.
+             MinHash-LSH candidates (J7) that carry both names →
+             Levenshtein ratio (F6/J10) → sim table.
 
 Every stage returns the long-format sim IR (src, dst, sim) keyed by
 GLOBAL entity ids of the two KGs. Phases 1-2 split into an encode half
@@ -45,36 +45,32 @@ def string_similarity(pair: KGPair, stats: dict | None = None) -> DataFrame:
     (LSH shape ``blocking.NAME_LSH``; ``stats`` as in
     ``minhash_candidates``).
 
+    The candidates carry their names (filter-then-verify): the blocking
+    id is ``struct(id, name)``, so the Levenshtein stage reads
+    ``src.name``/``dst.name`` off the candidate rows, with no join back
+    to the entity dims.
+
     The reference's candidate-subspace projection P5 (`main.py:302`,
     test-pair entities only) is a caller-side semi-join of ``pair``'s
     entity dims, as for every name-channel function."""
-    n1 = entity_names(pair.kg1.ent, punct_to_space=True)
-    n2 = entity_names(pair.kg2.ent, punct_to_space=True)
-    t1 = n1.withColumn("toks", underscore_token_set("name"))
-    t2 = n2.withColumn("toks", underscore_token_set("name"))
-    cand = minhash_candidates(t1, t2, "id", "toks", stats=stats)
+    def keyed(kg):
+        n = entity_names(kg.ent, punct_to_space=True)
+        return n.select(F.struct("id", "name").alias("en"),
+                        underscore_token_set("name").alias("toks"))
+
+    cand = minhash_candidates(keyed(pair.kg1), keyed(pair.kg2), "en", "toks",
+                              stats=stats)
     # pin the DP-scoring stage at full shuffle width: candidate-pair
-    # rows are ~100 bytes but the Levenshtein DP is O(|a|·|b|) compute
-    # per row — AQE's byte-based coalescing would serialize it (the
-    # explicit-count repartition is exempt from coalescing; PLANS.md
-    # "compute-dense Arrow stages"). Deliberately ALWAYS a shuffle (not
-    # widen-only): the repartition must be the LAST exchange before the
-    # DP so its width survives into the scoring stage regardless of how
-    # the two dimension joins above were planned; the pair rows are tiny
-    # so the extra exchange is bytes-cheap even at full corpus scale.
-    # Keyed (dst, src), not (src, dst): the candidates' distinct is
-    # already hash-partitioned on (src, dst), and when both name joins
-    # broadcast, Spark drops a repartition whose partitioning equals
-    # its child's (EnsureRequirements), which left the DP stage to
-    # AQE's coalescing after all.
+    # rows are small but the Levenshtein DP is O(|a|·|b|) compute per
+    # row, and AQE's byte-based coalescing would serialize it (an
+    # explicit-count repartition is exempt; PLANS.md "compute-dense
+    # Arrow stages"). Keyed (dst, src): the candidates' distinct is
+    # hash-partitioned on (src, dst), and a repartition equal to its
+    # child's partitioning is dropped.
     width = session_shuffle_width(cand.sparkSession)
-    scored = (
-        cand.join(n1.select(F.col("id").alias("src"), F.col("name").alias("n1")), "src")
-        .join(n2.select(F.col("id").alias("dst"), F.col("name").alias("n2")), "dst")
-        .repartition(width, F.col("dst"), F.col("src"))
-        .select("src", "dst", levenshtein_ratio(F.col("n1"), F.col("n2")).alias("sim"))
-    )
-    return scored
+    return cand.repartition(width, F.col("dst.id"), F.col("src.id")).select(
+        F.col("src.id").alias("src"), F.col("dst.id").alias("dst"),
+        levenshtein_ratio(F.col("src.name"), F.col("dst.name")).alias("sim"))
 
 
 # brute knn_topk replicates every query ×n_blocks (one block per

@@ -56,7 +56,6 @@ from . import extract, name_channel
 
 def construct_kg_from_pages(
     spark: SparkSession, pages: DataFrame, store: StageStore,
-    dedup_names: bool = True,
 ) -> dict[str, DataFrame]:
     """Web-corpus KG construction (north rule): extract → encode →
     canonicalize → materialize. Returns the stage DataFrames."""
@@ -83,8 +82,6 @@ def construct_kg_from_pages(
 
     def build_canonical(done):
         ents = done["entities"]
-        if not dedup_names:
-            return ents.select(F.col("id").alias("node"), F.col("id").alias("component"))
         # same-normalized-name edges → CC → canonical ids
         from ..functions.names import remove_punct
 

@@ -10,7 +10,8 @@ on), with one ``spark.jobGroup.id`` per ``StageStore.checkpoint``
 Then it reads the event log and prints, per group: its first job's
 start and last job's end (seconds from the op's start), jobs, tasks,
 and per job its wall time, tasks and the operator scopes of its RDDs
-(``BroadcastExchange``, ``parallelize``, ``Exchange``, ...).
+(``BroadcastExchange``, ``parallelize``, ``Exchange``, ...). A last
+``total`` line sums the op's jobs and tasks over all groups.
 
 Unlike perfbench's tracer, the groups are per thread: each checkpoint
 sets its group on the thread that runs it, so stages that
@@ -114,6 +115,9 @@ def print_profile(prof: dict, op_s: float) -> None:
         for j in p["job_list"]:
             print(f"    +{j['start_s']:6.2f} {j['wall_s']:6.2f} s "
                   f"{j['tasks']:>4} tasks  {','.join(j['scopes'])}")
+    print(f"{'total':<28} {'':>7} {op_s:>7.2f} "
+          f"{sum(p['jobs'] for p in prof.values()):>5} "
+          f"{sum(p['tasks'] for p in prof.values()):>6}")
 
 
 def main(argv=None) -> int:

@@ -484,3 +484,36 @@ def test_simhash_exact_dup_distance_zero(spark, dup_docs):
     pairs = {(r.a, r.b): r.hamming for r in
              dedup.simhash_pairs(dup_docs, max_hamming=10).collect()}
     assert pairs.get((0, 1)) == 0
+
+
+def test_simhash_pairs_equal_brute_force(spark):
+    """At max_hamming=8 the bit ranges must number 9: with four 16-bit
+    chunks, pairs whose 5-8 differing bits hit every chunk were missed."""
+    from largeea_spark.functions.hashing import simhash64_agg
+    from largeea_spark.functions.names import tokenize_ws
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(400)]
+    rows = []
+    for base in range(12):
+        words = rng.choices(vocab, k=40)
+        for v in range(6):
+            doc = list(words)
+            for pos in rng.sample(range(40), v * 2):
+                doc[pos] = rng.choice(vocab)
+            rows.append((base * 10 + v, " ".join(doc)))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    fps = sorted((r.doc_id, r.fp) for r in simhash64_agg(
+        docs.select("doc_id", tokenize_ws(F.col("text")).alias("toks")),
+        "doc_id", "toks").collect())
+    for r in (3, 8):
+        want = {}
+        for i, (a, fa) in enumerate(fps):
+            for b, fb in fps[i + 1:]:
+                h = bin((fa ^ fb) & (2**64 - 1)).count("1")
+                if h <= r:
+                    want[(a, b)] = h
+        got = {(x.a, x.b): x.hamming for x in
+               dedup.simhash_pairs(docs, max_hamming=r).collect()}
+        assert got == want, (r, len(got), len(want))
+    assert len(want) >= 30

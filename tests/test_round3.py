@@ -2,6 +2,8 @@
 fix (on the placement task), d=768 chunked propagation, and triple
 placement."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -223,6 +225,11 @@ def test_string_similarity_scoring_stage_pinned(spark):
     sim = string_similarity(pair)
     plan = sim._jdf.queryExecution().executedPlan().toString()
     assert "REPARTITION_BY_NUM" in plan, plan[:1200]
+    # the candidates carry their names: the band-key join is the plan's
+    # only join (no entity-dim join brings the names back)
+    joins = re.findall(r"\w*Join \[[^\]]*\]", plan)
+    assert len(joins) == 1, joins
+    assert re.search(r"\[band#\d+, key#\d+L?\]", joins[0]), joins
     assert sim.count() > 0
 
 

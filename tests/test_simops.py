@@ -97,10 +97,10 @@ def test_hits_mrr_and_accuracy(spark):
     acc = evalx.accuracy(sim, links)
     assert math.isclose(acc, 2 / 3)
     # mapping form: every entry in one aggregate, each equal to its
-    # single-sim call (the default n_src = 1 + max(src) is per entry)
+    # single-sim call, at two fail ranks (n_src/2)
     sims = {"a": sim, "b": to_df(spark, B), "csls": simops.csls_rescore(sim, k=2),
             "empty": spark.createDataFrame([], "src long, dst long, sim double")}
-    for kw in ({"n_src": 4}, {}, {"fail_rank": 7}):
+    for kw in ({"n_src": 4}, {"n_src": 14}):
         many = evalx.hits_and_mrr(sims, links, ks=(1, 2), **kw)
         assert list(many) == list(sims)
         for name, s in sims.items():
